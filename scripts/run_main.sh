@@ -9,6 +9,8 @@ MAIN=$1; shift
 # sort -V: version-aware pick of the newest driver (lexicographic sort puts
 # 1.10.x before 1.9.x), matching build.sbt's numeric-version selection
 DUCKDB_JAR=$(find "$HOME/.cache/coursier" -name 'duckdb_jdbc-*.jar' 2>/dev/null | sort -V | tail -1 || true)
+# default heap: half of MemTotal in GiB clamped to 2–8g, as build.sbt derives it
+DEFAULT_MEM=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || true)
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -25,6 +27,6 @@ exec java \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   ${SPARK_GRAFT_JAVA_OPTS:-} \
-  -Xmx"${SPARK_DRIVER_MEM:-24g}" \
+  -Xmx"${SPARK_DRIVER_MEM:-${DEFAULT_MEM:-2g}}" \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*${DUCKDB_JAR:+:$DUCKDB_JAR}" \
   "$MAIN" "$@"

@@ -11,11 +11,14 @@ import org.apache.spark.sql.functions._
 /** The end-to-end pipeline — the Spark re-expression of the reference CLI
   * (reference: main(), src/main.rs:615-860). Declarative plan:
   *
+  *   sidecar read once to the driver: type vote, coercion, first-wins maps
+  *     (S2/S3, J2, P7)
   *   binaryFile scan (S1, F1–F5)
-  *     → WAV parse (P5) → audio struct assembly (P6)
-  *     → 3-level broadcast metadata join (J1/J2, P7/P8)
-  *     → deterministic shard assignment (X1)
-  *     → exact-name Parquet (K1) or DuckDB (K2) shards
+  *     → shard assignment from one collect of the paths (X1)
+  *     → WAV parse (P5)
+  *     → one broadcast join on each file's winning sidecar row (J1, P8)
+  *     → audio struct assembly (P6)
+  *     → exact-name Parquet (K1), DuckDB (K2) or tar shards
   *
   * All defaults mirror the reference's clap args (src/main.rs:55-95).
   */
@@ -48,10 +51,9 @@ object AudioToDataset {
     (df, sch)
   }
 
-  /** [[plan]] plus the post-filter file count (free: it is the shard
-    * ranking's pass-1 grand total) — the CLI sink path sizes its shard
-    * repartition from it WITHOUT a second scan. The reference lists the
-    * input exactly once (src/main.rs:662-712); so do we. */
+  /** [[plan]] plus the post-filter file count (free: the shard ranking
+    * counts its keys) — the CLI sink path sizes its shard repartition from
+    * it WITHOUT a second scan. */
   private[graft] def planWithCount(
       spark: SparkSession, cfg: Config): (DataFrame, Metadata.MetaSchema, Long) = {
     val (metaDf, metaSchema) = cfg.metadataFile match {
@@ -62,38 +64,35 @@ object AudioToDataset {
         (None, Metadata.MetaSchema(
           scala.collection.immutable.TreeMap("transcription" -> (MString: MetadataType))))
     }
-    val files = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
-      cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives)
-      .withColumn("wav", Wav.parseCol(col("content"))) // P5
-
+    // X1: scan order is relative-path order (documented divergence from the
+    // platform-dependent directory iterator, SURVEY.md §7.4); the ranking
+    // collects the post-filter paths once and never moves the audio bytes
+    val (files, nFiles) = Sharding.shardConsecutiveByKeyCounted(
+      AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
+        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives),
+      "relative_path", cfg.filesPerShard)
+    val parsed = files.withColumn("wav", Wav.parseCol(col("content"))) // P5
     val joined = metaDf match {
-      case Some(m) => Metadata.joinFiles(files, m, metaSchema)
-      case None    => files.withColumn("transcription", lit("-"))
+      case Some(m) => Metadata.joinFiles(parsed, m, metaSchema)
+      case None    => parsed.withColumn("transcription", lit("-"))
     }
-    val assembled = joined.select(
+    val sharded = joined.select(
       Seq(
         struct( // P6 — Parquet field order bytes, sampling_rate, path (src/main.rs:465-470)
           col("content").as("bytes"),
           col("wav.sampling_rate").as("sampling_rate"),
           col("relative_path").as("path")).as("audio"),
         col("wav.duration").as("duration")) ++
-        metaSchema.keys.map(col): _*)
-    // X1: scan order defined as relative-path order (documented divergence
-    // from the platform-dependent directory iterator, SURVEY.md §7.4).
-    // Ranks come from the skinny-path two-phase ranking so audio bytes never
-    // pass through a single-partition window.
-    val (sharded, nFiles) = Sharding.shardConsecutiveByKeyCounted(
-      assembled.withColumn("_order", col("audio.path")),
-      "_order", cfg.filesPerShard)
-    (sharded.drop("_order"), metaSchema, nFiles)
+        metaSchema.keys.map(col) :+ col("shard_id"): _*)
+    (sharded, metaSchema, nFiles)
   }
 
   def run(spark: SparkSession, cfg: Config): Unit = {
     val (sharded, metaSchema, nFiles) = planWithCount(spark, cfg)
     val metaTypes = metaSchema.types.toSeq
     // shard count = ceil(post-filter files / filesPerShard), carried out of
-    // the plan's own ranking pass — no second listing, and (unlike the old
-    // count-only rescan) it reflects EVERY filter including the MIME sniff
+    // the plan's own ranking pass — no second listing, and it reflects EVERY
+    // filter including the MIME sniff
     val nShards = Some(math.max(1, math.ceil(nFiles.toDouble / cfg.filesPerShard).toInt))
     cfg.format match {
       case "parquet" =>

@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** X1 — deterministic shard assignment (reference: src/main.rs:714-718).
   *
@@ -53,8 +59,8 @@ object Sharding {
 
   /** [[cumSumBy]] that ALSO returns the grand total (the fold of pass 1's
     * per-partition totals) — already on the driver when the scan runs, so
-    * consumers that need "sum of everything" (e.g. a shard count) get it
-    * for ZERO extra jobs and zero extra input listings. */
+    * consumers that need "sum of everything" get it for ZERO extra jobs
+    * and zero extra input listings. */
   def cumSumByCounted(df: DataFrame, orderCols: Seq[String], valueCol: Column,
       outCol: String): (DataFrame, Long) =
     twoPassScan(df, orderCols, valueCol, outCol,
@@ -84,7 +90,6 @@ object Sharding {
   private def twoPassScan(
       df: DataFrame, orderCols: Seq[String], valueCol: Column, outCol: String,
       zero: Long, exclusive: Boolean)(op: (Long, Long) => Long): (DataFrame, Long) = {
-    import org.apache.spark.sql.GraftBridge
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = df.sparkSession
     val parts = math.max(1, spark.sessionState.conf.numShufflePartitions)
@@ -128,26 +133,68 @@ object Sharding {
       offsets(n)) // the fold over ALL partitions — grand total under `op`
   }
 
-  /** Exact consecutive chunking WITHOUT a single-partition window over the
-    * data: global ranks are computed on a SKINNY (distinct-key) projection via
-    * [[cumSum]] of 1s, then joined back on the key. The wide rows — audio
-    * content at 100 TB — only ever move through parallel shuffles, never
-    * through one task. Keys are ranked DISTINCT (generic type), so duplicate
-    * key values share a shard instead of multiplying rows through the join.
+  /** Exact consecutive chunking with no shuffle and no join: the key column
+    * is collected once, sorted and de-duplicated on the driver in Spark's own
+    * ordering of its type (for strings that is `UTF8String`'s UTF-8 binary
+    * order, the one ORDER BY uses — not `java.lang.String`'s UTF-16 order),
+    * and only every `filesPerShard`-th distinct key is kept as a shard
+    * boundary. A row's `shard_id` is the number of boundaries ≤ its key, a
+    * binary search in a codegen'd projection, so the wide rows never move.
+    * Duplicate key values share a shard; a null key sorts first.
+    *
+    * Driver memory: the key column — for the pipeline the post-filter path
+    * list, the same order of size as the file index `binaryFile` already
+    * holds on the driver.
     */
   def shardConsecutiveByKey(df: DataFrame, keyCol: String, filesPerShard: Int): DataFrame =
     shardConsecutiveByKeyCounted(df, keyCol, filesPerShard)._1
 
-  /** [[shardConsecutiveByKey]] that ALSO returns the distinct-key count —
-    * free (it is the ranking scan's pass-1 grand total), so callers that
-    * need the shard count (the CLI sinks size their repartition by it)
-    * never re-list or re-scan the input to count. */
+  /** [[shardConsecutiveByKey]] that ALSO returns the distinct-key count, so
+    * callers that need the shard count (the CLI sinks size their repartition
+    * by it) never re-list or re-scan the input to count. */
   def shardConsecutiveByKeyCounted(
       df: DataFrame, keyCol: String, filesPerShard: Int): (DataFrame, Long) = {
-    val (ranked, nKeys) = cumSumByCounted(
-      df.select(col(keyCol)).distinct(), Seq(keyCol), lit(1L), "_rank")
-    val shardMap = ranked.select(col(keyCol),
-      floor((col("_rank") - 1) / filesPerShard).cast("int").as("shard_id"))
-    (df.join(shardMap, Seq(keyCol)), nKeys)
+    val keyDf = df.select(col(keyCol))
+    val dt = keyDf.schema.head.dataType
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val (nulls, keys) = keyDf.collect().map(r => toCatalyst(r.get(0))).partition(_ == null)
+    val sorted = keys.sorted(ord)
+    val distinct = nulls.take(1) ++
+      sorted.indices.collect { case i if i == 0 || !ord.equiv(sorted(i - 1), sorted(i)) => sorted(i) }
+    val bounds = (filesPerShard until distinct.length by filesPerShard).map(distinct).toArray
+    val shardId = GraftBridge.column(ShardOf(GraftBridge.expression(col(keyCol)), new ShardBounds(bounds, dt)))
+    (df.withColumn("shard_id", shardId), distinct.length.toLong)
   }
+}
+
+/** Sorted shard boundary keys (Catalyst values of type `dt`). */
+private[operators] final class ShardBounds(keys: Array[Any], dt: DataType) extends Serializable {
+  @transient private lazy val ord = TypeUtils.getInterpretedOrdering(dt)
+
+  /** Number of boundaries ≤ `key`; null sorts first, so it is shard 0. */
+  def shardOf(key: Any): Int = {
+    var lo = 0
+    var hi = if (key == null) 0 else keys.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (ord.lteq(keys(mid), key)) lo = mid + 1 else hi = mid
+    }
+    lo
+  }
+}
+
+/** `shard_id` of `child`'s value under `bounds`; never null. */
+private case class ShardOf(child: Expression, bounds: ShardBounds) extends UnaryExpression {
+  override def dataType: DataType = IntegerType
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any = bounds.shardOf(child.eval(input))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val key = child.genCode(ctx)
+    val b = ctx.addReferenceObj("bounds", bounds)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      ${key.code}
+      int ${ev.value} = $b.shardOf(${key.isNull} ? null : (Object) ${key.value});""")
+  }
+  override protected def withNewChildInternal(c: Expression): ShardOf = copy(child = c)
 }

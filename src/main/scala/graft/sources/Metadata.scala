@@ -2,8 +2,7 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.collection.immutable.{SortedMap, TreeMap}
@@ -21,10 +20,16 @@ import scala.jdk.CollectionConverters._
   *   - `transcription` always present, defaulting to "-" (src/main.rs:159-164);
   *   - duplicate keys: FIRST occurrence in file order wins (src/main.rs:178-193).
   *
-  * Scale note: the sidecar is the small side of a broadcast join, but nothing
-  * here materializes it on the driver except the inferred schema (a per-key
-  * type vote reduced with `reduce` — bytes, not rows), so a multi-GB sidecar
-  * still loads as a distributed DataFrame.
+  * Shape, as in the reference (src/main.rs:144-209): [[load]] reads the
+  * sidecar once — one Spark read collected to the driver — and in that one
+  * pass votes the types, coerces the values and builds the two first-wins
+  * maps. [[joinFiles]] resolves each file to its one winning row and attaches
+  * it through a single broadcast join.
+  *
+  * Driver memory: the de-duplicated sidecar rows are held on the driver. That
+  * is the same order of size as the broadcast of those rows that the join
+  * ships to every executor, so a sidecar too large for the driver would be
+  * too large to broadcast as well.
   */
 object Metadata {
 
@@ -55,132 +60,81 @@ object Metadata {
     MetaSchema(TreeMap.empty[String, MetadataType] ++ base + ("transcription" -> MString))
   }
 
-  /** Distributed JSONL type-inference pre-pass: one vote map per line, merged
-    * with the reference lattice. Runs over ALL object lines (keyless rows
-    * still vote — the F6 quirk). Equivalent to a treeAggregate; the data that
-    * reaches the driver is one Map[String, MetadataType].
+  /** One sidecar line: its normalized `relative_path`, its `file_name` and
+    * its values in `MetaSchema.keys` order. */
+  private type Line = (String, String, Seq[Any])
+
+  /** Load the sidecar as its first-wins table (J2, reference: insert_record,
+    * src/main.rs:178-193): one row per line that is the FIRST holder of its
+    * `relative_path` or its `file_name`, with columns
+    * `relative_path, file_name, _meta_line, <metadata keys...>`. A key the
+    * line lost to an earlier one is null, so every non-null key is unique.
+    * Lines with neither key are dropped (F6, src/main.rs:323-325 / :378-380)
+    * after their types were voted.
     */
-  def inferJsonlSchema(spark: SparkSession, path: String): MetaSchema = {
-    // RDD (java-serialized) rather than Dataset: the vote values are the
-    // MetadataType ADT, which needs no Spark encoder on this reduce-to-driver path.
-    val votes: Map[String, MetadataType] = spark.read.textFile(path).rdd
-      .map { line =>
-        val t = line.trim
-        if (t.isEmpty) Map.empty[String, Option[MetadataType]]
-        else {
-          val node = try new ObjectMapper().readTree(t) catch { case _: Throwable => null }
-          if (node == null || !node.isObject) Map.empty[String, Option[MetadataType]]
-          else node.properties().asScala.map { e =>
-            e.getKey -> MetadataType.inferJson(e.getValue)
-          }.toMap
-        }
-      }
-      // fold, not reduce: an EMPTY sidecar must yield the transcription-only
-      // schema (the reference treats it as an empty store), not crash
-      .fold(Map.empty[String, Option[MetadataType]]) { (a, b) =>
-        (a.keySet ++ b.keySet).map { k =>
-          val merged = (a.get(k).flatten, b.get(k).flatten) match {
-            case (Some(x), Some(y)) => Some(x.merge(y))
-            case (x, y)             => x.orElse(y)
-          }
-          k -> merged
-        }.toMap
-      }
-      .collect { case (k, Some(t)) => k -> t }.toMap
-    withTranscription(votes)
-  }
-
-  /** CSV schema = header columns, all String (src/main.rs:309-314). */
-  def inferCsvSchema(spark: SparkSession, path: String): MetaSchema = {
-    val header = spark.read.option("header", true).csv(path).columns
-    withTranscription(header.map(_ -> (MString: MetadataType)).toMap)
-  }
-
-  private val mapper = new ObjectMapper()
-
-  /** Load the sidecar into a DataFrame with columns
-    * `relative_path, file_name, _meta_line, <metadata keys...>` conforming to
-    * `schema`. Values are coerced per the reference (P7): scalars under a
-    * String-typed column render as their JSON text; list elements likewise.
-    */
-  def load(spark: SparkSession, path: String, fmt: Format, schema: MetaSchema): DataFrame = {
-    fmt match {
-      case Csv         => loadCsv(spark, path, schema)
-      case Jsonl       => loadJsonl(spark, path, schema)
-      case ParquetMeta => loadParquetMeta(spark, path, schema)
-    }
-  }
-
   def load(spark: SparkSession, path: String): (DataFrame, MetaSchema) = {
-    val fmt = formatFromPath(path)
-    val schema = fmt match {
-      case Csv         => inferCsvSchema(spark, path)
-      case Jsonl       => inferJsonlSchema(spark, path)
-      case ParquetMeta => inferParquetSchema(spark, path)
+    val (schema, lines) = formatFromPath(path) match {
+      case Jsonl       => readJsonl(spark, path)
+      case Csv         => readFrame(spark.read.option("header", true).csv(path))
+      case ParquetMeta => readFrame(spark.read.parquet(path))
     }
-    (load(spark, path, fmt, schema), schema)
+    val (seenRel, seenName) = (new java.util.HashSet[String], new java.util.HashSet[String])
+    val rows = lines.iterator.zipWithIndex.flatMap { case ((rel, name, values), i) =>
+      val r = if (rel != null && seenRel.add(rel)) rel else null
+      val n = if (name != null && seenName.add(name)) name else null
+      if (r == null && n == null) None else Some(Row.fromSeq(r +: n +: i.toLong +: values))
+    }.toSeq
+    val fields = Seq(StructField("relative_path", StringType), StructField("file_name", StringType),
+      StructField("_meta_line", LongType)) ++ schema.sparkFields
+    (spark.createDataFrame(rows.asJava, StructType(fields)), schema)
   }
 
-  /** Parquet sidecar: types map into the lattice from the file schema itself
-    * (no data pass) — numerics → Float64, booleans → Bool, arrays → List,
-    * everything else → String, reserved keys dropped. */
-  def inferParquetSchema(spark: SparkSession, path: String): MetaSchema = {
-    def toMeta(dt: org.apache.spark.sql.types.DataType): MetadataType = dt match {
-      case org.apache.spark.sql.types.BooleanType => MBool
-      case t if t.isInstanceOf[org.apache.spark.sql.types.NumericType] => MFloat64
-      case org.apache.spark.sql.types.ArrayType(inner, _) => MList(toMeta(inner))
-      case _ => MString
+  /** CSV (every column String, src/main.rs:309-314) and the Parquet engine
+    * extension (numerics → Float64, booleans → Bool, arrays → List, anything
+    * else → String): the schema comes from the frame's own, and its rows are
+    * cast to it and collected in file order. */
+  private def readFrame(raw: DataFrame): (MetaSchema, Seq[Line]) = {
+    def toMeta(dt: DataType): MetadataType = dt match {
+      case BooleanType          => MBool
+      case _: NumericType       => MFloat64
+      case ArrayType(inner, _)  => MList(toMeta(inner))
+      case _                    => MString
     }
-    val fields = spark.read.parquet(path).schema
-      .filterNot(f => f.name == "file_name" || f.name == "relative_path")
-      .map(f => f.name -> toMeta(f.dataType)).toMap
-    withTranscription(fields)
-  }
-
-  private def loadParquetMeta(spark: SparkSession, path: String, schema: MetaSchema): DataFrame = {
-    val raw = spark.read.parquet(path)
-      .withColumn("_meta_line", monotonically_increasing_id())
+    val schema = withTranscription(raw.schema.map(f => f.name -> toMeta(f.dataType)).toMap)
     val have = raw.columns.toSet
-    val metaCols = schema.keys.map { k =>
-      val base =
-        if (!have(k)) lit(null)
-        else schema.types(k) match {
-          case MFloat64 => col(k).cast(DoubleType)
-          case MBool    => col(k).cast(BooleanType)
-          case MString  => col(k).cast(StringType)
-          case l: MList => col(k).cast(l.toSpark)
-        }
-      val c = if (k == "transcription") coalesce(base.cast(StringType), lit("-")) else base
-      c.as(k)
+    def str(k: String) = if (have(k)) col(k).cast(StringType) else lit(null).cast(StringType)
+    val values = schema.keys.map { k =>
+      if (k == "transcription") coalesce(str(k), lit("-")) // src/main.rs:317-319
+      else col(k).cast(schema.types(k).toSpark)
     }
-    keyCols(raw).select(
-      col("relative_path") +: col("file_name") +: col("_meta_line") +: metaCols: _*)
+    val lines = raw.select(str("relative_path") +: str("file_name") +: values: _*).collect()
+      .map(r => (Option(r.getString(0)).map(PathNorm.normalize).orNull, r.getString(1), r.toSeq.drop(2)))
+    (schema, lines.toSeq)
   }
 
-  private def keyCols(df: DataFrame): DataFrame = {
-    val cols = df.columns.toSet
-    val rel = if (cols("relative_path")) PathNorm.normalizeCol(col("relative_path")) else lit(null).cast(StringType)
-    val name = if (cols("file_name")) col("file_name") else lit(null).cast(StringType)
-    df.withColumn("relative_path", rel).withColumn("file_name", name)
-      // F6: rows with neither key are dropped from the join side
-      // (schema votes were already counted) — src/main.rs:323-325 / :378-380.
-      .filter(coalesce(col("relative_path"), col("file_name")).isNotNull)
-  }
-
-  private def loadCsv(spark: SparkSession, path: String, schema: MetaSchema): DataFrame = {
-    val raw = spark.read.option("header", true).csv(path)
-      .withColumn("_meta_line", monotonically_increasing_id())
-    val have = raw.columns.toSet
-    val metaCols = schema.keys.map { k =>
-      val c =
-        if (k == "transcription")
-          // default injected at load time (src/main.rs:317-319)
-          coalesce(if (have(k)) col(k) else lit(null).cast(StringType), lit("-"))
-        else if (have(k)) col(k)
-        else lit(null).cast(StringType)
-      c.as(k)
+  /** JSONL: each line is parsed once; blank and non-object lines are skipped
+    * (src/main.rs:340-348). Every object line votes its types, keyless ones
+    * included; the values are then coerced to the merged schema (P7). */
+  private def readJsonl(spark: SparkSession, path: String): (MetaSchema, Seq[Line]) = {
+    val mapper = new ObjectMapper()
+    val nodes = spark.read.textFile(path).collect().toSeq.map(_.trim).filter(_.nonEmpty)
+      .flatMap(t => scala.util.Try(mapper.readTree(t)).toOption.filter(n => n != null && n.isObject))
+    val votes = nodes.foldLeft(Map.empty[String, MetadataType]) { (acc, node) =>
+      node.properties().asScala.foldLeft(acc) { (a, e) =>
+        MetadataType.inferJson(e.getValue)
+          .fold(a)(t => a.updated(e.getKey, a.get(e.getKey).fold(t)(_.merge(t))))
+      }
     }
-    keyCols(raw).select(col("relative_path") +: col("file_name") +: col("_meta_line") +: metaCols: _*)
+    val schema = withTranscription(votes)
+    val lines = nodes.map { node =>
+      val values = schema.types.toSeq.map { case (k, t) =>
+        if (k == "transcription") Option(jsonText(node.get(k))).getOrElse("-") // src/main.rs:372-374
+        else convertJson(node.get(k), t)
+      }
+      (Option(jsonText(node.get("relative_path"))).map(PathNorm.normalize).orNull,
+        jsonText(node.get("file_name")), values)
+    }
+    (schema, lines)
   }
 
   /** JSON value → the text the reference stores under a String column (P7):
@@ -200,85 +154,36 @@ object Metadata {
       else v.elements().asScala.map(e => convertJson(e, inner)).toSeq
   }
 
-  private def loadJsonl(spark: SparkSession, path: String, schema: MetaSchema): DataFrame = {
-    // Parse against the driver-computed schema; blank and non-object lines are
-    // skipped (src/main.rs:340-348). Distributed parse over the text RDD with
-    // an explicit schema — value coercion per P7 (non-string scalars under a
-    // String column render as JSON text).
-    val fields = StructType(
-      Seq(
-        StructField("relative_path", StringType),
-        StructField("file_name", StringType),
-        StructField("_meta_line", LongType)) ++ schema.sparkFields)
-    val types = schema.types.toSeq
-    val rows = spark.read.textFile(path).rdd.zipWithIndex().flatMap { case (line, lineNo) =>
-      val t = line.trim
-      if (t.isEmpty) None
-      else {
-        val node = try mapper.readTree(t) catch { case _: Throwable => null }
-        if (node == null || !node.isObject) None
-        else {
-          val rel = Option(node.get("relative_path")).map(jsonText).map(PathNorm.normalize).orNull
-          val name = Option(node.get("file_name")).map(jsonText).orNull
-          val metaVals = types.map { case (k, ty) =>
-            if (k == "transcription")
-              Option(node.get(k)).map(jsonText).getOrElse("-") // src/main.rs:372-374
-            else convertJson(node.get(k), ty)
-          }
-          Some(org.apache.spark.sql.Row.fromSeq(rel +: name +: lineNo +: metaVals))
-        }
-      }
-    }
-    val parsed = spark.createDataFrame(rows, fields)
-    keyCols(parsed).select(
-      col("relative_path") +: col("file_name") +: col("_meta_line") +:
-        schema.keys.map(col): _*)
-  }
-
-  /** J2 — first occurrence in file order wins for a given key column
-    * (reference: insert_record, src/main.rs:178-193). */
-  def firstWins(df: DataFrame, key: String): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(col("_meta_line"))
-    df.filter(col(key).isNotNull)
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_rn")
-  }
-
   /** J1 — the 3-level priority metadata join (reference: metadata_for_file,
     * src/main.rs:195-209): per audio file, metadata resolves by
     *   1. by_relative_path[relpath]
     *   2. by_name[file_name]
     *   3. by_name[relpath]
-    * with per-column COALESCE across the three, then `transcription` defaults
-    * to "-" when no level matched (P8, src/main.rs:204-208).
+    * as a whole row (level 2 is consulted only when level 1 missed entirely),
+    * then `transcription` defaults to "-" when no level matched (P8,
+    * src/main.rs:204-208).
     *
-    * Shape: three BROADCAST left joins (sidecar ≪ corpus), so the 100 TB scan
-    * never shuffles — each task resolves metadata map-side.
+    * `meta` is the first-wins table [[load]] returns. Its two key columns
+    * are the two maps; the driver builds them from the table, a projection
+    * picks each file's winning `_meta_line`, and ONE broadcast left join on
+    * that index attaches the row, so the corpus scan never shuffles.
     */
   def joinFiles(files: DataFrame, meta: DataFrame, schema: MetaSchema): DataFrame = {
-    val byRel = firstWins(meta, "relative_path")
-    val byName = firstWins(meta, "file_name")
-    def pick(side: DataFrame, alias: String, fileKey: Column, metaKey: String) = {
-      val proj = side.select(
-        col(metaKey).as(s"${alias}_key") +: schema.keys.map(k => col(k).as(s"${alias}_$k")): _*)
-      (broadcast(proj), fileKey === col(s"${alias}_key"))
+    val keys = meta.select("relative_path", "file_name", "_meta_line").collect()
+    def byKey(i: Int): Map[String, Long] =
+      keys.filterNot(_.isNullAt(i)).map(r => r.getString(i) -> r.getLong(2)).toMap
+    val (byRel, byName) = (byKey(0), byKey(1))
+    val winner = udf { (rel: String, name: String) =>
+      byRel.getOrElse(rel, byName.getOrElse(name, byName.getOrElse(rel, -1L)))
     }
-    val (m1, c1) = pick(byRel, "m1", col("relative_path"), "relative_path")
-    val (m2, c2) = pick(byName, "m2", col("file_name"), "file_name")
-    val (m3, c3) = pick(byName, "m3", col("relative_path"), "file_name")
-    val joined = files.join(m1, c1, "left").join(m2, c2, "left").join(m3, c3, "left")
-    val matched1 = col("m1_key").isNotNull
-    val matched2 = col("m2_key").isNotNull
+    val side = meta.select(
+      col("_meta_line").as("_meta_idx") +: schema.keys.map(k => col(k).as(s"_m_$k")): _*)
     val resolved = schema.keys.map { k =>
-      // Whole-row priority, not per-column: level 2 is consulted only when
-      // level 1 missed entirely (matches the reference's map lookup).
-      val c = when(matched1, col(s"m1_$k"))
-        .when(matched2, col(s"m2_$k"))
-        .otherwise(col(s"m3_$k"))
-      val withDefault = if (k == "transcription") coalesce(c, lit("-")) else c
-      withDefault.as(k)
+      val c = col(s"_m_$k")
+      (if (k == "transcription") coalesce(c, lit("-")) else c).as(k)
     }
-    joined.select(files.columns.map(col).toSeq ++ resolved: _*)
+    files.withColumn("_meta_idx", winner(col("relative_path"), col("file_name")))
+      .join(broadcast(side), Seq("_meta_idx"), "left")
+      .select(files.columns.map(col).toSeq ++ resolved: _*)
   }
 }

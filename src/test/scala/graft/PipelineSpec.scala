@@ -462,9 +462,10 @@ class PipelineSpec extends SparkSpec {
     val meta = writeText(in, "m.jsonl",
       """{"x": 1.5, "duration": 9.9, "id": 3}""" + "\n" +          // keyless: votes only
       """{"relative_path":"a.wav","x": 2.5}""" + "\n")
-    val schema = graft.sources.Metadata.inferJsonlSchema(spark, meta.getAbsolutePath)
+    val (table, schema) = graft.sources.Metadata.load(spark, meta.getAbsolutePath)
     assert(schema.types.get("x").contains(MFloat64)) // voted from the keyless row too
     assert(!schema.types.contains("duration") && !schema.types.contains("id"))
     assert(schema.types.get("transcription").contains(MString))
+    assert(table.count() == 1) // the keyless row voted but is not joinable
   }
 }

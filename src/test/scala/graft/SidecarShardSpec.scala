@@ -1,0 +1,134 @@
+package graft
+
+import graft.functions.Wav
+import graft.operators.Sharding
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, Row}
+import org.apache.spark.sql.functions.col
+
+/** The sidecar join (J1/J2) and the shard ranking (X1) through the real
+  * pipeline entry points, plus a pin on how many Spark jobs one pipeline run
+  * launches. */
+class SidecarShardSpec extends SparkSpec {
+
+  /** One sidecar line: relative_path, file_name, transcription, score. `None`
+    * is an absent key in JSONL and an empty field in CSV; `Some(null)` is a
+    * JSON null. */
+  private type Line = (Option[String], Option[String], Option[String], Option[String])
+
+  private val lines: Seq[Line] = Seq(
+    (Some("a/one.wav"), None, Some("rel-one"), Some("1.5")),
+    (None, Some("one.wav"), Some("name-one"), Some("2.5")),           // loses to level 1
+    (Some(null), Some("two.wav"), Some("name-two"), Some("3.0")),     // level 2, null relpath
+    (None, Some("c/three.wav"), Some("relname-three"), Some(null)),   // level 3, JSON null
+    (Some("./d/four.wav"), None, Some("dot-four"), None),             // ./-prefixed
+    (Some("f/six.wav"), None, Some("six-first"), Some("6")),
+    (Some("f/six.wav"), Some("eight.wav"), Some("six-second"), Some("8")), // loses rel, wins name
+    (None, Some("seven.wav"), Some("seven-first"), None),
+    (None, Some("seven.wav"), Some("seven-second"), None),            // duplicate name
+    (None, None, Some("keyless"), Some("\"wide\"")),                  // votes only
+    (None, Some("nine.wav"), Some("nine-level2"), None),
+    (None, Some("i/nine.wav"), Some("nine-level3"), None),            // level 2 wins over 3
+    (Some("j/ten.wav"), None, Some(null), Some("10")))                // null transcription
+
+  /** path → (transcription, score) each file must resolve to. */
+  private val expected: Map[String, (String, String)] = Map(
+    "a/one.wav" -> ("rel-one", "1.5"),
+    "b/two.wav" -> ("name-two", "3.0"),
+    "c/three.wav" -> ("relname-three", null),
+    "d/four.wav" -> ("dot-four", null),
+    "e/five.wav" -> ("-", null),
+    "f/six.wav" -> ("six-first", "6"),
+    "g/seven.wav" -> ("seven-first", null),
+    "h/eight.wav" -> ("six-second", "8"),
+    "i/nine.wav" -> ("nine-level2", null),
+    "j/ten.wav" -> ("-", "10"))
+
+  private def jsonl: String = lines.map { case (rel, name, t, score) =>
+    def str(v: String) = if (v == null) "null" else "\"" + v + "\""
+    (rel.map(v => s""""relative_path":${str(v)}""") ++ name.map(v => s""""file_name":${str(v)}""") ++
+      t.map(v => s""""transcription":${str(v)}""") ++ score.map(v => s""""score":${Option(v).getOrElse("null")}"""))
+      .mkString("{", ",", "}")
+  }.mkString("", "\n", "\n")
+
+  private def csv: String = "relative_path,file_name,transcription,score\n" + lines.map {
+    case (rel, name, t, score) =>
+      Seq(rel, name, t, score).map(_.flatMap(Option(_)).fold("")(_.stripPrefix("\"").stripSuffix("\"")))
+        .mkString(",")
+  }.mkString("", "\n", "\n")
+
+  private def tree(sidecarName: String, sidecar: String): (java.io.File, java.io.File) = {
+    val in = tmpDir("graft-j1")
+    expected.keys.foreach(p => writeFile(in, p, Wav.synthPcmWav(16000, 160)))
+    (in, writeText(in, sidecarName, sidecar))
+  }
+
+  private def run(in: java.io.File, sidecar: java.io.File): java.io.File = {
+    val out = tmpDir("graft-j1-out")
+    AudioToDataset.run(spark, AudioToDataset.Config(
+      in.getAbsolutePath, out.getAbsolutePath, metadataFile = Some(sidecar.getAbsolutePath)))
+    out
+  }
+
+  private def resolved(out: java.io.File): Map[String, (String, String)] =
+    spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath).collect().map { r =>
+      r.getAs[Row]("audio").getAs[String]("path") ->
+        (r.getAs[String]("transcription"), r.getAs[String]("score"))
+    }.toMap
+
+  test("J1/J2 parity through the pipeline: JSONL sidecar") {
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    assert(resolved(run(in, sidecar)) == expected)
+  }
+
+  test("J1/J2 parity through the pipeline: CSV sidecar") {
+    val (in, sidecar) = tree("meta.csv", csv)
+    assert(resolved(run(in, sidecar)) == expected)
+  }
+
+  test("shard i holds the i-th key in Spark's ORDER BY order (UTF-8, not UTF-16)") {
+    val s = spark
+    import s.implicits._
+    val paths = Seq("～.wav", "😀.wav", "b.wav", "a.wav", "z.wav")
+    val sparkOrder = paths.toDF("p").orderBy("p").collect().map(_.getString(0)).toSeq
+    // the two non-ASCII names order differently as UTF-16 and as UTF-8 bytes
+    assert(paths.sorted != sparkOrder)
+    val (sharded, n) = Sharding.shardConsecutiveByKeyCounted(paths.toDF("p"), "p", filesPerShard = 1)
+    assert(n == paths.length)
+    val byShard = sharded.collect().map(r => r.getInt(1) -> r.getString(0)).sortBy(_._1).toSeq
+    assert(byShard == sparkOrder.zipWithIndex.map(_.swap))
+  }
+
+  test("shard ids of primitive and null keys come from generated code, in ORDER BY order") {
+    val s = spark
+    import s.implicits._
+    spark.conf.set("spark.sql.codegen.fallback", "false") // a compile error must fail, not fall back
+    try {
+      val df = Seq[java.lang.Integer](10, -1, null, 3, 3, 2).toDF("k")
+      val (sharded, n) = Sharding.shardConsecutiveByKeyCounted(df, "k", filesPerShard = 2)
+      assert(n == 5) // null, -1, 2, 3, 10
+      val got = sharded.collect().map(r => Option(r.get(0)) -> r.getInt(1)).toSet
+      assert(got == Set(None -> 0, Some(-1) -> 0, Some(2) -> 1, Some(3) -> 1, Some(10) -> 2))
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("a warm JSONL→Parquet pipeline run launches at most 6 Spark jobs") {
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    run(in, sidecar) // warm: the first run also pays one-off planning work
+    val group = "sidecar-shard-spec-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "job-count pin")
+    val out = try run(in, sidecar) finally {
+      spark.sparkContext.clearJobGroup()
+      GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() <= 6, s"${jobs.get()} jobs")
+    assert(resolved(out) == expected)
+  }
+}
