@@ -13,8 +13,10 @@ import org.apache.spark.sql.functions._
   *
   *   sidecar read once to the driver: type vote, coercion, first-wins maps
   *     (S2/S3, J2, P7)
-  *   binaryFile scan (S1, F1–F5)
-  *     → shard assignment from one collect of the paths (X1)
+  *   planning pass: binaryFile listing of paths and lengths, F1–F5 (S1)
+  *     → the kept names collected once and cut into shards on the driver (X1)
+  *   content pass, one task per shard, no shuffle and no sort:
+  *     read each kept file once (P4)
   *     → WAV parse (P5)
   *     → one broadcast join on each file's winning sidecar row (J1, P8)
   *     → audio struct assembly (P6)
@@ -43,19 +45,10 @@ object AudioToDataset {
       // zip bundles explode into entries in-executor (bang-notation paths)
       expandArchives: Boolean = false)              // --expand-archives
 
-  /** The logical plan up to (but excluding) the sink: returns the dataframe
-    * with columns `audio, duration, <metadata keys sorted>, shard_id` and the
-    * resolved metadata schema. */
+  /** The sink input: columns `audio, duration, <metadata keys sorted>,
+    * shard_id`, one partition per shard with its rows in `audio.path` order,
+    * plus the resolved metadata schema. */
   def plan(spark: SparkSession, cfg: Config): (DataFrame, Metadata.MetaSchema) = {
-    val (df, sch, _) = planWithCount(spark, cfg)
-    (df, sch)
-  }
-
-  /** [[plan]] plus the post-filter file count (free: the shard ranking
-    * counts its keys) — the CLI sink path sizes its shard repartition from
-    * it WITHOUT a second scan. */
-  private[graft] def planWithCount(
-      spark: SparkSession, cfg: Config): (DataFrame, Metadata.MetaSchema, Long) = {
     val (metaDf, metaSchema) = cfg.metadataFile match {
       case Some(mf) =>
         val (df, sch) = Metadata.load(spark, mf)
@@ -65,13 +58,15 @@ object AudioToDataset {
           scala.collection.immutable.TreeMap("transcription" -> (MString: MetadataType))))
     }
     // X1: scan order is relative-path order (documented divergence from the
-    // platform-dependent directory iterator, SURVEY.md §7.4); the ranking
-    // collects the post-filter paths once and never moves the audio bytes
-    val (files, nFiles) = Sharding.shardConsecutiveByKeyCounted(
-      AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
-        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives),
-      "relative_path", cfg.filesPerShard)
-    val parsed = files.withColumn("wav", Wav.parseCol(col("content"))) // P5
+    // platform-dependent directory iterator, SURVEY.md §7.4); the planning
+    // pass brings the kept names to the driver once, and no audio byte is
+    // read before the task that writes its shard
+    val kept = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
+        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives)
+      .select("path", "length", "relative_path", "entry").collect()
+      .map(r => AudioScan.File(r.getString(0), r.getAs[java.lang.Long](1), r.getString(2), r.getString(3)))
+    val shards = Sharding.consecutiveShards(kept.toIndexedSeq, cfg.filesPerShard)(_.relativePath)
+    val parsed = AudioScan.read(spark, shards).withColumn("wav", Wav.parseCol(col("content"))) // P5
     val joined = metaDf match {
       case Some(m) => Metadata.joinFiles(parsed, m, metaSchema)
       case None    => parsed.withColumn("transcription", lit("-"))
@@ -84,28 +79,21 @@ object AudioToDataset {
           col("relative_path").as("path")).as("audio"),
         col("wav.duration").as("duration")) ++
         metaSchema.keys.map(col) :+ col("shard_id"): _*)
-    (sharded, metaSchema, nFiles)
+    (sharded, metaSchema)
   }
 
   def run(spark: SparkSession, cfg: Config): Unit = {
-    val (sharded, metaSchema, nFiles) = planWithCount(spark, cfg)
+    val (sharded, metaSchema) = plan(spark, cfg)
     val metaTypes = metaSchema.types.toSeq
-    // shard count = ceil(post-filter files / filesPerShard), carried out of
-    // the plan's own ranking pass — no second listing, and it reflects EVERY
-    // filter including the MIME sniff
-    val nShards = Some(math.max(1, math.ceil(nFiles.toDouble / cfg.filesPerShard).toInt))
     cfg.format match {
       case "parquet" =>
         ParquetShardSink.writeShards(
           sharded, cfg.output, cfg.parquetCompression,
-          footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(metaTypes)),
-          orderCols = Seq("audio.path"), numShards = nShards)
+          footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(metaTypes)))
       case "duckdb" =>
-        DuckDbShardSink.writeShards(sharded, cfg.output, metaTypes, numShards = nShards)
+        DuckDbShardSink.writeShards(sharded, cfg.output, metaTypes)
       case "webdataset" => // engine extension: tar shards for training loaders
-        graft.sinks.TarShardSink.writeShards(
-          sharded, cfg.output, metaSchema.keys.toSeq,
-          orderCols = Seq("audio.path"), numShards = nShards)
+        graft.sinks.TarShardSink.writeShards(sharded, cfg.output, metaSchema.keys.toSeq)
       case other => throw new IllegalArgumentException(s"unknown format: $other")
     }
   }

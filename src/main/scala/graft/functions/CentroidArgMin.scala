@@ -57,21 +57,23 @@ case class CentroidArgMin(child: Expression, cids: Array[Long], cents: Array[Arr
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("centroids", cents, "long[][]")
     val cidsRef = ctx.addReferenceObj("centroidIds", cids, "long[]")
+    val Seq(best, bcid, k, c, n, acc, i, d) =
+      Seq("best", "bcid", "k", "c", "n", "acc", "i", "d").map(ctx.freshName)
     nullSafeCodeGen(ctx, ev, q =>
       code"""
-        long _ca_best = Long.MAX_VALUE;
-        long _ca_bcid = -1L;
-        for (int _ca_k = 0; _ca_k < $centsRef.length; _ca_k++) {
-          long[] _ca_c = $centsRef[_ca_k];
-          int _ca_n = java.lang.Math.min($q.numElements(), _ca_c.length);
-          long _ca_acc = 0L;
-          for (int _ca_i = 0; _ca_i < _ca_n; _ca_i++) {
-            long _ca_d = $q.getLong(_ca_i) - _ca_c[_ca_i];
-            _ca_acc += _ca_d * _ca_d;
+        long $best = Long.MAX_VALUE;
+        long $bcid = -1L;
+        for (int $k = 0; $k < $centsRef.length; $k++) {
+          long[] $c = $centsRef[$k];
+          int $n = java.lang.Math.min($q.numElements(), $c.length);
+          long $acc = 0L;
+          for (int $i = 0; $i < $n; $i++) {
+            long $d = $q.getLong($i) - $c[$i];
+            $acc += $d * $d;
           }
-          if (_ca_acc < _ca_best) { _ca_best = _ca_acc; _ca_bcid = $cidsRef[_ca_k]; }
+          if ($acc < $best) { $best = $acc; $bcid = $cidsRef[$k]; }
         }
-        ${ev.value} = _ca_bcid;
+        ${ev.value} = $bcid;
       """.toString)
   }
 

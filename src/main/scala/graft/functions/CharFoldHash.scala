@@ -30,19 +30,21 @@ case class CharFoldHash(child: Expression) extends UnaryExpression {
   override protected def nullSafeEval(input: Any): Any =
     CharFoldHash.hash(input.asInstanceOf[UTF8String].toString)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val Seq(s, acc, i, cp) = Seq("s", "acc", "i", "cp").map(ctx.freshName)
     nullSafeCodeGen(ctx, ev, c =>
       code"""
-        java.lang.String _cfh_s = $c.toString();
-        long _cfh_acc = 7L;
-        int _cfh_i = 0;
-        while (_cfh_i < _cfh_s.length()) {
-          int _cfh_cp = _cfh_s.codePointAt(_cfh_i);
-          _cfh_acc = (_cfh_acc * 31L + _cfh_cp) % 1000000007L;
-          _cfh_i += java.lang.Character.charCount(_cfh_cp);
+        java.lang.String $s = $c.toString();
+        long $acc = 7L;
+        int $i = 0;
+        while ($i < $s.length()) {
+          int $cp = $s.codePointAt($i);
+          $acc = ($acc * 31L + $cp) % 1000000007L;
+          $i += java.lang.Character.charCount($cp);
         }
-        ${ev.value} = _cfh_acc;
+        ${ev.value} = $acc;
       """.toString)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CharFoldHash =
     copy(child = newChild)

@@ -65,23 +65,25 @@ case class PqNearest(left: Expression, right: Expression,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val centsRef = ctx.addReferenceObj("pqCents", cents, "double[][][]")
     val cidsRef = ctx.addReferenceObj("pqCids", cids, "long[][]")
+    val Seq(cs, ids, best, bcid, k, c, n, acc, i, d) =
+      Seq("cs", "ids", "best", "bcid", "k", "c", "n", "acc", "i", "d").map(ctx.freshName)
     nullSafeCodeGen(ctx, ev, (m, sv) =>
       code"""
-        double[][] _pq_cs = $centsRef[$m];
-        long[] _pq_ids = $cidsRef[$m];
-        double _pq_best = Double.MAX_VALUE;
-        long _pq_bcid = -1L;
-        for (int _pq_k = 0; _pq_k < _pq_cs.length; _pq_k++) {
-          double[] _pq_c = _pq_cs[_pq_k];
-          int _pq_n = java.lang.Math.min($sv.numElements(), _pq_c.length);
-          double _pq_acc = 0.0;
-          for (int _pq_i = 0; _pq_i < _pq_n; _pq_i++) {
-            double _pq_d = $sv.getDouble(_pq_i) - _pq_c[_pq_i];
-            _pq_acc += _pq_d * _pq_d;
+        double[][] $cs = $centsRef[$m];
+        long[] $ids = $cidsRef[$m];
+        double $best = Double.MAX_VALUE;
+        long $bcid = -1L;
+        for (int $k = 0; $k < $cs.length; $k++) {
+          double[] $c = $cs[$k];
+          int $n = java.lang.Math.min($sv.numElements(), $c.length);
+          double $acc = 0.0;
+          for (int $i = 0; $i < $n; $i++) {
+            double $d = $sv.getDouble($i) - $c[$i];
+            $acc += $d * $d;
           }
-          if (_pq_acc < _pq_best) { _pq_best = _pq_acc; _pq_bcid = _pq_ids[_pq_k]; }
+          if ($acc < $best) { $best = $acc; $bcid = $ids[$k]; }
         }
-        ${ev.value} = ${if (emitD2) "_pq_best" else "_pq_bcid"};
+        ${ev.value} = ${if (emitD2) best else bcid};
       """.toString)
   }
 

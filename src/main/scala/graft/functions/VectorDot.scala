@@ -35,18 +35,20 @@ case class VectorDot(left: Expression, right: Expression) extends BinaryExpressi
     acc
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val Seq(n, acc, i) = Seq("n", "acc", "i").map(ctx.freshName)
     nullSafeCodeGen(ctx, ev, (a, b) =>
       code"""
-        int _vd_n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double _vd_acc = 0.0;
-        for (int _vd_i = 0; _vd_i < _vd_n; _vd_i++) {
-          if (!$a.isNullAt(_vd_i) && !$b.isNullAt(_vd_i)) {
-            _vd_acc += $a.getDouble(_vd_i) * $b.getDouble(_vd_i);
+        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+        double $acc = 0.0;
+        for (int $i = 0; $i < $n; $i++) {
+          if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
+            $acc += $a.getDouble($i) * $b.getDouble($i);
           }
         }
-        ${ev.value} = _vd_acc;
+        ${ev.value} = $acc;
       """.toString)
+  }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): VectorDot =
     copy(left = l, right = r)

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** X1 — deterministic shard assignment (reference: src/main.rs:714-718).
   *
@@ -134,37 +135,58 @@ object Sharding {
   }
 
   /** Exact consecutive chunking with no shuffle and no join: the key column
-    * is collected once, sorted and de-duplicated on the driver in Spark's own
-    * ordering of its type (for strings that is `UTF8String`'s UTF-8 binary
-    * order, the one ORDER BY uses — not `java.lang.String`'s UTF-16 order),
-    * and only every `filesPerShard`-th distinct key is kept as a shard
-    * boundary. A row's `shard_id` is the number of boundaries ≤ its key, a
-    * binary search in a codegen'd projection, so the wide rows never move.
-    * Duplicate key values share a shard; a null key sorts first.
+    * is collected once and [[sortAndBound]] picks the shard boundaries. A
+    * row's `shard_id` is the number of boundaries ≤ its key, a binary search
+    * in a codegen'd projection, so the wide rows never move. Duplicate key
+    * values share a shard; a null key sorts first.
     *
-    * Driver memory: the key column — for the pipeline the post-filter path
-    * list, the same order of size as the file index `binaryFile` already
-    * holds on the driver.
+    * Driver memory: the key column.
     */
-  def shardConsecutiveByKey(df: DataFrame, keyCol: String, filesPerShard: Int): DataFrame =
-    shardConsecutiveByKeyCounted(df, keyCol, filesPerShard)._1
-
-  /** [[shardConsecutiveByKey]] that ALSO returns the distinct-key count, so
-    * callers that need the shard count (the CLI sinks size their repartition
-    * by it) never re-list or re-scan the input to count. */
-  def shardConsecutiveByKeyCounted(
-      df: DataFrame, keyCol: String, filesPerShard: Int): (DataFrame, Long) = {
-    val keyDf = df.select(col(keyCol))
-    val dt = keyDf.schema.head.dataType
-    val ord = TypeUtils.getInterpretedOrdering(dt)
+  def shardConsecutiveByKey(df: DataFrame, keyCol: String, filesPerShard: Int): DataFrame = {
+    val dt = df.schema(keyCol).dataType
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    val (nulls, keys) = keyDf.collect().map(r => toCatalyst(r.get(0))).partition(_ == null)
-    val sorted = keys.sorted(ord)
-    val distinct = nulls.take(1) ++
-      sorted.indices.collect { case i if i == 0 || !ord.equiv(sorted(i - 1), sorted(i)) => sorted(i) }
+    val keys = df.select(col(keyCol)).collect().map(r => toCatalyst(r.get(0)))
+    val (_, bounds) = sortAndBound(keys.toIndexedSeq, dt, filesPerShard)
+    df.withColumn("shard_id",
+      GraftBridge.column(ShardOf(GraftBridge.expression(col(keyCol)), bounds)))
+  }
+
+  /** [[shardConsecutiveByKey]] for items already on the driver: `items` cut
+    * into consecutive shards of `filesPerShard` distinct string keys, in
+    * Spark's ORDER BY order (UTF-8 byte order, null first). Element `i` is
+    * shard `i`, its items in key order. */
+  def consecutiveShards[T](items: IndexedSeq[T], filesPerShard: Int)(key: T => String): IndexedSeq[IndexedSeq[T]] = {
+    val keys = items.map(t => UTF8String.fromString(key(t)))
+    val (order, bounds) = sortAndBound(keys, StringType, filesPerShard)
+    val byShard = order.groupBy(i => bounds.shardOf(keys(i)))
+    (0 until byShard.size).map(byShard(_).map(items))
+  }
+
+  /** Lays out a `shard_id`-carrying frame the way the shard sinks take it:
+    * each shard whole in one partition, rows ordered by `shard_id` and then
+    * `orderCols`. For frames whose shards were assigned by a projection
+    * ([[shardConsecutiveByKey]]); costs an aggregate for the shard count
+    * and a shuffle of the rows. */
+  def arrange(df: DataFrame, orderCols: String*): DataFrame = {
+    val nShards = Option(df.agg(max(col("shard_id"))).head().get(0)).fold(1)(_.asInstanceOf[Int] + 1)
+    df.repartition(nShards, col("shard_id"))
+      .sortWithinPartitions(col("shard_id") +: orderCols.map(col): _*)
+  }
+
+  /** X1's one sort: the permutation that orders `keys` (Catalyst values of
+    * `dt`) the way ORDER BY does — for strings that is `UTF8String`'s UTF-8
+    * binary order, not `java.lang.String`'s UTF-16 order — with nulls first,
+    * and every `filesPerShard`-th distinct key as a shard boundary. */
+  private def sortAndBound(
+      keys: IndexedSeq[Any], dt: DataType, filesPerShard: Int): (IndexedSeq[Int], ShardBounds) = {
+    val ord = TypeUtils.getInterpretedOrdering(dt)
+    val (nulls, nonNull) = keys.indices.partition(keys(_) == null)
+    val sorted = nonNull.sortBy(keys)(ord)
+    val distinct = nulls.take(1).map(keys) ++ sorted.indices.collect {
+      case j if j == 0 || !ord.equiv(keys(sorted(j - 1)), keys(sorted(j))) => keys(sorted(j))
+    }
     val bounds = (filesPerShard until distinct.length by filesPerShard).map(distinct).toArray
-    val shardId = GraftBridge.column(ShardOf(GraftBridge.expression(col(keyCol)), new ShardBounds(bounds, dt)))
-    (df.withColumn("shard_id", shardId), distinct.length.toLong)
+    (nulls ++ sorted, new ShardBounds(bounds, dt))
   }
 }
 

@@ -4,7 +4,7 @@ import graft.core.{MBool, MFloat64, MList, MString, MetadataType}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** K2 — DuckDB shard writer (reference: src/main.rs:388-436, 797-847).
   *
@@ -59,25 +59,20 @@ object DuckDbShardSink {
   }
 
   /** Write one `{shard_id}.duckdb` per shard. `df` must have columns
-    * `audio struct<bytes,sampling_rate,path>, duration, <meta...>, shard_id`.
+    * `audio struct<bytes,sampling_rate,path>, duration, <meta...>, shard_id`
+    * and come already arranged: each shard whole in one partition, its rows
+    * contiguous and in `id` order.
     */
   def writeShards(
       df: DataFrame,
       outDir: String,
-      metaTypes: Seq[(String, MetadataType)],
-      orderCols: Seq[String] = Seq.empty,
-      numShards: Option[Int] = None): Unit = {
+      metaTypes: Seq[(String, MetadataType)]): Unit = {
     val ddl = Seq(createSequenceSql, createTableSql(metaTypes))
     val ins = insertSql(metaTypes)
     val metaNames = metaTypes.map(_._1)
     val metaKinds = metaTypes.map(_._2)
-    val nShards = numShards.getOrElse(
-      math.max(1, df.agg(max(col("shard_id"))).head().getInt(0) + 1))
-    val sortCols = (Seq("shard_id") ++ (if (orderCols.isEmpty) Seq("audio.path") else orderCols)).map(col)
-    val arranged = df
-      .select((Seq(col("audio"), col("duration")) ++ metaNames.map(col) :+ col("shard_id")): _*)
-      .repartition(nShards, col("shard_id"))
-      .sortWithinPartitions(sortCols: _*)
+    val arranged =
+      df.select((Seq(col("audio"), col("duration")) ++ metaNames.map(col) :+ col("shard_id")): _*)
 
     arranged.foreachPartition { rows: Iterator[Row] =>
       Class.forName("org.duckdb.DuckDBDriver")

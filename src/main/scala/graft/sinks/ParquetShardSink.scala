@@ -11,7 +11,7 @@ import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** K1 — exact-name Parquet shard writer with the Hugging Face footer
@@ -83,27 +83,19 @@ object ParquetShardSink {
   }
 
   /** Write `df` (which must carry an int `shard_id` column) as
-    * `outDir/{shard_id}.parquet`, ordered by `orderCols` within each shard.
-    * `footerKv` is appended to each file footer.
+    * `outDir/{shard_id}.parquet`. `df` comes already arranged: each shard
+    * whole in one partition, its rows contiguous and in write order
+    * (`AudioToDataset.plan` plans it so; [[graft.operators.Sharding.arrange]]
+    * lays out any other frame). `footerKv` is appended to each file footer.
     */
   def writeShards(
       df: DataFrame,
       outDir: String,
       compression: String = "snappy",
-      footerKv: Map[String, String] = Map.empty,
-      orderCols: Seq[String] = Seq.empty,
-      numShards: Option[Int] = None): Unit = {
+      footerKv: Map[String, String] = Map.empty): Unit = {
     val spark = df.sparkSession
     val dataSchema = StructType(df.schema.filterNot(_.name == "shard_id"))
-    val dataCols = dataSchema.map(f => col(f.name))
-    // prefer a caller-provided count — the fallback aggregate is an extra
-    // pass over the (wide) input
-    val nShards = numShards.getOrElse(math.max(1,
-      df.agg(max(col("shard_id"))).head.getInt(0) + 1))
-    val sortCols = col("shard_id") +: orderCols.map(col)
-    val arranged = df.select(dataCols :+ col("shard_id"): _*)
-      .repartition(nShards, col("shard_id"))
-      .sortWithinPartitions(sortCols: _*)
+    val arranged = df.select(dataSchema.map(f => col(f.name)) :+ col("shard_id"): _*)
     val shardOrdinal = dataSchema.length // shard_id is the trailing field
     val schemaJson = dataSchema.json
     val codecName = codec(compression)

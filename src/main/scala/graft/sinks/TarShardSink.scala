@@ -4,7 +4,6 @@ import graft.functions.Tar
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
 
 /** K3 (engine extension) — WebDataset tar shard writer: one shard = one
   * task = one `outDir/{shard_id}.tar`, each record two co-sampled members
@@ -22,21 +21,12 @@ import org.apache.spark.sql.functions._
 object TarShardSink {
 
   /** Write `df` (columns `audio(bytes, sampling_rate, path), duration,
-    * <meta...>, shard_id`) as `outDir/{shard_id}.tar`. */
-  def writeShards(
-      df: DataFrame,
-      outDir: String,
-      metaKeys: Seq[String],
-      orderCols: Seq[String] = Seq.empty,
-      numShards: Option[Int] = None): Unit = {
-    val nShards = numShards.getOrElse(math.max(1,
-      df.agg(max(col("shard_id"))).head.getInt(0) + 1))
-    val sortCols = col("shard_id") +: orderCols.map(col)
-    val arranged = df
-      .repartition(nShards, col("shard_id"))
-      .sortWithinPartitions(sortCols: _*)
+    * <meta...>, shard_id`) as `outDir/{shard_id}.tar`. `df` comes already
+    * arranged: each shard whole in one partition, its rows contiguous and in
+    * ordinal order. */
+  def writeShards(df: DataFrame, outDir: String, metaKeys: Seq[String]): Unit = {
     val keys = metaKeys.toIndexedSeq
-    arranged.foreachPartition { rows: Iterator[Row] =>
+    df.foreachPartition { rows: Iterator[Row] =>
       val conf = new Configuration()
       var out: java.io.OutputStream = null
       var currentShard = Int.MinValue

@@ -2,17 +2,29 @@ package graft.sources
 
 import graft.core.PathNorm
 import graft.functions.Magic
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.array.ByteArrayMethods
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** S1 — recursive directory scan of audio files
-  * (reference: src/main.rs:662-712, `recv-dir` + NoSymlink.and(MaxDepth)).
+  * (reference: src/main.rs:662-712, `recv-dir` + NoSymlink.and(MaxDepth)),
+  * in two passes.
   *
-  * Spark's `binaryFile` source lists files distributed (driver only holds the
-  * listing metadata, not contents), yields `path, modificationTime, length,
-  * content`, and prunes `content` reads when a plan only touches metadata —
-  * the listing scales to 100 TB corpora where the reference's `Vec<PathBuf>`
-  * would not.
+  * [[scan]] is the planning pass. Spark's `binaryFile` source lists the tree
+  * distributed and yields `path` and `length` only: `content` is never
+  * selected, so the source opens no file. The filters run on those names,
+  * and only F5 reads anything — a [[SniffBytes]]-byte head per file that
+  * survived F2–F4. Output: `path, length, relative_path, file_name, entry`
+  * (`entry` is set on `--expand-archives` entry rows only).
+  *
+  * [[read]] is the content pass: the kept files, already cut into shards on
+  * the driver, are read once each, by the task that writes their shard.
   *
   * Filters mirrored:
   *   F1 directories — implicit (binaryFile yields only files);
@@ -23,10 +35,14 @@ import org.apache.spark.sql.functions._
   *                   skipped for non-file schemes);
   *   F3 depth      — relative-path component count <= maxDepth (src/main.rs:664-666);
   *   F4 sidecar exclusion — drop the metadata file itself (src/main.rs:650-659);
-  *   F5 MIME allow-list (opt-in) — magic-byte sniff (src/main.rs:695-707).
+  *   F5 MIME allow-list (opt-in) — magic-byte sniff of the file's head
+  *                   (src/main.rs:695-707).
   */
 object AudioScan {
   val DefaultMaxDepth = 50 // reference: src/main.rs:71-73
+  /** Bytes F5 reads from the head of a file: [[Magic.sniff]] looks at no more. */
+  val SniffBytes = 12
+  private val MaxBinaryLength = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
 
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
@@ -67,7 +83,8 @@ object AudioScan {
     val reader = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true")
     pathGlobFilter.foreach(reader.option("pathGlobFilter", _))
-    val raw = reader.load(input)
+    // path and length only: binaryFile opens no file unless `content` is read
+    val raw = reader.load(input).select("path", "length")
     // relative path: strip the input prefix; empty → bare file name
     // (reference: src/main.rs:743-758)
     val rel0 = regexp_replace(col("path"), java.util.regex.Pattern.quote(inputUri + "/"), "")
@@ -122,41 +139,117 @@ object AudioScan {
       df = df.filter(col("path") =!= lit(abs))
       relToInput.foreach(rp => df = df.filter(col("relative_path") =!= lit(rp)))
     }
-    // Engine extension (--expand-archives): zip bundles explode into their
-    // entries IN THE EXECUTOR — archives are transport, so the expansion
-    // happens before the MIME gate and the per-entry rows flow through the
-    // same parse/join/shard pipeline as plain files. Entry paths use jar-URL
-    // bang notation `bundle.zip!inner/name.wav`; a corrupt archive yields
-    // zero rows (fail-closed, like the symlink gate). Local decompression
-    // of one archive is the bounded unit of work — the 100 TB shape is many
-    // archives, not one giant one.
+    // Engine extension (--expand-archives): a zip bundle stands for its
+    // entries, listed by name in the executor — archives are transport, so
+    // the expansion happens before the MIME gate and the entry rows flow
+    // through the same shard and content pass as plain files. Entry paths
+    // use jar-URL bang notation `bundle.zip!inner/name.wav`; a corrupt
+    // archive yields zero rows (fail-closed, like the symlink gate).
+    val conf = hadoopConf(spark)
+    df = df.withColumn("entry", lit(null).cast(StringType))
+      .withColumn("_head", lit(null).cast(BinaryType))
     if (expandArchives) {
-      val entriesUdf = udf { (bytes: Array[Byte]) =>
-        try {
-          val zin = new java.util.zip.ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-          val out = Seq.newBuilder[(String, Array[Byte])]
-          var e = zin.getNextEntry
-          while (e != null) {
-            if (!e.isDirectory) out += ((e.getName, zin.readAllBytes()))
-            e = zin.getNextEntry
-          }
-          zin.close()
-          out.result()
-        } catch { case _: Exception => Seq.empty[(String, Array[Byte])] }
-      }
+      val entriesUdf = udf((path: String) => listEntries(conf.value.value, path))
       val isZip = lower(col("file_name")).endsWith(".zip")
-      val plain = df.filter(!isZip)
       val fromZip = df.filter(isZip)
-        .withColumn("_e", explode(entriesUdf(col("content"))))
+        .withColumn("_e", explode(entriesUdf(col("path"))))
         .withColumn("relative_path",
           concat(col("relative_path"), lit("!"), PathNorm.normalizeCol(col("_e._1"))))
         .withColumn("file_name", PathNorm.fileNameCol(col("relative_path")))
-        .withColumn("content", col("_e._2"))
-        .withColumn("length", length(col("content")).cast("long"))
+        .withColumn("entry", col("_e._1"))
+        .withColumn("_head", col("_e._2"))
+        .withColumn("length", lit(null).cast(LongType))
         .drop("_e")
-      df = plain.unionByName(fromZip.select(plain.columns.map(col).toSeq: _*))
+      df = df.filter(!isZip).unionByName(fromZip)
     }
-    if (checkMimeType) df = df.filter(Magic.isAudioCol(col("content"))) // F5
-    df
+    if (checkMimeType) { // F5: a plain file's head is read only here, after F2–F4
+      val headUdf = udf((path: String) => readHead(conf.value.value, path))
+      df = df.filter(Magic.isAudioCol(coalesce(col("_head"), headUdf(col("path")))))
+    }
+    df.drop("_head")
+  }
+
+  /** One kept file (or archive entry) as the planning pass hands it to the
+    * content pass: `entry` is the zip entry name inside the archive at
+    * `path`, null for a plain file; `length` is null for an entry. */
+  final case class File(path: String, length: java.lang.Long, relativePath: String, entry: String)
+
+  /** The content pass: one partition per shard, `shards(i)` read in order by
+    * the task that writes shard `i`, each file's bytes read once through the
+    * Hadoop FileSystem. Columns `relative_path, content, shard_id, file_name`.
+    * A plain file over Spark's largest binary value fails the run, naming it. */
+  def read(spark: SparkSession, shards: IndexedSeq[IndexedSeq[File]]): DataFrame = {
+    val conf = hadoopConf(spark)
+    val rows = spark.sparkContext.parallelize(shards.zipWithIndex, math.max(1, shards.length))
+      .mapPartitions(_.flatMap { case (files, shard) =>
+        val contents = new Contents(conf.value.value, files)
+        files.iterator.map { f =>
+          InternalRow(UTF8String.fromString(f.relativePath), contents.bytes(f), shard)
+        }
+      })
+    GraftBridge.internalCreateDataFrame(spark, rows, StructType(Seq(StructField("relative_path", StringType),
+        StructField("content", BinaryType), StructField("shard_id", IntegerType, nullable = false))))
+      .withColumn("file_name", PathNorm.fileNameCol(col("relative_path")))
+  }
+
+  private def hadoopConf(spark: SparkSession) =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+
+  private def open(conf: Configuration, path: String): FSDataInputStream = {
+    val p = new HPath(path)
+    p.getFileSystem(conf).open(p)
+  }
+
+  /** The first [[SniffBytes]] bytes of a file, all F5 looks at. */
+  private def readHead(conf: Configuration, path: String): Array[Byte] = {
+    val in = open(conf, path)
+    try in.readNBytes(SniffBytes) finally in.close()
+  }
+
+  /** Entry names of a zip archive with each entry's head for F5; empty when
+    * the archive cannot be read to its end. */
+  private def listEntries(conf: Configuration, path: String): Seq[(String, Array[Byte])] =
+    try entriesOf(conf, path, _ => true)(_.readNBytes(SniffBytes))
+    catch { case _: Exception => Nil }
+
+  /** Streams the archive at `path`, applying `f` to each wanted file entry. */
+  private def entriesOf[A](conf: Configuration, path: String, wanted: String => Boolean)(
+      f: java.util.zip.ZipInputStream => A): Seq[(String, A)] = {
+    val zin = new java.util.zip.ZipInputStream(open(conf, path))
+    try {
+      val out = Seq.newBuilder[(String, A)]
+      var e = zin.getNextEntry
+      while (e != null) {
+        if (!e.isDirectory && wanted(e.getName)) out += e.getName -> f(zin)
+        e = zin.getNextEntry
+      }
+      out.result()
+    } finally zin.close()
+  }
+
+  /** Reads the bytes of one shard's `files` inside its content-pass task; the
+    * shard's entries of the archive last read are held until a row of
+    * another archive. */
+  private final class Contents(conf: Configuration, files: Seq[File]) {
+    private var archive: String = null
+    private var entries = Map.empty[String, Array[Byte]]
+
+    def bytes(f: File): Array[Byte] =
+      if (f.entry == null) {
+        if (f.length > MaxBinaryLength)
+          throw new IllegalStateException(
+            s"${f.path}: ${f.length} bytes is more than one binary value holds ($MaxBinaryLength)")
+        val buf = new Array[Byte](f.length.toInt)
+        val in = open(conf, f.path)
+        try in.readFully(buf) finally in.close()
+        buf
+      } else {
+        if (f.path != archive) {
+          val wanted = files.collect { case g if g.path == f.path && g.entry != null => g.entry }.toSet
+          entries = entriesOf(conf, f.path, wanted)(_.readAllBytes()).toMap
+          archive = f.path
+        }
+        entries.getOrElse(f.entry, throw new IllegalStateException(s"${f.path}: entry ${f.entry} not found"))
+      }
   }
 }

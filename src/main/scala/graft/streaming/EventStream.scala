@@ -108,7 +108,7 @@ object EventStream {
           batch.withColumn("_order", org.apache.spark.sql.functions.col("audio.path")),
           "_order", filesPerShard).drop("_order")
         graft.sinks.ParquetShardSink.writeShards(
-          sharded, s"$outDir/batch=$batchId", orderCols = Seq("audio.path"))
+          graft.operators.Sharding.arrange(sharded, "audio.path"), s"$outDir/batch=$batchId")
       }
     }
 

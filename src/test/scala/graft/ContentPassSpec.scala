@@ -1,0 +1,127 @@
+package graft
+
+import graft.functions.Wav
+import graft.sources.AudioScan
+import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+
+/** `file:` FileSystem that counts opens per path. */
+class OpenCountingFs extends LocalFileSystem {
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    OpenCountingFs.opens.merge(p.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+    super.open(p, bufferSize)
+  }
+}
+
+object OpenCountingFs {
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  def of(f: java.io.File): Int = Option(opens.get(f.getAbsolutePath)).fold(0)(_.intValue)
+}
+
+/** The pipeline's two passes: a planning pass over names that reads at most
+  * a file's head, and a content pass that reads each kept file once, in the
+  * task that writes its shard. */
+class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+
+  private val wav = Wav.synthPcmWav(16000, 160)
+
+  /** Four kept clips, a sidecar, a non-audio decoy, a too-deep clip and a
+    * symlinked directory. */
+  private def tree(): (java.io.File, java.io.File) = {
+    val in = tmpDir("graft-cp")
+    Seq("a.wav", "b/c.wav", "b/d.wav", "e.wav").foreach(writeFile(in, _, wav))
+    writeText(in, "b/decoy.wav", "not audio")
+    writeFile(in, "x/y/z/deep.wav", wav)
+    java.nio.file.Files.createSymbolicLink(
+      new java.io.File(in, "alias").toPath, new java.io.File(in, "b").toPath)
+    val meta = writeText(in, "meta.jsonl", """{"file_name":"c.wav","transcription":"cee"}""" + "\n")
+    (in, meta)
+  }
+
+  private def cfg(in: java.io.File, out: String, meta: Option[java.io.File] = None) =
+    AudioToDataset.Config(in.getAbsolutePath, out, meta.map(_.getAbsolutePath),
+      filesPerShard = 2, maxDepth = 2, checkMimeType = true)
+
+  test("sink input: one partition per shard in path order, no shuffle and no sort") {
+    val (in, meta) = tree()
+    val (sharded, _) = AudioToDataset.plan(spark, cfg(in, "/unused", Some(meta)))
+    val plan = sharded.queryExecution.executedPlan
+    assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, plan.treeString)
+    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan.treeString)
+    val parts = sharded.select("shard_id", "audio.path", "transcription").rdd
+      .mapPartitionsWithIndex((i, rows) => Iterator(i -> rows.map(r => (r.getInt(0), r.getString(1), r.getString(2))).toList))
+      .collect().toSeq
+    assert(parts == Seq(
+      0 -> List((0, "a.wav", "-"), (0, "b/c.wav", "cee")),
+      1 -> List((1, "b/d.wav", "-"), (1, "e.wav", "-"))))
+  }
+
+  test("the planning scan reads no content") {
+    val (in, meta) = tree()
+    val scanned = AudioScan.scan(spark, in.getAbsolutePath, maxDepth = 2,
+      metadataFile = Some(meta.getAbsolutePath), checkMimeType = true)
+    val scans = collect(scanned.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
+    assert(scans.nonEmpty && scans.forall(!_.requiredSchema.fieldNames.contains("content")))
+    assert(scanned.select("relative_path").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("a.wav", "b/c.wav", "b/d.wav", "e.wav"))
+  }
+
+  test("F2/F3/F4 drops are never opened; F5 reads a head, the content pass each kept file once") {
+    val (in, meta) = tree()
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.file.impl", classOf[OpenCountingFs].getName)
+    hc.set("fs.file.impl.disable.cache", "true")
+    try {
+      OpenCountingFs.opens.clear()
+      graft.sources.Metadata.load(spark, meta.getAbsolutePath)
+      val sidecarOpens = OpenCountingFs.of(meta)
+      for (mime <- Seq(true, false)) {
+        OpenCountingFs.opens.clear()
+        AudioToDataset.run(spark, cfg(in, tmpDir("graft-cp-out").getAbsolutePath, Some(meta))
+          .copy(checkMimeType = mime))
+        val kept = Seq("a.wav", "b/c.wav", "b/d.wav", "e.wav").map(new java.io.File(in, _))
+        assert(kept.map(OpenCountingFs.of) == kept.map(_ => if (mime) 2 else 1), s"mime=$mime")
+        assert(OpenCountingFs.of(new java.io.File(in, "b/decoy.wav")) == 1) // sniffed or read
+        assert(OpenCountingFs.of(new java.io.File(in, "x/y/z/deep.wav")) == 0)             // F3
+        assert(OpenCountingFs.of(new java.io.File(in, "alias/c.wav")) == 0)                // F2
+        assert(OpenCountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load") // F4
+      }
+    } finally {
+      hc.unset("fs.file.impl")
+      hc.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  /** A 2.2 GB file that takes no disk space. */
+  private def sparse(dir: java.io.File, name: String): java.io.File = {
+    val f = new java.io.File(dir, name)
+    f.getParentFile.mkdirs()
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try raf.setLength(2200L * 1000 * 1000) finally raf.close()
+    f
+  }
+
+  private def keptPaths(out: java.io.File): Seq[String] =
+    spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
+      .collect().map(_.getAs[Row]("audio").getAs[String]("path")).toSeq.sorted
+
+  test("files over 2 GB: a non-audio decoy or a too-deep file is dropped; a kept one fails, named") {
+    val in = tmpDir("graft-big")
+    writeFile(in, "ok.wav", wav)
+    sparse(in, "decoy.bin")
+    sparse(in, "x/y/z/deep.wav")
+    val out = tmpDir("graft-big-out")
+    AudioToDataset.run(spark, AudioToDataset.Config(
+      in.getAbsolutePath, out.getAbsolutePath, maxDepth = 2, checkMimeType = true))
+    assert(keptPaths(out) == Seq("ok.wav"))
+
+    val kept = sparse(tmpDir("graft-big-kept"), "huge.wav")
+    val e = intercept[Exception](AudioToDataset.run(spark, AudioToDataset.Config(
+      kept.getParent, tmpDir("graft-big-out2").getAbsolutePath)))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains(kept.getAbsolutePath)), e.toString)
+  }
+}

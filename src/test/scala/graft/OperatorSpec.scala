@@ -130,17 +130,16 @@ class OperatorSpec extends SparkSpec {
       assert(total == (0 until n).map(_ % 13).sum.toLong, s"sum total n=$n")
       assert(withCum.count() == n)
       val keyed = (0 until n).map(i => (f"k$i%04d", i)).toDF("key", "p")
-      val (sharded, nKeys) =
-        Sharding.shardConsecutiveByKeyCounted(keyed, "key", filesPerShard = 10)
-      assert(nKeys == n.toLong, s"key count n=$n")
+      val sharded = Sharding.shardConsecutiveByKey(keyed, "key", filesPerShard = 10)
+      assert(sharded.count() == n, s"row count n=$n")
       if (n > 0)
         assert(sharded.agg(max(col("shard_id"))).head.getInt(0) ==
-          (n - 1) / 10, "max shard id consistent with the free count")
+          (n - 1) / 10, "max shard id consistent with the key count")
     }
-    // duplicate keys: the count is DISTINCT keys (the unit shards chunk by)
+    // duplicate keys: shards chunk DISTINCT keys
     val dup = (0 until 60).map(i => (f"k${i % 20}%03d", i)).toDF("key", "p")
-    val (_, nK) = Sharding.shardConsecutiveByKeyCounted(dup, "key", 7)
-    assert(nK == 20L)
+    assert(Sharding.shardConsecutiveByKey(dup, "key", 7)
+      .agg(max(col("shard_id"))).head.getInt(0) == 2) // ceil(20 / 7) shards
   }
 
   test("dedup embedding/semantic: clone-heavy corpus — full clone recall, no dup rows") {

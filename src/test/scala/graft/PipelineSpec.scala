@@ -53,6 +53,7 @@ class PipelineSpec extends SparkSpec {
     z.close()
     writeFile(in, "sub/bundle.zip", bos.toByteArray)
     writeFile(in, "plain.wav", plain)
+    writeFile(in, "broken.zip", bos.toByteArray.take(40)) // corrupt: yields no rows
     AudioToDataset.run(spark, AudioToDataset.Config(
       input = in.getAbsolutePath, output = out.getAbsolutePath,
       expandArchives = true, checkMimeType = true))

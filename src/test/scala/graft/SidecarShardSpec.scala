@@ -93,10 +93,14 @@ class SidecarShardSpec extends SparkSpec {
     val sparkOrder = paths.toDF("p").orderBy("p").collect().map(_.getString(0)).toSeq
     // the two non-ASCII names order differently as UTF-16 and as UTF-8 bytes
     assert(paths.sorted != sparkOrder)
-    val (sharded, n) = Sharding.shardConsecutiveByKeyCounted(paths.toDF("p"), "p", filesPerShard = 1)
-    assert(n == paths.length)
+    val sharded = Sharding.shardConsecutiveByKey(paths.toDF("p"), "p", filesPerShard = 1)
     val byShard = sharded.collect().map(r => r.getInt(1) -> r.getString(0)).sortBy(_._1).toSeq
     assert(byShard == sparkOrder.zipWithIndex.map(_.swap))
+    // the driver-side cut the pipeline plans its shards with agrees
+    assert(Sharding.consecutiveShards(paths.toIndexedSeq, filesPerShard = 1)(identity) ==
+      sparkOrder.map(Seq(_)))
+    assert(Sharding.consecutiveShards((paths :+ "a.wav").toIndexedSeq, filesPerShard = 2)(identity) ==
+      sparkOrder.grouped(2).toSeq.updated(0, Seq("a.wav", "a.wav", sparkOrder(1))))
   }
 
   test("shard ids of primitive and null keys come from generated code, in ORDER BY order") {
@@ -105,14 +109,14 @@ class SidecarShardSpec extends SparkSpec {
     spark.conf.set("spark.sql.codegen.fallback", "false") // a compile error must fail, not fall back
     try {
       val df = Seq[java.lang.Integer](10, -1, null, 3, 3, 2).toDF("k")
-      val (sharded, n) = Sharding.shardConsecutiveByKeyCounted(df, "k", filesPerShard = 2)
-      assert(n == 5) // null, -1, 2, 3, 10
+      val sharded = Sharding.shardConsecutiveByKey(df, "k", filesPerShard = 2)
+      // distinct keys null, -1 | 2, 3 | 10
       val got = sharded.collect().map(r => Option(r.get(0)) -> r.getInt(1)).toSet
       assert(got == Set(None -> 0, Some(-1) -> 0, Some(2) -> 1, Some(3) -> 1, Some(10) -> 2))
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
-  test("a warm JSONL→Parquet pipeline run launches at most 6 Spark jobs") {
+  test("a warm JSONL→Parquet pipeline run launches at most 4 Spark jobs") {
     val (in, sidecar) = tree("meta.jsonl", jsonl)
     run(in, sidecar) // warm: the first run also pays one-off planning work
     val group = "sidecar-shard-spec-jobs"
@@ -128,7 +132,7 @@ class SidecarShardSpec extends SparkSpec {
       GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(jobs.get() <= 6, s"${jobs.get()} jobs")
+    assert(jobs.get() <= 4, s"${jobs.get()} jobs")
     assert(resolved(out) == expected)
   }
 }
