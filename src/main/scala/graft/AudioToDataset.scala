@@ -3,7 +3,7 @@ package graft
 import graft.core._
 import graft.functions.Wav
 import graft.operators.Sharding
-import graft.sinks.{DuckDbShardSink, ParquetShardSink}
+import graft.sinks.{DuckDbShardSink, ParquetShardSink, ShardCommit, TarShardSink}
 import graft.sources.{AudioScan, Metadata}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,7 +30,7 @@ object AudioToDataset {
       input: String,
       output: String,
       metadataFile: Option[String] = None,
-      format: String = "parquet",                   // parquet | duckdb
+      format: String = "parquet",                   // parquet | duckdb | webdataset
       filesPerShard: Int = Sharding.DefaultFilesPerShard, // --files-per-db, 500
       maxDepth: Int = AudioScan.DefaultMaxDepth,    // --max-depth-size, 50
       checkMimeType: Boolean = false,               // --check-mime-type
@@ -83,19 +83,18 @@ object AudioToDataset {
   }
 
   def run(spark: SparkSession, cfg: Config): Unit = {
-    val (sharded, metaSchema) = plan(spark, cfg)
-    val metaTypes = metaSchema.types.toSeq
-    cfg.format match {
+    // the sink is chosen, and its options checked, before the planning pass
+    val write: (DataFrame, Metadata.MetaSchema) => Unit = ShardCommit.extension(cfg.format) match {
       case "parquet" =>
-        ParquetShardSink.writeShards(
-          sharded, cfg.output, cfg.parquetCompression,
-          footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(metaTypes)))
-      case "duckdb" =>
-        DuckDbShardSink.writeShards(sharded, cfg.output, metaTypes)
-      case "webdataset" => // engine extension: tar shards for training loaders
-        graft.sinks.TarShardSink.writeShards(sharded, cfg.output, metaSchema.keys.toSeq)
-      case other => throw new IllegalArgumentException(s"unknown format: $other")
+        ParquetShardSink.codec(cfg.parquetCompression)
+        (df, meta) => ParquetShardSink.writeShards(df, cfg.output, cfg.parquetCompression,
+          footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(meta.types.toSeq)))
+      case "duckdb" => (df, meta) => DuckDbShardSink.writeShards(df, cfg.output, meta.types.toSeq)
+      case "tar" => // engine extension: WebDataset tar shards for training loaders
+        (df, meta) => TarShardSink.writeShards(df, cfg.output, meta.keys)
     }
+    val (sharded, metaSchema) = plan(spark, cfg)
+    write(sharded, metaSchema)
   }
 
   /** CLI mirroring the reference's flags. */

@@ -1,6 +1,8 @@
 package graft.core
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.util.SerializableConfiguration
 
 /** THE engine configuration, shared by every driver-facing entrypoint.
   *
@@ -67,4 +69,9 @@ object GraftSession {
       // per-process managed-table warehouse: concurrent sibling JVMs must
       // never share (or sweep) each other's tables — see EphemeralWarehouse
       .config("spark.sql.warehouse.dir", EphemeralWarehouse.dir)
+
+  /** The session's Hadoop conf, its `spark.hadoop.*` settings included,
+    * shipped to executors for their FileSystem reads and writes. */
+  def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 }

@@ -1,8 +1,6 @@
 package graft.sinks
 
-import graft.core.{MBool, MFloat64, MList, MString, MetadataType}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import graft.core.{GraftSession, MBool, MFloat64, MList, MString, MetadataType}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
 
@@ -21,8 +19,10 @@ import org.apache.spark.sql.functions.col
   *   - per-row insert errors silently ignored (src/main.rs:841).
   *
   * The embedded single-writer model is a natural fit for one-file-per-task:
-  * each executor task builds `{shard}.duckdb` on local disk, then moves it to
-  * `outDir`. The JDBC driver (`org.duckdb.DuckDBDriver`) is loaded
+  * each executor task builds its shard in a local database, commits it, and
+  * copies it into [[ShardCommit]]'s temporary file, which becomes
+  * `{shard}.duckdb`; a failed shard's local database is closed uncommitted
+  * and deleted. The JDBC driver (`org.duckdb.DuckDBDriver`) is loaded
   * reflectively so the library compiles and the SQL generation is testable
   * without DuckDB on the classpath; at runtime the caller ships duckdb_jdbc
   * alongside the app jar.
@@ -73,66 +73,56 @@ object DuckDbShardSink {
     val metaKinds = metaTypes.map(_._2)
     val arranged =
       df.select((Seq(col("audio"), col("duration")) ++ metaNames.map(col) :+ col("shard_id")): _*)
-
+    val sessionConf = GraftSession.hadoopConf(df.sparkSession)
     arranged.foreachPartition { rows: Iterator[Row] =>
       Class.forName("org.duckdb.DuckDBDriver")
       // Jackson for list→JSON text: full escaping (control chars included),
       // matching the reference's serde_json Value::to_string (src/main.rs:835-837)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      var conn: java.sql.Connection = null
-      var stmt: java.sql.PreparedStatement = null
-      var currentShard = Int.MinValue
-      var localPath: java.io.File = null
-      var rowIdx = 0
-      def close(): Unit = if (conn != null) {
-        stmt.close(); conn.commit(); conn.close()
-        val dest = new HPath(s"$outDir/$currentShard.duckdb")
-        val fs = dest.getFileSystem(new Configuration())
-        fs.setWriteChecksum(false)
-        if (fs.exists(dest)) fs.delete(dest, false)
-        fs.copyFromLocalFile(true, true, new HPath(localPath.getAbsolutePath), dest)
-        conn = null; stmt = null
-      }
-      def open(shard: Int): Unit = {
-        localPath = java.io.File.createTempFile(s"graft-shard-$shard-", ".duckdb")
-        localPath.delete()
-        conn = java.sql.DriverManager.getConnection(s"jdbc:duckdb:${localPath.getAbsolutePath}")
+      ShardCommit.commit(rows, outDir, "duckdb", sessionConf.value.value)(
+          r => r.getInt(r.length - 1)) { out =>
+        val local = java.io.File.createTempFile("graft-shard-", ".duckdb")
+        local.delete()
+        val conn = java.sql.DriverManager.getConnection(s"jdbc:duckdb:${local.getAbsolutePath}")
         conn.setAutoCommit(false) // one txn per shard
         val s = conn.createStatement()
         ddl.foreach(s.execute); s.close()
-        stmt = conn.prepareStatement(ins)
-        rowIdx = 0
-      }
-      try {
-        while (rows.hasNext) {
-          val row = rows.next()
-          val shard = row.getInt(row.length - 1)
-          if (shard != currentShard) { close(); open(shard); currentShard = shard }
-          try {
-            val audio = row.getStruct(0)
-            stmt.setInt(1, rowIdx) // in-shard 0-based index
-            stmt.setDouble(2, row.getDouble(1))
-            stmt.setString(3, audio.getAs[String]("path"))
-            stmt.setInt(4, audio.getAs[Int]("sampling_rate"))
-            stmt.setBytes(5, audio.getAs[Array[Byte]]("bytes"))
-            metaKinds.zipWithIndex.foreach { case (t, i) =>
-              val v = row.get(2 + i)
-              val pos = 6 + i
-              (t, v) match {
-                case (_, null)            => stmt.setObject(pos, null)
-                case (MBool, b: Boolean)  => stmt.setBoolean(pos, b)
-                case (MFloat64, d: Double) => stmt.setDouble(pos, d)
-                case (MList(_), seq: scala.collection.Seq[_]) =>
-                  import scala.jdk.CollectionConverters._
-                  stmt.setString(pos, mapper.writeValueAsString(seq.asJava))
-                case (_, x)               => stmt.setString(pos, x.toString)
+        val stmt = conn.prepareStatement(ins)
+        new ShardCommit.Writer[Row] {
+          private var rowIdx = 0
+          def write(row: Row): Unit = {
+            try {
+              val audio = row.getStruct(0)
+              stmt.setInt(1, rowIdx) // in-shard 0-based index
+              stmt.setDouble(2, row.getDouble(1))
+              stmt.setString(3, audio.getAs[String]("path"))
+              stmt.setInt(4, audio.getAs[Int]("sampling_rate"))
+              stmt.setBytes(5, audio.getAs[Array[Byte]]("bytes"))
+              metaKinds.zipWithIndex.foreach { case (t, i) =>
+                val v = row.get(2 + i)
+                val pos = 6 + i
+                (t, v) match {
+                  case (_, null)            => stmt.setObject(pos, null)
+                  case (MBool, b: Boolean)  => stmt.setBoolean(pos, b)
+                  case (MFloat64, d: Double) => stmt.setDouble(pos, d)
+                  case (MList(_), seq: scala.collection.Seq[_]) =>
+                    import scala.jdk.CollectionConverters._
+                    stmt.setString(pos, mapper.writeValueAsString(seq.asJava))
+                  case (_, x)               => stmt.setString(pos, x.toString)
+                }
               }
-            }
-            stmt.executeUpdate()
-          } catch { case _: java.sql.SQLException => /* src/main.rs:841 */ }
-          rowIdx += 1
+              stmt.executeUpdate()
+            } catch { case _: java.sql.SQLException => /* src/main.rs:841 */ }
+            rowIdx += 1
+          }
+          def close(): Unit = {
+            stmt.close(); conn.commit(); conn.close()
+            java.nio.file.Files.copy(local.toPath, out)
+            local.delete()
+          }
+          override def abort(): Unit = try conn.close() finally local.delete()
         }
-      } finally close()
+      }
     }
   }
 }

@@ -1,32 +1,35 @@
 package graft.sinks
 
-import graft.core.MetadataType
+import graft.core.{GraftSession, MetadataType}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.FSDataOutputStream
 import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.api.WriteSupport.WriteContext
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.ParquetWriter
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.HadoopStreams
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** K1 — exact-name Parquet shard writer with the Hugging Face footer
   * (reference: write_files_to_parquet, src/main.rs:438-613).
   *
   * One shard = one task = one `outDir/{shard_id}.parquet`, written directly by
-  * the executor with parquet-java's ParquetWriter wrapping Spark's own
-  * ParquetWriteSupport (so value encoding is identical to df.write.parquet),
-  * plus:
+  * the executor through [[ShardCommit]] with parquet-java's ParquetWriter
+  * wrapping Spark's own ParquetWriteSupport (so value encoding is identical
+  * to df.write.parquet), plus:
   *   - footer KV `huggingface -> {"info":{"features":{...}}}` (src/main.rs:582-601),
   *   - row groups of 256 rows (src/main.rs:607) — small on purpose: rows carry
   *     multi-MB audio blobs, so 256 rows keeps a row group ~100 MB,
   *   - the reference's compression fallbacks Lzo→Snappy, Lz4→Lz4Raw
   *     (src/main.rs:571-580),
-  *   - overwrite of a pre-existing shard file (X4, src/main.rs:732-735).
+  *   - an old shard file replaced only by a whole new one (X4,
+  *     src/main.rs:732-735; [[ShardCommit]]).
   *
   * Scale: no driver-side loop, no collect — shards stream through executor
   * tasks; at 1000 executors the write is embarrassingly parallel, matching
@@ -65,21 +68,18 @@ object ParquetShardSink {
     s"""{"info":{"features":{$features}}}"""
   }
 
-  /** Spark's write support + extra footer KV pairs. */
-  private class FooterKvWriteSupport(extra: Map[String, String])
-      extends ParquetWriteSupport {
-    override def init(configuration: Configuration): WriteContext = {
-      val ctx = super.init(configuration)
-      val merged = new java.util.HashMap[String, String](ctx.getExtraMetaData)
-      extra.foreach { case (k, v) => merged.put(k, v) }
-      new WriteContext(ctx.getSchema, merged)
-    }
+  /** The commit loop's stream as a Parquet file. It has no block size, so
+    * row groups are not padded to blocks (as `HadoopOutputFile` off HDFS). */
+  private class StreamFile(out: FSDataOutputStream) extends OutputFile {
+    def create(blockSizeHint: Long): PositionOutputStream = HadoopStreams.wrap(out)
+    def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = create(blockSizeHint)
+    def supportsBlockSize(): Boolean = false
+    def defaultBlockSize(): Long = 0
   }
 
-  private class Builder(file: HadoopOutputFile, support: WriteSupport[InternalRow])
-      extends ParquetWriter.Builder[InternalRow, Builder](file) {
+  private class Builder(file: OutputFile) extends ParquetWriter.Builder[InternalRow, Builder](file) {
     override def self(): Builder = this
-    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] = support
+    override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] = new ParquetWriteSupport
   }
 
   /** Write `df` (which must carry an int `shard_id` column) as
@@ -97,57 +97,37 @@ object ParquetShardSink {
     val dataSchema = StructType(df.schema.filterNot(_.name == "shard_id"))
     val arranged = df.select(dataSchema.map(f => col(f.name)) :+ col("shard_id"): _*)
     val shardOrdinal = dataSchema.length // shard_id is the trailing field
-    val schemaJson = dataSchema.json
     val codecName = codec(compression)
-    val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
-
-    // Executor-side Configuration is rebuilt from these entries (Configuration
-    // itself is not serializable); they are exactly what
-    // ParquetWriteSupport.init requires.
+    val sessionConf = GraftSession.hadoopConf(spark)
+    // What ParquetWriteSupport.init requires, layered on the session conf.
     val confEntries = Map(
       "spark.sql.parquet.writeLegacyFormat" -> "false",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       "spark.sql.parquet.datetimeRebaseModeInWrite" -> "CORRECTED",
       "spark.sql.parquet.int96RebaseModeInWrite" -> "CORRECTED",
-      "spark.sql.session.timeZone" -> sessionTz,
+      "spark.sql.session.timeZone" -> spark.sessionState.conf.sessionLocalTimeZone,
       "spark.sql.parquet.fieldId.write.enabled" -> "true",
       "spark.sql.parquet.variant.annotateLogicalType.enabled" -> "false")
 
     arranged.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
-      val schema = org.apache.spark.sql.types.DataType.fromJson(schemaJson).asInstanceOf[StructType]
-      val conf = new Configuration()
+      val conf = new Configuration(sessionConf.value.value)
       confEntries.foreach { case (k, v) => conf.set(k, v) }
-      ParquetWriteSupport.setSchema(schema, conf)
-      var writer: ParquetWriter[InternalRow] = null
-      var currentShard = Int.MinValue
-      def close(): Unit = if (writer != null) { writer.close(); writer = null }
-      def open(shard: Int): Unit = {
-        val path = new HPath(s"$outDir/$shard.parquet")
-        val fs = path.getFileSystem(conf)
-        fs.setWriteChecksum(false) // no .crc siblings next to exact-named shards
-        if (fs.exists(path)) fs.delete(path, false) // X4 overwrite
-        writer = new Builder(
-            HadoopOutputFile.fromPath(path, conf),
-            new FooterKvWriteSupport(footerKv))
+      ParquetWriteSupport.setSchema(dataSchema, conf)
+      // Project away the trailing shard_id so the written row matches the
+      // file schema exactly.
+      val proj = UnsafeProjection.create(dataSchema)
+      ShardCommit.commit(rows, outDir, "parquet", conf)(_.getInt(shardOrdinal)) { out =>
+        val writer = new Builder(new StreamFile(out))
           .withConf(conf)
           .withCompressionCodec(codecName)
           .withRowGroupRowCountLimit(RowGroupRows)
+          .withExtraMetaData(footerKv.asJava)
           .build()
-      }
-      // Project away the trailing shard_id so the written row matches the
-      // file schema exactly.
-      val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(
-        schema.zipWithIndex.map { case (f, i) =>
-          org.apache.spark.sql.catalyst.expressions.BoundReference(i, f.dataType, f.nullable)
-        }.toArray[org.apache.spark.sql.catalyst.expressions.Expression])
-      try {
-        while (rows.hasNext) {
-          val row = rows.next()
-          val shard = row.getInt(shardOrdinal)
-          if (shard != currentShard) { close(); open(shard); currentShard = shard }
-          writer.write(proj(row))
+        new ShardCommit.Writer[InternalRow] {
+          def write(row: InternalRow): Unit = writer.write(proj(row))
+          def close(): Unit = writer.close()
         }
-      } finally close()
+      }
     }
   }
 }

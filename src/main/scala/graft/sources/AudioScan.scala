@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.core.PathNorm
+import graft.core.{GraftSession, PathNorm}
 import graft.functions.Magic
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath}
@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.SerializableConfiguration
 
 /** S1 — recursive directory scan of audio files
   * (reference: src/main.rs:662-712, `recv-dir` + NoSymlink.and(MaxDepth)),
@@ -145,7 +144,7 @@ object AudioScan {
     // through the same shard and content pass as plain files. Entry paths
     // use jar-URL bang notation `bundle.zip!inner/name.wav`; a corrupt
     // archive yields zero rows (fail-closed, like the symlink gate).
-    val conf = hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     df = df.withColumn("entry", lit(null).cast(StringType))
       .withColumn("_head", lit(null).cast(BinaryType))
     if (expandArchives) {
@@ -179,7 +178,7 @@ object AudioScan {
     * Hadoop FileSystem. Columns `relative_path, content, shard_id, file_name`.
     * A plain file over Spark's largest binary value fails the run, naming it. */
   def read(spark: SparkSession, shards: IndexedSeq[IndexedSeq[File]]): DataFrame = {
-    val conf = hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark)
     val rows = spark.sparkContext.parallelize(shards.zipWithIndex, math.max(1, shards.length))
       .mapPartitions(_.flatMap { case (files, shard) =>
         val contents = new Contents(conf.value.value, files)
@@ -191,9 +190,6 @@ object AudioScan {
         StructField("content", BinaryType), StructField("shard_id", IntegerType, nullable = false))))
       .withColumn("file_name", PathNorm.fileNameCol(col("relative_path")))
   }
-
-  private def hadoopConf(spark: SparkSession) =
-    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
 
   private def open(conf: Configuration, path: String): FSDataInputStream = {
     val p = new HPath(path)

@@ -2,22 +2,32 @@ package graft
 
 import graft.functions.Wav
 import graft.sources.AudioScan
-import org.apache.hadoop.fs.{FSDataInputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
-/** `file:` FileSystem that counts opens per path. */
-class OpenCountingFs extends LocalFileSystem {
+/** `file:` FileSystem that counts opens and creates per path. */
+class CountingFs extends LocalFileSystem {
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
-    OpenCountingFs.opens.merge(p.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+    CountingFs.count(CountingFs.opens, p)
     super.open(p, bufferSize)
+  }
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    CountingFs.count(CountingFs.creates, p)
+    super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
   }
 }
 
-object OpenCountingFs {
-  val opens = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+object CountingFs {
+  type Counts = java.util.concurrent.ConcurrentHashMap[String, Integer]
+  val opens, creates = new Counts()
+  def count(counts: Counts, p: Path): Unit =
+    counts.merge(p.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
   def of(f: java.io.File): Int = Option(opens.get(f.getAbsolutePath)).fold(0)(_.intValue)
 }
 
@@ -72,36 +82,27 @@ class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("F2/F3/F4 drops are never opened; F5 reads a head, the content pass each kept file once") {
     val (in, meta) = tree()
     val hc = spark.sparkContext.hadoopConfiguration
-    hc.set("fs.file.impl", classOf[OpenCountingFs].getName)
+    hc.set("fs.file.impl", classOf[CountingFs].getName)
     hc.set("fs.file.impl.disable.cache", "true")
     try {
-      OpenCountingFs.opens.clear()
+      CountingFs.opens.clear()
       graft.sources.Metadata.load(spark, meta.getAbsolutePath)
-      val sidecarOpens = OpenCountingFs.of(meta)
+      val sidecarOpens = CountingFs.of(meta)
       for (mime <- Seq(true, false)) {
-        OpenCountingFs.opens.clear()
+        CountingFs.opens.clear()
         AudioToDataset.run(spark, cfg(in, tmpDir("graft-cp-out").getAbsolutePath, Some(meta))
           .copy(checkMimeType = mime))
         val kept = Seq("a.wav", "b/c.wav", "b/d.wav", "e.wav").map(new java.io.File(in, _))
-        assert(kept.map(OpenCountingFs.of) == kept.map(_ => if (mime) 2 else 1), s"mime=$mime")
-        assert(OpenCountingFs.of(new java.io.File(in, "b/decoy.wav")) == 1) // sniffed or read
-        assert(OpenCountingFs.of(new java.io.File(in, "x/y/z/deep.wav")) == 0)             // F3
-        assert(OpenCountingFs.of(new java.io.File(in, "alias/c.wav")) == 0)                // F2
-        assert(OpenCountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load") // F4
+        assert(kept.map(CountingFs.of) == kept.map(_ => if (mime) 2 else 1), s"mime=$mime")
+        assert(CountingFs.of(new java.io.File(in, "b/decoy.wav")) == 1) // sniffed or read
+        assert(CountingFs.of(new java.io.File(in, "x/y/z/deep.wav")) == 0)             // F3
+        assert(CountingFs.of(new java.io.File(in, "alias/c.wav")) == 0)                // F2
+        assert(CountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load") // F4
       }
     } finally {
       hc.unset("fs.file.impl")
       hc.unset("fs.file.impl.disable.cache")
     }
-  }
-
-  /** A 2.2 GB file that takes no disk space. */
-  private def sparse(dir: java.io.File, name: String): java.io.File = {
-    val f = new java.io.File(dir, name)
-    f.getParentFile.mkdirs()
-    val raf = new java.io.RandomAccessFile(f, "rw")
-    try raf.setLength(2200L * 1000 * 1000) finally raf.close()
-    f
   }
 
   private def keptPaths(out: java.io.File): Seq[String] =
@@ -111,14 +112,14 @@ class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("files over 2 GB: a non-audio decoy or a too-deep file is dropped; a kept one fails, named") {
     val in = tmpDir("graft-big")
     writeFile(in, "ok.wav", wav)
-    sparse(in, "decoy.bin")
-    sparse(in, "x/y/z/deep.wav")
+    sparseFile(in, "decoy.bin")
+    sparseFile(in, "x/y/z/deep.wav")
     val out = tmpDir("graft-big-out")
     AudioToDataset.run(spark, AudioToDataset.Config(
       in.getAbsolutePath, out.getAbsolutePath, maxDepth = 2, checkMimeType = true))
     assert(keptPaths(out) == Seq("ok.wav"))
 
-    val kept = sparse(tmpDir("graft-big-kept"), "huge.wav")
+    val kept = sparseFile(tmpDir("graft-big-kept"), "huge.wav")
     val e = intercept[Exception](AudioToDataset.run(spark, AudioToDataset.Config(
       kept.getParent, tmpDir("graft-big-out2").getAbsolutePath)))
     val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)

@@ -79,11 +79,12 @@ class PipelineSpec extends SparkSpec {
     wavs.foreach { case (n, b) => writeFile(in, n, b) }
     val meta = writeText(in, "metadata.jsonl",
       wavs.map { case (n, _) => s"""{"file_name":"$n","transcription":"t $n"}""" }.mkString("\n"))
-    AudioToDataset.run(spark, AudioToDataset.Config(
+    val cfg = AudioToDataset.Config(
       input = in.getAbsolutePath, output = out.getAbsolutePath,
-      metadataFile = Some(meta.getAbsolutePath), format = "webdataset",
-      filesPerShard = 2))
-    assert(outputFiles(out) == Seq("0.tar", "1.tar"))
+      metadataFile = Some(meta.getAbsolutePath), format = "webdataset")
+    AudioToDataset.run(spark, cfg) // one 3-record shard, replaced by the rerun (X4)
+    AudioToDataset.run(spark, cfg.copy(filesPerShard = 2))
+    assert(Option(out.list()).toSeq.flatten.sorted == Seq("0.tar", "1.tar"))
     val es0 = Tar.entries(java.nio.file.Files.readAllBytes(
       new java.io.File(out, "0.tar").toPath)).get
     assert(es0.map(_.name) == Seq("000000.wav", "000000.json", "000001.wav", "000001.json"))
@@ -161,9 +162,10 @@ class PipelineSpec extends SparkSpec {
   test("e2e: no metadata file → transcription defaults to '-'; sharding splits files") {
     val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
     for (i <- 0 until 5) writeFile(in, f"clip_$i%02d.wav", Wav.synthWav(8000, 800 * (i + 1)))
-    AudioToDataset.run(spark, AudioToDataset.Config(
-      in.getAbsolutePath, out.getAbsolutePath, filesPerShard = 2))
-    assert(outputFiles(out) == Seq("0.parquet", "1.parquet", "2.parquet"))
+    val cfg = AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath)
+    AudioToDataset.run(spark, cfg) // one 5-row shard, replaced by the rerun (X4)
+    AudioToDataset.run(spark, cfg.copy(filesPerShard = 2))
+    assert(Option(out.list()).toSeq.flatten.sorted == Seq("0.parquet", "1.parquet", "2.parquet"))
     val df = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
     assert(df.count() == 2) // shards of filesPerShard in path order
     val all = spark.read.parquet(outputFiles(out).map(f => new java.io.File(out, f).getAbsolutePath): _*)

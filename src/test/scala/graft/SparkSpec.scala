@@ -23,6 +23,15 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def writeText(dir: java.io.File, name: String, text: String): java.io.File =
     writeFile(dir, name, text.getBytes("UTF-8"))
+
+  /** A 2.2 GB file, more than one binary value holds, that takes no disk space. */
+  def sparseFile(dir: java.io.File, name: String): java.io.File = {
+    val f = new java.io.File(dir, name)
+    f.getParentFile.mkdirs()
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try raf.setLength(2200L * 1000 * 1000) finally raf.close()
+    f
+  }
 }
 
 object SparkSpec {
