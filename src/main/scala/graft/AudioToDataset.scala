@@ -1,6 +1,5 @@
 package graft
 
-import graft.core._
 import graft.functions.Wav
 import graft.operators.Sharding
 import graft.sinks.{DuckDbShardSink, ParquetShardSink, ShardCommit, TarShardSink}
@@ -11,14 +10,15 @@ import org.apache.spark.sql.functions._
 /** The end-to-end pipeline — the Spark re-expression of the reference CLI
   * (reference: main(), src/main.rs:615-860). Declarative plan:
   *
-  *   sidecar read once to the driver: type vote, coercion, first-wins maps
-  *     (S2/S3, J2, P7)
-  *   planning pass: binaryFile listing of paths and lengths, F1–F5 (S1)
-  *     → the kept names collected once and cut into shards on the driver (X1)
-  *   content pass, one task per shard, no shuffle and no sort:
+  *   planning, on the driver as in the reference:
+  *     sidecar read once: type vote, coercion, first-wins maps (S2/S3, J2, P7)
+  *     → a walk of the tree, F1–F4 (S1); F5 head sniffs in one Spark job
+  *     → the kept files cut into shards (X1)
+  *   content pass, the one other Spark job: one task per shard, no shuffle
+  *   and no sort:
   *     read each kept file once (P4)
   *     → WAV parse (P5)
-  *     → one broadcast join on each file's winning sidecar row (J1, P8)
+  *     → each file's winning sidecar row, looked up in a broadcast (J1, P8)
   *     → audio struct assembly (P6)
   *     → exact-name Parquet (K1), DuckDB (K2) or tar shards
   *
@@ -36,10 +36,10 @@ object AudioToDataset {
       checkMimeType: Boolean = false,               // --check-mime-type
       parquetCompression: String = "snappy",        // --parquet-compression
       // Engine extensions beyond the reference CLI:
-      // F2 opt-out (--follow-symlinks) — the canonical-path check is
-      // local-fs-only; on object stores it self-disables, and name-based
-      // pruning is available on ANY scheme via --path-glob (binaryFile's
-      // listing-time pathGlobFilter).
+      // F2 opt-out (--follow-symlinks) — the local walk follows links and
+      // skips a directory link back to its own ancestor; object stores have
+      // no links. --path-glob prunes by file name on ANY scheme, at listing
+      // time (a Hadoop glob, as binaryFile's pathGlobFilter).
       excludeSymlinks: Boolean = true,              // --follow-symlinks clears
       pathGlobFilter: Option[String] = None,        // --path-glob
       // zip bundles explode into entries in-executor (bang-notation paths)
@@ -49,37 +49,23 @@ object AudioToDataset {
     * shard_id`, one partition per shard with its rows in `audio.path` order,
     * plus the resolved metadata schema. */
   def plan(spark: SparkSession, cfg: Config): (DataFrame, Metadata.MetaSchema) = {
-    val (metaDf, metaSchema) = cfg.metadataFile match {
-      case Some(mf) =>
-        val (df, sch) = Metadata.load(spark, mf)
-        (Some(df), sch)
-      case None =>
-        (None, Metadata.MetaSchema(
-          scala.collection.immutable.TreeMap("transcription" -> (MString: MetadataType))))
-    }
-    // X1: scan order is relative-path order (documented divergence from the
-    // platform-dependent directory iterator, SURVEY.md §7.4); the planning
-    // pass brings the kept names to the driver once, and no audio byte is
-    // read before the task that writes its shard
+    val sidecar = cfg.metadataFile.fold(Metadata.NoSidecar)(Metadata.load(spark, _))
+    // X1: shard order is relative-path order (documented divergence from the
+    // platform-dependent directory iterator, SURVEY.md §7.4); no audio byte
+    // is read before the task that writes its shard
     val kept = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
         cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives)
-      .select("path", "length", "relative_path", "entry").collect()
-      .map(r => AudioScan.File(r.getString(0), r.getAs[java.lang.Long](1), r.getString(2), r.getString(3)))
-    val shards = Sharding.consecutiveShards(kept.toIndexedSeq, cfg.filesPerShard)(_.relativePath)
+    val shards = Sharding.consecutiveShards(kept, cfg.filesPerShard)(_.relativePath)
     val parsed = AudioScan.read(spark, shards).withColumn("wav", Wav.parseCol(col("content"))) // P5
-    val joined = metaDf match {
-      case Some(m) => Metadata.joinFiles(parsed, m, metaSchema)
-      case None    => parsed.withColumn("transcription", lit("-"))
-    }
-    val sharded = joined.select(
+    val sharded = Metadata.joinFiles(parsed, sidecar).select(
       Seq(
         struct( // P6 — Parquet field order bytes, sampling_rate, path (src/main.rs:465-470)
           col("content").as("bytes"),
           col("wav.sampling_rate").as("sampling_rate"),
           col("relative_path").as("path")).as("audio"),
         col("wav.duration").as("duration")) ++
-        metaSchema.keys.map(col) :+ col("shard_id"): _*)
-    (sharded, metaSchema)
+        sidecar.schema.keys.map(col) :+ col("shard_id"): _*)
+    (sharded, sidecar.schema)
   }
 
   def run(spark: SparkSession, cfg: Config): Unit = {

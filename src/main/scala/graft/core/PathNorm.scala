@@ -19,10 +19,4 @@ object PathNorm {
   /** Column form — codegen-friendly, no UDF. */
   def normalizeCol(c: Column): Column =
     regexp_replace(regexp_replace(c, "\\\\", "/"), "^(\\./)+", "")
-
-  /** Basename of a path column (reference: src/main.rs:771-780). */
-  def fileNameCol(c: Column): Column = element_at(split(c, "/"), -1)
-
-  /** Directory depth = number of `/`-separated components. */
-  def depthCol(c: Column): Column = size(split(c, "/"))
 }

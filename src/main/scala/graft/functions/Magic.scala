@@ -40,7 +40,5 @@ object Magic {
     sniff(bytes).exists(audioMimeTypes.contains)
 
   val sniffUdf = udf((b: Array[Byte]) => sniff(b).getOrElse("unknown"))
-  val isAudioUdf = udf((b: Array[Byte]) => isAllowedAudio(b))
   def sniffCol(c: Column): Column = sniffUdf(c)
-  def isAudioCol(c: Column): Column = isAudioUdf(c)
 }

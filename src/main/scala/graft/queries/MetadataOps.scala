@@ -55,12 +55,10 @@ object MetadataOps {
   /** S2+S4+F6+J1+J2+P8 through the real loader and join. */
   val s2CsvMetadataJoin: Q = (s, dir) => {
     val path = writeCsv(s, dir)
-    val (meta, schema) = Metadata.load(s, path) // dispatch: .csv → CSV (S4)
+    val sidecar = Metadata.load(s, path) // dispatch: .csv → CSV (S4)
     val files = table(s, dir, "documents")
-      .select(col("doc_id"),
-        concat(lit("docs/doc"), col("doc_id"), lit(".wav")).as("relative_path"),
-        concat(lit("doc"), col("doc_id"), lit(".wav")).as("file_name"))
-    Metadata.joinFiles(files, meta, schema)
+      .select(col("doc_id"), concat(lit("docs/doc"), col("doc_id"), lit(".wav")).as("relative_path"))
+    Metadata.joinFiles(files, sidecar)
       .select(col("doc_id"), col("transcription"), col("quality"))
   }
   val s2CsvMetadataJoinSql =
@@ -99,12 +97,10 @@ object MetadataOps {
     * stays Bool, `tags` stays List(String). */
   val s3JsonlMetadataJoin: Q = (s, dir) => {
     val path = writeJsonl(s, dir)
-    val (meta, schema) = Metadata.load(s, path)
+    val sidecar = Metadata.load(s, path)
     val files = table(s, dir, "documents")
-      .select(col("doc_id"),
-        concat(lit("docs/doc"), col("doc_id"), lit(".wav")).as("relative_path"),
-        concat(lit("doc"), col("doc_id"), lit(".wav")).as("file_name"))
-    Metadata.joinFiles(files, meta, schema)
+      .select(col("doc_id"), concat(lit("docs/doc"), col("doc_id"), lit(".wav")).as("relative_path"))
+    Metadata.joinFiles(files, sidecar)
       .select(col("doc_id"), col("transcription"), col("verified"),
         col("score"), col("mixed"), to_json(col("tags")).as("tags_json"))
   }

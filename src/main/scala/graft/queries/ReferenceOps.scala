@@ -89,9 +89,9 @@ object ReferenceOps {
     }
     Files.createSymbolicLink(root.resolve("linkdir"), real)
     Files.createSymbolicLink(root.resolve("ext.wav"), extTarget)
-    graft.sources.AudioScan
-      .scan(s, root.toString, excludeSymlinks = true)
-      .select(col("relative_path"))
+    import s.implicits._
+    graft.sources.AudioScan.scan(s, root.toString, excludeSymlinks = true)
+      .map(_.relativePath).toDF("relative_path")
   }
   val f2SymlinkSql =
     "SELECT 'real/f' || doc_id || '.wav' AS relative_path FROM documents WHERE doc_id < 32"

@@ -2,12 +2,13 @@ package graft.sources
 
 import graft.core.{GraftSession, PathNorm}
 import graft.functions.Magic
+import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, SimpleFileVisitor, Path => JPath}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath}
+import org.apache.hadoop.fs.{FSDataInputStream, GlobFilter, Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -15,27 +16,29 @@ import org.apache.spark.unsafe.types.UTF8String
   * (reference: src/main.rs:662-712, `recv-dir` + NoSymlink.and(MaxDepth)),
   * in two passes.
   *
-  * [[scan]] is the planning pass. Spark's `binaryFile` source lists the tree
-  * distributed and yields `path` and `length` only: `content` is never
-  * selected, so the source opens no file. The filters run on those names,
-  * and only F5 reads anything — a [[SniffBytes]]-byte head per file that
-  * survived F2–F4. Output: `path, length, relative_path, file_name, entry`
-  * (`entry` is set on `--expand-archives` entry rows only).
+  * [[scan]] is the planning pass. As in the reference it is one walk on the
+  * driver that yields the kept file list; it opens no file. Only F5 and
+  * `--expand-archives` read anything — a [[SniffBytes]]-byte head per file,
+  * an archive's entry list — in one Spark job over the files the walk kept.
   *
   * [[read]] is the content pass: the kept files, already cut into shards on
   * the driver, are read once each, by the task that writes their shard.
   *
   * Filters mirrored:
-  *   F1 directories — implicit (binaryFile yields only files);
-  *   F2 symlinks   — rows reached through a symlink below the input root are
-  *                   dropped (reference walks with NoSymlink, src/main.rs:664):
-  *                   per-row canonical-path check, executor-side, local-fs
-  *                   only (object stores have no symlinks — the filter is
-  *                   skipped for non-file schemes);
-  *   F3 depth      — relative-path component count <= maxDepth (src/main.rs:664-666);
-  *   F4 sidecar exclusion — drop the metadata file itself (src/main.rs:650-659);
+  *   F1 directories — only regular files are kept;
+  *   F2 symlinks   — a `file:` walk does not follow links (reference walks
+  *                   with NoSymlink, src/main.rs:664): a symlinked file is not
+  *                   a regular file and a symlinked directory is never
+  *                   entered. Object stores have no symlinks; other schemes
+  *                   are listed through Hadoop and the filter is skipped;
+  *   F3 depth      — relative-path component count <= maxDepth: the walk
+  *                   goes no deeper (src/main.rs:664-666);
+  *   F4 sidecar exclusion — drop the metadata file itself, by absolute path
+  *                   or by its path relative to the input (src/main.rs:650-659);
   *   F5 MIME allow-list (opt-in) — magic-byte sniff of the file's head
   *                   (src/main.rs:695-707).
+  * Every other entry is listed, whatever its name: `_x`, `.x` and
+  * `x._COPYING_` files, and 0-byte files, which get `(0.0, 0)` rows.
   */
 object AudioScan {
   val DefaultMaxDepth = 50 // reference: src/main.rs:71-73
@@ -43,29 +46,20 @@ object AudioScan {
   val SniffBytes = 12
   private val MaxBinaryLength = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
 
-  @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+  /** One kept file (or archive entry) as the planning pass hands it to the
+    * content pass: `path` is its qualified Hadoop path, `entry` the zip entry
+    * name inside the archive at `path` (null for a plain file); `length` is
+    * null for an entry. */
+  final case class File(path: String, length: java.lang.Long, relativePath: String, entry: String)
 
-  // Executor-side cache of canonicalized directories (files share parents;
-  // one getCanonicalPath per directory instead of per file). Entries can go
-  // stale if a directory is REPLACED by a symlink mid-JVM — the same race
-  // an uncached getCanonicalPath has within one listing, since the scan
-  // itself snapshots the tree — and the cache is size-bounded so long-lived
-  // executors scanning many trees don't accrete entries forever.
-  private val CanonCacheMax = 100000
-  private val canonCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def canonicalParent(dir: java.io.File): String = {
-    if (canonCache.size() > CanonCacheMax) canonCache.clear()
-    canonCache.computeIfAbsent(dir.getPath, p => new java.io.File(p).getCanonicalPath)
-  }
-
-  /** @param excludeSymlinks F2 — per-row canonical-path check, LOCAL
-    *   FILESYSTEM ONLY (skipped automatically for non-`file:` schemes:
-    *   object stores have no symlinks). Cluster users scanning shared
-    *   storage who want name-based pruning instead should pass
-    *   `pathGlobFilter` — it is applied at LISTING time by the data source
-    *   on any scheme, so excluded files are never opened at all.
-    * @param pathGlobFilter binaryFile `pathGlobFilter` option (e.g.
-    *   `*.wav`) — the scheme-independent escape hatch for pruning by name. */
+  /** The kept files of the tree at `input`, in no particular order.
+    *
+    * @param excludeSymlinks F2 — a `file:` walk that follows no link
+    *   (`--follow-symlinks` clears it: links are followed, and a directory
+    *   link back to its own ancestor is skipped). Other schemes have no
+    *   symlinks to filter.
+    * @param pathGlobFilter Hadoop glob on the file name (e.g. `*.wav`),
+    *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened. */
   def scan(
       spark: SparkSession,
       input: String,
@@ -74,108 +68,94 @@ object AudioScan {
       checkMimeType: Boolean = false,
       excludeSymlinks: Boolean = true,
       pathGlobFilter: Option[String] = None,
-      expandArchives: Boolean = false): DataFrame = {
-    // Hadoop Path form (unencoded) — File.toURI percent-encodes spaces and
-    // would never match binaryFile's raw `path` column
-    val inputHPath = new org.apache.hadoop.fs.Path(new java.io.File(input).toURI)
-    val inputUri = inputHPath.toString.stripSuffix("/")
-    val reader = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-    pathGlobFilter.foreach(reader.option("pathGlobFilter", _))
-    // path and length only: binaryFile opens no file unless `content` is read
-    val raw = reader.load(input).select("path", "length")
-    // relative path: strip the input prefix; empty → bare file name
-    // (reference: src/main.rs:743-758)
-    val rel0 = regexp_replace(col("path"), java.util.regex.Pattern.quote(inputUri + "/"), "")
-    var df = raw
-      .withColumn("relative_path", PathNorm.normalizeCol(rel0))
-      .withColumn("file_name", PathNorm.fileNameCol(col("relative_path")))
-      .withColumn("relative_path",
-        when(length(col("relative_path")) === 0, col("file_name")).otherwise(col("relative_path")))
-      .filter(PathNorm.depthCol(col("relative_path")) <= lit(maxDepth)) // F3
-    // F2: a row whose canonical path differs from canonical(root)/relpath was
-    // reached through a symlink (file or directory) — drop it. The real copy,
-    // if under the root, is still listed via its real path. Local fs only.
-    if (excludeSymlinks && inputHPath.toUri.getScheme == "file") {
-      val rootAbs = new java.io.File(input).getAbsolutePath
-      val rootCanon = new java.io.File(input).getCanonicalPath
-      // below-root suffix unchanged under canonicalization ⇔ no symlink
-      // between the root and the file (symlinks ABOVE the root are fine).
-      // Hadoop Path, not java.net.URI: binaryFile paths are UNencoded, so
-      // URI.create throws on spaces.
-      val isRealPath = udf { (path: String) =>
-        try {
-          val f = new java.io.File(new org.apache.hadoop.fs.Path(path).toUri.getPath)
-          val abs = f.getAbsolutePath
-          !abs.startsWith(rootAbs + "/") || {
-            // canonical(file) == canonical(parent)/name unless the leaf itself
-            // is a symlink — caching canonical parents turns N syscalls per
-            // directory into 1 on large listings
-            !java.nio.file.Files.isSymbolicLink(f.toPath) &&
-              canonicalParent(f.getParentFile) + "/" + f.getName ==
-                rootCanon + abs.substring(rootAbs.length)
+      expandArchives: Boolean = false): IndexedSeq[File] = {
+    val root = qualified(spark, input)
+    val glob = pathGlobFilter.map(new GlobFilter(_))
+    // F4: the sidecar by its qualified path, or by its path relative to the input
+    val sidecar = metadataFile.map(qualified(spark, _).toString)
+    val sidecarRel = sidecar.filter(_.startsWith(root.toString.stripSuffix("/") + "/"))
+      .map(relativeTo(root.toString, _))
+    val listed = (if (root.toUri.getScheme == "file") walk(root, maxDepth, !excludeSymlinks)
+      else list(spark, root, maxDepth)).filter { f =>
+      glob.forall(_.accept(new HPath(f.path))) && !sidecar.contains(f.path) && !sidecarRel.contains(f.relativePath)
+    }
+    if (listed.isEmpty || !(checkMimeType || expandArchives)) listed
+    else {
+      // the only reads of the planning pass, in one job over the kept list:
+      // an archive stands for its entries (listed by name, with their heads),
+      // then F5 keeps what sniffs as audio. Archives are transport, so the
+      // expansion happens before the MIME gate; entry paths use jar-URL bang
+      // notation `bundle.zip!inner/name.wav`, and a corrupt archive yields
+      // zero rows.
+      val conf = GraftSession.hadoopConf(spark)
+      val slices = math.min(listed.length, spark.sparkContext.defaultParallelism)
+      spark.sparkContext.parallelize(listed, slices).mapPartitions(_.flatMap { f =>
+        val c = conf.value.value
+        def keep(head: => Array[Byte]) = !checkMimeType || Magic.isAllowedAudio(head)
+        if (expandArchives && f.relativePath.toLowerCase(java.util.Locale.ROOT).endsWith(".zip"))
+          listEntries(c, f.path).collect { case (name, head) if keep(head) =>
+            File(f.path, null, f.relativePath + "!" + PathNorm.normalize(name), name)
           }
-        } catch {
-          case e: Exception =>
-            // fail CLOSED: a row this filter cannot verify must not slip
-            // through the symlink exclusion it exists to enforce
-            log.warn(s"symlink check failed for $path; dropping row", e)
-            false
-        }
-      }
-      df = df.filter(isRealPath(col("path")))
+        else if (keep(readHead(c, f.path))) Seq(f)
+        else Nil
+      }).collect().toIndexedSeq
     }
-    metadataFile.foreach { mf => // F4: match by normalized relpath AND absolute path
-      // Hadoop Path form, not File.toURI: binaryFile's `path` is unencoded,
-      // so a percent-encoding comparison misses paths with spaces
-      val abs = new org.apache.hadoop.fs.Path(
-        new java.io.File(mf).getAbsoluteFile.toURI).toString
-      val relToInput = {
-        val f = new java.io.File(mf).getAbsolutePath
-        val in = new java.io.File(input).getAbsolutePath
-        if (f.startsWith(in + "/")) Some(PathNorm.normalize(f.substring(in.length + 1))) else None
-      }
-      df = df.filter(col("path") =!= lit(abs))
-      relToInput.foreach(rp => df = df.filter(col("relative_path") =!= lit(rp)))
-    }
-    // Engine extension (--expand-archives): a zip bundle stands for its
-    // entries, listed by name in the executor — archives are transport, so
-    // the expansion happens before the MIME gate and the entry rows flow
-    // through the same shard and content pass as plain files. Entry paths
-    // use jar-URL bang notation `bundle.zip!inner/name.wav`; a corrupt
-    // archive yields zero rows (fail-closed, like the symlink gate).
-    val conf = GraftSession.hadoopConf(spark)
-    df = df.withColumn("entry", lit(null).cast(StringType))
-      .withColumn("_head", lit(null).cast(BinaryType))
-    if (expandArchives) {
-      val entriesUdf = udf((path: String) => listEntries(conf.value.value, path))
-      val isZip = lower(col("file_name")).endsWith(".zip")
-      val fromZip = df.filter(isZip)
-        .withColumn("_e", explode(entriesUdf(col("path"))))
-        .withColumn("relative_path",
-          concat(col("relative_path"), lit("!"), PathNorm.normalizeCol(col("_e._1"))))
-        .withColumn("file_name", PathNorm.fileNameCol(col("relative_path")))
-        .withColumn("entry", col("_e._1"))
-        .withColumn("_head", col("_e._2"))
-        .withColumn("length", lit(null).cast(LongType))
-        .drop("_e")
-      df = df.filter(!isZip).unionByName(fromZip)
-    }
-    if (checkMimeType) { // F5: a plain file's head is read only here, after F2–F4
-      val headUdf = udf((path: String) => readHead(conf.value.value, path))
-      df = df.filter(Magic.isAudioCol(coalesce(col("_head"), headUdf(col("path")))))
-    }
-    df.drop("_head")
   }
 
-  /** One kept file (or archive entry) as the planning pass hands it to the
-    * content pass: `entry` is the zip entry name inside the archive at
-    * `path`, null for a plain file; `length` is null for an entry. */
-  final case class File(path: String, length: java.lang.Long, relativePath: String, entry: String)
+  /** `p` as a qualified Hadoop path; a path with no scheme is a local file. */
+  private def qualified(spark: SparkSession, p: String): HPath = {
+    val hp = new HPath(p)
+    if (hp.toUri.getScheme == null || hp.toUri.getScheme == "file")
+      new HPath("file", null, new java.io.File(hp.toUri.getPath).getAbsolutePath)
+    else hp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(hp)
+  }
+
+  /** The relative path of `p` below `root`; the bare file name when `p` is
+    * the root itself (reference: src/main.rs:743-758). */
+  private def relativeTo(root: String, p: String): String =
+    PathNorm.normalize(
+      if (p == root) p.substring(p.lastIndexOf('/') + 1) else p.stripPrefix(root.stripSuffix("/") + "/"))
+
+  /** The regular files below a `file:` root, at most `maxDepth` levels down.
+    * A root that is itself a link is resolved: links above the tree are fine. */
+  private def walk(root: HPath, maxDepth: Int, followLinks: Boolean): IndexedSeq[File] = {
+    val out = IndexedSeq.newBuilder[File]
+    val start = java.nio.file.Paths.get(root.toUri.getPath)
+    val dir = if (Files.isSymbolicLink(start)) start.toRealPath() else start
+    val options =
+      if (followLinks) java.util.Set.of(FileVisitOption.FOLLOW_LINKS) else java.util.Set.of[FileVisitOption]()
+    Files.walkFileTree(dir, options, math.max(0, maxDepth),
+      new SimpleFileVisitor[JPath] {
+        override def visitFile(p: JPath, attrs: BasicFileAttributes): FileVisitResult = {
+          if (attrs.isRegularFile) // not a directory (F1); without FOLLOW_LINKS, not a link (F2)
+            out += File(new HPath("file", null, p.toString).toString, attrs.size,
+              relativeTo(dir.toString, p.toString), null)
+          FileVisitResult.CONTINUE
+        }
+        override def visitFileFailed(p: JPath, e: java.io.IOException): FileVisitResult = e match {
+          case _: FileSystemLoopException => FileVisitResult.CONTINUE
+          case _ => throw e
+        }
+      })
+    out.result()
+  }
+
+  /** The files below a root of any other scheme, through its Hadoop
+    * FileSystem, at most `maxDepth` levels down. */
+  private def list(spark: SparkSession, root: HPath, maxDepth: Int): IndexedSeq[File] = {
+    val files = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
+    val out = IndexedSeq.newBuilder[File]
+    while (files.hasNext) {
+      val s = files.next()
+      val rel = relativeTo(root.toString, s.getPath.toString)
+      if (rel.count(_ == '/') < maxDepth) out += File(s.getPath.toString, s.getLen, rel, null)
+    }
+    out.result()
+  }
 
   /** The content pass: one partition per shard, `shards(i)` read in order by
     * the task that writes shard `i`, each file's bytes read once through the
-    * Hadoop FileSystem. Columns `relative_path, content, shard_id, file_name`.
+    * Hadoop FileSystem. Columns `relative_path, content, shard_id`.
     * A plain file over Spark's largest binary value fails the run, naming it. */
   def read(spark: SparkSession, shards: IndexedSeq[IndexedSeq[File]]): DataFrame = {
     val conf = GraftSession.hadoopConf(spark)
@@ -188,7 +168,6 @@ object AudioScan {
       })
     GraftBridge.internalCreateDataFrame(spark, rows, StructType(Seq(StructField("relative_path", StringType),
         StructField("content", BinaryType), StructField("shard_id", IntegerType, nullable = false))))
-      .withColumn("file_name", PathNorm.fileNameCol(col("relative_path")))
   }
 
   private def open(conf: Configuration, path: String): FSDataInputStream = {

@@ -2,10 +2,18 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core._
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.immutable.{SortedMap, TreeMap}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Sidecar metadata subsystem (reference: src/main.rs:144-386).
@@ -21,15 +29,14 @@ import scala.jdk.CollectionConverters._
   *   - duplicate keys: FIRST occurrence in file order wins (src/main.rs:178-193).
   *
   * Shape, as in the reference (src/main.rs:144-209): [[load]] reads the
-  * sidecar once — one Spark read collected to the driver — and in that one
-  * pass votes the types, coerces the values and builds the two first-wins
-  * maps. [[joinFiles]] resolves each file to its one winning row and attaches
-  * it through a single broadcast join.
+  * sidecar once into the driver — a JSONL sidecar line by line through the
+  * session's Hadoop FileSystem, a CSV or Parquet one through one Spark read
+  * — and in that one pass votes the types, coerces the values and builds
+  * the two first-wins maps: an in-memory [[Sidecar]]. [[joinFiles]] is one
+  * projection that looks each file's winning row up in a broadcast of it.
   *
-  * Driver memory: the de-duplicated sidecar rows are held on the driver. That
-  * is the same order of size as the broadcast of those rows that the join
-  * ships to every executor, so a sidecar too large for the driver would be
-  * too large to broadcast as well.
+  * Driver memory: the de-duplicated sidecar rows are held on the driver, and
+  * the same rows are broadcast to every executor.
   */
 object Metadata {
 
@@ -60,33 +67,55 @@ object Metadata {
     MetaSchema(TreeMap.empty[String, MetadataType] ++ base + ("transcription" -> MString))
   }
 
+  /** The first-wins table (J2, reference: insert_record, src/main.rs:178-193)
+    * on the driver: one row per sidecar line that is the FIRST holder of its
+    * `relative_path` or its `file_name`, its values in `schema.keys` order as
+    * Catalyst values; `byRel` and `byName` map each key to the index of the
+    * row that holds it. */
+  final case class Sidecar(
+      schema: MetaSchema,
+      rows: IndexedSeq[InternalRow],
+      byRel: Map[UTF8String, Int],
+      byName: Map[UTF8String, Int]) {
+    /** J1 (reference: metadata_for_file, src/main.rs:195-209): the row of
+      * `byRel[rel]`, else `byName[file name of rel]`, else `byName[rel]`;
+      * null if none. */
+    def lookup(rel: UTF8String): InternalRow = {
+      val i = byRel.getOrElse(rel, byName.getOrElse(rel.subStringIndex(Slash, -1), byName.getOrElse(rel, -1)))
+      if (i < 0) null else rows(i)
+    }
+  }
+
+  private val Slash = UTF8String.fromString("/")
+
+  /** No sidecar: only `transcription`, which every file defaults. */
+  val NoSidecar: Sidecar = Sidecar(withTranscription(Map.empty), IndexedSeq.empty, Map.empty, Map.empty)
+
   /** One sidecar line: its normalized `relative_path`, its `file_name` and
     * its values in `MetaSchema.keys` order. */
   private type Line = (String, String, Seq[Any])
 
-  /** Load the sidecar as its first-wins table (J2, reference: insert_record,
-    * src/main.rs:178-193): one row per line that is the FIRST holder of its
-    * `relative_path` or its `file_name`, with columns
-    * `relative_path, file_name, _meta_line, <metadata keys...>`. A key the
-    * line lost to an earlier one is null, so every non-null key is unique.
-    * Lines with neither key are dropped (F6, src/main.rs:323-325 / :378-380)
-    * after their types were voted.
+  /** Load the sidecar as its first-wins [[Sidecar]] table. Lines with
+    * neither key are dropped (F6, src/main.rs:323-325 / :378-380) after
+    * their types were voted.
     */
-  def load(spark: SparkSession, path: String): (DataFrame, MetaSchema) = {
+  def load(spark: SparkSession, path: String): Sidecar = {
     val (schema, lines) = formatFromPath(path) match {
       case Jsonl       => readJsonl(spark, path)
       case Csv         => readFrame(spark.read.option("header", true).csv(path))
       case ParquetMeta => readFrame(spark.read.parquet(path))
     }
-    val (seenRel, seenName) = (new java.util.HashSet[String], new java.util.HashSet[String])
-    val rows = lines.iterator.zipWithIndex.flatMap { case ((rel, name, values), i) =>
-      val r = if (rel != null && seenRel.add(rel)) rel else null
-      val n = if (name != null && seenName.add(name)) name else null
-      if (r == null && n == null) None else Some(Row.fromSeq(r +: n +: i.toLong +: values))
-    }.toSeq
-    val fields = Seq(StructField("relative_path", StringType), StructField("file_name", StringType),
-      StructField("_meta_line", LongType)) ++ schema.sparkFields
-    (spark.createDataFrame(rows.asJava, StructType(fields)), schema)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(StructType(schema.sparkFields))
+    val rows = mutable.ArrayBuffer.empty[InternalRow]
+    val (byRel, byName) = (mutable.HashMap.empty[UTF8String, Int], mutable.HashMap.empty[UTF8String, Int])
+    // a key belongs to the first line that holds it; that line becomes the next row
+    def claim(m: mutable.HashMap[UTF8String, Int], key: String): Boolean =
+      key != null && m.getOrElseUpdate(UTF8String.fromString(key), rows.length) == rows.length
+    lines.foreach { case (rel, name, values) =>
+      if (claim(byRel, rel) | claim(byName, name)) // both claims, not short-circuited
+        rows += toCatalyst(Row.fromSeq(values)).asInstanceOf[InternalRow]
+    }
+    Sidecar(schema, rows.toIndexedSeq, byRel.toMap, byName.toMap)
   }
 
   /** CSV (every column String, src/main.rs:309-314) and the Parquet engine
@@ -117,7 +146,11 @@ object Metadata {
     * included; the values are then coerced to the merged schema (P7). */
   private def readJsonl(spark: SparkSession, path: String): (MetaSchema, Seq[Line]) = {
     val mapper = new ObjectMapper()
-    val nodes = spark.read.textFile(path).collect().toSeq.map(_.trim).filter(_.nonEmpty)
+    val p = new HPath(path)
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      p.getFileSystem(spark.sessionState.newHadoopConf()).open(p), java.nio.charset.StandardCharsets.UTF_8))
+    val text = try in.lines().iterator().asScala.toVector finally in.close()
+    val nodes = text.map(_.trim).filter(_.nonEmpty)
       .flatMap(t => scala.util.Try(mapper.readTree(t)).toOption.filter(n => n != null && n.isObject))
     val votes = nodes.foldLeft(Map.empty[String, MetadataType]) { (acc, node) =>
       node.properties().asScala.foldLeft(acc) { (a, e) =>
@@ -163,27 +196,40 @@ object Metadata {
     * then `transcription` defaults to "-" when no level matched (P8,
     * src/main.rs:204-208).
     *
-    * `meta` is the first-wins table [[load]] returns. Its two key columns
-    * are the two maps; the driver builds them from the table, a projection
-    * picks each file's winning `_meta_line`, and ONE broadcast left join on
-    * that index attaches the row, so the corpus scan never shuffles.
+    * One projection over `files`' `relative_path` (its file name is the
+    * last component, src/main.rs:771-780): a lookup in a broadcast of the
+    * [[Sidecar]] yields each file's winning row, and its fields become the
+    * metadata columns. No join, no shuffle; creating the broadcast runs no
+    * Spark job.
     */
-  def joinFiles(files: DataFrame, meta: DataFrame, schema: MetaSchema): DataFrame = {
-    val keys = meta.select("relative_path", "file_name", "_meta_line").collect()
-    def byKey(i: Int): Map[String, Long] =
-      keys.filterNot(_.isNullAt(i)).map(r => r.getString(i) -> r.getLong(2)).toMap
-    val (byRel, byName) = (byKey(0), byKey(1))
-    val winner = udf { (rel: String, name: String) =>
-      byRel.getOrElse(rel, byName.getOrElse(name, byName.getOrElse(rel, -1L)))
-    }
-    val side = meta.select(
-      col("_meta_line").as("_meta_idx") +: schema.keys.map(k => col(k).as(s"_m_$k")): _*)
-    val resolved = schema.keys.map { k =>
-      val c = col(s"_m_$k")
+  def joinFiles(files: DataFrame, sidecar: Sidecar): DataFrame = {
+    val table = files.sparkSession.sparkContext.broadcast(sidecar)
+    val row = GraftBridge.column(SidecarLookup(GraftBridge.expression(col("relative_path")),
+      table, StructType(sidecar.schema.sparkFields)))
+    val resolved = sidecar.schema.keys.map { k =>
+      val c = col("_meta").getField(k)
       (if (k == "transcription") coalesce(c, lit("-")) else c).as(k)
     }
-    files.withColumn("_meta_idx", winner(col("relative_path"), col("file_name")))
-      .join(broadcast(side), Seq("_meta_idx"), "left")
-      .select(files.columns.map(col).toSeq ++ resolved: _*)
+    files.withColumn("_meta", row).select(files.columns.map(col).toSeq ++ resolved: _*)
   }
+}
+
+/** The winning sidecar row of a relative path ([[Metadata.Sidecar.lookup]])
+  * as a struct; null when no key matches. */
+private case class SidecarLookup(child: Expression, table: Broadcast[Metadata.Sidecar],
+    dataType: StructType) extends UnaryExpression {
+  override def nullable: Boolean = true
+  @transient private lazy val sidecar = table.value
+
+  def lookup(rel: UTF8String): InternalRow = if (rel == null) null else sidecar.lookup(rel)
+  override def eval(input: InternalRow): Any = lookup(child.eval(input).asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val rel = child.genCode(ctx)
+    val self = ctx.addReferenceObj("sidecar", this)
+    ev.copy(code = code"""
+      ${rel.code}
+      InternalRow ${ev.value} = $self.lookup(${rel.isNull} ? null : ${rel.value});
+      boolean ${ev.isNull} = ${ev.value} == null;""")
+  }
+  override protected def withNewChildInternal(c: Expression): SidecarLookup = copy(child = c)
 }

@@ -6,9 +6,10 @@ import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.{FileSourceScanExec, SortExec}
+import org.apache.spark.sql.execution.SortExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import scala.jdk.CollectionConverters._
 
 /** `file:` FileSystem that counts opens and creates per path. */
 class CountingFs extends LocalFileSystem {
@@ -69,23 +70,38 @@ class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       1 -> List((1, "b/d.wav", "-"), (1, "e.wav", "-"))))
   }
 
-  test("the planning scan reads no content") {
-    val (in, meta) = tree()
-    val scanned = AudioScan.scan(spark, in.getAbsolutePath, maxDepth = 2,
-      metadataFile = Some(meta.getAbsolutePath), checkMimeType = true)
-    val scans = collect(scanned.queryExecution.executedPlan) { case s: FileSourceScanExec => s }
-    assert(scans.nonEmpty && scans.forall(!_.requiredSchema.fieldNames.contains("content")))
-    assert(scanned.select("relative_path").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("a.wav", "b/c.wav", "b/d.wav", "e.wav"))
-  }
-
-  test("F2/F3/F4 drops are never opened; F5 reads a head, the content pass each kept file once") {
-    val (in, meta) = tree()
+  /** Runs `body` with `file:` served by [[CountingFs]]. */
+  private def counting(body: => Unit): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.file.impl", classOf[CountingFs].getName)
     hc.set("fs.file.impl.disable.cache", "true")
     try {
       CountingFs.opens.clear()
+      body
+    } finally {
+      hc.unset("fs.file.impl")
+      hc.unset("fs.file.impl.disable.cache")
+    }
+  }
+
+  // with F5, it opens one head per F2–F4 survivor
+  test("without F5, the planning pass opens no file") {
+    val (in, meta) = tree()
+    def scan(mime: Boolean) = AudioScan.scan(spark, in.getAbsolutePath, maxDepth = 2,
+      metadataFile = Some(meta.getAbsolutePath), checkMimeType = mime).map(_.relativePath).sorted
+    val survivors = Seq("a.wav", "b/c.wav", "b/d.wav", "b/decoy.wav", "e.wav")
+    counting {
+      assert(scan(mime = false) == survivors)
+      assert(CountingFs.opens.isEmpty, CountingFs.opens)
+      assert(scan(mime = true) == survivors.filterNot(_ == "b/decoy.wav"))
+      assert(CountingFs.opens.asScala.toMap ==
+        survivors.map(p => new java.io.File(in, p).getAbsolutePath -> Integer.valueOf(1)).toMap)
+    }
+  }
+
+  test("F2/F3/F4 drops are never opened; F5 reads a head, the content pass each kept file once") {
+    val (in, meta) = tree()
+    counting {
       graft.sources.Metadata.load(spark, meta.getAbsolutePath)
       val sidecarOpens = CountingFs.of(meta)
       for (mime <- Seq(true, false)) {
@@ -99,9 +115,6 @@ class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         assert(CountingFs.of(new java.io.File(in, "alias/c.wav")) == 0)                // F2
         assert(CountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load") // F4
       }
-    } finally {
-      hc.unset("fs.file.impl")
-      hc.unset("fs.file.impl.disable.cache")
     }
   }
 

@@ -6,6 +6,25 @@ import graft.core.{MBool, MFloat64, MList, MString}
 import org.apache.spark.sql.Row
 import scala.jdk.CollectionConverters._
 
+/** The local disk under the scheme `cfs:`, a stand-in for a remote store:
+  * its statuses carry no local permissions, which only `file:` can load. */
+class OtherSchemeFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  override def getUri: java.net.URI = java.net.URI.create("cfs:///")
+  override def getScheme: String = "cfs"
+  private def status(p: Path, f: java.io.File) =
+    new FileStatus(f.length, f.isDirectory, 1, 4096, f.lastModified, makeQualified(p))
+  override def getFileStatus(p: Path): FileStatus = {
+    val f = pathToFile(p)
+    if (!f.exists) throw new java.io.FileNotFoundException(p.toString)
+    status(p, f)
+  }
+  override def listStatus(p: Path): Array[FileStatus] = {
+    val f = pathToFile(p)
+    if (f.isFile) Array(status(p, f)) else f.listFiles().map(c => status(new Path(p, c.getName), c))
+  }
+}
+
 /** End-to-end pipeline tests, mirroring the reference's CLI tests
   * (reference: tests/end_to_end.rs). Each test synthesizes WAV fixtures plus
   * a sidecar, runs the full pipeline to Parquet shards, and reads the output
@@ -373,8 +392,8 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("e2e: paths with SPACES scan, join metadata, and exclude correctly") {
-    // binaryFile's `path` column is UNencoded — every path comparison must
-    // use the Hadoop Path form, not File.toURI (percent-encoded)
+    // a file's Hadoop path is UNencoded — every path comparison must use
+    // the Hadoop Path form, not File.toURI (percent-encoded)
     val in = tmpDir("graft-sp in"); val out = tmpDir("graft-sp-out")
     writeFile(in, "sub dir/my file.wav", Wav.synthWav(16000, 8000))
     val meta = writeText(in, "metadata.csv",
@@ -391,8 +410,7 @@ class PipelineSpec extends SparkSpec {
       java.nio.file.Paths.get(in.getAbsolutePath, "link dir"),
       java.nio.file.Paths.get(in.getAbsolutePath, "sub dir"))
     val rel = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
-        metadataFile = Some(meta.getAbsolutePath))
-      .select("relative_path").collect().map(_.getString(0)).toSeq
+        metadataFile = Some(meta.getAbsolutePath)).map(_.relativePath)
     assert(rel == Seq("sub dir/my file.wav"))
   }
 
@@ -408,20 +426,20 @@ class PipelineSpec extends SparkSpec {
       Paths.get(in.getAbsolutePath, "alias"), Paths.get(in.getAbsolutePath, "real"))
     Files.createSymbolicLink(
       Paths.get(in.getAbsolutePath, "c.wav"), Paths.get(in.getAbsolutePath, "real/a.wav"))
-    val withFilter = graft.sources.AudioScan.scan(spark, in.getAbsolutePath)
-      .select("relative_path").collect().map(_.getString(0)).sorted
+    val withFilter = graft.sources.AudioScan.scan(spark, in.getAbsolutePath).map(_.relativePath).sorted
     assert(withFilter.toSeq == Seq("real/a.wav", "real/b.wav"))
+    // a link above the tree is fine: the input root itself may be one
+    assert(graft.sources.AudioScan.scan(spark, new java.io.File(in, "alias").getAbsolutePath)
+      .map(_.relativePath).sorted == Seq("a.wav", "b.wav"))
     // the divergent follow-links behavior stays available explicitly
     val noFilter = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
-      excludeSymlinks = false)
-      .select("relative_path").collect().map(_.getString(0)).sorted
-    assert(noFilter.length > withFilter.length, s"binaryFile followed no links: ${noFilter.toSeq}")
+      excludeSymlinks = false).map(_.relativePath).sorted
+    assert(noFilter.length > withFilter.length, s"the walk followed no links: ${noFilter.toSeq}")
   }
 
   test("symlink opt-out and pathGlobFilter flow through Config to the scan") {
-    // the F2 canonical-path check is local-fs-only; Config exposes the
-    // opt-out (--follow-symlinks) and the scheme-independent name-pruning
-    // alternative (--path-glob → binaryFile pathGlobFilter) for clusters
+    // Config exposes the F2 opt-out (--follow-symlinks) and the
+    // scheme-independent name pruning (--path-glob, a Hadoop glob on the name)
     import java.nio.file.{Files, Paths}
     val in = tmpDir("graft-optout-in")
     val wav = Wav.synthWav(16000, 8000)
@@ -431,8 +449,7 @@ class PipelineSpec extends SparkSpec {
       Paths.get(in.getAbsolutePath, "alias"), Paths.get(in.getAbsolutePath, "real"))
     // glob prunes by name on ANY scheme, at listing time
     val globOnly = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
-      pathGlobFilter = Some("*.wav"))
-      .select("relative_path").collect().map(_.getString(0)).sorted
+      pathGlobFilter = Some("*.wav")).map(_.relativePath).sorted
     assert(globOnly.toSeq == Seq("real/a.wav"))
     // Config-level opt-out: the pipeline plan ingests through the symlink
     val (planned, _) = AudioToDataset.plan(spark, AudioToDataset.Config(
@@ -445,6 +462,61 @@ class PipelineSpec extends SparkSpec {
       in.getAbsolutePath, "/unused", pathGlobFilter = Some("*.wav")))
     assert(strict.select("audio.path").collect().map(_.getString(0)).toSeq ==
       Seq("real/a.wav"))
+  }
+
+  test("every name gets its reference row: _x, .x, x._COPYING_ and a 0-byte file") {
+    // the reference walks every entry (SURVEY.md §7.4); Spark's own file
+    // listing drops these names and empty files
+    val in = tmpDir("graft-names"); val out = tmpDir("graft-names-out")
+    val wav = Wav.synthWav(16000, 8000)
+    val named = Seq("plain/a.wav", "plain/_b.wav", "plain/.c.wav", "_under/x.wav", ".hid/y.wav",
+      "plain/f.wav._COPYING_")
+    named.foreach(writeFile(in, _, wav))
+    writeFile(in, "plain/zero.wav", Array.emptyByteArray)
+    AudioToDataset.run(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
+    val rows = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath).collect().map { r =>
+      val a = r.getAs[Row]("audio")
+      a.getAs[String]("path") ->
+        (r.getAs[Double]("duration"), a.getAs[Int]("sampling_rate"), a.getAs[Array[Byte]]("bytes").length)
+    }.toMap
+    assert(rows == named.map(_ -> (0.5, 16000, wav.length)).toMap + ("plain/zero.wav" -> (0.0, 0, 0)))
+  }
+
+  test("symlink loop: --follow-symlinks skips the looped copy; the default never enters it") {
+    import java.nio.file.{Files, Paths}
+    val in = tmpDir("graft-loop")
+    writeFile(in, "a/x.wav", Wav.synthWav(16000, 8000))
+    Files.createSymbolicLink(Paths.get(in.getAbsolutePath, "a/up"), Paths.get(in.getAbsolutePath))
+    for (follow <- Seq(true, false)) {
+      val out = tmpDir("graft-loop-out")
+      AudioToDataset.run(spark, AudioToDataset.Config(
+        in.getAbsolutePath, out.getAbsolutePath, excludeSymlinks = !follow))
+      val paths = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
+        .collect().map(_.getAs[Row]("audio").getAs[String]("path")).toSeq
+      assert(paths == Seq("a/x.wav"), s"follow=$follow")
+    }
+  }
+
+  test("a tree on another scheme is listed through its Hadoop FileSystem") {
+    // `cfs:` is the local disk under another scheme name: no walk, Hadoop's
+    // listFiles; depth, glob and sidecar exclusion still hold
+    val in = tmpDir("graft-scheme")
+    val wav = Wav.synthWav(16000, 8000)
+    Seq("a.wav", "d/b.wav", "d/e/deep.wav", "d/notes.txt").foreach(writeFile(in, _, wav))
+    val meta = writeText(in, "meta.csv", "relative_path,transcription\nd/b.wav,bee\n")
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.cfs.impl", classOf[OtherSchemeFs].getName)
+    def rows(glob: Option[String]): Map[String, String] = {
+      val out = tmpDir("graft-scheme-out")
+      AudioToDataset.run(spark, AudioToDataset.Config("cfs:" + in.getAbsolutePath, out.getAbsolutePath,
+        Some("cfs:" + meta.getAbsolutePath), maxDepth = 2, pathGlobFilter = glob))
+      spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath).collect()
+        .map(r => r.getAs[Row]("audio").getAs[String]("path") -> r.getAs[String]("transcription")).toMap
+    }
+    try {
+      assert(rows(None) == Map("a.wav" -> "-", "d/b.wav" -> "bee", "d/notes.txt" -> "-"))
+      assert(rows(Some("*.wav")) == Map("a.wav" -> "-", "d/b.wav" -> "bee"))
+    } finally hc.unset("fs.cfs.impl")
   }
 
   test("duckdb sink SQL generation matches the reference DDL/INSERT shape") {
@@ -465,10 +537,11 @@ class PipelineSpec extends SparkSpec {
     val meta = writeText(in, "m.jsonl",
       """{"x": 1.5, "duration": 9.9, "id": 3}""" + "\n" +          // keyless: votes only
       """{"relative_path":"a.wav","x": 2.5}""" + "\n")
-    val (table, schema) = graft.sources.Metadata.load(spark, meta.getAbsolutePath)
+    val sidecar = graft.sources.Metadata.load(spark, meta.getAbsolutePath)
+    val schema = sidecar.schema
     assert(schema.types.get("x").contains(MFloat64)) // voted from the keyless row too
     assert(!schema.types.contains("duration") && !schema.types.contains("id"))
     assert(schema.types.get("transcription").contains(MString))
-    assert(table.count() == 1) // the keyless row voted but is not joinable
+    assert(sidecar.rows.size == 1) // the keyless row voted but is not joinable
   }
 }

@@ -2,9 +2,11 @@ package graft
 
 import graft.functions.Wav
 import graft.operators.Sharding
+import graft.sources.Metadata
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions.{col, element_at, typedLit}
 
 /** The sidecar join (J1/J2) and the shard ranking (X1) through the real
   * pipeline entry points, plus a pin on how many Spark jobs one pipeline run
@@ -86,6 +88,27 @@ class SidecarShardSpec extends SparkSpec {
     assert(resolved(run(in, sidecar)) == expected)
   }
 
+  test("the J1 lookup runs in generated code and agrees with interpreted evaluation") {
+    val (_, sidecar) = tree("meta.jsonl", jsonl)
+    val table = Metadata.load(spark, sidecar.getAbsolutePath)
+    val paths = expected.keys.toSeq
+    // a range, not a local relation, so the projection is not folded away
+    def joined = Metadata.joinFiles(
+      spark.range(paths.length).select(element_at(typedLit(paths), col("id").cast("int") + 1).as("relative_path")),
+      table).select("relative_path", "transcription", "score")
+    def rows(conf: (String, String)*): Map[String, (String, String)] = {
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        if (conf.contains("spark.sql.codegen.fallback" -> "false"))
+          assert(joined.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
+        joined.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+      } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    assert(rows("spark.sql.codegen.fallback" -> "false") == expected)
+    assert(rows("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") ==
+      expected)
+  }
+
   test("shard i holds the i-th key in Spark's ORDER BY order (UTF-8, not UTF-16)") {
     val s = spark
     import s.implicits._
@@ -116,9 +139,8 @@ class SidecarShardSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
-  test("a warm JSONL→Parquet pipeline run launches at most 4 Spark jobs") {
-    val (in, sidecar) = tree("meta.jsonl", jsonl)
-    run(in, sidecar) // warm: the first run also pays one-off planning work
+  /** `body`'s result and the number of Spark jobs it launches. */
+  private def jobsOf[A](body: => A): (A, Int) = {
     val group = "sidecar-shard-spec-jobs"
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
@@ -127,12 +149,30 @@ class SidecarShardSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(group, "job-count pin")
-    val out = try run(in, sidecar) finally {
+    val result = try body finally {
       spark.sparkContext.clearJobGroup()
       GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
-    assert(jobs.get() <= 4, s"${jobs.get()} jobs")
+    (result, jobs.get())
+  }
+
+  // planning (sidecar, walk, J1 table) runs on the driver: the write is the one job
+  test("a warm JSONL→Parquet pipeline run launches 1 Spark job") {
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    run(in, sidecar) // warm: the first run also pays one-off planning work
+    val (out, jobs) = jobsOf(run(in, sidecar))
+    assert(jobs == 1, s"$jobs jobs")
     assert(resolved(out) == expected)
+  }
+
+  test("with --check-mime-type a warm run launches 2 Spark jobs") { // the head sniff and the write
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    val cfg = AudioToDataset.Config(in.getAbsolutePath, tmpDir("graft-j1-out").getAbsolutePath,
+      metadataFile = Some(sidecar.getAbsolutePath), checkMimeType = true)
+    AudioToDataset.run(spark, cfg)
+    val (_, jobs) = jobsOf(AudioToDataset.run(spark, cfg))
+    assert(jobs == 2, s"$jobs jobs")
+    assert(resolved(new java.io.File(cfg.output)) == expected)
   }
 }
