@@ -1,26 +1,34 @@
 package graft
 
-import graft.functions.Wav
+import graft.core.GraftSession
 import graft.operators.Sharding
 import graft.sinks.{DuckDbShardSink, ParquetShardSink, ShardCommit, TarShardSink}
 import graft.sources.{AudioScan, Metadata}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 
 /** The end-to-end pipeline — the Spark re-expression of the reference CLI
-  * (reference: main(), src/main.rs:615-860). Declarative plan:
+  * (reference: main(), src/main.rs:615-860):
   *
   *   planning, on the driver as in the reference:
   *     sidecar read once: type vote, coercion, first-wins maps (S2/S3, J2, P7)
   *     → a walk of the tree, F1–F4 (S1); F5 head sniffs in one Spark job
   *     → the kept files cut into shards (X1)
-  *   content pass, the one other Spark job: one task per shard, no shuffle
-  *   and no sort:
+  *   content pass, the one other Spark job: a plain RDD job with one task
+  *   per shard, no shuffle and no sort, which builds each row where it is
+  *   written, as the reference's per-shard closure does (src/main.rs:718-856):
   *     read each kept file once (P4)
   *     → WAV parse (P5)
   *     → each file's winning sidecar row, looked up in a broadcast (J1, P8)
   *     → audio struct assembly (P6)
   *     → exact-name Parquet (K1), DuckDB (K2) or tar shards
+  *
+  * No Catalyst plan is analyzed, optimized or code-generated on the way
+  * (a CSV or Parquet sidecar is still loaded by a Spark read).
   *
   * All defaults mirror the reference's clap args (src/main.rs:55-95).
   */
@@ -45,42 +53,41 @@ object AudioToDataset {
       // zip bundles explode into entries in-executor (bang-notation paths)
       expandArchives: Boolean = false)              // --expand-archives
 
-  /** The sink input: columns `audio, duration, <metadata keys sorted>,
-    * shard_id`, one partition per shard with its rows in `audio.path` order,
-    * plus the resolved metadata schema. */
-  def plan(spark: SparkSession, cfg: Config): (DataFrame, Metadata.MetaSchema) = {
+  /** The sink input: `rows`, one partition per shard with its rows in
+    * `audio.path` order, laid out as `schema` ([[AudioScan.schema]]:
+    * `audio, duration, <metadata keys sorted>, shard_id`); the resolved
+    * metadata schema; and the run's one broadcast of the session's Hadoop
+    * conf, which the F5 sniff, the read and the write share. */
+  final case class Plan(
+      rows: RDD[InternalRow],
+      schema: StructType,
+      meta: Metadata.MetaSchema,
+      conf: Broadcast[SerializableConfiguration])
+
+  def plan(spark: SparkSession, cfg: Config): Plan = {
     val sidecar = cfg.metadataFile.fold(Metadata.NoSidecar)(Metadata.load(spark, _))
+    val conf = GraftSession.hadoopConf(spark)
     // X1: shard order is relative-path order (documented divergence from the
     // platform-dependent directory iterator, SURVEY.md §7.4); no audio byte
     // is read before the task that writes its shard
     val kept = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
-        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives)
+        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives, Some(conf))
     val shards = Sharding.consecutiveShards(kept, cfg.filesPerShard)(_.relativePath)
-    val parsed = AudioScan.read(spark, shards).withColumn("wav", Wav.parseCol(col("content"))) // P5
-    val sharded = Metadata.joinFiles(parsed, sidecar).select(
-      Seq(
-        struct( // P6 — Parquet field order bytes, sampling_rate, path (src/main.rs:465-470)
-          col("content").as("bytes"),
-          col("wav.sampling_rate").as("sampling_rate"),
-          col("relative_path").as("path")).as("audio"),
-        col("wav.duration").as("duration")) ++
-        sidecar.schema.keys.map(col) :+ col("shard_id"): _*)
-    (sharded, sidecar.schema)
+    Plan(AudioScan.read(spark, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema, conf)
   }
 
   def run(spark: SparkSession, cfg: Config): Unit = {
     // the sink is chosen, and its options checked, before the planning pass
-    val write: (DataFrame, Metadata.MetaSchema) => Unit = ShardCommit.extension(cfg.format) match {
+    val write: Plan => Unit = ShardCommit.extension(cfg.format) match {
       case "parquet" =>
         ParquetShardSink.codec(cfg.parquetCompression)
-        (df, meta) => ParquetShardSink.writeShards(df, cfg.output, cfg.parquetCompression,
-          footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(meta.types.toSeq)))
-      case "duckdb" => (df, meta) => DuckDbShardSink.writeShards(df, cfg.output, meta.types.toSeq)
+        p => ParquetShardSink.writeShards(p.rows, p.schema, cfg.output, p.conf, cfg.parquetCompression,
+          footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(p.meta.types.toSeq)))
+      case "duckdb" => p => DuckDbShardSink.writeShards(p.rows, cfg.output, p.conf, p.meta.types.toSeq)
       case "tar" => // engine extension: WebDataset tar shards for training loaders
-        (df, meta) => TarShardSink.writeShards(df, cfg.output, meta.keys)
+        p => TarShardSink.writeShards(p.rows, cfg.output, p.conf, p.meta.types.toSeq)
     }
-    val (sharded, metaSchema) = plan(spark, cfg)
-    write(sharded, metaSchema)
+    write(plan(spark, cfg))
   }
 
   /** CLI mirroring the reference's flags. */

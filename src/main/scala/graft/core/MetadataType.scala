@@ -73,6 +73,24 @@ object MetadataType {
     }
   }
 
+  /** A Catalyst value of type `t` as JSON, the way the reference's serde_json
+    * renders a metadata value (src/main.rs:835-837): a list is an array, and a
+    * null, at the top or as a list element, is `null`. */
+  def toJson(v: Any, t: MetadataType): com.fasterxml.jackson.databind.JsonNode = {
+    val json = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
+    (v, t) match {
+      case (null, _)               => json.nullNode()
+      case (b: Boolean, MBool)     => json.booleanNode(b)
+      case (d: Double, MFloat64)   => json.numberNode(d)
+      case (a: org.apache.spark.sql.catalyst.util.ArrayData, MList(inner)) =>
+        val arr = json.arrayNode()
+        val dt = inner.toSpark
+        for (i <- 0 until a.numElements()) arr.add(toJson(a.get(i, dt), inner))
+        arr
+      case (s, _)                  => json.textNode(s.toString)
+    }
+  }
+
   /** SQL column-name quoting (reference: sanitize_column_name, src/main.rs:241-243). */
   def sanitizeColumnName(name: String): String = name.replace("\"", "\"\"")
 }

@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.{ByteBuffer, ByteOrder}
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.udf
 
 /** WAV header parsing (reference: src/main.rs:760-769, via the `hound` crate).
@@ -53,7 +52,6 @@ object Wav {
 
   /** `wav_parse(bytes) -> struct<duration double, sampling_rate int>`. */
   val parseUdf = udf((b: Array[Byte]) => parse(b))
-  def parseCol(c: Column): Column = parseUdf(c)
 
   /** REAL sample decode for 16-bit PCM WAV: RMS over the int16 samples, plus
     * header info — `(rms, sampling_rate, duration)`. `None` for non-WAV,

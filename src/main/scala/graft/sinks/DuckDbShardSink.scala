@@ -1,8 +1,10 @@
 package graft.sinks
 
-import graft.core.{GraftSession, MBool, MFloat64, MList, MString, MetadataType}
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import graft.core.{MBool, MFloat64, MList, MString, MetadataType}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.util.SerializableConfiguration
 
 /** K2 — DuckDB shard writer (reference: src/main.rs:388-436, 797-847).
   *
@@ -17,6 +19,9 @@ import org.apache.spark.sql.functions.col
   *   - one prepared INSERT with `row(?,?,?)` for audio (src/main.rs:428), one
   *     transaction per shard (src/main.rs:803-843);
   *   - per-row insert errors silently ignored (src/main.rs:841).
+  *
+  * It writes the pipeline's rows as its content pass built them (an
+  * `RDD[InternalRow]`, read by ordinal; no Row deserialization).
   *
   * The embedded single-writer model is a natural fit for one-file-per-task:
   * each executor task builds its shard in a local database, commits it, and
@@ -58,29 +63,26 @@ object DuckDbShardSink {
     s"INSERT INTO files ($cols) VALUES ($params)"
   }
 
-  /** Write one `{shard_id}.duckdb` per shard. `df` must have columns
-    * `audio struct<bytes,sampling_rate,path>, duration, <meta...>, shard_id`
-    * and come already arranged: each shard whole in one partition, its rows
-    * contiguous and in `id` order.
+  /** Write one `{shard_id}.duckdb` per shard. Each row is laid out as
+    * `AudioScan.schema`: `audio struct<bytes,sampling_rate,path>, duration`,
+    * one column per `metaTypes` entry, `shard_id`; fields are read by
+    * ordinal. `rows` come already arranged: each shard whole in one
+    * partition, its rows contiguous and in `id` order.
     */
   def writeShards(
-      df: DataFrame,
+      rows: RDD[InternalRow],
       outDir: String,
+      conf: Broadcast[SerializableConfiguration],
       metaTypes: Seq[(String, MetadataType)]): Unit = {
     val ddl = Seq(createSequenceSql, createTableSql(metaTypes))
     val ins = insertSql(metaTypes)
-    val metaNames = metaTypes.map(_._1)
-    val metaKinds = metaTypes.map(_._2)
-    val arranged =
-      df.select((Seq(col("audio"), col("duration")) ++ metaNames.map(col) :+ col("shard_id")): _*)
-    val sessionConf = GraftSession.hadoopConf(df.sparkSession)
-    arranged.foreachPartition { rows: Iterator[Row] =>
+    val metaKinds = metaTypes.map(_._2).toIndexedSeq
+    rows.foreachPartition { part =>
       Class.forName("org.duckdb.DuckDBDriver")
       // Jackson for list→JSON text: full escaping (control chars included),
       // matching the reference's serde_json Value::to_string (src/main.rs:835-837)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      ShardCommit.commit(rows, outDir, "duckdb", sessionConf.value.value)(
-          r => r.getInt(r.length - 1)) { out =>
+      ShardCommit.commit(part, outDir, "duckdb", conf.value.value)(r => r.getInt(r.numFields - 1)) { out =>
         val local = java.io.File.createTempFile("graft-shard-", ".duckdb")
         local.delete()
         val conn = java.sql.DriverManager.getConnection(s"jdbc:duckdb:${local.getAbsolutePath}")
@@ -88,27 +90,25 @@ object DuckDbShardSink {
         val s = conn.createStatement()
         ddl.foreach(s.execute); s.close()
         val stmt = conn.prepareStatement(ins)
-        new ShardCommit.Writer[Row] {
+        new ShardCommit.Writer[InternalRow] {
           private var rowIdx = 0
-          def write(row: Row): Unit = {
+          def write(row: InternalRow): Unit = {
             try {
-              val audio = row.getStruct(0)
+              val audio = row.getStruct(0, 3)
               stmt.setInt(1, rowIdx) // in-shard 0-based index
               stmt.setDouble(2, row.getDouble(1))
-              stmt.setString(3, audio.getAs[String]("path"))
-              stmt.setInt(4, audio.getAs[Int]("sampling_rate"))
-              stmt.setBytes(5, audio.getAs[Array[Byte]]("bytes"))
-              metaKinds.zipWithIndex.foreach { case (t, i) =>
-                val v = row.get(2 + i)
-                val pos = 6 + i
-                (t, v) match {
-                  case (_, null)            => stmt.setObject(pos, null)
-                  case (MBool, b: Boolean)  => stmt.setBoolean(pos, b)
-                  case (MFloat64, d: Double) => stmt.setDouble(pos, d)
-                  case (MList(_), seq: scala.collection.Seq[_]) =>
-                    import scala.jdk.CollectionConverters._
-                    stmt.setString(pos, mapper.writeValueAsString(seq.asJava))
-                  case (_, x)               => stmt.setString(pos, x.toString)
+              stmt.setString(3, audio.getUTF8String(2).toString)
+              stmt.setInt(4, audio.getInt(1))
+              stmt.setBytes(5, audio.getBinary(0))
+              for ((t, i) <- metaKinds.zipWithIndex) {
+                val (ord, pos) = (2 + i, 6 + i)
+                if (row.isNullAt(ord)) stmt.setObject(pos, null)
+                else t match {
+                  case MBool    => stmt.setBoolean(pos, row.getBoolean(ord))
+                  case MFloat64 => stmt.setDouble(pos, row.getDouble(ord))
+                  case MString  => stmt.setString(pos, row.getUTF8String(ord).toString)
+                  case MList(_) =>
+                    stmt.setString(pos, mapper.writeValueAsString(MetadataType.toJson(row.getArray(ord), t)))
                 }
               }
               stmt.executeUpdate()

@@ -8,12 +8,15 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SerializableConfiguration
 import scala.jdk.CollectionConverters._
 
 /** K1 — exact-name Parquet shard writer with the Hugging Face footer
@@ -22,7 +25,10 @@ import scala.jdk.CollectionConverters._
   * One shard = one task = one `outDir/{shard_id}.parquet`, written directly by
   * the executor through [[ShardCommit]] with parquet-java's ParquetWriter
   * wrapping Spark's own ParquetWriteSupport (so value encoding is identical
-  * to df.write.parquet), plus:
+  * to df.write.parquet). The rows come as an `RDD[InternalRow]`, already
+  * built by the pipeline's content pass: no Dataset, row encoder or
+  * generated code sits between them and the writer ([[writeFrame]] adapts a
+  * DataFrame). Plus:
   *   - footer KV `huggingface -> {"info":{"features":{...}}}` (src/main.rs:582-601),
   *   - row groups of 256 rows (src/main.rs:607) — small on purpose: rows carry
   *     multi-MB audio blobs, so 256 rows keeps a row group ~100 MB,
@@ -82,52 +88,60 @@ object ParquetShardSink {
     override def getWriteSupport(conf: Configuration): WriteSupport[InternalRow] = new ParquetWriteSupport
   }
 
-  /** Write `df` (which must carry an int `shard_id` column) as
-    * `outDir/{shard_id}.parquet`. `df` comes already arranged: each shard
-    * whole in one partition, its rows contiguous and in write order
-    * (`AudioToDataset.plan` plans it so; [[graft.operators.Sharding.arrange]]
-    * lays out any other frame). `footerKv` is appended to each file footer.
+  /** Write `rows`, laid out as `schema`, whose trailing field is an int
+    * `shard_id`, as `outDir/{shard_id}.parquet`; the file schema is `schema`
+    * without `shard_id`. `rows` come already arranged: each shard whole in
+    * one partition, its rows contiguous and in write order
+    * (`AudioToDataset.plan` plans them so). `footerKv` is appended to each
+    * file footer.
     */
   def writeShards(
-      df: DataFrame,
+      rows: RDD[InternalRow],
+      schema: StructType,
       outDir: String,
+      conf: Broadcast[SerializableConfiguration],
       compression: String = "snappy",
       footerKv: Map[String, String] = Map.empty): Unit = {
-    val spark = df.sparkSession
-    val dataSchema = StructType(df.schema.filterNot(_.name == "shard_id"))
-    val arranged = df.select(dataSchema.map(f => col(f.name)) :+ col("shard_id"): _*)
-    val shardOrdinal = dataSchema.length // shard_id is the trailing field
+    val dataSchema = StructType(schema.init)
+    val shardOrdinal = dataSchema.length
     val codecName = codec(compression)
-    val sessionConf = GraftSession.hadoopConf(spark)
     // What ParquetWriteSupport.init requires, layered on the session conf.
     val confEntries = Map(
       "spark.sql.parquet.writeLegacyFormat" -> "false",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       "spark.sql.parquet.datetimeRebaseModeInWrite" -> "CORRECTED",
       "spark.sql.parquet.int96RebaseModeInWrite" -> "CORRECTED",
-      "spark.sql.session.timeZone" -> spark.sessionState.conf.sessionLocalTimeZone,
+      "spark.sql.session.timeZone" -> SQLConf.get.sessionLocalTimeZone,
       "spark.sql.parquet.fieldId.write.enabled" -> "true",
       "spark.sql.parquet.variant.annotateLogicalType.enabled" -> "false")
 
-    arranged.queryExecution.toRdd.foreachPartition { rows: Iterator[InternalRow] =>
-      val conf = new Configuration(sessionConf.value.value)
-      confEntries.foreach { case (k, v) => conf.set(k, v) }
-      ParquetWriteSupport.setSchema(dataSchema, conf)
-      // Project away the trailing shard_id so the written row matches the
-      // file schema exactly.
-      val proj = UnsafeProjection.create(dataSchema)
-      ShardCommit.commit(rows, outDir, "parquet", conf)(_.getInt(shardOrdinal)) { out =>
+    rows.foreachPartition { part =>
+      val writeConf = new Configuration(conf.value.value)
+      confEntries.foreach { case (k, v) => writeConf.set(k, v) }
+      ParquetWriteSupport.setSchema(dataSchema, writeConf)
+      // the written row is the file schema's fields only: a view that hides
+      // the trailing shard_id, with no copy and no generated code
+      val data = ProjectingInternalRow(dataSchema, 0 until shardOrdinal)
+      ShardCommit.commit(part, outDir, "parquet", writeConf)(_.getInt(shardOrdinal)) { out =>
         val writer = new Builder(new StreamFile(out))
-          .withConf(conf)
+          .withConf(writeConf)
           .withCompressionCodec(codecName)
           .withRowGroupRowCountLimit(RowGroupRows)
           .withExtraMetaData(footerKv.asJava)
           .build()
         new ShardCommit.Writer[InternalRow] {
-          def write(row: InternalRow): Unit = writer.write(proj(row))
+          def write(row: InternalRow): Unit = { data.project(row); writer.write(data) }
           def close(): Unit = writer.close()
         }
       }
     }
+  }
+
+  /** [[writeShards]] for a frame that carries an int `shard_id` column and
+    * comes arranged the same way ([[graft.operators.Sharding.arrange]] lays
+    * one out). */
+  def writeFrame(df: DataFrame, outDir: String): Unit = {
+    val arranged = df.select(df.columns.toSeq.filterNot(_ == "shard_id").map(col) :+ col("shard_id"): _*)
+    writeShards(arranged.queryExecution.toRdd, arranged.schema, outDir, GraftSession.hadoopConf(df.sparkSession))
   }
 }

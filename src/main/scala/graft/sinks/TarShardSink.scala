@@ -1,9 +1,12 @@
 package graft.sinks
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.core.GraftSession
+import graft.core.MetadataType
 import graft.functions.Tar
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.util.SerializableConfiguration
 
 /** K3 (engine extension) — WebDataset tar shard writer: one shard = one
   * task = one `outDir/{shard_id}.tar`, each record two co-sampled members
@@ -14,6 +17,10 @@ import org.apache.spark.sql.{DataFrame, Row}
   * output loads directly into WebDataset-style training loaders — the
   * export format modern multimodal training stacks consume.
   *
+  * It writes the pipeline's rows as its content pass built them (an
+  * `RDD[InternalRow]`, read by ordinal); list values become JSON arrays,
+  * null elements as `null`.
+  *
   * Scale shape mirrors [[ParquetShardSink]]: no driver loop, shards stream
   * through executor tasks (entries are written streaming — a shard never
   * buffers its archive), fail-loud row errors. X4 is [[ShardCommit]]'s: an
@@ -22,23 +29,26 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object TarShardSink {
 
-  /** Write `df` (columns `audio(bytes, sampling_rate, path), duration,
-    * <meta...>, shard_id`) as `outDir/{shard_id}.tar`. `df` comes already
-    * arranged: each shard whole in one partition, its rows contiguous and in
-    * ordinal order. */
-  def writeShards(df: DataFrame, outDir: String, metaKeys: Seq[String]): Unit = {
-    val keys = metaKeys.toIndexedSeq
-    val sessionConf = GraftSession.hadoopConf(df.sparkSession)
-    df.foreachPartition { rows: Iterator[Row] =>
+  /** Write `rows` as `outDir/{shard_id}.tar`. Each row is laid out as
+    * `AudioScan.schema`: `audio(bytes, sampling_rate, path), duration`, one
+    * column per `metaTypes` entry, `shard_id`; fields are read by ordinal.
+    * `rows` come already arranged: each shard whole in one partition, its
+    * rows contiguous and in ordinal order. */
+  def writeShards(
+      rows: RDD[InternalRow],
+      outDir: String,
+      conf: Broadcast[SerializableConfiguration],
+      metaTypes: Seq[(String, MetadataType)]): Unit = {
+    val meta = metaTypes.toIndexedSeq
+    rows.foreachPartition { part =>
       val mapper = new ObjectMapper()
-      ShardCommit.commit(rows, outDir, "webdataset", sessionConf.value.value)(
-          _.getAs[Int]("shard_id")) { out =>
-        new ShardCommit.Writer[Row] {
+      ShardCommit.commit(part, outDir, "webdataset", conf.value.value)(r => r.getInt(r.numFields - 1)) { out =>
+        new ShardCommit.Writer[InternalRow] {
           private var ordinal = 0
-          def write(row: Row): Unit = {
+          def write(row: InternalRow): Unit = {
             val key = f"$ordinal%06d"
-            Tar.writeEntryTo(out, Tar.Entry(s"$key.wav", row.getAs[Row]("audio").getAs[Array[Byte]]("bytes")))
-            Tar.writeEntryTo(out, Tar.Entry(s"$key.json", record(mapper, keys, row)))
+            Tar.writeEntryTo(out, Tar.Entry(s"$key.wav", row.getStruct(0, 3).getBinary(0)))
+            Tar.writeEntryTo(out, Tar.Entry(s"$key.json", record(mapper, meta, row)))
             ordinal += 1
           }
           def close(): Unit = Tar.finishTo(out)
@@ -49,33 +59,14 @@ object TarShardSink {
 
   /** A record's `.json` member: path, duration, sampling_rate and every
     * metadata column. */
-  private def record(mapper: ObjectMapper, keys: Seq[String], row: Row): Array[Byte] = {
-    val audio = row.getAs[Row]("audio")
+  private def record(mapper: ObjectMapper, meta: IndexedSeq[(String, MetadataType)], row: InternalRow): Array[Byte] = {
+    val audio = row.getStruct(0, 3)
     val node = mapper.createObjectNode()
-    node.put("path", audio.getAs[String]("path"))
-    node.put("duration", row.getAs[Double]("duration"))
-    node.put("sampling_rate", audio.getAs[Int]("sampling_rate"))
-    keys.foreach { k =>
-      row.getAs[Any](k) match {
-        case null => node.putNull(k)
-        case s: String => node.put(k, s)
-        case b: Boolean => node.put(k, b)
-        case d: Double => node.put(k, d)
-        case l: Long => node.put(k, l)
-        case i: Int => node.put(k, i)
-        case seq: scala.collection.Seq[_] =>
-          val arr = node.putArray(k)
-          seq.foreach {
-            case s: String => arr.add(s)
-            case b: Boolean => arr.add(b)
-            case d: Double => arr.add(d)
-            case l: Long => arr.add(l)
-            case i: Int => arr.add(i)
-            case other => arr.add(String.valueOf(other))
-          }
-        case other => node.put(k, other.toString)
-      }
-    }
+    node.put("path", audio.getUTF8String(2).toString)
+    node.put("duration", row.getDouble(1))
+    node.put("sampling_rate", audio.getInt(1))
+    for (((k, t), i) <- meta.zipWithIndex)
+      node.set[com.fasterxml.jackson.databind.JsonNode](k, MetadataType.toJson(row.get(2 + i, t.toSpark), t))
     mapper.writeValueAsBytes(node)
   }
 }

@@ -1,16 +1,20 @@
 package graft.sources
 
 import graft.core.{GraftSession, PathNorm}
-import graft.functions.Magic
+import graft.functions.{Magic, Wav}
 import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, SimpleFileVisitor, Path => JPath}
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, GlobFilter, Path => HPath}
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.{BinaryType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** S1 — recursive directory scan of audio files
   * (reference: src/main.rs:662-712, `recv-dir` + NoSymlink.and(MaxDepth)),
@@ -22,7 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * an archive's entry list — in one Spark job over the files the walk kept.
   *
   * [[read]] is the content pass: the kept files, already cut into shards on
-  * the driver, are read once each, by the task that writes their shard.
+  * the driver, are read once each, by the task that writes their shard,
+  * which builds each file's output row there (a plain RDD: no Catalyst plan).
   *
   * Filters mirrored:
   *   F1 directories — only regular files are kept;
@@ -59,7 +64,9 @@ object AudioScan {
     *   link back to its own ancestor is skipped). Other schemes have no
     *   symlinks to filter.
     * @param pathGlobFilter Hadoop glob on the file name (e.g. `*.wav`),
-    *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened. */
+    *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened.
+    * @param conf the broadcast session Hadoop conf the sniff job reads with;
+    *   when none is given and there is a sniff job, one is broadcast. */
   def scan(
       spark: SparkSession,
       input: String,
@@ -68,7 +75,8 @@ object AudioScan {
       checkMimeType: Boolean = false,
       excludeSymlinks: Boolean = true,
       pathGlobFilter: Option[String] = None,
-      expandArchives: Boolean = false): IndexedSeq[File] = {
+      expandArchives: Boolean = false,
+      conf: Option[Broadcast[SerializableConfiguration]] = None): IndexedSeq[File] = {
     val root = qualified(spark, input)
     val glob = pathGlobFilter.map(new GlobFilter(_))
     // F4: the sidecar by its qualified path, or by its path relative to the input
@@ -87,10 +95,10 @@ object AudioScan {
       // expansion happens before the MIME gate; entry paths use jar-URL bang
       // notation `bundle.zip!inner/name.wav`, and a corrupt archive yields
       // zero rows.
-      val conf = GraftSession.hadoopConf(spark)
+      val hadoopConf = conf.getOrElse(GraftSession.hadoopConf(spark))
       val slices = math.min(listed.length, spark.sparkContext.defaultParallelism)
       spark.sparkContext.parallelize(listed, slices).mapPartitions(_.flatMap { f =>
-        val c = conf.value.value
+        val c = hadoopConf.value.value
         def keep(head: => Array[Byte]) = !checkMimeType || Magic.isAllowedAudio(head)
         if (expandArchives && f.relativePath.toLowerCase(java.util.Locale.ROOT).endsWith(".zip"))
           listEntries(c, f.path).collect { case (name, head) if keep(head) =>
@@ -153,21 +161,47 @@ object AudioScan {
     out.result()
   }
 
+  /** The content pass's row layout: `audio` (P6 — the Parquet field order
+    * bytes, sampling_rate, path, src/main.rs:465-470), `duration`, the
+    * metadata columns in `meta.keys` order and `shard_id`. The nullability is
+    * what the sinks write: `audio` and `transcription` (defaulted, P8) are
+    * never null, and neither is `shard_id`. */
+  def schema(meta: Metadata.MetaSchema): StructType = StructType(
+    StructField("audio", StructType(Seq(StructField("bytes", BinaryType),
+      StructField("sampling_rate", IntegerType), StructField("path", StringType))), nullable = false) +:
+    StructField("duration", DoubleType) +:
+    meta.sparkFields.map(f => if (f.name == "transcription") f.copy(nullable = false) else f) :+
+    StructField("shard_id", IntegerType, nullable = false))
+
   /** The content pass: one partition per shard, `shards(i)` read in order by
     * the task that writes shard `i`, each file's bytes read once through the
-    * Hadoop FileSystem. Columns `relative_path, content, shard_id`.
+    * Hadoop FileSystem. The task builds each file's row as [[schema]] lays it
+    * out: its WAV header parse (P5), its winning `sidecar` row or the no-match
+    * default (J1, P8, looked up in a broadcast of the table) and its shard.
     * A plain file over Spark's largest binary value fails the run, naming it. */
-  def read(spark: SparkSession, shards: IndexedSeq[IndexedSeq[File]]): DataFrame = {
-    val conf = GraftSession.hadoopConf(spark)
-    val rows = spark.sparkContext.parallelize(shards.zipWithIndex, math.max(1, shards.length))
+  def read(
+      spark: SparkSession,
+      shards: IndexedSeq[IndexedSeq[File]],
+      sidecar: Metadata.Sidecar,
+      conf: Broadcast[SerializableConfiguration]): RDD[InternalRow] = {
+    val table = spark.sparkContext.broadcast(sidecar)
+    val metaTypes = sidecar.schema.sparkFields.map(_.dataType).toArray
+    spark.sparkContext.parallelize(shards.zipWithIndex, math.max(1, shards.length))
       .mapPartitions(_.flatMap { case (files, shard) =>
         val contents = new Contents(conf.value.value, files)
         files.iterator.map { f =>
-          InternalRow(UTF8String.fromString(f.relativePath), contents.bytes(f), shard)
+          val bytes = contents.bytes(f)
+          val wav = Wav.parse(bytes)
+          val path = UTF8String.fromString(f.relativePath)
+          val meta = table.value.resolve(path)
+          val values = new Array[Any](metaTypes.length + 3)
+          values(0) = InternalRow(bytes, wav.sampling_rate, path)
+          values(1) = wav.duration
+          for (i <- metaTypes.indices) values(2 + i) = meta.get(i, metaTypes(i))
+          values(values.length - 1) = shard
+          new GenericInternalRow(values)
         }
       })
-    GraftBridge.internalCreateDataFrame(spark, rows, StructType(Seq(StructField("relative_path", StringType),
-        StructField("content", BinaryType), StructField("shard_id", IntegerType, nullable = false))))
   }
 
   private def open(conf: Configuration, path: String): FSDataInputStream = {

@@ -32,8 +32,10 @@ import scala.jdk.CollectionConverters._
   * sidecar once into the driver — a JSONL sidecar line by line through the
   * session's Hadoop FileSystem, a CSV or Parquet one through one Spark read
   * — and in that one pass votes the types, coerces the values and builds
-  * the two first-wins maps: an in-memory [[Sidecar]]. [[joinFiles]] is one
-  * projection that looks each file's winning row up in a broadcast of it.
+  * the two first-wins maps: an in-memory [[Sidecar]]. The pipeline's
+  * content pass calls [[Sidecar.resolve]] on a broadcast of it for each file
+  * ([[AudioScan.read]]); [[joinFiles]] is the same lookup as a projection
+  * over a frame of files, for the query surface.
   *
   * Driver memory: the de-duplicated sidecar rows are held on the driver, and
   * the same rows are broadcast to every executor.
@@ -83,6 +85,17 @@ object Metadata {
     def lookup(rel: UTF8String): InternalRow = {
       val i = byRel.getOrElse(rel, byName.getOrElse(rel.subStringIndex(Slash, -1), byName.getOrElse(rel, -1)))
       if (i < 0) null else rows(i)
+    }
+
+    /** P8 (src/main.rs:204-208): the metadata of a file no key matches —
+      * every column null but `transcription`, which is "-". */
+    val default: InternalRow =
+      InternalRow.fromSeq(schema.keys.map(k => if (k == "transcription") UTF8String.fromString("-") else null))
+
+    /** The metadata row of `rel`: its [[lookup]] match, else [[default]]. */
+    def resolve(rel: UTF8String): InternalRow = {
+      val row = lookup(rel)
+      if (row == null) default else row
     }
   }
 
@@ -200,7 +213,8 @@ object Metadata {
     * last component, src/main.rs:771-780): a lookup in a broadcast of the
     * [[Sidecar]] yields each file's winning row, and its fields become the
     * metadata columns. No join, no shuffle; creating the broadcast runs no
-    * Spark job.
+    * Spark job. The pipeline does not call it: its content pass makes the
+    * same [[Sidecar.lookup]] in the task that writes the shard.
     */
   def joinFiles(files: DataFrame, sidecar: Sidecar): DataFrame = {
     val table = files.sparkSession.sparkContext.broadcast(sidecar)

@@ -107,7 +107,7 @@ object EventStream {
         val sharded = graft.operators.Sharding.shardConsecutiveByKey(
           batch.withColumn("_order", org.apache.spark.sql.functions.col("audio.path")),
           "_order", filesPerShard).drop("_order")
-        graft.sinks.ParquetShardSink.writeShards(
+        graft.sinks.ParquetShardSink.writeFrame(
           graft.operators.Sharding.arrange(sharded, "audio.path"), s"$outDir/batch=$batchId")
       }
     }

@@ -5,10 +5,9 @@ import graft.sources.AudioScan
 import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
+import org.apache.spark.{Dependency, ShuffleDependency}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.SortExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import scala.jdk.CollectionConverters._
 
 /** `file:` FileSystem that counts opens and creates per path. */
@@ -35,7 +34,7 @@ object CountingFs {
 /** The pipeline's two passes: a planning pass over names that reads at most
   * a file's head, and a content pass that reads each kept file once, in the
   * task that writes its shard. */
-class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
+class ContentPassSpec extends SparkSpec {
 
   private val wav = Wav.synthPcmWav(16000, 160)
 
@@ -56,14 +55,17 @@ class ContentPassSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     AudioToDataset.Config(in.getAbsolutePath, out, meta.map(_.getAbsolutePath),
       filesPerShard = 2, maxDepth = 2, checkMimeType = true)
 
+  /** Every dependency in `rdd`'s lineage. */
+  private def lineage(rdd: RDD[_]): Seq[Dependency[_]] =
+    rdd.dependencies.flatMap(d => d +: lineage(d.rdd))
+
   test("sink input: one partition per shard in path order, no shuffle and no sort") {
     val (in, meta) = tree()
-    val (sharded, _) = AudioToDataset.plan(spark, cfg(in, "/unused", Some(meta)))
-    val plan = sharded.queryExecution.executedPlan
-    assert(collect(plan) { case e: ShuffleExchangeLike => e }.isEmpty, plan.treeString)
-    assert(collect(plan) { case s: SortExec => s }.isEmpty, plan.treeString)
-    val parts = sharded.select("shard_id", "audio.path", "transcription").rdd
-      .mapPartitionsWithIndex((i, rows) => Iterator(i -> rows.map(r => (r.getInt(0), r.getString(1), r.getString(2))).toList))
+    val plan = AudioToDataset.plan(spark, cfg(in, "/unused", Some(meta)))
+    assert(!lineage(plan.rows).exists(_.isInstanceOf[ShuffleDependency[_, _, _]]), plan.rows.toDebugString)
+    val (shard, transcription) = (plan.schema.fieldIndex("shard_id"), plan.schema.fieldIndex("transcription"))
+    val parts = plan.rows.mapPartitionsWithIndex((i, rows) => Iterator(i -> rows.map(r =>
+        (r.getInt(shard), r.getStruct(0, 3).getUTF8String(2).toString, r.getUTF8String(transcription).toString)).toList))
       .collect().toSeq
     assert(parts == Seq(
       0 -> List((0, "a.wav", "-"), (0, "b/c.wav", "cee")),

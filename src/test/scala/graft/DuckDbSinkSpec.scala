@@ -94,6 +94,20 @@ class DuckDbSinkSpec extends SparkSpec {
     }
   }
 
+  test("duckdb sink e2e: nested lists and null list elements are JSON text") {
+    requireDriver()
+    val in = tmpDir("graft-duck-nest"); val out = tmpDir("graft-duck-nest-out")
+    writeFile(in, "a.wav", Wav.synthWav(8000, 400))
+    val meta = writeText(in, "metadata.jsonl",
+      """{"file_name":"a.wav","tags":["x",null],"nested":[["p"],null,[null]]}""" + "\n")
+    AudioToDataset.run(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath,
+      metadataFile = Some(meta.getAbsolutePath), format = "duckdb"))
+    query(new java.io.File(out, "0.duckdb"), "SELECT tags, nested FROM files") { rs =>
+      rs.next()
+      assert((rs.getString(1), rs.getString(2)) == ("""["x",null]""", """[["p"],null,[null]]"""))
+    }
+  }
+
   test("duckdb sink e2e: output overwrite replaces existing shard files") {
     requireDriver()
     val in = tmpDir("graft-duck-in2"); val out = tmpDir("graft-duck-out2")

@@ -118,6 +118,23 @@ class PipelineSpec extends SparkSpec {
     assert(listed.trim.split("\n").toSeq == Seq("000000.wav", "000000.json"))
   }
 
+  test("e2e: webdataset records carry sidecar lists as JSON, null elements included") {
+    import graft.functions.Tar
+    val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
+    Seq("a.wav", "b.wav").foreach(writeFile(in, _, Wav.synthPcmWav(8000, 400)))
+    val meta = writeText(in, "metadata.jsonl",
+      """{"file_name":"a.wav","tags":["x",null],"nested":[["p"],null,[null]],"ok":true,"snr":1.5}""" + "\n")
+    AudioToDataset.run(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath,
+      metadataFile = Some(meta.getAbsolutePath), format = "webdataset"))
+    val records = Tar.entries(java.nio.file.Files.readAllBytes(new java.io.File(out, "0.tar").toPath)).get
+      .filter(_.name.endsWith(".json")).map(e => new String(e.bytes, "UTF-8"))
+    assert(records == Seq(
+      """{"path":"a.wav","duration":0.05,"sampling_rate":8000,"nested":[["p"],null,[null]],""" +
+        """"ok":true,"snr":1.5,"tags":["x",null],"transcription":"-"}""",
+      """{"path":"b.wav","duration":0.05,"sampling_rate":8000,"nested":null,""" +
+        """"ok":null,"snr":null,"tags":null,"transcription":"-"}"""))
+  }
+
   // reference: tests/end_to_end.rs:88-131
   test("e2e: CSV metadata falls back to file_name when no relative_path") {
     val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
@@ -451,17 +468,17 @@ class PipelineSpec extends SparkSpec {
     val globOnly = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
       pathGlobFilter = Some("*.wav")).map(_.relativePath).sorted
     assert(globOnly.toSeq == Seq("real/a.wav"))
+    def paths(plan: AudioToDataset.Plan): Seq[String] =
+      plan.rows.map(_.getStruct(0, 3).getUTF8String(2).toString).collect().toSeq
     // Config-level opt-out: the pipeline plan ingests through the symlink
-    val (planned, _) = AudioToDataset.plan(spark, AudioToDataset.Config(
+    val planned = AudioToDataset.plan(spark, AudioToDataset.Config(
       in.getAbsolutePath, "/unused", excludeSymlinks = false,
       pathGlobFilter = Some("*.wav")))
-    val rels = planned.select("audio.path").collect().map(_.getString(0)).sorted
-    assert(rels.toSeq == Seq("alias/a.wav", "real/a.wav"))
+    assert(paths(planned).sorted == Seq("alias/a.wav", "real/a.wav"))
     // default Config keeps the exclusion
-    val (strict, _) = AudioToDataset.plan(spark, AudioToDataset.Config(
+    val strict = AudioToDataset.plan(spark, AudioToDataset.Config(
       in.getAbsolutePath, "/unused", pathGlobFilter = Some("*.wav")))
-    assert(strict.select("audio.path").collect().map(_.getString(0)).toSeq ==
-      Seq("real/a.wav"))
+    assert(paths(strict) == Seq("real/a.wav"))
   }
 
   test("every name gets its reference row: _x, .x, x._COPYING_ and a 0-byte file") {

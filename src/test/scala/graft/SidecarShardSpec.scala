@@ -3,9 +3,10 @@ package graft
 import graft.functions.Wav
 import graft.operators.Sharding
 import graft.sources.Metadata
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions.{col, element_at, typedLit}
 
 /** The sidecar join (J1/J2) and the shard ranking (X1) through the real
@@ -139,13 +140,22 @@ class SidecarShardSpec extends SparkSpec {
     } finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 
-  /** `body`'s result and the number of Spark jobs it launches. */
-  private def jobsOf[A](body: => A): (A, Int) = {
+  /** What `body` launched: the stage count of each Spark job, and the number
+    * of SQL executions it started. */
+  private final case class Launched(stagesPerJob: Seq[Int], sqlExecutions: Int)
+
+  /** `body`'s result and what it launched, as seen by a listener. */
+  private def launched[A](body: => A): (A, Launched) = {
     val group = "sidecar-shard-spec-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sql = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) stages.add(e.stageInfos.length)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) => sql.incrementAndGet()
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(listener)
     spark.sparkContext.setJobGroup(group, "job-count pin")
@@ -154,7 +164,13 @@ class SidecarShardSpec extends SparkSpec {
       GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
-    (result, jobs.get())
+    (result, Launched(stages.toArray.toSeq.map(_.asInstanceOf[Int]), sql.get()))
+  }
+
+  /** `body`'s result and the number of Spark jobs it launches. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val (result, l) = launched(body)
+    (result, l.stagesPerJob.length)
   }
 
   // planning (sidecar, walk, J1 table) runs on the driver: the write is the one job
@@ -174,5 +190,36 @@ class SidecarShardSpec extends SparkSpec {
     val (_, jobs) = jobsOf(AudioToDataset.run(spark, cfg))
     assert(jobs == 2, s"$jobs jobs")
     assert(resolved(new java.io.File(cfg.output)) == expected)
+  }
+
+  // the content pass is a plain RDD job: no SQL execution is started, and
+  // no job has a second stage, which a shuffle dependency would add
+  private def noSqlNoShuffle(cfg: AudioToDataset.Config): Unit = {
+    AudioToDataset.run(spark, cfg) // warm
+    val (_, l) = launched(AudioToDataset.run(spark, cfg))
+    assert(l.sqlExecutions == 0, s"${cfg.format}: ${l.sqlExecutions} SQL executions")
+    assert(l.stagesPerJob.nonEmpty && l.stagesPerJob.forall(_ == 1), s"${cfg.format}: stages per job ${l.stagesPerJob}")
+  }
+
+  private def sidecarRun(format: String): AudioToDataset.Config = {
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    AudioToDataset.Config(in.getAbsolutePath, tmpDir("graft-j1-out").getAbsolutePath,
+      metadataFile = Some(sidecar.getAbsolutePath), format = format)
+  }
+
+  test("no SQL execution and no shuffle on the run path: JSONL→Parquet") {
+    noSqlNoShuffle(sidecarRun("parquet"))
+  }
+
+  test("no SQL execution and no shuffle on the run path: JSONL→DuckDB") {
+    try Class.forName("org.duckdb.DuckDBDriver")
+    catch { case _: ClassNotFoundException => cancel("duckdb_jdbc not on test classpath") }
+    noSqlNoShuffle(sidecarRun("duckdb"))
+  }
+
+  test("no SQL execution and no shuffle on the run path: no sidecar, --check-mime-type → tar") {
+    val (in, _) = tree("meta.jsonl", jsonl)
+    noSqlNoShuffle(AudioToDataset.Config(in.getAbsolutePath, tmpDir("graft-j1-out").getAbsolutePath,
+      format = "webdataset", checkMimeType = true))
   }
 }
