@@ -87,7 +87,9 @@ object AudioToDataset {
       case "tar" => // engine extension: WebDataset tar shards for training loaders
         p => TarShardSink.writeShards(p.rows, cfg.output, p.conf, p.meta.types.toSeq)
     }
-    write(plan(spark, cfg))
+    val p = plan(spark, cfg)
+    ShardCommit.sweep(cfg.output, cfg.format, p.conf.value.value) // a killed run's temporaries
+    write(p)
   }
 
   /** CLI mirroring the reference's flags. */
@@ -107,12 +109,9 @@ object AudioToDataset {
       pathGlobFilter = arg("path-glob"),
       expandArchives = args.contains("--expand-archives"))
     // --num-threads mirrors the reference's rayon pool size (src/main.rs:79-81);
-    // in Spark terms it sizes local parallelism + shuffle partitions.
+    // it sizes the `local[n]` master only (the run has no SQL shuffle).
     val numThreads = arg("num-threads").map(_.toInt)
-    val builder = SparkSession.builder()
-      .appName("audios-to-dataset-spark")
-      .config("spark.sql.shuffle.partitions",
-        numThreads.map(_.toString).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
+    val builder = SparkSession.builder().appName("audios-to-dataset-spark")
     // Under spark-submit the master comes from the launcher; standalone runs
     // (sbt runMain, plain java -jar) default to all local cores.
     if (sys.props.get("spark.master").isEmpty && sys.env.get("MASTER").isEmpty)

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.core.{GraftSession, MetadataType}
+import graft.core.MetadataType
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FSDataOutputStream
 import org.apache.parquet.hadoop.api.WriteSupport
@@ -10,10 +10,8 @@ import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -26,12 +24,15 @@ import scala.jdk.CollectionConverters._
   * the executor through [[ShardCommit]] with parquet-java's ParquetWriter
   * wrapping Spark's own ParquetWriteSupport (so value encoding is identical
   * to df.write.parquet). The rows come as an `RDD[InternalRow]`, already
-  * built by the pipeline's content pass: no Dataset, row encoder or
-  * generated code sits between them and the writer ([[writeFrame]] adapts a
-  * DataFrame). Plus:
+  * built by the pipeline's content pass (or by any caller with a frame's
+  * `queryExecution.toRdd`): no Dataset, row encoder or generated code sits
+  * between them and the writer. Plus:
   *   - footer KV `huggingface -> {"info":{"features":{...}}}` (src/main.rs:582-601),
-  *   - row groups of 256 rows (src/main.rs:607) — small on purpose: rows carry
-  *     multi-MB audio blobs, so 256 rows keeps a row group ~100 MB,
+  *   - row groups of at most 256 rows (src/main.rs:607). parquet-java also
+  *     cuts a group at its 128 MB size check, which first runs after 100
+  *     rows, so clips above about 0.5 MB can give shorter groups (100 rows
+  *     above about 1.3 MB). The reference's fixed 256 rows is not kept,
+  *     pending ROADMAP direction 10,
   *   - the reference's compression fallbacks Lzo→Snappy, Lz4→Lz4Raw
   *     (src/main.rs:571-580),
   *   - an old shard file replaced only by a whole new one (X4,
@@ -137,11 +138,4 @@ object ParquetShardSink {
     }
   }
 
-  /** [[writeShards]] for a frame that carries an int `shard_id` column and
-    * comes arranged the same way ([[graft.operators.Sharding.arrange]] lays
-    * one out). */
-  def writeFrame(df: DataFrame, outDir: String): Unit = {
-    val arranged = df.select(df.columns.toSeq.filterNot(_ == "shard_id").map(col) :+ col("shard_id"): _*)
-    writeShards(arranged.queryExecution.toRdd, arranged.schema, outDir, GraftSession.hadoopConf(df.sparkSession))
-  }
 }

@@ -14,7 +14,9 @@ import scala.util.control.NonFatal
   * `file:` it returns `false`), and a `false` rename fails the task. On any
   * failure the writer is aborted (no footer, end marker or commit) and the
   * temporary file deleted: a failed shard leaves nothing under its final
-  * name, and a failed rerun keeps the old shard.
+  * name, and a failed rerun keeps the old shard. A JVM killed mid-write runs
+  * no clean-up, and a rerun has new attempt ids, so the next run's
+  * [[sweep]] removes what it left.
   */
 object ShardCommit {
 
@@ -33,6 +35,21 @@ object ShardCommit {
     case other => throw new IllegalArgumentException(s"unknown format: $other")
   }
 
+  /** The hidden temporary of shard `shard` written by task attempt `attempt`. */
+  private def temporary(shard: Int, ext: String, attempt: Long): String = s".$shard.$ext.$attempt"
+
+  /** Deletes the hidden temporaries of `format` in `outDir`, names that only
+    * [[temporary]] makes: run on the driver before the write job, so no live
+    * task of this run owns one. Assumes one run per `outDir` at a time. */
+  def sweep(outDir: String, format: String, conf: Configuration): Unit = {
+    val ext = extension(format)
+    val stale = raw"^\.\d+\.$ext\.\d+$$".r
+    val dir = new HPath(outDir)
+    val fs = dir.getFileSystem(conf)
+    if (fs.exists(dir))
+      fs.listStatus(dir).map(_.getPath).filter(p => stale.matches(p.getName)).foreach(fs.delete(_, false))
+  }
+
   /** Writes and commits the shards of one partition. `rows` come already
     * arranged: each shard's rows contiguous and in write order. */
   def commit[R](rows: Iterator[R], outDir: String, format: String, conf: Configuration)(
@@ -44,7 +61,7 @@ object ShardCommit {
     val buffered = rows.buffered
     while (buffered.hasNext) {
       val shard = shardOf(buffered.head)
-      val tmp = new HPath(outDir, s".$shard.$ext.$attempt")
+      val tmp = new HPath(outDir, temporary(shard, ext, attempt))
       val out = fs.create(tmp, true)
       var writer: Writer[R] = null
       try {

@@ -170,7 +170,7 @@ object AudioScan {
     StructField("audio", StructType(Seq(StructField("bytes", BinaryType),
       StructField("sampling_rate", IntegerType), StructField("path", StringType))), nullable = false) +:
     StructField("duration", DoubleType) +:
-    meta.sparkFields.map(f => if (f.name == "transcription") f.copy(nullable = false) else f) :+
+    meta.resolvedFields :+
     StructField("shard_id", IntegerType, nullable = false))
 
   /** The content pass: one partition per shard, `shards(i)` read in order by

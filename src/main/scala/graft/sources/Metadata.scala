@@ -3,12 +3,9 @@ package graft.sources
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core._
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -34,8 +31,8 @@ import scala.jdk.CollectionConverters._
   * — and in that one pass votes the types, coerces the values and builds
   * the two first-wins maps: an in-memory [[Sidecar]]. The pipeline's
   * content pass calls [[Sidecar.resolve]] on a broadcast of it for each file
-  * ([[AudioScan.read]]); [[joinFiles]] is the same lookup as a projection
-  * over a frame of files, for the query surface.
+  * ([[AudioScan.read]]); [[joinFiles]] makes the same call for each row of
+  * a frame of files, for the query surface.
   *
   * Driver memory: the de-duplicated sidecar rows are held on the driver, and
   * the same rows are broadcast to every executor.
@@ -62,6 +59,10 @@ object Metadata {
     def keys: Seq[String] = types.keys.toSeq
     def sparkFields: Seq[StructField] =
       types.map { case (k, t) => StructField(k, t.toSpark, nullable = true) }.toSeq
+    /** [[sparkFields]] as [[Sidecar.resolve]] fills them: `transcription`
+      * is never null (P8). */
+    def resolvedFields: Seq[StructField] =
+      sparkFields.map(f => if (f.name == "transcription") f.copy(nullable = false) else f)
   }
 
   private def withTranscription(m: Map[String, MetadataType]): MetaSchema = {
@@ -209,41 +210,25 @@ object Metadata {
     * then `transcription` defaults to "-" when no level matched (P8,
     * src/main.rs:204-208).
     *
-    * One projection over `files`' `relative_path` (its file name is the
-    * last component, src/main.rs:771-780): a lookup in a broadcast of the
-    * [[Sidecar]] yields each file's winning row, and its fields become the
-    * metadata columns. No join, no shuffle; creating the broadcast runs no
-    * Spark job. The pipeline does not call it: its content pass makes the
-    * same [[Sidecar.lookup]] in the task that writes the shard.
+    * Each row of `files` is extended with [[Sidecar.resolve]] of its
+    * `relative_path` (its file name is the last component,
+    * src/main.rs:771-780) in a broadcast of the [[Sidecar]], the call the
+    * pipeline's content pass makes per file; a null path gets the no-match
+    * row. No join, no shuffle and no generated code; creating the broadcast
+    * runs no Spark job.
     */
   def joinFiles(files: DataFrame, sidecar: Sidecar): DataFrame = {
-    val table = files.sparkSession.sparkContext.broadcast(sidecar)
-    val row = GraftBridge.column(SidecarLookup(GraftBridge.expression(col("relative_path")),
-      table, StructType(sidecar.schema.sparkFields)))
-    val resolved = sidecar.schema.keys.map { k =>
-      val c = col("_meta").getField(k)
-      (if (k == "transcription") coalesce(c, lit("-")) else c).as(k)
+    val spark = files.sparkSession
+    val table = spark.sparkContext.broadcast(sidecar)
+    val rel = files.schema.fieldIndex("relative_path")
+    val rows = files.queryExecution.toRdd.mapPartitions { it =>
+      val t = table.value
+      it.map { r =>
+        val meta = if (r.isNullAt(rel)) t.default else t.resolve(r.getUTF8String(rel))
+        // toRdd reuses its row object; the metadata row is shared and immutable
+        new JoinedRow(r.copy(), meta): InternalRow
+      }
     }
-    files.withColumn("_meta", row).select(files.columns.map(col).toSeq ++ resolved: _*)
+    GraftBridge.internalCreateDataFrame(spark, rows, StructType(files.schema.fields ++ sidecar.schema.resolvedFields))
   }
-}
-
-/** The winning sidecar row of a relative path ([[Metadata.Sidecar.lookup]])
-  * as a struct; null when no key matches. */
-private case class SidecarLookup(child: Expression, table: Broadcast[Metadata.Sidecar],
-    dataType: StructType) extends UnaryExpression {
-  override def nullable: Boolean = true
-  @transient private lazy val sidecar = table.value
-
-  def lookup(rel: UTF8String): InternalRow = if (rel == null) null else sidecar.lookup(rel)
-  override def eval(input: InternalRow): Any = lookup(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rel = child.genCode(ctx)
-    val self = ctx.addReferenceObj("sidecar", this)
-    ev.copy(code = code"""
-      ${rel.code}
-      InternalRow ${ev.value} = $self.lookup(${rel.isNull} ? null : ${rel.value});
-      boolean ${ev.isNull} = ${ev.value} == null;""")
-  }
-  override protected def withNewChildInternal(c: Expression): SidecarLookup = copy(child = c)
 }

@@ -1,8 +1,16 @@
 package graft.streaming
 
+import graft.core.GraftSession
+import graft.operators.Sharding
+import graft.sinks.ParquetShardSink
+import org.apache.spark.Partitioner
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.JoinedRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming surface over the events schema
   * `(event_id long, ts timestamp, user_id long, event_type string,
@@ -97,18 +105,40 @@ object EventStream {
   /** Streaming → shard-sink bridge: each micro-batch is written as exact-name
     * shards under `outDir/batch={id}/` via foreachBatch — how the audio
     * pipeline's sink composes with a continuous ingest at scale (one shard
-    * set per micro-batch; the batch id makes restarts idempotent). */
+    * set per micro-batch; the batch id makes restarts idempotent). The
+    * batch's `audio.path` keys are collected and cut as the pipeline cuts
+    * its files (X1); each row then moves to its shard's partition, sorted by
+    * path, and the pipeline's Parquet sink (K1) writes it. */
   def shardSinkQuery(
       records: DataFrame,
       outDir: String,
       filesPerShard: Int): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     records.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
       if (!batch.isEmpty) {
-        val sharded = graft.operators.Sharding.shardConsecutiveByKey(
-          batch.withColumn("_order", org.apache.spark.sql.functions.col("audio.path")),
-          "_order", filesPerShard).drop("_order")
-        graft.sinks.ParquetShardSink.writeFrame(
-          graft.operators.Sharding.arrange(sharded, "audio.path"), s"$outDir/batch=$batchId")
+        val paths = batch.select(col("audio.path")).collect().map(_.getString(0)).toIndexedSeq
+        val shards = Sharding.consecutiveShards(paths, filesPerShard)(identity)
+        val shardOf = shards.zipWithIndex.flatMap { case (ps, i) => ps.map(UTF8String.fromString(_) -> i) }.toMap
+        val byShard = new Partitioner {
+          val numPartitions: Int = shards.length
+          def getPartition(key: Any): Int = shardOf(key.asInstanceOf[UTF8String])
+        }
+        val audio = batch.schema.fieldIndex("audio")
+        val audioType = batch.schema(audio).dataType.asInstanceOf[StructType]
+        val path = audioType.fieldIndex("path")
+        implicit val byPath: Ordering[UTF8String] = Sharding.KeyOrder
+        val rows = batch.queryExecution.toRdd
+          .map { r =>
+            val c = r.copy() // toRdd reuses its row object
+            val a = if (c.isNullAt(audio)) null else c.getStruct(audio, audioType.length)
+            (if (a == null || a.isNullAt(path)) null else a.getUTF8String(path), c)
+          }
+          .repartitionAndSortWithinPartitions(byShard)
+          .mapPartitionsWithIndex { (shard, it) =>
+            val id = InternalRow(shard)
+            it.map { case (_, r) => new JoinedRow(r, id): InternalRow }
+          }
+        ParquetShardSink.writeShards(rows, batch.schema.add("shard_id", IntegerType, nullable = false),
+          s"$outDir/batch=$batchId", GraftSession.hadoopConf(batch.sparkSession))
       }
     }
 

@@ -68,18 +68,6 @@ class OperatorSpec extends SparkSpec {
     assert(PathRewriter.commonDirPrefix("x/1", "y/2") == "")
   }
 
-  test("sharding: consecutive chunks in sort order; range variant balances") {
-    val s = spark
-    import s.implicits._
-    val df = (0 until 100).map(i => (f"f$i%03d", i)).toDF("path", "v")
-    val sharded = Sharding.shardConsecutive(df, 30, col("path"))
-    val sizes = sharded.groupBy("shard_id").count().orderBy("shard_id")
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
-    assert(sizes == Seq((0, 30L), (1, 30L), (2, 30L), (3, 10L)))
-    val ranged = Sharding.shardByRange(df, 4, col("path"))
-    assert(ranged.select("shard_id").distinct().count() == 4)
-  }
-
   test("cumSum: distributed prefix sum equals the window oracle; ranks whole-df") {
     val s = spark
     import s.implicits._
@@ -101,19 +89,14 @@ class OperatorSpec extends SparkSpec {
     assert(ranks.getLong(0) == 1L && ranks.getLong(1) == n.toLong && ranks.getLong(2) == n.toLong)
   }
 
-  test("shardConsecutiveByKey: duplicate keys share a shard, rows never multiply") {
-    val s = spark
-    import s.implicits._
-    val df = (0 until 90).map(i => (f"k${i % 30}%03d", i)).toDF("key", "payload") // 3 rows/key
-    val sharded = Sharding.shardConsecutiveByKey(df, "key", filesPerShard = 10)
-    assert(sharded.count() == 90) // join-back must not multiply duplicates
-    val perShard = sharded.groupBy("shard_id")
-      .agg(countDistinct(col("key")).as("nk"), count(lit(1)).as("nr"))
-      .orderBy("shard_id").collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-    assert(perShard == Seq((10L, 30L), (10L, 30L), (10L, 30L))) // 30 distinct keys / 10 per shard
+  test("consecutiveShards: duplicate keys share a shard, rows never multiply") {
+    val items = (0 until 90).map(i => (f"k${i % 30}%03d", i)) // 3 rows/key
+    val shards = Sharding.consecutiveShards(items, filesPerShard = 10)(_._1)
+    assert(shards.flatten.sortBy(_._2) == items) // every row exactly once
+    assert(shards.map(s => (s.map(_._1).distinct.size, s.size)) == Seq((10, 30), (10, 30), (10, 30)))
     // a key's rows all land in ONE shard
-    assert(sharded.groupBy("key").agg(countDistinct(col("shard_id")).as("ns"))
-      .filter(col("ns") > 1).count() == 0)
+    assert(shards.flatMap(_.map(_._1).distinct).size == 30)
+    assert(shards.flatten.map(_._1) == items.map(_._1).sorted) // in key order
   }
 
   test("counted scan: pass-1 grand total == count, shard count rides free") {
@@ -129,17 +112,14 @@ class OperatorSpec extends SparkSpec {
         Sharding.cumSumByCounted(df, Seq("k"), col("v"), "cum")
       assert(total == (0 until n).map(_ % 13).sum.toLong, s"sum total n=$n")
       assert(withCum.count() == n)
-      val keyed = (0 until n).map(i => (f"k$i%04d", i)).toDF("key", "p")
-      val sharded = Sharding.shardConsecutiveByKey(keyed, "key", filesPerShard = 10)
-      assert(sharded.count() == n, s"row count n=$n")
-      if (n > 0)
-        assert(sharded.agg(max(col("shard_id"))).head.getInt(0) ==
-          (n - 1) / 10, "max shard id consistent with the key count")
+      val keys = (0 until n).map(i => f"k$i%04d")
+      val shards = Sharding.consecutiveShards(keys, filesPerShard = 10)(identity)
+      assert(shards.map(_.size).sum == n, s"row count n=$n")
+      assert(shards.size == (n + 9) / 10, "shard count consistent with the key count")
     }
     // duplicate keys: shards chunk DISTINCT keys
-    val dup = (0 until 60).map(i => (f"k${i % 20}%03d", i)).toDF("key", "p")
-    assert(Sharding.shardConsecutiveByKey(dup, "key", 7)
-      .agg(max(col("shard_id"))).head.getInt(0) == 2) // ceil(20 / 7) shards
+    val dup = (0 until 60).map(i => f"k${i % 20}%03d")
+    assert(Sharding.consecutiveShards(dup, 7)(identity).size == 3) // ceil(20 / 7) shards
   }
 
   test("dedup embedding/semantic: clone-heavy corpus — full clone recall, no dup rows") {

@@ -65,6 +65,25 @@ class ShardCommitSpec extends SparkSpec {
       assert(java.nio.file.Files.readAllBytes(shard.toPath).sameElements(bytes))
     }
 
+  test("a run deletes the stale hidden temporaries of its format and nothing else") {
+    val in = tmpDir("graft-stale-in")
+    Seq("a.wav", "b.wav", "c.wav").foreach(writeFile(in, _, wav))
+    for ((format, ext) <- writable) {
+      val clean = tmpDir("graft-stale-clean")
+      run(in, clean, format, filesPerShard = 2)
+      val out = tmpDir("graft-stale-out")
+      // what a JVM killed mid-write leaves, beside names the loop never makes
+      val kept = Seq(".keep", ".0.other.7", s".0.$ext.7.x", s"0.$ext.7")
+      (s".0.$ext.7" +: s".12.$ext.0" +: kept).foreach(writeFile(out, _, Array[Byte](1)))
+      run(in, out, format, filesPerShard = 2)
+      assert(listing(out) == (listing(clean) ++ kept).sorted, format)
+      if (format != "duckdb") // a DuckDB file is not byte-reproducible
+        for (shard <- listing(clean))
+          assert(java.nio.file.Files.readAllBytes(new java.io.File(out, shard).toPath)
+            .sameElements(java.nio.file.Files.readAllBytes(new java.io.File(clean, shard).toPath)), shard)
+    }
+  }
+
   test("every format writes through the session's Hadoop conf; a refused rename fails the run") {
     val in = tmpDir("graft-conf-in")
     Seq("a.wav", "b.wav", "c.wav", "d.wav").foreach(writeFile(in, _, wav))

@@ -5,9 +5,7 @@ import graft.operators.Sharding
 import graft.sources.Metadata
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftBridge, Row}
-import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.{col, element_at, typedLit}
 
 /** The sidecar join (J1/J2) and the shard ranking (X1) through the real
   * pipeline entry points, plus a pin on how many Spark jobs one pipeline run
@@ -89,25 +87,15 @@ class SidecarShardSpec extends SparkSpec {
     assert(resolved(run(in, sidecar)) == expected)
   }
 
-  test("the J1 lookup runs in generated code and agrees with interpreted evaluation") {
+  test("joinFiles resolves each relative path as the pipeline does; a null path gets the default") {
+    val s = spark
+    import s.implicits._
     val (_, sidecar) = tree("meta.jsonl", jsonl)
-    val table = Metadata.load(spark, sidecar.getAbsolutePath)
-    val paths = expected.keys.toSeq
-    // a range, not a local relation, so the projection is not folded away
-    def joined = Metadata.joinFiles(
-      spark.range(paths.length).select(element_at(typedLit(paths), col("id").cast("int") + 1).as("relative_path")),
-      table).select("relative_path", "transcription", "score")
-    def rows(conf: (String, String)*): Map[String, (String, String)] = {
-      conf.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
-        if (conf.contains("spark.sql.codegen.fallback" -> "false"))
-          assert(joined.queryExecution.executedPlan.exists(_.isInstanceOf[WholeStageCodegenExec]))
-        joined.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
-      } finally conf.foreach { case (k, _) => spark.conf.unset(k) }
-    }
-    assert(rows("spark.sql.codegen.fallback" -> "false") == expected)
-    assert(rows("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") ==
-      expected)
+    val files = (expected.keys.toSeq :+ null).map(p => (p, 7)).toDF("relative_path", "n").repartition(3)
+    val joined = Metadata.joinFiles(files, Metadata.load(spark, sidecar.getAbsolutePath))
+    assert(joined.columns.toSeq == Seq("relative_path", "n", "score", "transcription"))
+    val got = joined.filter($"n" === 7).collect().map(r => r.getString(0) -> (r.getString(3), r.getString(2))).toMap
+    assert(got == expected + ((null: String) -> ("-", null)))
   }
 
   test("shard i holds the i-th key in Spark's ORDER BY order (UTF-8, not UTF-16)") {
@@ -117,27 +105,15 @@ class SidecarShardSpec extends SparkSpec {
     val sparkOrder = paths.toDF("p").orderBy("p").collect().map(_.getString(0)).toSeq
     // the two non-ASCII names order differently as UTF-16 and as UTF-8 bytes
     assert(paths.sorted != sparkOrder)
-    val sharded = Sharding.shardConsecutiveByKey(paths.toDF("p"), "p", filesPerShard = 1)
-    val byShard = sharded.collect().map(r => r.getInt(1) -> r.getString(0)).sortBy(_._1).toSeq
-    assert(byShard == sparkOrder.zipWithIndex.map(_.swap))
-    // the driver-side cut the pipeline plans its shards with agrees
     assert(Sharding.consecutiveShards(paths.toIndexedSeq, filesPerShard = 1)(identity) ==
       sparkOrder.map(Seq(_)))
     assert(Sharding.consecutiveShards((paths :+ "a.wav").toIndexedSeq, filesPerShard = 2)(identity) ==
       sparkOrder.grouped(2).toSeq.updated(0, Seq("a.wav", "a.wav", sparkOrder(1))))
-  }
-
-  test("shard ids of primitive and null keys come from generated code, in ORDER BY order") {
-    val s = spark
-    import s.implicits._
-    spark.conf.set("spark.sql.codegen.fallback", "false") // a compile error must fail, not fall back
-    try {
-      val df = Seq[java.lang.Integer](10, -1, null, 3, 3, 2).toDF("k")
-      val sharded = Sharding.shardConsecutiveByKey(df, "k", filesPerShard = 2)
-      // distinct keys null, -1 | 2, 3 | 10
-      val got = sharded.collect().map(r => Option(r.get(0)) -> r.getInt(1)).toSet
-      assert(got == Set(None -> 0, Some(-1) -> 0, Some(2) -> 1, Some(3) -> 1, Some(10) -> 2))
-    } finally spark.conf.unset("spark.sql.codegen.fallback")
+    // a null key sorts first, as ORDER BY puts it, and is one key
+    val withNull = (paths :+ null :+ null).toIndexedSeq
+    assert((null +: sparkOrder) == (withNull.toDF("p").orderBy("p").collect().map(_.getString(0)).toSeq.distinct))
+    assert(Sharding.consecutiveShards(withNull, filesPerShard = 2)(identity) ==
+      Seq(Seq(null, null, sparkOrder(0))) ++ sparkOrder.tail.grouped(2).toSeq)
   }
 
   /** What `body` launched: the stage count of each Spark job, and the number

@@ -130,6 +130,15 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** The `audio.path`s of each `{i}.parquet` under `dir`, in shard order
+    * and, within a shard, in file order. */
+  private def shardPaths(dir: java.io.File): Seq[Seq[String]] = {
+    val files = dir.list().filterNot(_.startsWith(".")).sortBy(_.stripSuffix(".parquet").toInt).toSeq
+    assert(files == files.indices.map(i => s"$i.parquet"))
+    files.map(f => spark.read.parquet(new java.io.File(dir, f).getAbsolutePath)
+      .select("audio.path").collect().map(_.getString(0)).toSeq)
+  }
+
   test("foreachBatch bridge writes exact-name shards per micro-batch; typed facade reads back") {
     val s = spark
     import s.implicits._
@@ -158,6 +167,18 @@ class StreamingSpec extends SparkSpec {
       val recs = typed.collect().sortBy(_.audio.path)
       assert(recs.map(_.audio.path).toSeq == Seq("a.wav", "b.wav", "c.wav"))
       assert(recs.head.transcription == "ta" && recs.head.duration == 1.0)
+      assert(shardPaths(batch0) == Seq(Seq("a.wav", "b.wav"), Seq("c.wav")))
+
+      // shard order is UTF-8 byte order, not UTF-16; a repeated path is one key
+      mem.addData(
+        ("dd", 8000, "😀.wav", 4.0, "td"), ("ee", 8000, "～.wav", 5.0, "te"),
+        ("ff", 8000, "b.wav", 6.0, "tf"), ("gg", 8000, "b.wav", 7.0, "tg"))
+      q.processAllAvailable()
+      val utf8 = Seq("b.wav", "～.wav", "😀.wav")
+      assert(utf8.sorted != utf8) // the two orders differ on these paths
+      val batch1 = shardPaths(new java.io.File(outDir, "batch=1"))
+      assert(batch1.map(_.distinct) == utf8.grouped(2).toSeq) // shard i: the i-th pair of paths
+      assert(batch1 == Seq(Seq("b.wav", "b.wav", "～.wav"), Seq("😀.wav"))) // in path order
     } finally q.stop()
   }
 
