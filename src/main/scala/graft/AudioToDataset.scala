@@ -78,6 +78,7 @@ object AudioToDataset {
 
   def run(spark: SparkSession, cfg: Config): Unit = {
     // the sink is chosen, and its options checked, before the planning pass
+    require(cfg.filesPerShard >= 1, s"--files-per-db must be at least 1, got ${cfg.filesPerShard}")
     val write: Plan => Unit = ShardCommit.extension(cfg.format) match {
       case "parquet" =>
         ParquetShardSink.codec(cfg.parquetCompression)

@@ -2,18 +2,15 @@ package graft.core
 
 /** Per-process `spark.sql.warehouse.dir` under the system tmpdir.
   *
-  * Every graft JVM (Verify, Bench, sbt test) builds its session with
-  * `config("spark.sql.warehouse.dir", EphemeralWarehouse.dir)` so managed
-  * tables (the bucketed-join layout, spec fixtures) are process-private.
-  * Sharing a CWD `spark-warehouse/` across concurrently-running JVMs is how
-  * the `join_bucketed` oracle row flaked in rounds 4–5: any sweep or
-  * overwrite in one process could delete a sibling's live table files
-  * mid-read, yielding a plausible row count with a wrong hash. A unique
-  * tmpdir per process makes that interference structurally impossible — no
-  * prefix sweep needed.
+  * Every graft session (Verify, Bench, the specs) is built with
+  * `config("spark.sql.warehouse.dir", EphemeralWarehouse.dir)`, so managed
+  * tables (the bucketed layouts of `join_bucketed` and `join_asof_bucketed`,
+  * spec fixtures) are private to the process: a JVM can never delete or
+  * overwrite a sibling's live table files mid-read.
   *
-  * The directory is deleted on JVM exit; tables never need to outlive the
-  * process (each run recreates its layout, nonce-named).
+  * Invariants: nothing in it outlives the process (the directory is deleted
+  * on JVM exit), and nothing is read from it that the same process did not
+  * write.
   */
 object EphemeralWarehouse {
   lazy val dir: String = {

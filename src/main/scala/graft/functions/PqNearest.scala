@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType}
   * `array<double>` subvector, return either the nearest centroid's cid
   * (`emitD2 = false`, LongType) or its squared L2 distance (`emitD2 = true`,
   * DoubleType). Ties go to the lowest cid; `cids(m)`/`cents(m)` must be
-  * cid-ascending (enforced in apply).
+  * cid-ascending (enforced in apply). An `m` outside the codebook or with
+  * no entries, or a subvector whose length differs from its centroids,
+  * fails the query with a named error ([[centroids]]).
   *
   * This is the PQ assignment inner loop of `embed_pq` / `ann_pq_rerank`.
   * The declarative form it replaces — explode ×16 codebook candidates via a
@@ -38,17 +40,31 @@ case class PqNearest(left: Expression, right: Expression,
   override def dataType: DataType = if (emitD2) DoubleType else LongType
   override def nullIntolerant: Boolean = true
 
+  /** The centroids of subspace `m`, checked against a subvector of `dims`
+    * values: fails with a named error when `m` is outside the codebook, has
+    * no entries, or holds a centroid of another length. Both evaluation
+    * paths call it, so they fail alike. */
+  def centroids(m: Int, dims: Int): Array[Array[Double]] = {
+    require(m >= 0 && m < cents.length,
+      s"PqNearest: subspace m=$m is outside the codebook (0 to ${cents.length - 1})")
+    val cs = cents(m)
+    require(cs.nonEmpty, s"PqNearest: subspace m=$m has no codebook entries")
+    cs.foreach(c => require(c.length == dims,
+      s"PqNearest: a subvector of $dims values against a centroid of ${c.length} in subspace m=$m"))
+    cs
+  }
+
   override protected def nullSafeEval(mAny: Any, svAny: Any): Any = {
     val m = mAny.asInstanceOf[Int]
     val sv = svAny.asInstanceOf[ArrayData]
-    val cs = cents(m)
+    val n = sv.numElements()
+    val cs = centroids(m, n)
     val ids = cids(m)
     var best = Double.MaxValue
     var bcid = -1L
     var k = 0
     while (k < cs.length) {
       val c = cs(k)
-      val n = math.min(sv.numElements(), c.length)
       var acc = 0.0
       var i = 0
       while (i < n) {
@@ -63,19 +79,19 @@ case class PqNearest(left: Expression, right: Expression,
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("pqCents", cents, "double[][][]")
+    val self = ctx.addReferenceObj("pqNearest", this)
     val cidsRef = ctx.addReferenceObj("pqCids", cids, "long[][]")
     val Seq(cs, ids, best, bcid, k, c, n, acc, i, d) =
       Seq("cs", "ids", "best", "bcid", "k", "c", "n", "acc", "i", "d").map(ctx.freshName)
     nullSafeCodeGen(ctx, ev, (m, sv) =>
       code"""
-        double[][] $cs = $centsRef[$m];
+        int $n = $sv.numElements();
+        double[][] $cs = $self.centroids($m, $n);
         long[] $ids = $cidsRef[$m];
         double $best = Double.MAX_VALUE;
         long $bcid = -1L;
         for (int $k = 0; $k < $cs.length; $k++) {
           double[] $c = $cs[$k];
-          int $n = java.lang.Math.min($sv.numElements(), $c.length);
           double $acc = 0.0;
           for (int $i = 0; $i < $n; $i++) {
             double $d = $sv.getDouble($i) - $c[$i];

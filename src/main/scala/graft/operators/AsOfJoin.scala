@@ -130,13 +130,13 @@ object AsOfJoin {
         carry.map(p => best.getField(p).as(s"asof_$p")): _*)
   }
 
-  /** The tagged union the backward composition windows over, exposed
-    * (package-private) so BucketBench can persist it as a bucketed+sorted
-    * layout and run [[carryFrom]] straight off the scan — measuring
-    * whether the as-of's one exchange amortizes away under layout the way
-    * the equi-join's does. Returns the union plus the generated internal
-    * (key, time, side, payload) column names and the left column list the
-    * carry phase needs. */
+  /** The tagged union the backward composition windows over: every left
+    * and right row under collision-free internal (key, time, side, payload)
+    * columns, right rows with side 0 so they sort before left rows at equal
+    * times. Package-private so `join_asof_bucketed` can write it as a
+    * bucketed, sorted layout and run [[carryFrom]] off the scan. Returns the
+    * union, the internal column names, and the left columns the carry
+    * emits. */
   private[graft] def taggedUnion(
       left: DataFrame,
       right: DataFrame,

@@ -13,109 +13,55 @@ import Util._
 object LakeOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Bucketed co-located join: both fact tables are written bucketed+sorted
-    * by the join key, so the join in every LATER query runs with ZERO
-    * shuffle of either side (the bucketing IS the exchange, paid once at
-    * layout time — the 100 TB answer to "this join runs every hour").
-    * OperatorSpec pins the plan property: no ShuffleExchange under the join.
-    * The oracle computes the same aggregate straight from the source
-    * parquet, proving the bucketed layout is lossless.
+  /** Bucketed co-located join: both fact tables are written bucketed and
+    * sorted by the join key, so the join reads them with zero shuffle of
+    * either side (the bucketing is the exchange, paid at layout time).
+    * Each call writes the two layouts as managed tables in the process's
+    * [[graft.core.EphemeralWarehouse]], repartitioned by the key first so
+    * every bucket is one file (Spark trusts bucket sort order only for
+    * single-file buckets), and drops them before it returns.
     *
-    * Round 14: the layout is CACHED across processes via
-    * [[graft.core.LayoutCache]] (the `join_asof_bucketed` machinery,
-    * shared): a COLD call pays the two bucketed writes once (repartitioned
-    * by the join key first so every bucket is a single file — the
-    * condition under which Spark trusts bucket sort order and elides the
-    * merge-join sort), publishes them under a content fingerprint of the
-    * source trees + layout spec, and any WARM call — same process or a
-    * later JVM — registers external bucketed tables over the published
-    * files and pays only the carry. The losslessness gate below still
-    * executes on EVERY run, warm or cold: both aggregates are constant-
-    * size and the bit-equal require is the property the operator exists
-    * to prove. Catalog names stay per-run nonce'd (the in-memory catalog
-    * is process-private), so sibling JVMs cannot collide.
-    *
-    * Under `-Dgraft.assertPlans=true` (set by Verify) the zero-input-shuffle
-    * property is asserted in the SAME session configuration the driver
-    * runs — config/AQE drift that re-introduces an exchange fails loudly.
-    *
-    * The EMITTED rows are computed straight from the immutable source
-    * parquet; the bucketed-table aggregate is executed alongside and
-    * `require`d bit-equal in-process. The layout-losslessness property is
-    * therefore still exercised on every run, but the values the driver
-    * hashes no longer transit mutable scratch disk (managed tables written
-    * and re-read mid-verify) — the one thing that distinguished this query
-    * from the rest of the surface during the r4-r8 driver-only hash reds. */
-  private[graft] val bucketLayoutBuilds = new java.util.concurrent.atomic.AtomicLong(0)
+    * Invariants:
+    *   - the emitted rows are computed from the source parquet, so they
+    *     never depend on the written layout;
+    *   - the bucketed aggregate is `require`d equal to the from-source one
+    *     (the layout is lossless); both are at most 5 priority rows;
+    *   - under `-Dgraft.assertPlans=true` (set by Verify) the join inputs
+    *     are `require`d shuffle-free in the session's own configuration.
+    */
   val joinBucketed: Q = (s, dir) => {
     val nonce = java.util.UUID.randomUUID().toString.replace("-", "")
     val buckets = 16
     val ordSrc = table(s, dir, "orders").filter(col("o_orderkey") % 4 === 0)
     val liSrc = table(s, dir, "lineitem").filter(col("l_orderkey") % 4 === 0)
       .select("l_orderkey", "l_extendedprice", "l_discount")
-    val (oDdl, lDdl) = (ordSrc.schema.toDDL, liSrc.schema.toDDL)
-    val fp = graft.core.LayoutCache.fingerprint("graft-bucket-layout-v1", dir,
-      Seq("orders.parquet", "lineitem.parquet"),
-      s"buckets=$buckets;filter=key%4=0;o=($oDdl)sort=o_orderkey;l=($lDdl)sort=l_orderkey")
-    val cacheRoot = new java.io.File(
-      sys.props.getOrElse("graft.bucketLayoutRoot", "target/bucket-layout"))
-    val (dataDir, cold) = graft.core.LayoutCache.getOrBuild(cacheRoot, fp) { tmpDir =>
-      def writeOne(df: DataFrame, key: String, sub: String): Unit = {
-        val bn = s"graft_b_build_${sub}_$nonce"
-        df.repartition(buckets, col(key))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(buckets, key).sortBy(key)
-          .option("path", new java.io.File(tmpDir, sub).getAbsolutePath)
-          .saveAsTable(bn)
-        s.sql(s"DROP TABLE $bn"): Unit // external: drops metadata, files stay
-      }
-      writeOne(ordSrc, "o_orderkey", "orders")
-      writeOne(liSrc, "l_orderkey", "lineitem")
-    }
-    if (cold) bucketLayoutBuilds.incrementAndGet(): Unit
-    def register(sub: String, ddl: String, key: String): String = {
-      val n = s"graft_b_${sub}_$nonce"
-      s.sql(
-        s"""CREATE TABLE $n ($ddl) USING parquet
-           |CLUSTERED BY ($key) SORTED BY ($key) INTO $buckets BUCKETS
-           |LOCATION '${new java.io.File(dataDir, sub).getAbsolutePath}'""".stripMargin)
-      n
-    }
-    val oName = register("orders", oDdl, "o_orderkey")
-    val lName = register("lineitem", lDdl, "l_orderkey")
+    val (oName, lName) = (s"graft_b_orders_$nonce", s"graft_b_lineitem_$nonce")
     def aggregate(l: DataFrame, o: DataFrame): DataFrame = l
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n_lines"),
         sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100).cast("long"))
           .as("revenue_cents"))
-    val bucketed = aggregate(s.table(lName), s.table(oName))
-    if (sys.props.get("graft.assertPlans").contains("true")) {
-      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-      val exec = bucketed.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      val shuffles = exec.collect { case e: ShuffleExchangeExec => e }
-      // the final groupBy legitimately exchanges once; the bucketed JOIN
-      // INPUTS must contribute zero
-      require(shuffles.size <= 1,
-        s"bucketed join inputs must not shuffle (${shuffles.size} exchanges):\n$exec")
-    }
-    val fromSource = aggregate(
-      table(s, dir, "lineitem").filter(col("l_orderkey") % 4 === 0)
-        .select("l_orderkey", "l_extendedprice", "l_discount"),
-      table(s, dir, "orders").filter(col("o_orderkey") % 4 === 0))
-    // Losslessness gate: 5 priority rows per side — the collect is constant-
-    // size at any data scale (group count is bounded by the key domain).
     def rows(df: DataFrame): Seq[(String, Long, Long)] =
       df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
         .toSeq.sortBy(_._1)
-    val (b, src) = (rows(bucketed), rows(fromSource))
-    require(b == src,
-      s"bucketed layout lost rows: bucketed=$b source=$src")
-    fromSource
+    try {
+      def layout(df: DataFrame, key: String, name: String): Unit =
+        df.repartition(buckets, col(key))
+          .write.format("parquet").bucketBy(buckets, key).sortBy(key)
+          .saveAsTable(name)
+      layout(ordSrc, "o_orderkey", oName)
+      layout(liSrc, "l_orderkey", lName)
+      val bucketed = aggregate(s.table(lName), s.table(oName))
+      // the final groupBy legitimately exchanges once; the bucketed JOIN
+      // INPUTS must contribute zero
+      requireShuffles(bucketed, 1, "bucketed join inputs must not shuffle")
+      val fromSource = aggregate(liSrc, ordSrc)
+      val (b, src) = (rows(bucketed), rows(fromSource))
+      require(b == src,
+        s"bucketed layout lost rows: bucketed=$b source=$src")
+      fromSource
+    } finally Seq(oName, lName).foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
   }
   val joinBucketedSql =
     """SELECT o_orderpriority, count(*) AS n_lines,

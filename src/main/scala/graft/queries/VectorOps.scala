@@ -865,16 +865,15 @@ object VectorOps {
         dims.map(i => sum(element_at(col("q"), i + 1)).as(s"s$i")): _*)
       .select(col("cid"), col("n"),
         array(dims.map(i => expr(s"s$i div n")): _*).as("c"))
-    // Assignment as ONE codegen'd argmin over the driver-collected K=8
-    // centroid table ([[graft.functions.CentroidArgMin]]) — the
-    // dedup_semantic shape. The previous broadcast-join +
-    // min(struct(d2, cid)) groupBy expanded n rows ×K and shuffled the
-    // full quantized corpus back by vec_id ONCE PER LLOYD ROUND (two
-    // corpus-wide exchanges that exist only to undo the expansion); the
-    // argmin keeps both rounds narrow map stages, so the only shuffles
-    // left are the two K-group centroid aggregates (map-side combining,
-    // K rows out). Tie-break (lowest cid) and integer arithmetic are
-    // bit-identical to the min-struct form — oracle-pinned.
+    /** Assignment as ONE codegen'd argmin over the driver-collected K=8
+      * centroid table ([[graft.functions.CentroidArgMin]]), so both Lloyd
+      * rounds are narrow map stages and the only shuffles are the two
+      * K-group centroid aggregates (map-side combining, K rows out).
+      * Tie-break (lowest cid) and integer arithmetic match the oracle.
+      *
+      * Assumes `vec_id` is unique: the seed centroids take their cids from
+      * it, and the oracle assigns one cid per `vec_id`
+      * (`PARTITION BY e.vec_id`), while this assigns one per row. */
     def assign(centRows: Seq[(Long, Seq[Long])]): DataFrame =
       if (centRows.isEmpty)
         // no seed vectors (vec_id < 8 absent): same empty result the

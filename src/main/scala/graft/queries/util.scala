@@ -61,6 +61,22 @@ object Util {
     rm(new java.io.File(wh, id))
   }
 
+  /** Under `-Dgraft.assertPlans=true` (set by Verify), `require` that `df`'s
+    * executed plan has at most `max` shuffle exchanges, in the session's own
+    * configuration: a config or AQE drift that brings an exchange back fails
+    * the query loudly. Does nothing otherwise. */
+  def requireShuffles(df: DataFrame, max: Int, what: String): Unit =
+    if (sys.props.get("graft.assertPlans").contains("true")) {
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      val exec = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val shuffles = exec.collect { case e: ShuffleExchangeExec => e }
+      require(shuffles.size <= max, s"$what (${shuffles.size} exchanges):\n$exec")
+    }
+
   /** Polynomial rolling hash over the characters of a string column:
     * fold(acc = 7; acc = (acc * 31 + code(char)) mod 1e9+7).
     * Implemented as a native codegen'd Catalyst expression

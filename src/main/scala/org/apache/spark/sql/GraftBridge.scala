@@ -25,15 +25,6 @@ object GraftBridge {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
-  /** Drop the JVM-wide shared file-status cache (`private[sql]`): file
-    * listings (path, length) are cached across ALL table registrations, so
-    * a test that rewrites a published layout file in place keeps being
-    * read at its OLD length — the corruption surfaces as a seek-past-EOF
-    * SparkException in the scan instead of reaching the layer under test.
-    * Test-only (AsOfLayoutCacheSpec's corrupted-file case). */
-  def resetFileStatusCache(): Unit =
-    org.apache.spark.sql.execution.datasources.FileStatusCache.resetForTesting()
-
   /** Block (bounded) until the shared listener bus has delivered every
     * posted event. QueryExecutionListener callbacks — BenchStats' observed
     * masses — arrive via the asynchronous ExecutionListenerBus riding this

@@ -352,57 +352,4 @@ class CoreSpec extends AnyFunSuite {
       assert(st.sum_g == expect, s"huffman/IDCT round-trip mismatch: $wb x $hb seed=$seed")
     }
   }
-
-  test("layout-cache witness: mtime/length-preserving interior edits move the fingerprint") {
-    // the round-16 witness upgrade: first/last 4 KB PLUS 4 KB samples at
-    // len/3 and 2·len/3. Pin what the heuristic now catches (an in-place
-    // regeneration whose change sits in an interior sample, with mtime and
-    // length restored — invisible to the pre-r16 head+tail witness) and
-    // that identical bytes keep the fingerprint byte-stable.
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_witness").toFile
-    try {
-      val t = new java.io.File(dir, "tbl"); t.mkdirs()
-      val f = new java.io.File(t, "data.bin")
-      val bytes = Array.tabulate[Byte](64 * 1024)(i => (i % 251).toByte)
-      java.nio.file.Files.write(f.toPath, bytes)
-      val mt = f.lastModified
-      def fp() = LayoutCache.fingerprint("spec", dir.getAbsolutePath, Seq("tbl"), "s")
-      val base = fp()
-      assert(fp() == base, "identical bytes must fingerprint identically")
-      bytes(bytes.length / 3 + 100) = (bytes(bytes.length / 3 + 100) ^ 0x5a).toByte
-      java.nio.file.Files.write(f.toPath, bytes)
-      assert(f.setLastModified(mt) && f.length == 64 * 1024)
-      assert(fp() != base,
-        "a same-length, mtime-restored interior edit must move the fingerprint")
-    } finally graft.core.LayoutCache.rmTree(dir)
-  }
-
-  test("layout-cache fingerprint is content-exact: a restored corpus with fresh mtimes stays warm") {
-    // the round-17 verdict task 3 case: a bit-identical corpus restored
-    // with new timestamps (backup restore, scp, git checkout) must keep
-    // its fingerprint — before r18, lastModified was in the walk feed and
-    // a restore read as cold, re-paying a ~108 s sf100 layout write. Same
-    // content-not-mtime principle as the bench series' -stale key.
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp_mtime").toFile
-    try {
-      val t = new java.io.File(dir, "tbl"); t.mkdirs()
-      val f = new java.io.File(t, "data.bin")
-      val bytes = Array.tabulate[Byte](32 * 1024)(i => (i % 13).toByte)
-      java.nio.file.Files.write(f.toPath, bytes)
-      def fp() = LayoutCache.fingerprint("spec", dir.getAbsolutePath, Seq("tbl"), "s")
-      val base = fp()
-      // "restore": rewrite identical bytes, then touch everything (file AND
-      // dirs) a full minute into the future — coarse-mtime filesystems
-      // can't mask the change
-      java.nio.file.Files.write(f.toPath, bytes)
-      val future = System.currentTimeMillis() + 60000
-      assert(f.setLastModified(future) && t.setLastModified(future) && dir.setLastModified(future))
-      assert(fp() == base,
-        "identical content with fresh mtimes must keep the fingerprint (warm)")
-      // flip ONE byte (in the head sample) — must move
-      bytes(0) = (bytes(0) ^ 1).toByte
-      java.nio.file.Files.write(f.toPath, bytes)
-      assert(fp() != base, "a single flipped byte must move the fingerprint")
-    } finally graft.core.LayoutCache.rmTree(dir)
-  }
 }

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** README.md and SURVEY.md name code as `Object.member`; each such name,
-  * where `Object` is an object under `src/main/scala/graft`, must still be
-  * defined, so deleting code means fixing the docs that cite it. */
+/** README.md and SURVEY.md name code as `Object.member`, as a fully
+  * qualified `graft.pkg.Object`, and as a source file `pkg/X.scala`; each such
+  * name must still resolve under `src/main`, so deleting code means fixing
+  * the docs that cite it. */
 class DocNamesSpec extends AnyFunSuite {
 
   private def read(f: java.io.File): String =
@@ -44,6 +45,36 @@ class DocNamesSpec extends AnyFunSuite {
         val Array(obj, member) = name.split('.')
         members(obj)(member)
       }
+      assert(missing.isEmpty, s"$doc names code that no longer exists: ${missing.mkString(", ")}")
+    }
+
+  /** Each source file's package directory (`graft/queries`) → the objects,
+    * classes and traits its files define. */
+  private lazy val packages: Map[String, Set[String]] = {
+    val root = new java.io.File("src/main/scala")
+    val TypeDef = """\b(?:object|class|trait)\s+([A-Z]\w*)""".r
+    sources(root).map { f =>
+      root.toPath.relativize(f.getParentFile.toPath).toString.replace('\\', '/') ->
+        TypeDef.findAllMatchIn(read(f)).map(_.group(1)).toSet
+    }.groupMapReduce(_._1)(_._2)(_ ++ _)
+  }
+
+  private val FullyQualified = """(?<![\w.])graft\.((?:[a-z]\w*\.)*)([A-Z]\w*)""".r
+  private val ScalaFile = """(?<![\w/.])((?:[\w-]+/)*[\w-]+\.scala)\b""".r
+
+  for (doc <- Seq("README.md", "SURVEY.md"))
+    test(s"every fully qualified graft object and every .scala file in $doc resolves under src/main") {
+      assert(packages.get("graft").exists(_("AudioToDataset")), "no sources found")
+      val text = read(new java.io.File(doc))
+      val objects = FullyQualified.findAllMatchIn(text).map { m =>
+        (("graft" +: m.group(1).split('.').filter(_.nonEmpty)).mkString("/"), m.group(2))
+      }.toSeq.distinct
+      val files = ScalaFile.findAllMatchIn(text).map(_.group(1)).toSeq.distinct
+      val all = sources(new java.io.File("src/main")).map(_.getPath.replace('\\', '/'))
+      val missing =
+        objects.collect { case (dir, obj) if !packages.get(dir).exists(_(obj)) =>
+          s"${dir.replace('/', '.')}.$obj" } ++
+        files.filterNot(name => all.exists(_.endsWith(s"/$name")))
       assert(missing.isEmpty, s"$doc names code that no longer exists: ${missing.mkString(", ")}")
     }
 }

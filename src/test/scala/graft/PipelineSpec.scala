@@ -213,6 +213,31 @@ class PipelineSpec extends SparkSpec {
     assert(d0 == Seq(0.1, 0.2))
   }
 
+  test("--files-per-db below 1 is rejected by name before any Spark job") {
+    val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
+    writeFile(in, "a.wav", Wav.synthWav(8000, 800))
+    val group = "pipeline-spec-files-per-db"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) jobs.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "no job before the flag check")
+    val e = try intercept[IllegalArgumentException] {
+      // with the MIME filter on, planning would launch the F5 sniff job
+      AudioToDataset.run(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath,
+        filesPerShard = 0, checkMimeType = true))
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(e.getMessage.contains("--files-per-db must be at least 1, got 0"), e.getMessage)
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs ran before the check")
+    assert(outputFiles(out).isEmpty)
+  }
+
   test("e2e: non-WAV bytes kept with duration 0.0, sampling_rate 0; mime filter drops them") {
     val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
     writeFile(in, "good.wav", Wav.synthWav(16000, 16000))

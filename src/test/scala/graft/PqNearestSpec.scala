@@ -75,4 +75,39 @@ class PqNearestSpec extends SparkSpec {
     assert(exprAssign(rows, cb)((1L, 0))._1 == 3L)
     assert(exprAssign(rows, cb.reverse)((1L, 0))._1 == 3L)
   }
+
+  /** The messages along the failure chain of `PqNearest.cid` over one row,
+    * under generated code (fallback off) and under interpreted evaluation.
+    * The inputs derive from `id`, so nothing is folded at planning time. */
+  private def failures(m: Int, sv: Seq[Double],
+      codebook: Seq[(Int, Long, Seq[Double])]): Seq[String] = {
+    val id = col("id")
+    def query() = spark.range(1).select(PqNearest.cid(id.cast("int") + m,
+      array(sv.map(x => id.cast("double") + x): _*), codebook)).collect()
+    Seq(Seq("spark.sql.codegen.fallback" -> "false"),
+        Seq("spark.sql.codegen.wholeStage" -> "false", "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+      .map { conf =>
+        conf.foreach { case (k, v) => spark.conf.set(k, v) }
+        val e = try intercept[Exception](query()) finally conf.foreach { case (k, _) => spark.conf.unset(k) }
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .map(t => String.valueOf(t.getMessage)).mkString(" / ")
+      }
+  }
+
+  private val book = Seq((0, 1L, Seq(0.0, 0.0)), (2, 2L, Seq(1.0, 1.0)))
+
+  test("PqNearest: an m outside the codebook fails by name, generated and interpreted") {
+    failures(3, Seq(0.0, 0.0), book).foreach(msg =>
+      assert(msg.contains("PqNearest: subspace m=3 is outside the codebook (0 to 2)"), msg))
+  }
+
+  test("PqNearest: an m with no codebook entries fails by name, generated and interpreted") {
+    failures(1, Seq(0.0, 0.0), book).foreach(msg =>
+      assert(msg.contains("PqNearest: subspace m=1 has no codebook entries"), msg))
+  }
+
+  test("PqNearest: a subvector of the wrong length fails by name, generated and interpreted") {
+    failures(0, Seq(0.0, 0.0, 0.0), book).foreach(msg =>
+      assert(msg.contains("PqNearest: a subvector of 3 values against a centroid of 2 in subspace m=0"), msg))
+  }
 }
