@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Local replica of the driver's t2 correctness gate.
 
-Usage: check_oracle.py <verify_out_dir> <sf_dir>
+Usage: check_oracle.py <verify_out_dir> <sf_dir> [name,name,...]
 
 Reads <verify_out_dir>/oracle_sql.json, registers every parquet table in
 <sf_dir> as a DuckDB view, runs each oracle SQL, and compares against the
@@ -9,6 +9,12 @@ Spark result dumped at <verify_out_dir>/<name>/ (parquet). Comparison:
 columns sorted by name, rows sorted, values canonicalized (floats via repr,
 timestamps to ISO) then hashed. Reports per-query match/mismatch with a
 diff sample on mismatch.
+
+The optional third argument names the entries to compare, so one iteration
+is `graft.Verify <sf> <out> a,b,c` followed by
+`check_oracle.py <out> <sf> a,b,c`: only those entries are compared and
+reported, and the exit status reflects them alone. A listed name with no
+oracle entry fails.
 """
 import sys, json, os, glob, math
 import duckdb
@@ -45,7 +51,12 @@ def main():
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     results = {}
-    for name in sorted(oracle):
+    names = sorted(oracle) if len(sys.argv) < 4 else sorted(set(sys.argv[3].split(",")) - {""})
+    for name in names:
+        if name not in oracle:
+            results[name] = "NO_ORACLE_ENTRY"
+            print(f"[{name}] NO ORACLE ENTRY")
+            continue
         spark_dir = os.path.join(out_dir, name)
         if not os.path.isdir(spark_dir):
             results[name] = "NO_SPARK_RESULT"

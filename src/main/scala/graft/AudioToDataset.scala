@@ -16,9 +16,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   *   planning, on the driver as in the reference:
   *     sidecar read once: type vote, coercion, first-wins maps (S2/S3, J2, P7)
-  *     → a walk of the tree, F1–F4 (S1); F5 head sniffs in one Spark job
-  *     → the kept files cut into shards (X1)
-  *   content pass, the one other Spark job: a plain RDD job with one task
+  *     → a walk of the tree, F1–F4 (S1), then F5 head sniffs in walk order
+  *       (a remote tree's heads, or an archive's entries, in one Spark job)
+  *     → the kept files' lengths checked, and the files cut into shards (X1)
+  *   content pass, a Spark job of its own: a plain RDD job with one task
   *   per shard, no shuffle and no sort, which builds each row where it is
   *   written, as the reference's per-shard closure does (src/main.rs:718-856):
   *     read each kept file once (P4)
@@ -57,7 +58,7 @@ object AudioToDataset {
     * `audio.path` order, laid out as `schema` ([[AudioScan.schema]]:
     * `audio, duration, <metadata keys sorted>, shard_id`); the resolved
     * metadata schema; and the run's one broadcast of the session's Hadoop
-    * conf, which the F5 sniff, the read and the write share. */
+    * conf, which a sniff job, the read and the write share. */
   final case class Plan(
       rows: RDD[InternalRow],
       schema: StructType,
@@ -72,6 +73,7 @@ object AudioToDataset {
     // is read before the task that writes its shard
     val kept = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
         cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives, Some(conf))
+    kept.foreach(AudioScan.requireFits) // before any shard is written
     val shards = Sharding.consecutiveShards(kept, cfg.filesPerShard)(_.relativePath)
     Plan(AudioScan.read(spark, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema, conf)
   }

@@ -2,10 +2,11 @@ package graft.sources
 
 import graft.core.{GraftSession, PathNorm}
 import graft.functions.{Magic, Wav}
-import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, SimpleFileVisitor, Path => JPath}
+import java.io.{EOFException, InputStream}
+import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, Paths, SimpleFileVisitor, Path => JPath}
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, GlobFilter, Path => HPath}
+import org.apache.hadoop.fs.{GlobFilter, Path => HPath}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
@@ -22,12 +23,18 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * [[scan]] is the planning pass. As in the reference it is one walk on the
   * driver that yields the kept file list; it opens no file. Only F5 and
-  * `--expand-archives` read anything — a [[SniffBytes]]-byte head per file,
-  * an archive's entry list — in one Spark job over the files the walk kept.
+  * `--expand-archives` read anything: a [[SniffBytes]]-byte head per file,
+  * an archive's entry list. On a `file:` tree F5 runs on the driver, right
+  * after the walk, as the reference sniffs (src/main.rs:695-707). Remote
+  * heads and archive listings are read in one Spark job over the files the
+  * walk kept.
   *
   * [[read]] is the content pass: the kept files, already cut into shards on
   * the driver, are read once each, by the task that writes their shard,
   * which builds each file's output row there (a plain RDD: no Catalyst plan).
+  * Every read goes through [[open]]: `java.nio` for `file:` paths, as the
+  * reference's plain `std::fs::read` (P4, src/main.rs:739-741), and the
+  * scheme's Hadoop FileSystem for any other.
   *
   * Filters mirrored:
   *   F1 directories — only regular files are kept;
@@ -66,7 +73,9 @@ object AudioScan {
     * @param pathGlobFilter Hadoop glob on the file name (e.g. `*.wav`),
     *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened.
     * @param conf the broadcast session Hadoop conf the sniff job reads with;
-    *   when none is given and there is a sniff job, one is broadcast. */
+    *   when none is given and there is a sniff job, one is broadcast.
+    *   A `file:` tree without `expandArchives` has no sniff job: F5 reads
+    *   its heads on the driver, in walk order. */
   def scan(
       spark: SparkSession,
       input: String,
@@ -83,18 +92,22 @@ object AudioScan {
     val sidecar = metadataFile.map(qualified(spark, _).toString)
     val sidecarRel = sidecar.filter(_.startsWith(root.toString.stripSuffix("/") + "/"))
       .map(relativeTo(root.toString, _))
-    val listed = (if (root.toUri.getScheme == "file") walk(root, maxDepth, !excludeSymlinks)
+    val local = root.toUri.getScheme == "file"
+    val listed = (if (local) walk(root, maxDepth, !excludeSymlinks)
       else list(spark, root, maxDepth)).filter { f =>
       glob.forall(_.accept(new HPath(f.path))) && !sidecar.contains(f.path) && !sidecarRel.contains(f.relativePath)
     }
     if (listed.isEmpty || !(checkMimeType || expandArchives)) listed
+    else if (local && !expandArchives)
+      // a local head read costs less than a task launch: F5 on the driver
+      listed.filter(f => Magic.isAllowedAudio(readHead(spark.sparkContext.hadoopConfiguration, f.path)))
     else {
-      // the only reads of the planning pass, in one job over the kept list:
-      // an archive stands for its entries (listed by name, with their heads),
-      // then F5 keeps what sniffs as audio. Archives are transport, so the
-      // expansion happens before the MIME gate; entry paths use jar-URL bang
-      // notation `bundle.zip!inner/name.wav`, and a corrupt archive yields
-      // zero rows.
+      // reads worth a job, one over the kept list: a remote tree's heads,
+      // or whole archives streamed for their entry lists. An archive stands
+      // for its entries (listed by name, with their heads), then F5 keeps
+      // what sniffs as audio. Archives are transport, so the expansion
+      // happens before the MIME gate; entry paths use jar-URL bang notation
+      // `bundle.zip!inner/name.wav`, and a corrupt archive yields zero rows.
       val hadoopConf = conf.getOrElse(GraftSession.hadoopConf(spark))
       val slices = math.min(listed.length, spark.sparkContext.defaultParallelism)
       spark.sparkContext.parallelize(listed, slices).mapPartitions(_.flatMap { f =>
@@ -174,8 +187,8 @@ object AudioScan {
     StructField("shard_id", IntegerType, nullable = false))
 
   /** The content pass: one partition per shard, `shards(i)` read in order by
-    * the task that writes shard `i`, each file's bytes read once through the
-    * Hadoop FileSystem. The task builds each file's row as [[schema]] lays it
+    * the task that writes shard `i`, each file's bytes read once through
+    * [[open]]. The task builds each file's row as [[schema]] lays it
     * out: its WAV header parse (P5), its winning `sidecar` row or the no-match
     * default (J1, P8, looked up in a broadcast of the table) and its shard.
     * A plain file over Spark's largest binary value fails the run, naming it. */
@@ -204,9 +217,31 @@ object AudioScan {
       })
   }
 
-  private def open(conf: Configuration, path: String): FSDataInputStream = {
+  /** A kept plain file's length, checked on the driver before any job: a
+    * file over Spark's largest binary value fails the run, naming it. */
+  def requireFits(f: File): Unit =
+    if (f.entry == null && f.length > MaxBinaryLength)
+      throw new IllegalStateException(
+        s"${f.path}: ${f.length} bytes is more than one binary value holds ($MaxBinaryLength)")
+
+  /** Bytes one read asks a stream for. A `java.nio` channel stages a read
+    * into a heap array in a direct buffer of the read's size, which its
+    * thread keeps: one whole-file read would pin a buffer the size of the
+    * largest file on every task thread. */
+  private val ReadChunk = 1 << 20
+
+  /** When set, [[open]] counts its calls in it by path: the read-once specs
+    * see every read of a run this way, whatever its scheme. */
+  @volatile private[graft] var opens: java.util.concurrent.ConcurrentHashMap[String, Integer] = null
+
+  /** Opens the file at the qualified `path`: through `java.nio` on `file:`,
+    * through the scheme's Hadoop FileSystem on any other. */
+  private def open(conf: Configuration, path: String): InputStream = {
     val p = new HPath(path)
-    p.getFileSystem(conf).open(p)
+    val counts = opens
+    if (counts != null) counts.merge(p.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
+    if (p.toUri.getScheme == "file") Files.newInputStream(Paths.get(p.toUri.getPath))
+    else p.getFileSystem(conf).open(p)
   }
 
   /** The first [[SniffBytes]] bytes of a file, all F5 looks at. */
@@ -245,12 +280,17 @@ object AudioScan {
 
     def bytes(f: File): Array[Byte] =
       if (f.entry == null) {
-        if (f.length > MaxBinaryLength)
-          throw new IllegalStateException(
-            s"${f.path}: ${f.length} bytes is more than one binary value holds ($MaxBinaryLength)")
+        requireFits(f)
         val buf = new Array[Byte](f.length.toInt)
         val in = open(conf, f.path)
-        try in.readFully(buf) finally in.close()
+        try {
+          var n = 0
+          while (n < buf.length) {
+            val r = in.read(buf, n, math.min(buf.length - n, ReadChunk))
+            if (r < 0) throw new EOFException(s"${f.path}: ended after $n of ${buf.length} bytes")
+            n += r
+          }
+        } finally in.close()
         buf
       } else {
         if (f.path != archive) {

@@ -10,7 +10,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Row
 import scala.jdk.CollectionConverters._
 
-/** `file:` FileSystem that counts opens and creates per path. */
+/** `file:` FileSystem that counts opens and creates per path: the Hadoop
+  * reads and writes of a run. */
 class CountingFs extends LocalFileSystem {
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
     CountingFs.count(CountingFs.opens, p)
@@ -72,32 +73,48 @@ class ContentPassSpec extends SparkSpec {
       1 -> List((1, "b/d.wav", "-"), (1, "e.wav", "-"))))
   }
 
-  /** Runs `body` with `file:` served by [[CountingFs]]. */
+  /** Runs `body` counting every file [[AudioScan]] opens, whatever the
+    * scheme, and every `file:` open through Hadoop in [[CountingFs]]. */
   private def counting(body: => Unit): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.file.impl", classOf[CountingFs].getName)
     hc.set("fs.file.impl.disable.cache", "true")
+    hc.set("fs.cfs.impl", classOf[OtherSchemeFs].getName)
+    AudioScan.opens = new CountingFs.Counts()
     try {
       CountingFs.opens.clear()
       body
     } finally {
-      hc.unset("fs.file.impl")
-      hc.unset("fs.file.impl.disable.cache")
+      AudioScan.opens = null
+      Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.cfs.impl").foreach(hc.unset)
     }
   }
 
-  // with F5, it opens one head per F2–F4 survivor
+  private def opens(f: java.io.File): Int = Option(AudioScan.opens.get(f.getAbsolutePath)).fold(0)(_.intValue)
+
+  // with F5, it opens one head per F2–F4 survivor: on the driver through
+  // java.nio for a local tree, in the sniff job on another scheme
   test("without F5, the planning pass opens no file") {
     val (in, meta) = tree()
-    def scan(mime: Boolean) = AudioScan.scan(spark, in.getAbsolutePath, maxDepth = 2,
-      metadataFile = Some(meta.getAbsolutePath), checkMimeType = mime).map(_.relativePath).sorted
+    def scan(scheme: String, mime: Boolean) = AudioScan.scan(spark, scheme + in.getAbsolutePath, maxDepth = 2,
+      metadataFile = Some(scheme + meta.getAbsolutePath), checkMimeType = mime).map(_.relativePath).sorted
     val survivors = Seq("a.wav", "b/c.wav", "b/d.wav", "b/decoy.wav", "e.wav")
+    def oncePerSurvivor(survivors: Seq[String]) =
+      survivors.map(p => new java.io.File(in, p).getAbsolutePath -> Integer.valueOf(1)).toMap
     counting {
-      assert(scan(mime = false) == survivors)
-      assert(CountingFs.opens.isEmpty, CountingFs.opens)
-      assert(scan(mime = true) == survivors.filterNot(_ == "b/decoy.wav"))
-      assert(CountingFs.opens.asScala.toMap ==
-        survivors.map(p => new java.io.File(in, p).getAbsolutePath -> Integer.valueOf(1)).toMap)
+      assert(scan("", mime = false) == survivors)
+      assert(AudioScan.opens.isEmpty, AudioScan.opens)
+      assert(scan("", mime = true) == survivors.filterNot(_ == "b/decoy.wav"))
+      assert(AudioScan.opens.asScala.toMap == oncePerSurvivor(survivors))
+      assert(CountingFs.opens.isEmpty, CountingFs.opens) // local heads are read through java.nio
+
+      // `cfs:` lists through Hadoop, which has no F2: the link's files survive too
+      AudioScan.opens.clear()
+      val remote = scan("cfs:", mime = false)
+      assert(remote == (survivors ++ survivors.filter(_.startsWith("b/")).map("alias" + _.drop(1))).sorted)
+      assert(AudioScan.opens.isEmpty, AudioScan.opens)
+      assert(scan("cfs:", mime = true) == remote.filterNot(_.endsWith("decoy.wav")))
+      assert(AudioScan.opens.asScala.toMap == oncePerSurvivor(remote))
     }
   }
 
@@ -107,17 +124,55 @@ class ContentPassSpec extends SparkSpec {
       graft.sources.Metadata.load(spark, meta.getAbsolutePath)
       val sidecarOpens = CountingFs.of(meta)
       for (mime <- Seq(true, false)) {
+        AudioScan.opens.clear()
         CountingFs.opens.clear()
         AudioToDataset.run(spark, cfg(in, tmpDir("graft-cp-out").getAbsolutePath, Some(meta))
           .copy(checkMimeType = mime))
         val kept = Seq("a.wav", "b/c.wav", "b/d.wav", "e.wav").map(new java.io.File(in, _))
-        assert(kept.map(CountingFs.of) == kept.map(_ => if (mime) 2 else 1), s"mime=$mime")
-        assert(CountingFs.of(new java.io.File(in, "b/decoy.wav")) == 1) // sniffed or read
-        assert(CountingFs.of(new java.io.File(in, "x/y/z/deep.wav")) == 0)             // F3
-        assert(CountingFs.of(new java.io.File(in, "alias/c.wav")) == 0)                // F2
-        assert(CountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load") // F4
+        assert(kept.map(opens) == kept.map(_ => if (mime) 2 else 1), s"mime=$mime")
+        assert(opens(new java.io.File(in, "b/decoy.wav")) == 1) // sniffed or read
+        assert(opens(new java.io.File(in, "x/y/z/deep.wav")) == 0)             // F3
+        assert(opens(new java.io.File(in, "alias/c.wav")) == 0)                // F2
+        assert(opens(meta) == 0)                                               // F4
+        assert(CountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load")
+        // the sidecar is the one local file Hadoop opens: audio is read through java.nio
+        assert(CountingFs.opens.keySet.asScala == Set(meta.getAbsolutePath), CountingFs.opens)
       }
     }
+  }
+
+  test("odd names: a space, %, # or : in a name is sniffed and read at the path the walk listed") {
+    val in = tmpDir("graft-odd")
+    // "a%20b.wav" next to "a b.wav": a path decoded once too often reads the other file
+    val names = Seq("a b.wav", "a%20b.wav", "100%.wav", "c#d.wav", "e:f.wav", "g h/%2F#:.wav")
+    val clips = names.zipWithIndex.map { case (n, i) => n -> Wav.synthPcmWav(16000, 160 * (i + 1)) }.toMap
+    clips.foreach { case (n, bytes) => writeFile(in, n, bytes) }
+    writeText(in, "odd #%: decoy.wav", "not audio")
+    val out = tmpDir("graft-odd-out")
+    AudioToDataset.run(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath, checkMimeType = true))
+    val rows = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath).collect()
+      .map(_.getAs[Row]("audio")).map(a => a.getAs[String]("path") -> a.getAs[Array[Byte]]("bytes").toSeq).toMap
+    assert(rows == clips.map { case (n, b) => n -> b.toSeq })
+  }
+
+  /** Whether `e` or one of its causes names the file `f`. */
+  private def names(e: Throwable, f: java.io.File): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      .exists(m => m != null && m.contains(f.getAbsolutePath))
+
+  // one shard, so no other task is still writing when the job fails; its
+  // temporary is open, with two rows in it, when the read fails
+  test("a kept file deleted after planning fails the run, named, and leaves no file for its shard") {
+    val in = tmpDir("graft-gone")
+    Seq("a.wav", "b.wav", "c.wav", "d.wav").foreach(writeFile(in, _, wav))
+    val out = tmpDir("graft-gone-out")
+    val plan = AudioToDataset.plan(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
+    val gone = new java.io.File(in, "c.wav")
+    assert(gone.delete())
+    val e = intercept[Exception](
+      graft.sinks.TarShardSink.writeShards(plan.rows, out.getAbsolutePath, plan.conf, plan.meta.types.toSeq))
+    assert(names(e, gone), e.toString)
+    assert(out.list().isEmpty, out.list().toSeq)
   }
 
   private def keptPaths(out: java.io.File): Seq[String] =
@@ -134,10 +189,16 @@ class ContentPassSpec extends SparkSpec {
       in.getAbsolutePath, out.getAbsolutePath, maxDepth = 2, checkMimeType = true))
     assert(keptPaths(out) == Seq("ok.wav"))
 
+    // the length is checked at planning, before any job and before the
+    // output's stale temporaries are swept
     val kept = sparseFile(tmpDir("graft-big-kept"), "huge.wav")
-    val e = intercept[Exception](AudioToDataset.run(spark, AudioToDataset.Config(
-      kept.getParent, tmpDir("graft-big-out2").getAbsolutePath)))
-    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
-    assert(messages.exists(m => m != null && m.contains(kept.getAbsolutePath)), e.toString)
+    writeFile(kept.getParentFile, "ok.wav", wav)
+    val out2 = tmpDir("graft-big-out2")
+    val stale = writeText(out2, ".0.parquet.7", "left by a killed run")
+    val (e, jobs) = jobsOf(intercept[Exception](AudioToDataset.run(spark, AudioToDataset.Config(
+      kept.getParent, out2.getAbsolutePath, filesPerShard = 1))))
+    assert(names(e, kept), e.toString)
+    assert(jobs == 0, s"$jobs jobs")
+    assert(out2.list().toSeq == Seq(stale.getName))
   }
 }

@@ -3,9 +3,7 @@ package graft
 import graft.functions.Wav
 import graft.operators.Sharding
 import graft.sources.Metadata
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftBridge, Row}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.Row
 
 /** The sidecar join (J1/J2) and the shard ranking (X1) through the real
   * pipeline entry points, plus a pin on how many Spark jobs one pipeline run
@@ -116,39 +114,6 @@ class SidecarShardSpec extends SparkSpec {
       Seq(Seq(null, null, sparkOrder(0))) ++ sparkOrder.tail.grouped(2).toSeq)
   }
 
-  /** What `body` launched: the stage count of each Spark job, and the number
-    * of SQL executions it started. */
-  private final case class Launched(stagesPerJob: Seq[Int], sqlExecutions: Int)
-
-  /** `body`'s result and what it launched, as seen by a listener. */
-  private def launched[A](body: => A): (A, Launched) = {
-    val group = "sidecar-shard-spec-jobs"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val sql = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) stages.add(e.stageInfos.length)
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) => sql.incrementAndGet()
-        case _ =>
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "job-count pin")
-    val result = try body finally {
-      spark.sparkContext.clearJobGroup()
-      GraftBridge.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    (result, Launched(stages.toArray.toSeq.map(_.asInstanceOf[Int]), sql.get()))
-  }
-
-  /** `body`'s result and the number of Spark jobs it launches. */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val (result, l) = launched(body)
-    (result, l.stagesPerJob.length)
-  }
-
   // planning (sidecar, walk, J1 table) runs on the driver: the write is the one job
   test("a warm JSONL→Parquet pipeline run launches 1 Spark job") {
     val (in, sidecar) = tree("meta.jsonl", jsonl)
@@ -158,14 +123,31 @@ class SidecarShardSpec extends SparkSpec {
     assert(resolved(out) == expected)
   }
 
-  test("with --check-mime-type a warm run launches 2 Spark jobs") { // the head sniff and the write
-    val (in, sidecar) = tree("meta.jsonl", jsonl)
-    val cfg = AudioToDataset.Config(in.getAbsolutePath, tmpDir("graft-j1-out").getAbsolutePath,
-      metadataFile = Some(sidecar.getAbsolutePath), checkMimeType = true)
+  /** A warm `--check-mime-type` run over the tree at `input`, its sidecar
+    * at `sidecar`: its job count, with the rows checked. */
+  private def mimeCheckedJobs(input: String, sidecar: String): Int = {
+    val cfg = AudioToDataset.Config(input, tmpDir("graft-j1-out").getAbsolutePath,
+      metadataFile = Some(sidecar), checkMimeType = true)
     AudioToDataset.run(spark, cfg)
     val (_, jobs) = jobsOf(AudioToDataset.run(spark, cfg))
-    assert(jobs == 2, s"$jobs jobs")
     assert(resolved(new java.io.File(cfg.output)) == expected)
+    jobs
+  }
+
+  test("with --check-mime-type a warm run on a file: tree launches 1 Spark job") { // heads sniffed on the driver
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    val jobs = mimeCheckedJobs(in.getAbsolutePath, sidecar.getAbsolutePath)
+    assert(jobs == 1, s"$jobs jobs")
+  }
+
+  test("with --check-mime-type a warm run on another scheme launches 2 Spark jobs") { // the head sniff and the write
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.cfs.impl", classOf[OtherSchemeFs].getName)
+    try {
+      val jobs = mimeCheckedJobs("cfs:" + in.getAbsolutePath, "cfs:" + sidecar.getAbsolutePath)
+      assert(jobs == 2, s"$jobs jobs")
+    } finally hc.unset("fs.cfs.impl")
   }
 
   // the content pass is a plain RDD job: no SQL execution is started, and

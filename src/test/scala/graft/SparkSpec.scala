@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -32,9 +34,42 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try raf.setLength(2200L * 1000 * 1000) finally raf.close()
     f
   }
+
+  /** `body`'s result and what it launched, as seen by a listener. */
+  def launched[A](body: => A): (A, SparkSpec.Launched) = {
+    val group = "spark-spec-jobs"
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val sql = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) stages.add(e.stageInfos.length)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) => sql.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "job-count pin")
+    val result = try body finally {
+      spark.sparkContext.clearJobGroup()
+      GraftBridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    (result, SparkSpec.Launched(stages.toArray.toSeq.map(_.asInstanceOf[Int]), sql.get()))
+  }
+
+  /** `body`'s result and the number of Spark jobs it launches. */
+  def jobsOf[A](body: => A): (A, Int) = {
+    val (result, l) = launched(body)
+    (result, l.stagesPerJob.length)
+  }
 }
 
 object SparkSpec {
+  /** What `body` launched: the stage count of each Spark job, and the number
+    * of SQL executions it started. */
+  final case class Launched(stagesPerJob: Seq[Int], sqlExecutions: Int)
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
