@@ -57,31 +57,38 @@ object AudioToDataset {
   /** The sink input: `rows`, one partition per shard with its rows in
     * `audio.path` order, laid out as `schema` ([[AudioScan.schema]]:
     * `audio, duration, <metadata keys sorted>, shard_id`); the resolved
-    * metadata schema; and the run's one broadcast of the session's Hadoop
-    * conf, which a sniff job, the read and the write share. */
+    * metadata schema; the number of shards, for the write job's label
+    * (`rows` has one partition even when a run has no shard, so it cannot
+    * be read from there); and, when the input or the output is on another
+    * scheme than `file:`, a broadcast of the session's Hadoop conf, which a
+    * sniff job, the read and the write share. A `file:` run ships no conf:
+    * its tasks read and write through [[graft.core.LocalFiles]]. */
   final case class Plan(
       rows: RDD[InternalRow],
       schema: StructType,
       meta: Metadata.MetaSchema,
-      conf: Broadcast[SerializableConfiguration])
+      shards: Int,
+      conf: Option[Broadcast[SerializableConfiguration]])
 
   def plan(spark: SparkSession, cfg: Config): Plan = {
     val sidecar = cfg.metadataFile.fold(Metadata.NoSidecar)(Metadata.load(spark, _))
-    val conf = GraftSession.hadoopConf(spark)
+    val conf = GraftSession.hadoopConf(spark, cfg.input, cfg.output)
     // X1: shard order is relative-path order (documented divergence from the
     // platform-dependent directory iterator, SURVEY.md §7.4); no audio byte
     // is read before the task that writes its shard
     val kept = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
-        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives, Some(conf))
+        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives, conf)
     kept.foreach(AudioScan.requireFits) // before any shard is written
     val shards = Sharding.consecutiveShards(kept, cfg.filesPerShard)(_.relativePath)
-    Plan(AudioScan.read(spark, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema, conf)
+    Plan(AudioScan.read(spark, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema,
+      shards.length, conf)
   }
 
   def run(spark: SparkSession, cfg: Config): Unit = {
     // the sink is chosen, and its options checked, before the planning pass
     require(cfg.filesPerShard >= 1, s"--files-per-db must be at least 1, got ${cfg.filesPerShard}")
-    val write: Plan => Unit = ShardCommit.extension(cfg.format) match {
+    val ext = ShardCommit.extension(cfg.format)
+    val write: Plan => Unit = ext match {
       case "parquet" =>
         ParquetShardSink.codec(cfg.parquetCompression)
         p => ParquetShardSink.writeShards(p.rows, p.schema, cfg.output, p.conf, cfg.parquetCompression,
@@ -91,8 +98,8 @@ object AudioToDataset {
         p => TarShardSink.writeShards(p.rows, cfg.output, p.conf, p.meta.types.toSeq)
     }
     val p = plan(spark, cfg)
-    ShardCommit.sweep(cfg.output, cfg.format, p.conf.value.value) // a killed run's temporaries
-    write(p)
+    ShardCommit.sweep(cfg.output, cfg.format, spark.sessionState.newHadoopConf()) // a killed run's temporaries
+    GraftSession.labelled(spark.sparkContext, s"graft: write ${p.shards} $ext shards")(write(p))
   }
 
   /** CLI mirroring the reference's flags. */

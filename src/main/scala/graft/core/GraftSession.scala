@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
@@ -71,7 +73,25 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", EphemeralWarehouse.dir)
 
   /** The session's Hadoop conf, its `spark.hadoop.*` settings included,
-    * shipped to executors for their FileSystem reads and writes. */
-  def hadoopConf(spark: SparkSession): Broadcast[SerializableConfiguration] =
-    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    * broadcast for the tasks that read or write one of `paths` through a
+    * Hadoop FileSystem; None when every path is on the local disk, which
+    * tasks reach through [[LocalFiles]] with no conf. */
+  def hadoopConf(spark: SparkSession, paths: String*): Option[Broadcast[SerializableConfiguration]] =
+    if (paths.forall(LocalFiles.of(_).isDefined)) None
+    else Some(spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+
+  /** In a task, the conf [[hadoopConf]] shipped; fails naming `path`, the
+    * file that needed one, when none was. */
+  def shipped(conf: Option[Broadcast[SerializableConfiguration]], path: String): Configuration =
+    conf.getOrElse(throw new IllegalStateException(s"no Hadoop conf was shipped for $path")).value.value
+
+  /** Runs `body` with `label` as the description of the Spark jobs it
+    * starts, then restores the caller's. */
+  def labelled[A](sc: SparkContext, label: String)(body: => A): A = {
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(label)
+    try body finally sc.setLocalProperty(JobDescription, caller)
+  }
+
+  private val JobDescription = "spark.job.description"
 }

@@ -72,7 +72,7 @@ object DuckDbShardSink {
   def writeShards(
       rows: RDD[InternalRow],
       outDir: String,
-      conf: Broadcast[SerializableConfiguration],
+      conf: Option[Broadcast[SerializableConfiguration]],
       metaTypes: Seq[(String, MetadataType)]): Unit = {
     val ddl = Seq(createSequenceSql, createTableSql(metaTypes))
     val ins = insertSql(metaTypes)
@@ -82,7 +82,7 @@ object DuckDbShardSink {
       // Jackson for list→JSON text: full escaping (control chars included),
       // matching the reference's serde_json Value::to_string (src/main.rs:835-837)
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      ShardCommit.commit(part, outDir, "duckdb", conf.value.value)(r => r.getInt(r.numFields - 1)) { out =>
+      ShardCommit.commit(part, outDir, "duckdb", conf)(r => r.getInt(r.numFields - 1)) { out =>
         val local = java.io.File.createTempFile("graft-shard-", ".duckdb")
         local.delete()
         val conn = java.sql.DriverManager.getConnection(s"jdbc:duckdb:${local.getAbsolutePath}")

@@ -5,7 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FSDataOutputStream
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.broadcast.Broadcast
@@ -36,7 +36,11 @@ import scala.jdk.CollectionConverters._
   *   - the reference's compression fallbacks Lzo→Snappy, Lz4→Lz4Raw
   *     (src/main.rs:571-580),
   *   - an old shard file replaced only by a whole new one (X4,
-  *     src/main.rs:732-735; [[ShardCommit]]).
+  *     src/main.rs:732-735; [[ShardCommit]]),
+  *   - the session's `parquet.*` settings (codec levels, encryption and
+  *     `parquet.enable.dictionary`), shipped in the task closure: a task
+  *     builds its writer's conf from them, with no copy of the session's
+  *     whole Hadoop conf.
   *
   * Scale: no driver-side loop, no collect — shards stream through executor
   * tasks; at 1000 executors the write is embarrassingly parallel, matching
@@ -100,14 +104,17 @@ object ParquetShardSink {
       rows: RDD[InternalRow],
       schema: StructType,
       outDir: String,
-      conf: Broadcast[SerializableConfiguration],
+      conf: Option[Broadcast[SerializableConfiguration]],
       compression: String = "snappy",
       footerKv: Map[String, String] = Map.empty): Unit = {
     val dataSchema = StructType(schema.init)
     val shardOrdinal = dataSchema.length
     val codecName = codec(compression)
-    // What ParquetWriteSupport.init requires, layered on the session conf.
-    val confEntries = Map(
+    // The writer's whole conf: what ParquetWriteSupport.init requires, and
+    // the session's `parquet.*` settings (`spark.hadoop.parquet.*` among
+    // them), layered as the session's Hadoop conf layers them.
+    val confEntries = (rows.sparkContext.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue) ++
+      SQLConf.get.getAllConfs).filter(_._1.startsWith("parquet.")).toMap ++ Map(
       "spark.sql.parquet.writeLegacyFormat" -> "false",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       "spark.sql.parquet.datetimeRebaseModeInWrite" -> "CORRECTED",
@@ -117,15 +124,17 @@ object ParquetShardSink {
       "spark.sql.parquet.variant.annotateLogicalType.enabled" -> "false")
 
     rows.foreachPartition { part =>
-      val writeConf = new Configuration(conf.value.value)
+      val writeConf = new Configuration(false)
       confEntries.foreach { case (k, v) => writeConf.set(k, v) }
       ParquetWriteSupport.setSchema(dataSchema, writeConf)
       // the written row is the file schema's fields only: a view that hides
       // the trailing shard_id, with no copy and no generated code
       val data = ProjectingInternalRow(dataSchema, 0 until shardOrdinal)
-      ShardCommit.commit(part, outDir, "parquet", writeConf)(_.getInt(shardOrdinal)) { out =>
+      ShardCommit.commit(part, outDir, "parquet", conf)(_.getInt(shardOrdinal)) { out =>
         val writer = new Builder(new StreamFile(out))
           .withConf(writeConf)
+          // ParquetWriter.Builder takes its encodings from its setters, not the conf
+          .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(writeConf))
           .withCompressionCodec(codecName)
           .withRowGroupRowCountLimit(RowGroupRows)
           .withExtraMetaData(footerKv.asJava)

@@ -37,12 +37,12 @@ object TarShardSink {
   def writeShards(
       rows: RDD[InternalRow],
       outDir: String,
-      conf: Broadcast[SerializableConfiguration],
+      conf: Option[Broadcast[SerializableConfiguration]],
       metaTypes: Seq[(String, MetadataType)]): Unit = {
     val meta = metaTypes.toIndexedSeq
     rows.foreachPartition { part =>
       val mapper = new ObjectMapper()
-      ShardCommit.commit(part, outDir, "webdataset", conf.value.value)(r => r.getInt(r.numFields - 1)) { out =>
+      ShardCommit.commit(part, outDir, "webdataset", conf)(r => r.getInt(r.numFields - 1)) { out =>
         new ShardCommit.Writer[InternalRow] {
           private var ordinal = 0
           def write(row: InternalRow): Unit = {

@@ -1,9 +1,9 @@
 package graft.sources
 
-import graft.core.{GraftSession, PathNorm}
+import graft.core.{GraftSession, LocalFiles, PathNorm}
 import graft.functions.{Magic, Wav}
-import java.io.{EOFException, InputStream}
-import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, Paths, SimpleFileVisitor, Path => JPath}
+import java.io.EOFException
+import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, SimpleFileVisitor, Path => JPath}
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{GlobFilter, Path => HPath}
@@ -32,7 +32,7 @@ import org.apache.spark.util.SerializableConfiguration
   * [[read]] is the content pass: the kept files, already cut into shards on
   * the driver, are read once each, by the task that writes their shard,
   * which builds each file's output row there (a plain RDD: no Catalyst plan).
-  * Every read goes through [[open]]: `java.nio` for `file:` paths, as the
+  * Every read goes through [[LocalFiles.open]]: `java.nio` for `file:` paths, as the
   * reference's plain `std::fs::read` (P4, src/main.rs:739-741), and the
   * scheme's Hadoop FileSystem for any other.
   *
@@ -72,10 +72,11 @@ object AudioScan {
     *   symlinks to filter.
     * @param pathGlobFilter Hadoop glob on the file name (e.g. `*.wav`),
     *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened.
-    * @param conf the broadcast session Hadoop conf the sniff job reads with;
-    *   when none is given and there is a sniff job, one is broadcast.
-    *   A `file:` tree without `expandArchives` has no sniff job: F5 reads
-    *   its heads on the driver, in walk order. */
+    * @param conf the broadcast session Hadoop conf the sniff job reads a
+    *   tree of another scheme than `file:` with; when none is given, one is
+    *   broadcast for such a tree. A `file:` tree's sniff job reads through
+    *   `java.nio` with no conf, and without `expandArchives` it has no
+    *   sniff job: F5 reads its heads on the driver, in walk order. */
   def scan(
       spark: SparkSession,
       input: String,
@@ -92,7 +93,7 @@ object AudioScan {
     val sidecar = metadataFile.map(qualified(spark, _).toString)
     val sidecarRel = sidecar.filter(_.startsWith(root.toString.stripSuffix("/") + "/"))
       .map(relativeTo(root.toString, _))
-    val local = root.toUri.getScheme == "file"
+    val local = LocalFiles.of(input).isDefined
     val listed = (if (local) walk(root, maxDepth, !excludeSymlinks)
       else list(spark, root, maxDepth)).filter { f =>
       glob.forall(_.accept(new HPath(f.path))) && !sidecar.contains(f.path) && !sidecarRel.contains(f.relativePath)
@@ -108,28 +109,31 @@ object AudioScan {
       // what sniffs as audio. Archives are transport, so the expansion
       // happens before the MIME gate; entry paths use jar-URL bang notation
       // `bundle.zip!inner/name.wav`, and a corrupt archive yields zero rows.
-      val hadoopConf = conf.getOrElse(GraftSession.hadoopConf(spark))
-      val slices = math.min(listed.length, spark.sparkContext.defaultParallelism)
-      spark.sparkContext.parallelize(listed, slices).mapPartitions(_.flatMap { f =>
-        val c = hadoopConf.value.value
-        def keep(head: => Array[Byte]) = !checkMimeType || Magic.isAllowedAudio(head)
-        if (expandArchives && f.relativePath.toLowerCase(java.util.Locale.ROOT).endsWith(".zip"))
-          listEntries(c, f.path).collect { case (name, head) if keep(head) =>
-            File(f.path, null, f.relativePath + "!" + PathNorm.normalize(name), name)
-          }
-        else if (keep(readHead(c, f.path))) Seq(f)
-        else Nil
-      }).collect().toIndexedSeq
+      val hadoopConf = if (local) None else conf.orElse(GraftSession.hadoopConf(spark, input))
+      val sc = spark.sparkContext
+      val slices = math.min(listed.length, sc.defaultParallelism)
+      val job = if (expandArchives) "expand archives and sniff" else "sniff"
+      GraftSession.labelled(sc, s"graft: $job ${listed.length} files") {
+        sc.parallelize(listed, slices).mapPartitions(_.flatMap { f =>
+          def c = GraftSession.shipped(hadoopConf, f.path)
+          def keep(head: => Array[Byte]) = !checkMimeType || Magic.isAllowedAudio(head)
+          if (expandArchives && f.relativePath.toLowerCase(java.util.Locale.ROOT).endsWith(".zip"))
+            listEntries(c, f.path).collect { case (name, head) if keep(head) =>
+              File(f.path, null, f.relativePath + "!" + PathNorm.normalize(name), name)
+            }
+          else if (keep(readHead(c, f.path))) Seq(f)
+          else Nil
+        }).collect().toIndexedSeq
+      }
     }
   }
 
   /** `p` as a qualified Hadoop path; a path with no scheme is a local file. */
-  private def qualified(spark: SparkSession, p: String): HPath = {
-    val hp = new HPath(p)
-    if (hp.toUri.getScheme == null || hp.toUri.getScheme == "file")
-      new HPath("file", null, new java.io.File(hp.toUri.getPath).getAbsolutePath)
-    else hp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(hp)
-  }
+  private def qualified(spark: SparkSession, p: String): HPath =
+    LocalFiles.of(p).fold {
+      val hp = new HPath(p)
+      hp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(hp)
+    }(l => new HPath("file", null, l.toAbsolutePath.toString))
 
   /** The relative path of `p` below `root`; the bare file name when `p` is
     * the root itself (reference: src/main.rs:743-758). */
@@ -188,25 +192,28 @@ object AudioScan {
 
   /** The content pass: one partition per shard, `shards(i)` read in order by
     * the task that writes shard `i`, each file's bytes read once through
-    * [[open]]. The task builds each file's row as [[schema]] lays it
+    * [[LocalFiles.open]]. The task builds each file's row as [[schema]] lays it
     * out: its WAV header parse (P5), its winning `sidecar` row or the no-match
-    * default (J1, P8, looked up in a broadcast of the table) and its shard.
-    * A plain file over Spark's largest binary value fails the run, naming it. */
+    * default (J1, P8, looked up in a broadcast of the table; with no sidecar,
+    * the default of [[Metadata.NoSidecar]], and no broadcast) and its shard.
+    * `conf` is read only for a tree of another scheme than `file:`. A plain
+    * file over Spark's largest binary value fails the run, naming it. */
   def read(
       spark: SparkSession,
       shards: IndexedSeq[IndexedSeq[File]],
       sidecar: Metadata.Sidecar,
-      conf: Broadcast[SerializableConfiguration]): RDD[InternalRow] = {
-    val table = spark.sparkContext.broadcast(sidecar)
+      conf: Option[Broadcast[SerializableConfiguration]]): RDD[InternalRow] = {
+    val table = if (sidecar eq Metadata.NoSidecar) None else Some(spark.sparkContext.broadcast(sidecar))
     val metaTypes = sidecar.schema.sparkFields.map(_.dataType).toArray
     spark.sparkContext.parallelize(shards.zipWithIndex, math.max(1, shards.length))
       .mapPartitions(_.flatMap { case (files, shard) =>
-        val contents = new Contents(conf.value.value, files)
+        val contents = new Contents(GraftSession.shipped(conf, files.head.path), files)
+        val lookup = table.fold(Metadata.NoSidecar)(_.value)
         files.iterator.map { f =>
           val bytes = contents.bytes(f)
           val wav = Wav.parse(bytes)
           val path = UTF8String.fromString(f.relativePath)
-          val meta = table.value.resolve(path)
+          val meta = lookup.resolve(path)
           val values = new Array[Any](metaTypes.length + 3)
           values(0) = InternalRow(bytes, wav.sampling_rate, path)
           values(1) = wav.duration
@@ -230,36 +237,22 @@ object AudioScan {
     * largest file on every task thread. */
   private val ReadChunk = 1 << 20
 
-  /** When set, [[open]] counts its calls in it by path: the read-once specs
-    * see every read of a run this way, whatever its scheme. */
-  @volatile private[graft] var opens: java.util.concurrent.ConcurrentHashMap[String, Integer] = null
-
-  /** Opens the file at the qualified `path`: through `java.nio` on `file:`,
-    * through the scheme's Hadoop FileSystem on any other. */
-  private def open(conf: Configuration, path: String): InputStream = {
-    val p = new HPath(path)
-    val counts = opens
-    if (counts != null) counts.merge(p.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
-    if (p.toUri.getScheme == "file") Files.newInputStream(Paths.get(p.toUri.getPath))
-    else p.getFileSystem(conf).open(p)
-  }
-
   /** The first [[SniffBytes]] bytes of a file, all F5 looks at. */
-  private def readHead(conf: Configuration, path: String): Array[Byte] = {
-    val in = open(conf, path)
+  private def readHead(conf: => Configuration, path: String): Array[Byte] = {
+    val in = LocalFiles.open(path, conf)
     try in.readNBytes(SniffBytes) finally in.close()
   }
 
   /** Entry names of a zip archive with each entry's head for F5; empty when
     * the archive cannot be read to its end. */
-  private def listEntries(conf: Configuration, path: String): Seq[(String, Array[Byte])] =
+  private def listEntries(conf: => Configuration, path: String): Seq[(String, Array[Byte])] =
     try entriesOf(conf, path, _ => true)(_.readNBytes(SniffBytes))
     catch { case _: Exception => Nil }
 
   /** Streams the archive at `path`, applying `f` to each wanted file entry. */
-  private def entriesOf[A](conf: Configuration, path: String, wanted: String => Boolean)(
+  private def entriesOf[A](conf: => Configuration, path: String, wanted: String => Boolean)(
       f: java.util.zip.ZipInputStream => A): Seq[(String, A)] = {
-    val zin = new java.util.zip.ZipInputStream(open(conf, path))
+    val zin = new java.util.zip.ZipInputStream(LocalFiles.open(path, conf))
     try {
       val out = Seq.newBuilder[(String, A)]
       var e = zin.getNextEntry
@@ -274,7 +267,7 @@ object AudioScan {
   /** Reads the bytes of one shard's `files` inside its content-pass task; the
     * shard's entries of the archive last read are held until a row of
     * another archive. */
-  private final class Contents(conf: Configuration, files: Seq[File]) {
+  private final class Contents(conf: => Configuration, files: Seq[File]) {
     private var archive: String = null
     private var entries = Map.empty[String, Array[Byte]]
 
@@ -282,7 +275,7 @@ object AudioScan {
       if (f.entry == null) {
         requireFits(f)
         val buf = new Array[Byte](f.length.toInt)
-        val in = open(conf, f.path)
+        val in = LocalFiles.open(f.path, conf)
         try {
           var n = 0
           while (n < buf.length) {

@@ -2,7 +2,6 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core._
-import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.JoinedRow
@@ -26,8 +25,10 @@ import scala.jdk.CollectionConverters._
   *   - duplicate keys: FIRST occurrence in file order wins (src/main.rs:178-193).
   *
   * Shape, as in the reference (src/main.rs:144-209): [[load]] reads the
-  * sidecar once into the driver — a JSONL sidecar line by line through the
-  * session's Hadoop FileSystem, a CSV or Parquet one through one Spark read
+  * sidecar once into the driver — a JSONL sidecar line by line through
+  * [[graft.core.LocalFiles]] (`java.nio` on the local disk, the session's
+  * Hadoop FileSystem on another scheme), a CSV or Parquet one through one
+  * Spark read
   * — and in that one pass votes the types, coerces the values and builds
   * the two first-wins maps: an in-memory [[Sidecar]]. The pipeline's
   * content pass calls [[Sidecar.resolve]] on a broadcast of it for each file
@@ -160,9 +161,8 @@ object Metadata {
     * included; the values are then coerced to the merged schema (P7). */
   private def readJsonl(spark: SparkSession, path: String): (MetaSchema, Seq[Line]) = {
     val mapper = new ObjectMapper()
-    val p = new HPath(path)
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      p.getFileSystem(spark.sessionState.newHadoopConf()).open(p), java.nio.charset.StandardCharsets.UTF_8))
+      LocalFiles.open(path, spark.sessionState.newHadoopConf()), java.nio.charset.StandardCharsets.UTF_8))
     val text = try in.lines().iterator().asScala.toVector finally in.close()
     val nodes = text.map(_.trim).filter(_.nonEmpty)
       .flatMap(t => scala.util.Try(mapper.readTree(t)).toOption.filter(n => n != null && n.isObject))

@@ -1,8 +1,10 @@
 package graft
 
 import graft.functions.Wav
+import graft.core.LocalFiles
 import graft.sources.AudioScan
-import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, LocalFileSystem, LocatedFileStatus,
+  Path, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.{Dependency, ShuffleDependency}
@@ -10,26 +12,34 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Row
 import scala.jdk.CollectionConverters._
 
-/** `file:` FileSystem that counts opens and creates per path: the Hadoop
-  * reads and writes of a run. */
+/** `file:` FileSystem that counts the Hadoop calls of a run: opens per
+  * path, and every open, create, rename, delete and listing by kind. */
 class CountingFs extends LocalFileSystem {
+  import CountingFs.{call, count, opens}
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
-    CountingFs.count(CountingFs.opens, p)
+    count(opens, p.toUri.getPath)
+    call("open")
     super.open(p, bufferSize)
   }
   override def create(p: Path, permission: FsPermission, overwrite: Boolean, bufferSize: Int,
       replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
-    CountingFs.count(CountingFs.creates, p)
+    call("create")
     super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: Path, dst: Path): Boolean = { call("rename"); super.rename(src, dst) }
+  override def delete(p: Path, recursive: Boolean): Boolean = { call("delete"); super.delete(p, recursive) }
+  override def listStatus(p: Path): Array[FileStatus] = { call("list"); super.listStatus(p) }
+  override def listLocatedStatus(p: Path): RemoteIterator[LocatedFileStatus] = {
+    call("list")
+    super.listLocatedStatus(p)
   }
 }
 
 object CountingFs {
   type Counts = java.util.concurrent.ConcurrentHashMap[String, Integer]
-  val opens, creates = new Counts()
-  def count(counts: Counts, p: Path): Unit =
-    counts.merge(p.toUri.getPath, 1, (a: Integer, b: Integer) => a + b)
-  def of(f: java.io.File): Int = Option(opens.get(f.getAbsolutePath)).fold(0)(_.intValue)
+  val opens, calls = new Counts()
+  def count(counts: Counts, key: String): Unit = counts.merge(key, 1, (a: Integer, b: Integer) => a + b)
+  def call(kind: String): Unit = count(calls, kind)
 }
 
 /** The pipeline's two passes: a planning pass over names that reads at most
@@ -73,24 +83,25 @@ class ContentPassSpec extends SparkSpec {
       1 -> List((1, "b/d.wav", "-"), (1, "e.wav", "-"))))
   }
 
-  /** Runs `body` counting every file [[AudioScan]] opens, whatever the
-    * scheme, and every `file:` open through Hadoop in [[CountingFs]]. */
+  /** Runs `body` counting every file a run opens ([[LocalFiles.open]]),
+    * whatever the scheme, and every `file:` open through Hadoop in
+    * [[CountingFs]]. */
   private def counting(body: => Unit): Unit = {
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.file.impl", classOf[CountingFs].getName)
     hc.set("fs.file.impl.disable.cache", "true")
     hc.set("fs.cfs.impl", classOf[OtherSchemeFs].getName)
-    AudioScan.opens = new CountingFs.Counts()
+    LocalFiles.opens = new CountingFs.Counts()
     try {
       CountingFs.opens.clear()
       body
     } finally {
-      AudioScan.opens = null
+      LocalFiles.opens = null
       Seq("fs.file.impl", "fs.file.impl.disable.cache", "fs.cfs.impl").foreach(hc.unset)
     }
   }
 
-  private def opens(f: java.io.File): Int = Option(AudioScan.opens.get(f.getAbsolutePath)).fold(0)(_.intValue)
+  private def opens(f: java.io.File): Int = Option(LocalFiles.opens.get(f.getAbsolutePath)).fold(0)(_.intValue)
 
   // with F5, it opens one head per F2–F4 survivor: on the driver through
   // java.nio for a local tree, in the sniff job on another scheme
@@ -103,28 +114,26 @@ class ContentPassSpec extends SparkSpec {
       survivors.map(p => new java.io.File(in, p).getAbsolutePath -> Integer.valueOf(1)).toMap
     counting {
       assert(scan("", mime = false) == survivors)
-      assert(AudioScan.opens.isEmpty, AudioScan.opens)
+      assert(LocalFiles.opens.isEmpty, LocalFiles.opens)
       assert(scan("", mime = true) == survivors.filterNot(_ == "b/decoy.wav"))
-      assert(AudioScan.opens.asScala.toMap == oncePerSurvivor(survivors))
+      assert(LocalFiles.opens.asScala.toMap == oncePerSurvivor(survivors))
       assert(CountingFs.opens.isEmpty, CountingFs.opens) // local heads are read through java.nio
 
       // `cfs:` lists through Hadoop, which has no F2: the link's files survive too
-      AudioScan.opens.clear()
+      LocalFiles.opens.clear()
       val remote = scan("cfs:", mime = false)
       assert(remote == (survivors ++ survivors.filter(_.startsWith("b/")).map("alias" + _.drop(1))).sorted)
-      assert(AudioScan.opens.isEmpty, AudioScan.opens)
+      assert(LocalFiles.opens.isEmpty, LocalFiles.opens)
       assert(scan("cfs:", mime = true) == remote.filterNot(_.endsWith("decoy.wav")))
-      assert(AudioScan.opens.asScala.toMap == oncePerSurvivor(remote))
+      assert(LocalFiles.opens.asScala.toMap == oncePerSurvivor(remote))
     }
   }
 
   test("F2/F3/F4 drops are never opened; F5 reads a head, the content pass each kept file once") {
     val (in, meta) = tree()
     counting {
-      graft.sources.Metadata.load(spark, meta.getAbsolutePath)
-      val sidecarOpens = CountingFs.of(meta)
       for (mime <- Seq(true, false)) {
-        AudioScan.opens.clear()
+        LocalFiles.opens.clear()
         CountingFs.opens.clear()
         AudioToDataset.run(spark, cfg(in, tmpDir("graft-cp-out").getAbsolutePath, Some(meta))
           .copy(checkMimeType = mime))
@@ -133,10 +142,9 @@ class ContentPassSpec extends SparkSpec {
         assert(opens(new java.io.File(in, "b/decoy.wav")) == 1) // sniffed or read
         assert(opens(new java.io.File(in, "x/y/z/deep.wav")) == 0)             // F3
         assert(opens(new java.io.File(in, "alias/c.wav")) == 0)                // F2
-        assert(opens(meta) == 0)                                               // F4
-        assert(CountingFs.of(meta) == sidecarOpens, s"sidecar opened past its load")
-        // the sidecar is the one local file Hadoop opens: audio is read through java.nio
-        assert(CountingFs.opens.keySet.asScala == Set(meta.getAbsolutePath), CountingFs.opens)
+        assert(opens(meta) == 1, s"mime=$mime") // loaded once, never sniffed or read (F4)
+        // the sidecar and the audio are read through java.nio, not Hadoop
+        assert(CountingFs.opens.isEmpty, CountingFs.opens)
       }
     }
   }
@@ -163,16 +171,22 @@ class ContentPassSpec extends SparkSpec {
   // one shard, so no other task is still writing when the job fails; its
   // temporary is open, with two rows in it, when the read fails
   test("a kept file deleted after planning fails the run, named, and leaves no file for its shard") {
-    val in = tmpDir("graft-gone")
-    Seq("a.wav", "b.wav", "c.wav", "d.wav").foreach(writeFile(in, _, wav))
-    val out = tmpDir("graft-gone-out")
-    val plan = AudioToDataset.plan(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
-    val gone = new java.io.File(in, "c.wav")
-    assert(gone.delete())
-    val e = intercept[Exception](
-      graft.sinks.TarShardSink.writeShards(plan.rows, out.getAbsolutePath, plan.conf, plan.meta.types.toSeq))
-    assert(names(e, gone), e.toString)
-    assert(out.list().isEmpty, out.list().toSeq)
+    for ((format, ext) <- ShardCommitSpec.writable) {
+      val in = tmpDir("graft-gone")
+      Seq("a.wav", "b.wav", "c.wav", "d.wav").foreach(writeFile(in, _, wav))
+      val out = tmpDir("graft-gone-out")
+      val plan = AudioToDataset.plan(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
+      val gone = new java.io.File(in, "c.wav")
+      assert(gone.delete())
+      val dir = out.getAbsolutePath
+      val e = intercept[Exception](ext match {
+        case "parquet" => graft.sinks.ParquetShardSink.writeShards(plan.rows, plan.schema, dir, plan.conf)
+        case "duckdb" => graft.sinks.DuckDbShardSink.writeShards(plan.rows, dir, plan.conf, plan.meta.types.toSeq)
+        case "tar" => graft.sinks.TarShardSink.writeShards(plan.rows, dir, plan.conf, plan.meta.types.toSeq)
+      })
+      assert(names(e, gone), s"$format: $e")
+      assert(out.list().isEmpty, s"$format: ${out.list().toSeq}")
+    }
   }
 
   private def keptPaths(out: java.io.File): Seq[String] =

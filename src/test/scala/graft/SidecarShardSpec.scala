@@ -80,6 +80,13 @@ class SidecarShardSpec extends SparkSpec {
     assert(resolved(run(in, sidecar)) == expected)
   }
 
+  // Hadoop's checksummed `file:` FileSystem cannot open it: its `.crc`
+  // sibling's name parses as a URI scheme
+  test("a JSONL sidecar named m:eta.jsonl inside the tree is loaded, joined and left out (F4)") {
+    val (in, sidecar) = tree("m:eta.jsonl", jsonl)
+    assert(resolved(run(in, sidecar)) == expected)
+  }
+
   test("J1/J2 parity through the pipeline: CSV sidecar") {
     val (in, sidecar) = tree("meta.csv", csv)
     assert(resolved(run(in, sidecar)) == expected)
@@ -147,6 +154,22 @@ class SidecarShardSpec extends SparkSpec {
     try {
       val jobs = mimeCheckedJobs("cfs:" + in.getAbsolutePath, "cfs:" + sidecar.getAbsolutePath)
       assert(jobs == 2, s"$jobs jobs")
+    } finally hc.unset("fs.cfs.impl")
+  }
+
+  test("the sniff and write jobs are labelled, and the caller's job description is restored") {
+    val (in, sidecar) = tree("meta.jsonl", jsonl)
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.cfs.impl", classOf[OtherSchemeFs].getName)
+    try {
+      val (after, l) = launched {
+        AudioToDataset.run(spark, AudioToDataset.Config("cfs:" + in.getAbsolutePath,
+          tmpDir("graft-j1-out").getAbsolutePath, Some("cfs:" + sidecar.getAbsolutePath), format = "webdataset",
+          filesPerShard = 4, checkMimeType = true))
+        spark.sparkContext.getLocalProperty("spark.job.description")
+      }
+      assert(l.descriptions == Seq(s"graft: sniff ${expected.size} files", "graft: write 3 tar shards"))
+      assert(after == SparkSpec.LaunchedDescription)
     } finally hc.unset("fs.cfs.impl")
   }
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local SparkSession for specs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -38,24 +39,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** `body`'s result and what it launched, as seen by a listener. */
   def launched[A](body: => A): (A, SparkSpec.Launched) = {
     val group = "spark-spec-jobs"
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String)]()
     val sql = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) stages.add(e.stageInfos.length)
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.stageInfos.length -> e.properties.getProperty("spark.job.description"))
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) => sql.incrementAndGet()
         case _ =>
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.setJobGroup(group, "job-count pin")
+    spark.sparkContext.setJobGroup(group, SparkSpec.LaunchedDescription)
     val result = try body finally {
       spark.sparkContext.clearJobGroup()
       GraftBridge.drainListenerBus(spark)
       spark.sparkContext.removeSparkListener(listener)
     }
-    (result, SparkSpec.Launched(stages.toArray.toSeq.map(_.asInstanceOf[Int]), sql.get()))
+    val started = jobs.asScala.toSeq
+    (result, SparkSpec.Launched(started.map(_._1), sql.get(), started.map(_._2)))
   }
 
   /** `body`'s result and the number of Spark jobs it launches. */
@@ -66,9 +69,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  /** What `body` launched: the stage count of each Spark job, and the number
-    * of SQL executions it started. */
-  final case class Launched(stagesPerJob: Seq[Int], sqlExecutions: Int)
+  /** What `body` launched: the stage count of each Spark job, the number
+    * of SQL executions it started, and each job's description. */
+  final case class Launched(stagesPerJob: Seq[Int], sqlExecutions: Int, descriptions: Seq[String])
+
+  /** The job description `launched` runs its body under. */
+  val LaunchedDescription = "job-count pin"
 
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
