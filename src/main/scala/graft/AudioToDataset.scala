@@ -29,7 +29,8 @@ import org.apache.spark.util.SerializableConfiguration
   *     → exact-name Parquet (K1), DuckDB (K2) or tar shards
   *
   * No Catalyst plan is analyzed, optimized or code-generated on the way
-  * (a CSV or Parquet sidecar is still loaded by a Spark read).
+  * (a CSV or Parquet sidecar is still loaded by a Spark read), and a run on
+  * `file:` paths with a JSONL sidecar or none builds no SQL `SessionState`.
   *
   * All defaults mirror the reference's clap args (src/main.rs:55-95).
   */
@@ -90,7 +91,7 @@ object AudioToDataset {
     val ext = ShardCommit.extension(cfg.format)
     val write: Plan => Unit = ext match {
       case "parquet" =>
-        ParquetShardSink.codec(cfg.parquetCompression)
+        ParquetShardSink.codec(cfg.parquetCompression) // an unknown or unavailable codec fails here
         p => ParquetShardSink.writeShards(p.rows, p.schema, cfg.output, p.conf, cfg.parquetCompression,
           footerKv = Map("huggingface" -> ParquetShardSink.hfFeaturesJson(p.meta.types.toSeq)))
       case "duckdb" => p => DuckDbShardSink.writeShards(p.rows, cfg.output, p.conf, p.meta.types.toSeq)

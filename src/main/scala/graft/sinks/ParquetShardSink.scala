@@ -3,19 +3,24 @@ package graft.sinks
 import graft.core.MetadataType
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FSDataOutputStream
+import org.apache.parquet.bytes.BytesInput
+import org.apache.parquet.column.ParquetProperties
+import org.apache.parquet.compression.CompressionCodecFactory
+import org.apache.parquet.compression.CompressionCodecFactory.{BytesInputCompressor, BytesInputDecompressor}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+import org.apache.parquet.hadoop.{CodecFactory, ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
+import org.xerial.snappy.Snappy
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** K1 — exact-name Parquet shard writer with the Hugging Face footer
   * (reference: write_files_to_parquet, src/main.rs:438-613).
@@ -34,13 +39,25 @@ import scala.jdk.CollectionConverters._
   *     above about 1.3 MB). The reference's fixed 256 rows is not kept,
   *     pending ROADMAP direction 10,
   *   - the reference's compression fallbacks Lzo→Snappy, Lz4→Lz4Raw
-  *     (src/main.rs:571-580),
+  *     (src/main.rs:571-580); a codec this classpath lacks (BROTLI) fails
+  *     the run before any work,
   *   - an old shard file replaced only by a whole new one (X4,
   *     src/main.rs:732-735; [[ShardCommit]]),
-  *   - the session's `parquet.*` settings (codec levels, encryption and
-  *     `parquet.enable.dictionary`), shipped in the task closure: a task
-  *     builds its writer's conf from them, with no copy of the session's
-  *     whole Hadoop conf.
+  *   - the `parquet.*` settings of the context's Hadoop conf (so
+  *     `spark.hadoop.parquet.*`; a session-level `parquet.*` setting is not
+  *     read): codec levels, encryption, `parquet.enable.dictionary`,
+  *     `parquet.page.size`, `parquet.dictionary.page.size` and
+  *     `parquet.writer.version`, shipped in the task closure, with no copy
+  *     of the whole Hadoop conf. `parquet.block.size` is not applied: the
+  *     row-group layout is ROADMAP direction 10's decision,
+  *   - the `audio.bytes` column written PLAIN, with no dictionary attempt:
+  *     parquet-java would hash every clip into a dictionary that it drops
+  *     when the first page does not shrink by it or the dictionary passes
+  *     its 1 MiB budget, so unique clips give the same bytes without the
+  *     hashing (SURVEY.md §7.4 item 10),
+  *   - a SNAPPY page compressed in one `Snappy.rawCompress` call ([[Codecs]]).
+  *
+  * Building the writer reads no `SQLConf`, so a run builds no `SessionState`.
   *
   * Scale: no driver-side loop, no collect — shards stream through executor
   * tasks; at 1000 executors the write is embarrassingly parallel, matching
@@ -54,17 +71,26 @@ import scala.jdk.CollectionConverters._
 object ParquetShardSink {
   val RowGroupRows = 256 // reference: src/main.rs:607
 
-  /** reference compression map, src/main.rs:571-580. */
-  def codec(name: String): CompressionCodecName = name.toLowerCase match {
-    case "uncompressed" => CompressionCodecName.UNCOMPRESSED
-    case "snappy"       => CompressionCodecName.SNAPPY
-    case "gzip"         => CompressionCodecName.GZIP
-    case "lzo"          => CompressionCodecName.SNAPPY   // fallback
-    case "brotli"       => CompressionCodecName.BROTLI
-    case "lz4"          => CompressionCodecName.LZ4_RAW  // fallback
-    case "zstd"         => CompressionCodecName.ZSTD
-    case "lz4raw" | "lz4_raw" => CompressionCodecName.LZ4_RAW
-    case other => throw new IllegalArgumentException(s"unknown compression: $other")
+  /** reference compression map, src/main.rs:571-580. A codec whose
+    * compressor the writer's codec factory cannot build here fails, named:
+    * BROTLI, whose Hadoop codec no Spark distribution ships. */
+  def codec(name: String): CompressionCodecName = {
+    val c = name.toLowerCase match {
+      case "uncompressed" => CompressionCodecName.UNCOMPRESSED
+      case "snappy"       => CompressionCodecName.SNAPPY
+      case "gzip"         => CompressionCodecName.GZIP
+      case "lzo"          => CompressionCodecName.SNAPPY   // fallback
+      case "brotli"       => CompressionCodecName.BROTLI
+      case "lz4"          => CompressionCodecName.LZ4_RAW  // fallback
+      case "zstd"         => CompressionCodecName.ZSTD
+      case "lz4raw" | "lz4_raw" => CompressionCodecName.LZ4_RAW
+      case other => throw new IllegalArgumentException(s"unknown compression: $other")
+    }
+    val codecs = new Codecs(new Configuration(false), ParquetProperties.DEFAULT_PAGE_SIZE)
+    try codecs.getCompressor(c)
+    catch { case NonFatal(e) => throw new IllegalArgumentException(s"unsupported compression: $name (${e.getMessage})", e) }
+    finally codecs.release()
+    c
   }
 
   /** HF `features` footer JSON (reference: src/main.rs:582-598): `audio`,
@@ -86,6 +112,43 @@ object ParquetShardSink {
     def createOrOverwrite(blockSizeHint: Long): PositionOutputStream = create(blockSizeHint)
     def supportsBlockSize(): Boolean = false
     def defaultBlockSize(): Long = 0
+  }
+
+  /** A page's bytes in one array of its exact size, read in place. */
+  private class Page(bytes: BytesInput) extends java.io.ByteArrayOutputStream(Math.toIntExact(bytes.size)) {
+    bytes.writeAllTo(this)
+    def array: Array[Byte] = buf
+  }
+
+  /** parquet-java's codecs, except that a SNAPPY page is compressed with one
+    * `Snappy.rawCompress` call, from a copy of the page into an output array
+    * the writer reuses: the raw snappy parquet-java's own SNAPPY codec
+    * writes, without its drain through a Hadoop stream 4 KiB at a time into
+    * a growing array. An empty page stays empty, as there. The page writer
+    * copies a compressed page before it asks for the next. The page's copy
+    * is dropped after each call: with clips of megabytes a page holds
+    * hundreds of megabytes, and keeping it would raise the heap a task needs
+    * above what parquet-java's own codec needs (ROADMAP direction 10). */
+  private class Codecs(conf: Configuration, pageSize: Int) extends CompressionCodecFactory {
+    private val parquet = new CodecFactory(conf, pageSize)
+    private val snappy = new BytesInputCompressor {
+      private var out = Array.emptyByteArray
+      def compress(bytes: BytesInput): BytesInput = {
+        val in = new Page(bytes)
+        if (in.size == 0) BytesInput.empty()
+        else {
+          val max = Snappy.maxCompressedLength(in.size)
+          if (out.length < max) out = new Array[Byte](max)
+          BytesInput.from(out, 0, Snappy.rawCompress(in.array, 0, in.size, out, 0))
+        }
+      }
+      def getCodecName: CompressionCodecName = CompressionCodecName.SNAPPY
+      def release(): Unit = ()
+    }
+    def getCompressor(c: CompressionCodecName): BytesInputCompressor =
+      if (c == CompressionCodecName.SNAPPY) snappy else parquet.getCompressor(c)
+    def getDecompressor(c: CompressionCodecName): BytesInputDecompressor = parquet.getDecompressor(c)
+    def release(): Unit = parquet.release()
   }
 
   private class Builder(file: OutputFile) extends ParquetWriter.Builder[InternalRow, Builder](file) {
@@ -110,16 +173,18 @@ object ParquetShardSink {
     val dataSchema = StructType(schema.init)
     val shardOrdinal = dataSchema.length
     val codecName = codec(compression)
+    val sc = rows.sparkContext
     // The writer's whole conf: what ParquetWriteSupport.init requires, and
-    // the session's `parquet.*` settings (`spark.hadoop.parquet.*` among
-    // them), layered as the session's Hadoop conf layers them.
-    val confEntries = (rows.sparkContext.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue) ++
-      SQLConf.get.getAllConfs).filter(_._1.startsWith("parquet.")).toMap ++ Map(
+    // the `parquet.*` settings of the context's Hadoop conf, which carries
+    // `spark.hadoop.parquet.*`. No shard has a timestamp column, so the
+    // time zone (the session default: the JVM's) reaches no byte.
+    val confEntries = sc.hadoopConfiguration.asScala.map(e => e.getKey -> e.getValue)
+      .filter(_._1.startsWith("parquet.")).toMap ++ Map(
       "spark.sql.parquet.writeLegacyFormat" -> "false",
       "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
       "spark.sql.parquet.datetimeRebaseModeInWrite" -> "CORRECTED",
       "spark.sql.parquet.int96RebaseModeInWrite" -> "CORRECTED",
-      "spark.sql.session.timeZone" -> SQLConf.get.sessionLocalTimeZone,
+      "spark.sql.session.timeZone" -> sc.getConf.get("spark.sql.session.timeZone", java.util.TimeZone.getDefault.getID),
       "spark.sql.parquet.fieldId.write.enabled" -> "true",
       "spark.sql.parquet.variant.annotateLogicalType.enabled" -> "false")
 
@@ -130,12 +195,19 @@ object ParquetShardSink {
       // the written row is the file schema's fields only: a view that hides
       // the trailing shard_id, with no copy and no generated code
       val data = ProjectingInternalRow(dataSchema, 0 until shardOrdinal)
+      val pageSize = ParquetOutputFormat.getPageSize(writeConf)
       ShardCommit.commit(part, outDir, "parquet", conf)(_.getInt(shardOrdinal)) { out =>
         val writer = new Builder(new StreamFile(out))
           .withConf(writeConf)
-          // ParquetWriter.Builder takes its encodings from its setters, not the conf
+          // ParquetWriter.Builder takes these from its setters, not the conf;
+          // they are read from the conf as ParquetOutputFormat reads them
+          .withPageSize(pageSize)
+          .withDictionaryPageSize(ParquetOutputFormat.getDictionaryPageSize(writeConf))
+          .withWriterVersion(ParquetOutputFormat.getWriterVersion(writeConf))
           .withDictionaryEncoding(ParquetOutputFormat.getEnableDictionary(writeConf))
+          .withDictionaryEncoding("audio.bytes", false) // clips: see above
           .withCompressionCodec(codecName)
+          .withCodecFactory(new Codecs(writeConf, pageSize))
           .withRowGroupRowCountLimit(RowGroupRows)
           .withExtraMetaData(footerKv.asJava)
           .build()

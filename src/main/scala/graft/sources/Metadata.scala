@@ -4,7 +4,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core._
 import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.JoinedRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -30,7 +31,10 @@ import scala.jdk.CollectionConverters._
   * Hadoop FileSystem on another scheme), a CSV or Parquet one through one
   * Spark read
   * — and in that one pass votes the types, coerces the values and builds
-  * the two first-wins maps: an in-memory [[Sidecar]]. The pipeline's
+  * the two first-wins maps: an in-memory [[Sidecar]]. A JSONL sidecar's
+  * Catalyst values are built directly from its JSON, so its load builds no
+  * SQL `SessionState`; a CSV or Parquet one goes through Spark SQL and
+  * `CatalystTypeConverters` (ROADMAP direction 12). The pipeline's
   * content pass calls [[Sidecar.resolve]] on a broadcast of it for each file
   * ([[AudioScan.read]]); [[joinFiles]] makes the same call for each row of
   * a frame of files, for the query surface.
@@ -107,12 +111,13 @@ object Metadata {
   val NoSidecar: Sidecar = Sidecar(withTranscription(Map.empty), IndexedSeq.empty, Map.empty, Map.empty)
 
   /** One sidecar line: its normalized `relative_path`, its `file_name` and
-    * its values in `MetaSchema.keys` order. */
-  private type Line = (String, String, Seq[Any])
+    * its values in `MetaSchema.keys` order, as a Catalyst row. */
+  private type Line = (String, String, InternalRow)
 
   /** Load the sidecar as its first-wins [[Sidecar]] table. Lines with
     * neither key are dropped (F6, src/main.rs:323-325 / :378-380) after
-    * their types were voted.
+    * their types were voted. A JSONL sidecar builds its Catalyst values
+    * itself, so loading one on the local disk builds no `SessionState`.
     */
   def load(spark: SparkSession, path: String): Sidecar = {
     val (schema, lines) = formatFromPath(path) match {
@@ -120,15 +125,13 @@ object Metadata {
       case Csv         => readFrame(spark.read.option("header", true).csv(path))
       case ParquetMeta => readFrame(spark.read.parquet(path))
     }
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(StructType(schema.sparkFields))
     val rows = mutable.ArrayBuffer.empty[InternalRow]
     val (byRel, byName) = (mutable.HashMap.empty[UTF8String, Int], mutable.HashMap.empty[UTF8String, Int])
     // a key belongs to the first line that holds it; that line becomes the next row
     def claim(m: mutable.HashMap[UTF8String, Int], key: String): Boolean =
       key != null && m.getOrElseUpdate(UTF8String.fromString(key), rows.length) == rows.length
-    lines.foreach { case (rel, name, values) =>
-      if (claim(byRel, rel) | claim(byName, name)) // both claims, not short-circuited
-        rows += toCatalyst(Row.fromSeq(values)).asInstanceOf[InternalRow]
+    lines.foreach { case (rel, name, row) =>
+      if (claim(byRel, rel) | claim(byName, name)) rows += row // both claims, not short-circuited
     }
     Sidecar(schema, rows.toIndexedSeq, byRel.toMap, byName.toMap)
   }
@@ -136,7 +139,7 @@ object Metadata {
   /** CSV (every column String, src/main.rs:309-314) and the Parquet engine
     * extension (numerics → Float64, booleans → Bool, arrays → List, anything
     * else → String): the schema comes from the frame's own, and its rows are
-    * cast to it and collected in file order. */
+    * cast to it, collected in file order and converted to Catalyst rows. */
   private def readFrame(raw: DataFrame): (MetaSchema, Seq[Line]) = {
     def toMeta(dt: DataType): MetadataType = dt match {
       case BooleanType          => MBool
@@ -151,14 +154,18 @@ object Metadata {
       if (k == "transcription") coalesce(str(k), lit("-")) // src/main.rs:317-319
       else col(k).cast(schema.types(k).toSpark)
     }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(StructType(schema.sparkFields))
     val lines = raw.select(str("relative_path") +: str("file_name") +: values: _*).collect()
-      .map(r => (Option(r.getString(0)).map(PathNorm.normalize).orNull, r.getString(1), r.toSeq.drop(2)))
+      .map(r => (Option(r.getString(0)).map(PathNorm.normalize).orNull, r.getString(1),
+        toCatalyst(Row.fromSeq(r.toSeq.drop(2))).asInstanceOf[InternalRow]))
     (schema, lines.toSeq)
   }
 
   /** JSONL: each line is parsed once; blank and non-object lines are skipped
     * (src/main.rs:340-348). Every object line votes its types, keyless ones
-    * included; the values are then coerced to the merged schema (P7). */
+    * included; the values are then coerced to the merged schema (P7), as
+    * Catalyst values: `UTF8String`, boxed `Double` and `Boolean`,
+    * `GenericArrayData` for a list, and null. */
   private def readJsonl(spark: SparkSession, path: String): (MetaSchema, Seq[Line]) = {
     val mapper = new ObjectMapper()
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
@@ -173,13 +180,14 @@ object Metadata {
       }
     }
     val schema = withTranscription(votes)
+    val types = schema.types.toArray
     val lines = nodes.map { node =>
-      val values = schema.types.toSeq.map { case (k, t) =>
-        if (k == "transcription") Option(jsonText(node.get(k))).getOrElse("-") // src/main.rs:372-374
+      val values = types.map { case (k, t) =>
+        if (k == "transcription") UTF8String.fromString(Option(jsonText(node.get(k))).getOrElse("-")) // src/main.rs:372-374
         else convertJson(node.get(k), t)
       }
       (Option(jsonText(node.get("relative_path"))).map(PathNorm.normalize).orNull,
-        jsonText(node.get("file_name")), values)
+        jsonText(node.get("file_name")), new GenericInternalRow(values): InternalRow)
     }
     (schema, lines)
   }
@@ -191,14 +199,16 @@ object Metadata {
     else if (v.isTextual) v.asText()
     else v.toString
 
+  /** A JSON value coerced to `t`, as its Catalyst value; a value of
+    * another kind is null. */
   private def convertJson(v: JsonNode, t: MetadataType): Any = t match {
     case _ if v == null || v.isNull => null
-    case MString  => jsonText(v)
-    case MBool    => if (v.isBoolean) v.asBoolean() else null
-    case MFloat64 => if (v.isNumber) v.asDouble() else null
+    case MString  => UTF8String.fromString(jsonText(v))
+    case MBool    => if (v.isBoolean) java.lang.Boolean.valueOf(v.asBoolean()) else null
+    case MFloat64 => if (v.isNumber) java.lang.Double.valueOf(v.asDouble()) else null
     case MList(inner) =>
       if (!v.isArray) null
-      else v.elements().asScala.map(e => convertJson(e, inner)).toSeq
+      else new GenericArrayData(v.elements().asScala.map(e => convertJson(e, inner)).toArray)
   }
 
   /** J1 — the 3-level priority metadata join (reference: metadata_for_file,

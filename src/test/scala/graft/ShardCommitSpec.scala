@@ -3,6 +3,7 @@ package graft
 import graft.functions.Wav
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.io.LocalInputFile
+import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** `cfs:` FileSystem that records each rename as (source, target) names. */
@@ -220,6 +221,29 @@ class ShardCommitSpec extends SparkSpec {
     assert(failure(AudioToDataset.Config(missing, missing, format = "csv")) == "unknown format: csv")
     assert(failure(AudioToDataset.Config(missing, missing, parquetCompression = "bogus")) ==
       "unknown compression: bogus")
+    // a codec parquet-java knows but this classpath cannot write
+    assert(failure(AudioToDataset.Config(missing, missing, parquetCompression = "brotli"))
+      .startsWith("unsupported compression: brotli"))
+  }
+
+  test("a file: run with a JSONL sidecar or none builds no SessionState") {
+    val in = tmpDir("graft-state-in")
+    Seq("a.wav", "b.wav", "c.wav").foreach(writeFile(in, _, wav))
+    val meta = writeText(in, "meta.jsonl", """{"file_name":"b.wav","transcription":"bee","tags":["x",1]}""" + "\n")
+    val sessionState = spark.getClass.getDeclaredField("sessionState") // a lazy val's field: null until built
+    sessionState.setAccessible(true)
+    val active = SparkSession.getActiveSession
+    for ((format, ext) <- writable; sidecar <- Seq(None, Some(meta))) {
+      val fresh = spark.newSession()
+      SparkSession.setActiveSession(fresh)
+      try {
+        val out = tmpDir("graft-state-out")
+        AudioToDataset.run(fresh, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath,
+          sidecar.map(_.getAbsolutePath), format, filesPerShard = 2, checkMimeType = true))
+        assert(listing(out) == Seq(s"0.$ext", s"1.$ext"), format)
+        assert(sessionState.get(fresh) == null, s"$format, sidecar $sidecar built the session's state")
+      } finally active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
   }
 }
 

@@ -1,9 +1,14 @@
 package graft
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.core.{MBool, MFloat64, MList, MString, MetadataType}
 import graft.functions.Wav
 import graft.operators.Sharding
 import graft.sources.Metadata
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The sidecar join (J1/J2) and the shard ranking (X1) through the real
   * pipeline entry points, plus a pin on how many Spark jobs one pipeline run
@@ -101,6 +106,45 @@ class SidecarShardSpec extends SparkSpec {
     assert(joined.columns.toSeq == Seq("relative_path", "n", "score", "transcription"))
     val got = joined.filter($"n" === 7).collect().map(r => r.getString(0) -> (r.getString(3), r.getString(2))).toMap
     assert(got == expected + ((null: String) -> ("-", null)))
+  }
+
+  test("a JSONL sidecar's Catalyst values are what CatalystTypeConverters makes of its Scala values") {
+    val hostile = Seq(
+      """{"file_name":"a.wav","mixed":true,"list":["x",1.5],"grid":[[1,2],null,[null,3]],"obj":{"k":[1,{"z":null}]},"flag":true,"num":7,"transcription":3.5}""",
+      """{"relative_path":"./b/b.wav","mixed":2,"list":[null,"y",false],"grid":[[4.5]],"obj":"plain","flag":null,"num":-0.5,"transcription":null}""",
+      """{"mixed":"three","list":[true],"deep":[["s"],[1]],"flag":false,"transcription":"keyless"}""",
+      """{"file_name":"c.wav","relative_path":"c/c.wav","deep":[[2.5,null],null],"obj":[1,"two"],"transcription":["t"]}""",
+      """{"file_name":"a.wav","mixed":"loses","transcription":"second a"}""",
+      """{}""",
+      """{"file_name":null,"relative_path":null,"num":1}""").mkString("", "\n", "\n")
+    val path = writeText(tmpDir("graft-values"), "meta.jsonl", hostile).getAbsolutePath
+    val sidecar = Metadata.load(spark, path)
+    assert(sidecar.schema.types.toSeq == Seq("deep" -> MList(MList(MString)), "flag" -> MBool,
+      "grid" -> MList(MList(MFloat64)), "list" -> MList(MString), "mixed" -> MString, "num" -> MFloat64,
+      "obj" -> MString, "transcription" -> MString))
+
+    // the oracle: each keyed, first-wins line's values as Scala values, as
+    // the reference coerces them (P7), through Spark's own converter
+    def text(v: JsonNode): String = if (v == null || v.isNull) null else if (v.isTextual) v.asText() else v.toString
+    def scalaValue(v: JsonNode, t: MetadataType): Any = t match {
+      case _ if v == null || v.isNull => null
+      case MString => text(v)
+      case MBool => if (v.isBoolean) v.asBoolean() else null
+      case MFloat64 => if (v.isNumber) v.asDouble() else null
+      case MList(inner) => if (!v.isArray) null else v.elements().asScala.map(scalaValue(_, inner)).toSeq
+    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(StructType(sidecar.schema.sparkFields))
+    val mapper = new ObjectMapper()
+    val keyed = hostile.linesIterator.map(mapper.readTree).filter(n => text(n.get("file_name")) != null ||
+      text(n.get("relative_path")) != null).toSeq.take(3) // the fourth repeats a.wav
+    val expected = keyed.map { n =>
+      toCatalyst(Row.fromSeq(sidecar.schema.types.toSeq.map { case (k, t) =>
+        if (k == "transcription") Option(text(n.get(k))).getOrElse("-") else scalaValue(n.get(k), t)
+      })).asInstanceOf[InternalRow]
+    }
+    assert(sidecar.rows.length == expected.length)
+    sidecar.rows.zip(expected).foreach { case (got, want) => assert(got == want) }
+    assert(sidecar.rows.map(_.getUTF8String(7).toString) == Seq("3.5", "-", "[\"t\"]"))
   }
 
   test("shard i holds the i-th key in Spark's ORDER BY order (UTF-8, not UTF-16)") {
