@@ -29,7 +29,7 @@ import org.apache.spark.util.SerializableConfiguration
   *     → exact-name Parquet (K1), DuckDB (K2) or tar shards
   *
   * No Catalyst plan is analyzed, optimized or code-generated on the way
-  * (a CSV or Parquet sidecar is still loaded by a Spark read), and a run on
+  * (a CSV sidecar is still loaded by a Spark read), and a run on
   * `file:` paths with a JSONL sidecar or none builds no SQL `SessionState`.
   *
   * All defaults mirror the reference's clap args (src/main.rs:55-95).
@@ -126,8 +126,7 @@ object AudioToDataset {
     // Under spark-submit the master comes from the launcher; standalone runs
     // (sbt runMain, plain java -jar) default to all local cores.
     if (sys.props.get("spark.master").isEmpty && sys.env.get("MASTER").isEmpty)
-      builder.master(numThreads.map(n => s"local[$n]")
-        .getOrElse(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]")))
+      builder.master(numThreads.fold("local[*]")(n => s"local[$n]"))
     val spark = builder.getOrCreate()
     try run(spark, cfg) finally spark.stop()
   }

@@ -8,37 +8,6 @@ object Bench {
     if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
   }
 
-  /** The run-series key: SHA-256 over the BYTES of the src/main, build.sbt
-    * and project trees (sorted walk, sbt's project/target + project/project
-    * build caches excluded). Two runs blend into one median iff these
-    * trees are byte-identical — artifact-only commits, TEST-only edits,
-    * dirty-but-identical checkouts and mtime churn all map to the same
-    * key, and any real runtime-code edit (committed or not) moves it.
-    * ~1.5 MB hashed, sub-millisecond against a warm page cache. */
-  private[graft] def codeFingerprint(base: java.io.File = new java.io.File(".")): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    // the FED path strings are repo-relative ("src/main/scala/..."), built
-    // from the seed string — never from f.getPath — so the hash is
-    // independent of where the walk is anchored; `base` only selects which
-    // actual files are read. This is what lets build.sbt anchor at
-    // baseDirectory (round-17 advice: an sbt launched outside the repo
-    // root hashed an empty walk into graft-src.fp) while staying
-    // byte-identical to this function. The strings equal the pre-r18
-    // relative-File getPath feed, so the hash value itself is unchanged.
-    def feed(rel: String, f: java.io.File): Unit =
-      if (f.isDirectory) {
-        if (f.getName != "target")
-          Option(f.listFiles()).toSeq.flatten.sortBy(_.getName)
-            .foreach(c => feed(rel + "/" + c.getName, c))
-      } else if (f.isFile) {
-        md.update((rel + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        md.update(java.nio.file.Files.readAllBytes(f.toPath))
-        md.update(0.toByte)
-      }
-    Seq("src/main", "build.sbt", "project").foreach(p => feed(p, new java.io.File(base, p)))
-    md.digest().map("%02x".format(_)).mkString.take(16)
-  }
-
   /** Newest mtime under `root` (skipping any dir named target), 0 if absent. */
   private def newestMtime(root: java.io.File): Long =
     if (root.isDirectory) {
@@ -118,7 +87,7 @@ object Bench {
     // Fingerprint the code FIRST (round-16 advice): hashing at run END let a
     // mid-battery source edit stamp the record with code that never ran.
     // A second hash after the query loop detects exactly that edit.
-    val codeFpStart = codeFingerprint()
+    val codeFpStart = SrcFingerprint.of()
     val staleAtStart = classesStale(codeFpStart)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -227,9 +196,10 @@ object Bench {
         } catch { case _: Throwable => None }
       sh("git", "rev-parse", "--short=12", "HEAD").getOrElse("unknown")
     }
-    // The run-series key (see [[codeFingerprint]]), guarded two ways against
-    // recording a fingerprint of code that was NOT the code running
-    // (round-16 advice — the exact failure class the key exists to prevent):
+    // The run-series key: the [[SrcFingerprint]] of the tree, so two runs
+    // blend into one median iff their trees are byte-identical. Guarded two
+    // ways against recording a fingerprint of code that was NOT the code
+    // running (the exact failure class the key exists to prevent):
     //   - "-stale": the source hash recorded at COMPILE time
     //     (target/scala-2.13/graft-src.fp, written by build.sbt) differs
     //     from the hash of the tree now, i.e. a real edit without a
@@ -241,7 +211,7 @@ object Bench {
     // Either marker moves the key, so a tainted run can never blend into a
     // clean series' median, and the taint is visible in the record.
     val codeFp = {
-      val end = codeFingerprint()
+      val end = SrcFingerprint.of()
       if (end != codeFpStart) {
         System.err.println(s"[bench] WARNING: src/main changed mid-run " +
           s"($codeFpStart -> $end); record marked -editedmidrun")

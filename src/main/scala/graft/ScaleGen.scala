@@ -142,11 +142,9 @@ object ScaleGen {
       .appName("graft-scalegen")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // --stress (or SPARK_GRAFT_SCALEGEN_STRESS=1): explicit opt-in to chain
-    // from a non-canonical base — the 10/100-way-clone stress regimes
-    val stress = args.contains("--stress") ||
-      sys.env.get("SPARK_GRAFT_SCALEGEN_STRESS").contains("1")
-    generate(spark, args(0), args(1), args(2).toInt, stress)
+    // --stress: explicit opt-in to chain from a non-canonical base — the
+    // 10/100-way-clone stress regimes
+    generate(spark, args(0), args(1), args(2).toInt, stress = args.contains("--stress"))
     spark.stop()
   }
 
@@ -174,13 +172,13 @@ object ScaleGen {
         s"the driver testdata root ($TestdataRoot) and carries no " +
         s"$MarkerName, so its provenance (and bijection-class count) is " +
         "unknown — a pre-marker chained corpus or a crashed generation. " +
-        "Pass --stress (or SPARK_GRAFT_SCALEGEN_STRESS=1) to use it anyway.")
+        "Pass --stress to use it anyway.")
     require(srcChain.isEmpty || srcChain == Seq(MaxFactor) || stress,
       s"refusing to chain ScaleGen from $srcDir: its marker records factors " +
         s"${srcChain.mkString("[", "x", "]")} (not a direct x$MaxFactor base) — " +
         s"the composed corpus would fold to ${classSet(srcChain :+ factor).size} " +
         s"bijection classes for ${(srcChain :+ factor).product} copies. " +
-        "Pass --stress (or SPARK_GRAFT_SCALEGEN_STRESS=1) to build a clone-" +
+        "Pass --stress to build a clone-" +
         "regime corpus on purpose.")
     // Delete any pre-existing marker BEFORE touching tables (round-16
     // advice): a crashed RE-generation must not leave the OLD marker

@@ -3,7 +3,9 @@ package graft.queries
 import graft.AudioToDataset
 import graft.functions.Wav
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import Util._
 
 /** K1/X1/X4/P5/P6 end-to-end inside the oracle gate: synthesize a WAV corpus
@@ -204,629 +206,6 @@ object SinkOps {
        |    row_number() OVER (ORDER BY 'docs/doc' || doc_id || '.wav') AS rn
        |  FROM documents WHERE doc_id < $NDocs)""".stripMargin
 
-  /** Structured Streaming INSIDE the oracle gate: availableNow tumbling-window
-    * counts over the events parquet must hash-match the batch SQL oracle.
-    * Mechanics (same as the StreamingSpec equivalence test): the events are
-    * staged with a far-future sentinel so the final no-data micro-batch
-    * advances the watermark past every real window and the append-mode sink
-    * flushes them all; the sentinel's own window is excluded. Counts only —
-    * integer-exact regardless of micro-batch partial-agg order. */
-  /** Staged streaming source (events + far-future watermark sentinel),
-    * reused across Verify/Bench invocations AND across the streaming
-    * entries, keyed by a SIGNATURE of the source files (path + sizes +
-    * mtimes) so a regenerated input invalidates the cache instead of
-    * silently streaming stale events. Each consumer's checkpoint/out dirs
-    * stay unique per run (a reused completed checkpoint would make
-    * availableNow a no-op resume). */
-  /** @param onlyType stage ONLY this event type (by default no sentinel
-    *   appended — used by the inner stream-stream join, whose matches emit
-    *   eagerly and need no watermark flush; a sentinel row would join
-    *   with the other side's sentinel and fabricate a match). Each side
-    *   then scans its own slice per micro-batch instead of re-filtering
-    *   the full staged source.
-    * @param sentinelUser with `onlyType`, append a far-future sentinel row
-    *   carrying THIS user id — the left-outer stream-stream join needs the
-    *   watermark advanced on BOTH sides (outer-null emission waits on the
-    *   min), and distinct negative user ids per side keep the two
-    *   sentinels from fabricating a match with each other or real data. */
-  private def stagedEventsDir(s: SparkSession, dir: String,
-                              duplicate: Boolean = false,
-                              onlyType: Option[String] = None,
-                              sentinelUser: Option[Long] = None): String = {
-    val prefix = "graft-stream-" +
-      (if (duplicate) "dup-"
-       else onlyType.map(t => s"$t-${sentinelUser.fold("")(u => s"sent$u-")}")
-         .getOrElse("src-"))
-    val stage = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      prefix + sourceSignature(s"$dir/events.parquet"))
-    val evDir = new java.io.File(stage, "events").getAbsolutePath
-    val doneMark = new java.io.File(stage, "_staged")
-    if (!doneMark.exists()) {
-      // coalesce(8): the staged dir is re-listed and re-opened by EVERY
-      // streaming entry's every micro-batch (the stream-stream join scans
-      // it twice per batch) — 8 larger files beat 32+ slivers on fixed
-      // per-file costs, and bench-scale events are a few MB total
-      val all = Util.eventsWithTs(s, dir)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
-          col("value"), col("props"))
-      val src = onlyType.map(t => all.filter(col("event_type") === t))
-        .getOrElse(all)
-        .coalesce(8)
-      src.write.mode("overwrite").parquet(evDir)
-      if (onlyType.isDefined) {
-        sentinelUser.foreach { u =>
-          val maxTsRow = s.read.parquet(evDir).agg(max(col("ts"))).head()
-          if (!maxTsRow.isNullAt(0)) {
-            val maxTs = maxTsRow.getTimestamp(0)
-            s.range(1).select(
-              lit(-1L).as("event_id"),
-              lit(new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)).as("ts"),
-              lit(u).as("user_id"), lit("sentinel").as("event_type"),
-              lit(0.0).as("value"), lit("{}").as("props"))
-              .write.mode("append").parquet(evDir)
-          }
-        }
-        doneMark.createNewFile()
-        return evDir
-      }
-      if (duplicate) {
-        // read back the staged data (not the source twice — one scan) and
-        // append it verbatim: every event present exactly TWICE
-        s.read.parquet(evDir).coalesce(8).write.mode("append").parquet(evDir)
-      }
-      // read the max back from the just-written staged copy — no second
-      // scan of the source, and the staged data is what the stream consumes
-      val maxTsRow = s.read.parquet(evDir).agg(max(col("ts"))).head()
-      if (!maxTsRow.isNullAt(0)) { // empty events → no windows, no sentinel needed
-        val maxTs = maxTsRow.getTimestamp(0)
-        val sentinel = s.range(1).select(
-          lit(-1L).as("event_id"),
-          lit(new java.sql.Timestamp(maxTs.getTime + 30L * 24 * 3600 * 1000)).as("ts"),
-          lit(-1L).as("user_id"), lit("sentinel").as("event_type"),
-          lit(0.0).as("value"), lit("{}").as("props"))
-        sentinel.write.mode("append").parquet(evDir)
-      }
-      doneMark.createNewFile()
-    }
-    evDir
-  }
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily lowered:
-    * a streaming query's STATE STORE count per stateful operator is fixed
-    * to the shuffle-partition count at query start, and every store pays
-    * per-micro-batch open/commit/fsync — at the session's 32 partitions
-    * that fixed cost, not the data, dominates these availableNow entries
-    * (the events table is a few MB at bench scale). 8 stores keeps all
-    * entries' state tiny-per-store while quartering the startup floor. At
-    * real scale this knob is sized to state volume, not driver cores — the
-    * operators themselves are unchanged. */
-  /** Await an availableNow query; under `-Dgraft.streamDebug=true` dump each
-    * micro-batch's duration breakdown (addBatch/getBatch/commit/state ms) —
-    * the floor-profiling aid for the streaming entries. */
-  private def drain(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
-    if (sys.props.get("graft.streamDebug").contains("true"))
-      q.recentProgress.foreach { p =>
-        // scalastyle:off println
-        println(s"[streamDebug] ${q.name} batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durationMs=${p.durationMs} stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")}")
-        // scalastyle:on println
-      }
-  }
-
-  /** @param needsWatermarkFlush false for entries whose results do NOT
-    *   depend on a final watermark-advancing micro-batch — eager inner
-    *   joins and update-mode aggregations emit within the data batch, so
-    *   the ~1 s no-data batch (state-store open/commit across every store,
-    *   zero rows) is pure overhead and is disabled for them. Append-mode
-    *   windowed/session/stateful entries MUST keep it: their results only
-    *   flush when the watermark passes the window end. */
-  /** Recursive on-disk size of a staged source dir — the scale signal the
-    * stream-partition derivation keys on. */
-  private def dirBytes(path: String): Long = {
-    // Files.walk does NOT follow symlinks by default, so a link cycle
-    // inside a staged dir cannot recurse forever (round-19, r18 advice —
-    // the previous hand-rolled recursion had no guard); only regular
-    // files count toward the size signal.
-    val p = java.nio.file.Paths.get(path)
-    if (!java.nio.file.Files.exists(p)) 0L
-    else {
-      val stream = java.nio.file.Files.walk(p)
-      try stream.filter(java.nio.file.Files.isRegularFile(_))
-        .mapToLong(java.nio.file.Files.size(_)).sum()
-      finally stream.close()
-    }
-  }
-
-  /** Staged-source size below which the streaming entries run the
-    * heap-backed (Spark-default) state store instead of the session's
-    * RocksDB: state for these operators is bounded by the source (join
-    * buffers, per-key aggregates), and a ≤1 GiB source's state — even at
-    * the HDFS store's retained-versions worst case — fits a multi-GB
-    * executor heap, while RocksDB's per-store native open/commit/WAL is
-    * the measured floor at that scale (see withStreamParallelism). Past
-    * it, RocksDB's disk-backed memtables are the r11 sf100 winner. */
-  private[graft] val StreamHeapStateMaxSrcBytes = 1L << 30
-
-  private def withStreamParallelism[T](s: SparkSession,
-                                       needsWatermarkFlush: Boolean = true,
-                                       srcBytes: Long = -1L)(body: => T): T = {
-    val keys = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.noDataMicroBatches.enabled",
-      "spark.sql.streaming.stateStore.providerClass")
-    val prev = keys.map(k => k -> s.conf.getOption(k))
-    // Scale-adaptive store count (round 18, guide §2: derive partitioning
-    // from input size, not a constant): every state store pays
-    // open/commit/fsync per micro-batch, so the floor is ∝ store count
-    // while capacity needs are ∝ state volume. One store per 64 MB of
-    // staged source (min 2 for the parallel-path coverage, capped at the
-    // session's shuffle parallelism) puts bench-scale corpora (a few MB)
-    // at 2 stores — measured −28% on the 11-entry streaming subtotal vs
-    // the previous constant 8 (3-run medians, round-robin A/B) — sf10
-    // (~0.2 GB events) at ~4, and decade-scale corpora back at full
-    // session width. `graft.streamParts` stays as an explicit override;
-    // entries that stage no source (srcBytes < 0) keep the old floor.
-    val sessionParts = s.conf.get(keys.head).toInt
-    val n = math.min(sessionParts,
-      sys.props.get("graft.streamParts").map(_.toInt).getOrElse {
-        if (srcBytes >= 0) math.max(2, math.min(sessionParts, (srcBytes >> 26).toInt + 1))
-        else 8
-      })
-    s.conf.set(keys.head, n.toString)
-    s.conf.set(keys(1), needsWatermarkFlush.toString)
-    // Scale-adaptive store PROVIDER (round 19, same both-directions shape
-    // as the store-count derivation above). The session default is RocksDB
-    // (r11): bounded memtables + local disk are the only provider shape
-    // that survives 100 TB state, and at sf100 the stateful entries
-    // measured 5× FASTER on it (heap stores die of per-version map-copy
-    // GC). But every RocksDB store pays native open/commit/WAL per
-    // micro-batch, and below [[StreamHeapStateMaxSrcBytes]] of staged
-    // source the whole state of every operator is a few MB per store —
-    // measured at sf0.1 (3-run alternating medians, this round): the
-    // heap-backed provider takes the 11-entry streaming subtotal
-    // 27.5 → 22.4 s (−19%), concentrated on the multi-store entries
-    // (session_window −39%, correlate/left_join −28%, dedup −26%;
-    // single-store entries parity). State volume for these operators is
-    // bounded by the staged source (join buffers / per-key aggregates),
-    // so srcBytes is the same scale signal the partition derivation keys
-    // on; entries staging no source (srcBytes < 0) stay on RocksDB.
-    // Explicit -Dgraft.stateStore=hdfs|rocksdb still overrides both ways.
-    val heapStore =
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-    val rocksStore =
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    sys.props.get("graft.stateStore") match {
-      case Some("rocksdb") => s.conf.set(keys(2), rocksStore)
-      case Some("hdfs")    => s.conf.set(keys(2), heapStore)
-      case _ =>
-        if (srcBytes >= 0 && srcBytes < StreamHeapStateMaxSrcBytes)
-          s.conf.set(keys(2), heapStore)
-        // else: session default (RocksDB) stands
-    }
-    if (sys.props.get("graft.streamDebug").contains("true"))
-      // scalastyle:off println
-      println(s"[streamDebug] stores=$n srcBytes=$srcBytes " +
-        s"provider=${s.conf.get(keys(2)).split('.').last}")
-      // scalastyle:on println
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
-
-  val eventsTumblingStream: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-oracle")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream
-      .tumblingCounts(graft.streaming.EventStream.readEvents(s, evDir))
-      .select(col("hour"), col("event_type"), col("n"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_timestamp(col("hour")).as("hour_epoch"), col("event_type"), col("n"))
-    }
-  }
-  val eventsTumblingStreamSql =
-    """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-      |  event_type, count(*) AS n
-      |FROM events GROUP BY 1, 2""".stripMargin
-
-  /** Hopping-window streaming aggregation — the sliding-window twin of
-    * [[eventsTumblingStream]] ([[graft.streaming.EventStream.hoppingCounts]]:
-    * 60-min windows every 30 min, one event → two windows, append mode, so
-    * results flush only when the watermark sentinel passes each window end).
-    * The oracle is the batch hopping SQL (same shape as `events_hopping`):
-    * every window a correct batch engine would produce must appear exactly
-    * once with identical integer-cents sums — gating that window ASSIGNMENT,
-    * watermark FLUSH, and late-data semantics all agree with batch. */
-  val eventsHoppingStream: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-hopping")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream
-      .hoppingCounts(graft.streaming.EventStream.readEvents(s, evDir))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_timestamp(col("w_start")).as("w_start"), col("event_type"),
-        col("n"), col("sum_value"))
-    }
-  }
-  val eventsHoppingStreamSql =
-    """SELECT w_start, event_type, count(*) AS n,
-      |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
-      |FROM (
-      |  SELECT (epoch_us(ts) // 1800000000) * 1800 AS w_start, event_type, value FROM events
-      |  UNION ALL
-      |  SELECT (epoch_us(ts) // 1800000000) * 1800 - 1800, event_type, value FROM events)
-      |GROUP BY 1, 2""".stripMargin
-
-  /** Streaming OHLC candle bars — first/last BY EVENT TIME as struct
-    * argmin/argmax inside the windowed agg
-    * ([[graft.streaming.EventStream.ohlcBars]]), gated against the batch
-    * OHLC SQL (`events_ohlc_bars`' dual-row_number formulation): the
-    * stream's struct-ordering argmax and the batch rank window must pick
-    * the SAME open/close for every bar, out-of-order arrival and all.
-    * Append mode — bars flush when the watermark sentinel passes. */
-  val eventsOhlcStream: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-ohlc")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream
-      .ohlcBars(graft.streaming.EventStream.readEvents(s, evDir))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-      .filter(col("event_type") =!= "sentinel")
-      .select(unix_timestamp(col("bar_start")).as("bar_start"), col("event_type"),
-        col("open"), col("high"), col("low"), col("close"), col("n"),
-        col("volume_cents"))
-    }
-  }
-  val eventsOhlcStreamSql =
-    """WITH e AS (SELECT event_type, (epoch_us(ts) // 1800000000) * 1800 AS bar_start,
-      |                  epoch_us(ts) AS t, event_id, value FROM events),
-      |r AS (SELECT *,
-      |        row_number() OVER (PARTITION BY event_type, bar_start
-      |          ORDER BY t ASC, event_id ASC) AS rn_a,
-      |        row_number() OVER (PARTITION BY event_type, bar_start
-      |          ORDER BY t DESC, event_id DESC) AS rn_d
-      |      FROM e)
-      |SELECT bar_start, event_type,
-      |  max(CASE WHEN rn_a = 1 THEN value END) AS open,
-      |  max(value) AS high, min(value) AS low,
-      |  max(CASE WHEN rn_d = 1 THEN value END) AS close,
-      |  count(*) AS n,
-      |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS volume_cents
-      |FROM r GROUP BY 1, 2""".stripMargin
-
-  /** Second Structured Streaming entry in the oracle gate: watermark-bounded
-    * streaming dedup ([[graft.streaming.EventStream.streamingDedup]],
-    * `dropDuplicatesWithinWatermark`). The staged source holds every event
-    * TWICE (two parquet copies) plus the watermark sentinel; the stream must
-    * emit each event exactly ONCE, and the oracle is simply the events
-    * table. Duplicates are full-row identical, so whichever copy survives,
-    * the output is byte-identical — no ordering sensitivity. Emission is
-    * immediate (the watermark only bounds dedup STATE, never delays
-    * output), so the watermark-flush no-data batch is skipped. */
-  val eventsDedupStream: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir, duplicate = true)
-    withStreamParallelism(s, needsWatermarkFlush = false, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-dedup")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream
-      .streamingDedup(graft.streaming.EventStream.readEvents(s, evDir))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-      .filter(col("event_type") =!= "sentinel")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    }
-  }
-  val eventsDedupStreamSql =
-    "SELECT event_id, user_id, event_type, value FROM events"
-
-  /** Stream-STATIC join under the oracle gate
-    * ([[graft.streaming.EventStream.enrichWithDim]]): the event stream
-    * enriched with the static customer dimension, broadcast per
-    * micro-batch. STATELESS — no watermark, no state store, rows emit in
-    * their data batch, so both the flush batch and the sentinel row are
-    * irrelevant (the sentinel's user -1 matches no customer and drops out
-    * of the inner join). The oracle is the plain batch join. Completes the
-    * streaming join matrix next to the stream-stream inner + left-outer
-    * entries. */
-  val eventsEnrichStream: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, needsWatermarkFlush = false, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-enrich")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val dim = table(s, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
-    val q = graft.streaming.EventStream
-      .enrichWithDim(graft.streaming.EventStream.readEvents(s, evDir),
-        dim, "user_id", "c_custkey")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
-        col("c_mktsegment"), col("c_nationkey"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-    }
-  }
-  val eventsEnrichStreamSql =
-    """SELECT e.event_id, e.user_id, e.event_type, e.value,
-      |  c.c_mktsegment, c.c_nationkey
-      |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin
-
-  /** Third Structured Streaming entry in the oracle gate — CUSTOM state:
-    * per-user sessionization via flatMapGroupsWithState in event time
-    * ([[graft.streaming.EventStream.sessionize]] — exact-µs gap math,
-    * integer-cents accumulation, EventTimeTimeout session close). The
-    * watermark sentinel times every session out; the oracle reconstructs
-    * identical sessions with the lag/cumsum SQL (strict `>` gap rule, same
-    * as the batch twin events_sessionize). This gates arbitrary
-    * user-defined streaming state, not just built-in windows/dedup. */
-  val eventsStatefulStream: Q = (s, dir) => {
-    import s.implicits._
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-state")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val events = graft.streaming.EventStream.readEvents(s, evDir)
-      .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      .as[graft.streaming.EventStream.Event]
-    val q = graft.streaming.EventStream.sessionize(events)
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-      .filter(col("user_id") =!= -1L) // the sentinel's own never-closed state
-      .select(col("user_id"), col("start_us"), col("n_events").cast("long").as("n_events"),
-        (col("value_cents") / 100.0).as("session_value"))
-    }
-  }
-  val eventsStatefulStreamSql =
-    """SELECT user_id, min(ts_us) AS start_us, count(*) AS n_events,
-      |  sum(CAST(floor(value * 100) AS BIGINT)) / 100.0 AS session_value
-      |FROM (
-      |  SELECT user_id, value, ts_us,
-      |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM (
-      |    SELECT user_id, value, event_id, ts_us,
-      |      CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
-      |        OR ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) > 1800000000
-      |        THEN 1 ELSE 0 END AS new_session
-      |    FROM (SELECT user_id, value, event_id, epoch_us(ts) AS ts_us FROM events)))
-      |GROUP BY user_id, session_id""".stripMargin
-
-  /** Fourth streaming entry — the INCREMENTAL MATERIALIZED VIEW shape:
-    * update-mode streaming aggregation + foreachBatch upsert into a
-    * serving store. Each micro-batch emits the keys whose aggregates
-    * changed (with their full new values — Spark streaming-agg update
-    * semantics); foreachBatch appends them to a batch-stamped delta log,
-    * and the view is materialized as latest-value-per-key — exactly how a
-    * 100 TB/day pipeline keeps a dashboard table fresh without
-    * recomputing history. `maxFilesPerTrigger` forces MULTIPLE
-    * micro-batches so the upsert path (later batch overwrites earlier
-    * value) is genuinely exercised; the oracle is the plain batch GROUP
-    * BY. Unwatermarked agg state is bounded by key cardinality (event
-    * types), the right trade for a low-cardinality serving view. */
-  val streamUpsertMv: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, needsWatermarkFlush = false, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mv")
-    cleanupAtExit(tmp)
-    val logDir = new java.io.File(tmp.toFile, "delta_log").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val stream = graft.streaming.EventStream.readEvents(s, evDir, maxFilesPerTrigger = 8)
-    val agg = graft.streaming.EventStream.incrementalCounts(stream)
-    val q = agg.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty)
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(logDir)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    graft.streaming.EventStream.materializeLatest(s.read.parquet(logDir))
-      .filter(col("event_type") =!= "sentinel")
-      .select(col("event_type"), col("n"), (col("cents") / 100.0).as("total"))
-    }
-  }
-  val streamUpsertMvSql =
-    """SELECT event_type, count(*) AS n,
-      |  sum(CAST(floor(value * 100) AS BIGINT)) / 100.0 AS total
-      |FROM events GROUP BY event_type""".stripMargin
-
-  /** Fifth streaming entry — watermarked STREAM-STREAM interval join in
-    * the oracle gate: clicks pair with the same user's views at-or-before
-    * within 30 minutes ([[graft.streaming.EventStream.correlate]] — both
-    * sides watermarked, the time bound in the join condition evicts BOTH
-    * state stores at the horizon). Inner-join matches emit eagerly, so
-    * availableNow drains every pair; the oracle is the equivalent batch
-    * join. Raw value pass-through (no accumulation) — float-exact. */
-  val eventsCorrelateStream: Q = (s, dir) => {
-    val clickDir = stagedEventsDir(s, dir, onlyType = Some("click"))
-    val viewDir = stagedEventsDir(s, dir, onlyType = Some("view"))
-    withStreamParallelism(s, needsWatermarkFlush = false,
-        srcBytes = dirBytes(clickDir) + dirBytes(viewDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-corr")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream
-      .correlate(graft.streaming.EventStream.readEvents(s, clickDir),
-        graft.streaming.EventStream.readEvents(s, viewDir))
-      .select(col("click_id"), col("view_id"), col("user_id"),
-        unix_micros(col("click_ts")).as("click_us"),
-        unix_micros(col("view_ts")).as("view_us"), col("click_value"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-    }
-  }
-  val eventsCorrelateStreamSql =
-    """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id,
-      |  epoch_us(c.ts) AS click_us, epoch_us(v.ts) AS view_us,
-      |  c.value AS click_value
-      |FROM events c JOIN events v
-      |  ON c.event_type = 'click' AND v.event_type = 'view'
-      | AND v.user_id = c.user_id
-      | AND epoch_us(v.ts) <= epoch_us(c.ts)
-      | AND epoch_us(v.ts) >= epoch_us(c.ts) - 1800000000""".stripMargin
-
-  /** Seventh streaming entry — watermarked LEFT-OUTER stream-stream join:
-    * the semantics inner joins cannot show. Matches emit eagerly like
-    * [[eventsCorrelateStream]]; clicks that never find a view emit with
-    * NULL view columns only when the watermark EXPIRES their state — so
-    * this entry stages a far-future sentinel on BOTH sides (distinct
-    * negative user ids; outer-null emission waits on the MIN of the two
-    * source watermarks) and keeps the final no-data micro-batch (the
-    * watermark crossing is evaluated there). The click-side sentinel
-    * surfaces as an unmatched row and is filtered by id; the view-side
-    * one can match nothing. Oracle: the equivalent batch LEFT JOIN. */
-  val eventsLeftJoinStream: Q = (s, dir) => {
-    val clickDir = stagedEventsDir(s, dir, onlyType = Some("click"), sentinelUser = Some(-1L))
-    val viewDir = stagedEventsDir(s, dir, onlyType = Some("view"), sentinelUser = Some(-2L))
-    withStreamParallelism(s,
-        srcBytes = dirBytes(clickDir) + dirBytes(viewDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-loj")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream
-      .correlate(graft.streaming.EventStream.readEvents(s, clickDir),
-        graft.streaming.EventStream.readEvents(s, viewDir),
-        joinType = "left_outer")
-      .select(col("click_id"), col("view_id"), col("user_id"),
-        unix_micros(col("click_ts")).as("click_us"),
-        unix_micros(col("view_ts")).as("view_us"), col("click_value"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir).filter(col("click_id") >= 0)
-    }
-  }
-  val eventsLeftJoinStreamSql =
-    """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id,
-      |  epoch_us(c.ts) AS click_us, epoch_us(v.ts) AS view_us,
-      |  c.value AS click_value
-      |FROM (SELECT * FROM events WHERE event_type = 'click') c
-      |LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-      |  ON v.user_id = c.user_id
-      | AND epoch_us(v.ts) <= epoch_us(c.ts)
-      | AND epoch_us(v.ts) >= epoch_us(c.ts) - 1800000000""".stripMargin
-
-  /** Sixth streaming entry — NATIVE session windows in streaming: the
-    * built-in SessionWindow operator (gap merging inside the stateful
-    * aggregate) under a watermark, versus the oracle's lag/cumsum SQL
-    * reconstruction. NOTE the boundary difference from
-    * events_stateful_stream: the native operator starts a NEW session at a
-    * gap of exactly 30 minutes (oracle rule `>=`), while the hand-rolled
-    * flatMapGroupsWithState machine — mirroring the batch twin
-    * events_sessionize — keeps an exact-30-minute gap in the SAME session
-    * (oracle rule `>`). Each entry is gated against its own rule; they are
-    * NOT interchangeable on knife-edge data. */
-  val eventsSessionWindowStream: Q = (s, dir) => {
-    val evDir = stagedEventsDir(s, dir)
-    withStreamParallelism(s, srcBytes = dirBytes(evDir)) {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-sw")
-    cleanupAtExit(tmp)
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = graft.streaming.EventStream.readEvents(s, evDir)
-      .withWatermark("ts", "1 hour")
-      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(floor(col("value") * 100).cast("long")).as("cents"))
-      .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
-        col("n_events"), col("cents"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.parquet(outDir)
-      .filter(col("user_id") =!= -1L)
-      .select(col("user_id"), col("start_us"), col("n_events"),
-        (col("cents") / 100.0).as("session_value"))
-    }
-  }
-  val eventsSessionWindowStreamSql =
-    """SELECT user_id, min(ts_us) AS start_us, count(*) AS n_events,
-      |  sum(CAST(floor(value * 100) AS BIGINT)) / 100.0 AS session_value
-      |FROM (
-      |  SELECT user_id, value, ts_us,
-      |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      |  FROM (
-      |    SELECT user_id, value, event_id, ts_us,
-      |      CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
-      |        OR ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) >= 1800000000
-      |        THEN 1 ELSE 0 END AS new_session
-      |    FROM (SELECT user_id, value, event_id, epoch_us(ts) AS ts_us FROM events)))
-      |GROUP BY user_id, session_id""".stripMargin
-
-  /** Source/sink format breadth: the same projection round-trips through
-    * ORC, CSV, and JSON files, and each read-back must reproduce the exact
-    * row count and integer checksum the oracle computes straight from the
-    * parquet table — proving the writes AND reads are lossless. Values are
-    * projected to integers BEFORE writing so text formats carry no float
-    * representation risk. */
   /** Content signature of a parquet file-or-directory: path + every part
     * file's (name, length, mtime). Regenerating the source changes the
     * signature, so caches keyed by it can never serve stale data. */
@@ -852,6 +231,458 @@ object SinkOps {
       rm(p.toFile)
     }))
 
+  /** Staged streaming source: the events, plus a far-future sentinel row
+    * whose arrival advances the watermark past every real window, so the
+    * final no-data micro-batch flushes them all. Reused across Verify/Bench
+    * invocations AND across the streaming entries, keyed by a signature of
+    * the source files (path + sizes + mtimes), so a regenerated input
+    * invalidates the cache instead of silently streaming stale events. Each
+    * run's checkpoint/out dirs stay unique (a reused completed checkpoint
+    * would make availableNow a no-op resume).
+    *
+    * @param duplicate stage every event TWICE.
+    * @param onlyType stage ONLY this event type, so each side of a
+    *   stream-stream join scans its own slice per micro-batch instead of
+    *   re-filtering the full staged source.
+    * @param sentinelUser the sentinel's user id, or None for no sentinel
+    *   (the inner stream-stream join: its matches emit eagerly and need no
+    *   flush, and a sentinel on each side would join into a fabricated
+    *   match). The left-outer join stages one on BOTH sides with distinct
+    *   negative ids: outer-null emission waits on the min of the two
+    *   watermarks, and distinct ids keep the two sentinels from matching
+    *   each other or real data. An empty source gets no sentinel. */
+  private def stagedEventsDir(s: SparkSession, dir: String,
+                              duplicate: Boolean = false,
+                              onlyType: Option[String] = None,
+                              sentinelUser: Option[Long] = Some(-1L)): String = {
+    val prefix = "graft-stream-" +
+      (if (duplicate) "dup-"
+       else onlyType.map(t => s"$t-${sentinelUser.fold("")(u => s"sent$u-")}")
+         .getOrElse("src-"))
+    val stage = new java.io.File(
+      System.getProperty("java.io.tmpdir"),
+      prefix + sourceSignature(s"$dir/events.parquet"))
+    val evDir = new java.io.File(stage, "events").getAbsolutePath
+    // written LAST, so a crash mid-staging leaves no half-staged cache
+    val doneMark = new java.io.File(stage, "_staged")
+    if (!doneMark.exists()) {
+      // coalesce(8): the staged dir is re-listed and re-opened by every
+      // micro-batch (the stream-stream joins scan two of them) — 8 larger
+      // files beat 32+ slivers on fixed per-file costs
+      val all = Util.eventsWithTs(s, dir)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
+          col("value"), col("props"))
+      onlyType.fold(all)(t => all.filter(col("event_type") === t))
+        .coalesce(8).write.mode("overwrite").parquet(evDir)
+      // the copy and the max read the staged data back: one source scan
+      if (duplicate) s.read.parquet(evDir).coalesce(8).write.mode("append").parquet(evDir)
+      sentinelUser.foreach { u =>
+        val maxTsRow = s.read.parquet(evDir).agg(max(col("ts"))).head()
+        if (!maxTsRow.isNullAt(0))
+          s.range(1).select(
+            lit(-1L).as("event_id"),
+            lit(new java.sql.Timestamp(maxTsRow.getTimestamp(0).getTime + 30L * 24 * 3600 * 1000)).as("ts"),
+            lit(u).as("user_id"), lit("sentinel").as("event_type"),
+            lit(0.0).as("value"), lit("{}").as("props"))
+            .write.mode("append").parquet(evDir)
+      }
+      doneMark.createNewFile()
+    }
+    evDir
+  }
+
+  /** Recursive on-disk size of a staged source dir: the scale signal of
+    * [[withStreamConf]]. `Files.walk` follows no symlink, so a link cycle
+    * cannot recurse forever; only regular files count. */
+  private def dirBytes(path: String): Long = {
+    val p = java.nio.file.Paths.get(path)
+    if (!java.nio.file.Files.exists(p)) 0L
+    else {
+      val stream = java.nio.file.Files.walk(p)
+      try stream.filter(java.nio.file.Files.isRegularFile(_))
+        .mapToLong(java.nio.file.Files.size(_)).sum()
+      finally stream.close()
+    }
+  }
+
+  /** Staged-source size below which a streaming query runs the heap-backed
+    * state store instead of the session's RocksDB (see [[withStreamConf]]). */
+  private val StreamHeapStateMaxSrcBytes = 1L << 30
+
+  /** Run `body` under the conf of a streaming query over `srcBytes` of
+    * staged source; every key is restored afterwards (unset if it was
+    * unset), also when `body` throws.
+    *
+    *  - Store count: a stateful operator gets one state store per shuffle
+    *    partition, fixed at query start, and every store pays
+    *    open/commit/fsync per micro-batch, so the floor is ∝ store count
+    *    while the capacity needed is ∝ state volume. One store per 64 MiB of
+    *    staged source, at least 2 (the parallel path stays covered) and at
+    *    most the session's shuffle partitions, puts a few-MB bench corpus
+    *    at 2 stores, sf10 (~0.2 GB of events) at ~4 and decade-scale
+    *    corpora at full session width. Against a constant 8 it measured
+    *    −28% on the 11-entry streaming subtotal (3-run medians, alternating
+    *    A/B).
+    *  - Store provider: RocksDB (the session default) keeps bounded
+    *    memtables on local disk, the only shape that survives 100 TB of
+    *    state; at sf100 the stateful entries ran 5× faster on it than on
+    *    heap stores, which die of per-version map-copy GC. But every RocksDB
+    *    store pays native open/commit/WAL per micro-batch. Below
+    *    [[StreamHeapStateMaxSrcBytes]] of staged source the state of every
+    *    operator here (join buffers, per-key aggregates, both bounded by the
+    *    source) is a few MB per store and fits the heap even at the HDFS
+    *    store's retained-versions worst case, so the heap-backed provider is
+    *    used: at sf0.1 it took the 11-entry subtotal from 27.5 s to 22.4 s
+    *    (−19%; session_window −39%, correlate/left_join −28%, dedup −26%,
+    *    single-store entries at parity; 3-run alternating medians).
+    *  - Flush batch (`needsWatermarkFlush`): append-mode windowed, session
+    *    and stateful entries emit a result only once the watermark passes
+    *    its window end, which happens in the final no-data micro-batch, so
+    *    they keep it. Eager inner joins, stateless queries and update-mode
+    *    aggregations emit within their data batch; for them that ~1 s batch
+    *    (open/commit across every store, zero rows) is pure overhead and is
+    *    disabled. */
+  private[graft] def withStreamConf[T](s: SparkSession, srcBytes: Long,
+                                       needsWatermarkFlush: Boolean)(body: => T): T = {
+    val (parts, noData, provider) = ("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    val set = s.conf.getAll // the keys this session sets, defaults excluded
+    val prev = Seq(parts, noData, provider).map(k => k -> set.get(k))
+    try {
+      s.conf.set(parts, math.min(s.conf.get(parts).toLong, math.max(2L, (srcBytes >> 26) + 1)))
+      s.conf.set(noData, needsWatermarkFlush)
+      if (srcBytes < StreamHeapStateMaxSrcBytes) s.conf.set(provider,
+        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
+  /** One run of a streaming entry: a fresh dir, deleted at JVM exit, that
+    * holds the query's checkpoint and whatever the entry stages or sinks
+    * there ([[path]]). */
+  private final class StreamRun(s: SparkSession) {
+    private val dir = java.nio.file.Files.createTempDirectory("graft-stream-run")
+    cleanupAtExit(dir)
+
+    def path(name: String): String = dir.resolve(name).toString
+
+    /** Drain the query `sink` writes, availableNow, under [[withStreamConf]]
+      * for the total size of `srcDirs`. */
+    def run(srcDirs: Seq[String], needsWatermarkFlush: Boolean)(
+        sink: => DataStreamWriter[_]): Unit =
+      withStreamConf(s, srcDirs.map(dirBytes).sum, needsWatermarkFlush) {
+        sink.option("checkpointLocation", path("ck"))
+          .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      }
+
+    /** [[run]] `query` into an append-mode Parquet file sink, and read the
+      * sink's output back. */
+    def toParquet(srcDirs: Seq[String], needsWatermarkFlush: Boolean)(
+        query: => DataFrame): DataFrame = {
+      run(srcDirs, needsWatermarkFlush)(
+        query.writeStream.format("parquet").option("path", path("out")).outputMode("append"))
+      s.read.parquet(path("out"))
+    }
+  }
+
+  /** Structured Streaming inside the oracle gate: availableNow tumbling-
+    * window counts over the staged events must hash-match the batch SQL.
+    * The sentinel's own window is excluded. Counts only — integer-exact
+    * whatever the micro-batch partial-agg order. */
+  val eventsTumblingStream: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = true) {
+      EventStream.tumblingCounts(EventStream.readEvents(s, evDir))
+        .select(col("hour"), col("event_type"), col("n"))
+    }
+      .filter(col("event_type") =!= "sentinel")
+      .select(unix_timestamp(col("hour")).as("hour_epoch"), col("event_type"), col("n"))
+  }
+  val eventsTumblingStreamSql =
+    """SELECT CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
+      |  event_type, count(*) AS n
+      |FROM events GROUP BY 1, 2""".stripMargin
+
+  /** Hopping-window streaming aggregation — the sliding-window twin of
+    * [[eventsTumblingStream]] ([[graft.streaming.EventStream.hoppingCounts]]:
+    * 60-min windows every 30 min, one event → two windows, append mode, so
+    * results flush only when the watermark sentinel passes each window end).
+    * The oracle is the batch hopping SQL (same shape as `events_hopping`):
+    * every window a correct batch engine would produce must appear exactly
+    * once with identical integer-cents sums — gating that window ASSIGNMENT,
+    * watermark FLUSH, and late-data semantics all agree with batch. */
+  val eventsHoppingStream: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = true) {
+      EventStream.hoppingCounts(EventStream.readEvents(s, evDir))
+    }
+      .filter(col("event_type") =!= "sentinel")
+      .select(unix_timestamp(col("w_start")).as("w_start"), col("event_type"),
+        col("n"), col("sum_value"))
+  }
+  val eventsHoppingStreamSql =
+    """SELECT w_start, event_type, count(*) AS n,
+      |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) / 100.0 AS sum_value
+      |FROM (
+      |  SELECT (epoch_us(ts) // 1800000000) * 1800 AS w_start, event_type, value FROM events
+      |  UNION ALL
+      |  SELECT (epoch_us(ts) // 1800000000) * 1800 - 1800, event_type, value FROM events)
+      |GROUP BY 1, 2""".stripMargin
+
+  /** Streaming OHLC candle bars — first/last BY EVENT TIME as struct
+    * argmin/argmax inside the windowed agg
+    * ([[graft.streaming.EventStream.ohlcBars]]), gated against the batch
+    * OHLC SQL (`events_ohlc_bars`' dual-row_number formulation): the
+    * stream's struct-ordering argmax and the batch rank window must pick
+    * the SAME open/close for every bar, out-of-order arrival and all.
+    * Append mode — bars flush when the watermark sentinel passes. */
+  val eventsOhlcStream: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = true) {
+      EventStream.ohlcBars(EventStream.readEvents(s, evDir))
+    }
+      .filter(col("event_type") =!= "sentinel")
+      .select(unix_timestamp(col("bar_start")).as("bar_start"), col("event_type"),
+        col("open"), col("high"), col("low"), col("close"), col("n"),
+        col("volume_cents"))
+  }
+  val eventsOhlcStreamSql =
+    """WITH e AS (SELECT event_type, (epoch_us(ts) // 1800000000) * 1800 AS bar_start,
+      |                  epoch_us(ts) AS t, event_id, value FROM events),
+      |r AS (SELECT *,
+      |        row_number() OVER (PARTITION BY event_type, bar_start
+      |          ORDER BY t ASC, event_id ASC) AS rn_a,
+      |        row_number() OVER (PARTITION BY event_type, bar_start
+      |          ORDER BY t DESC, event_id DESC) AS rn_d
+      |      FROM e)
+      |SELECT bar_start, event_type,
+      |  max(CASE WHEN rn_a = 1 THEN value END) AS open,
+      |  max(value) AS high, min(value) AS low,
+      |  max(CASE WHEN rn_d = 1 THEN value END) AS close,
+      |  count(*) AS n,
+      |  CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT) AS volume_cents
+      |FROM r GROUP BY 1, 2""".stripMargin
+
+  /** Watermark-bounded streaming dedup
+    * ([[graft.streaming.EventStream.streamingDedup]],
+    * `dropDuplicatesWithinWatermark`). The staged source holds every event
+    * TWICE plus the watermark sentinel; the stream must emit each event
+    * exactly ONCE, and the oracle is simply the events table. Duplicates are
+    * full-row identical, so whichever copy survives, the output is
+    * byte-identical — no ordering sensitivity. Emission is immediate (the
+    * watermark only bounds dedup STATE, never delays output), so the flush
+    * batch is skipped. */
+  val eventsDedupStream: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir, duplicate = true)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = false) {
+      EventStream.streamingDedup(EventStream.readEvents(s, evDir))
+    }
+      .filter(col("event_type") =!= "sentinel")
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+  }
+  val eventsDedupStreamSql =
+    "SELECT event_id, user_id, event_type, value FROM events"
+
+  /** Stream-STATIC join under the oracle gate
+    * ([[graft.streaming.EventStream.enrichWithDim]]): the event stream
+    * enriched with the static customer dimension, broadcast per
+    * micro-batch. STATELESS — no watermark, no state store, rows emit in
+    * their data batch, so both the flush batch and the sentinel row are
+    * irrelevant (the sentinel's user -1 matches no customer and drops out
+    * of the inner join). The oracle is the plain batch join. */
+  val eventsEnrichStream: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = false) {
+      val dim = table(s, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment"), col("c_nationkey"))
+      EventStream.enrichWithDim(EventStream.readEvents(s, evDir), dim, "user_id", "c_custkey")
+        .select(col("event_id"), col("user_id"), col("event_type"), col("value"),
+          col("c_mktsegment"), col("c_nationkey"))
+    }
+  }
+  val eventsEnrichStreamSql =
+    """SELECT e.event_id, e.user_id, e.event_type, e.value,
+      |  c.c_mktsegment, c.c_nationkey
+      |FROM events e JOIN customer c ON e.user_id = c.c_custkey""".stripMargin
+
+  /** CUSTOM streaming state: per-user sessionization via
+    * flatMapGroupsWithState in event time
+    * ([[graft.streaming.EventStream.sessionize]] — exact-µs gap math,
+    * integer-cents accumulation, EventTimeTimeout session close). The
+    * watermark sentinel times every session out; the oracle reconstructs
+    * identical sessions with the lag/cumsum SQL (strict `>` gap rule, same
+    * as the batch twin events_sessionize). This gates arbitrary
+    * user-defined streaming state, not just built-in windows/dedup. */
+  val eventsStatefulStream: Q = (s, dir) => {
+    import s.implicits._
+    val evDir = stagedEventsDir(s, dir)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = true) {
+      EventStream.sessionize(EventStream.readEvents(s, evDir)
+        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
+        .as[EventStream.Event]).toDF()
+    }
+      .filter(col("user_id") =!= -1L) // the sentinel's own never-closed state
+      .select(col("user_id"), col("start_us"), col("n_events").cast("long").as("n_events"),
+        (col("value_cents") / 100.0).as("session_value"))
+  }
+  val eventsStatefulStreamSql =
+    """SELECT user_id, min(ts_us) AS start_us, count(*) AS n_events,
+      |  sum(CAST(floor(value * 100) AS BIGINT)) / 100.0 AS session_value
+      |FROM (
+      |  SELECT user_id, value, ts_us,
+      |    CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+      |  FROM (
+      |    SELECT user_id, value, event_id, ts_us,
+      |      CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
+      |        OR ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) > 1800000000
+      |        THEN 1 ELSE 0 END AS new_session
+      |    FROM (SELECT user_id, value, event_id, epoch_us(ts) AS ts_us FROM events)))
+      |GROUP BY user_id, session_id""".stripMargin
+
+  /** The INCREMENTAL MATERIALIZED VIEW shape: update-mode streaming
+    * aggregation + foreachBatch upsert into a serving store. Each
+    * micro-batch emits the keys whose aggregates changed (with their full
+    * new values — Spark streaming-agg update semantics); foreachBatch
+    * appends them to a batch-stamped delta log, and the view is
+    * materialized as latest-value-per-key — how a 100 TB/day pipeline keeps
+    * a dashboard table fresh without recomputing history.
+    * `maxFilesPerTrigger` forces MULTIPLE micro-batches so the upsert path
+    * (later batch overwrites earlier value) is genuinely exercised; the
+    * oracle is the plain batch GROUP BY. Unwatermarked agg state is bounded
+    * by key cardinality (event types), the right trade for a
+    * low-cardinality serving view. The log dir exists before the run and
+    * is read with its known schema, so a source with no events (every batch
+    * empty, nothing appended) gives an empty view. */
+  val streamUpsertMv: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir)
+    val run = new StreamRun(s)
+    val logDir = run.path("delta_log")
+    new java.io.File(logDir).mkdirs()
+    run.run(Seq(evDir), needsWatermarkFlush = false) {
+      EventStream.incrementalCounts(EventStream.readEvents(s, evDir, maxFilesPerTrigger = 8))
+        .writeStream.outputMode("update")
+        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+          if (!batch.isEmpty)
+            batch.withColumn("batch_id", lit(batchId))
+              .write.mode("append").parquet(logDir)
+        }
+    }
+    EventStream.materializeLatest(
+      s.read.schema("event_type STRING, n LONG, cents LONG, batch_id LONG").parquet(logDir))
+      .filter(col("event_type") =!= "sentinel")
+      .select(col("event_type"), col("n"), (col("cents") / 100.0).as("total"))
+  }
+  val streamUpsertMvSql =
+    """SELECT event_type, count(*) AS n,
+      |  sum(CAST(floor(value * 100) AS BIGINT)) / 100.0 AS total
+      |FROM events GROUP BY event_type""".stripMargin
+
+  /** Watermarked STREAM-STREAM interval join in the oracle gate: clicks
+    * pair with the same user's views at-or-before within 30 minutes
+    * ([[graft.streaming.EventStream.correlate]] — both sides watermarked,
+    * the time bound in the join condition evicts BOTH state stores at the
+    * horizon). Inner-join matches emit eagerly, so availableNow drains every
+    * pair without a sentinel or flush batch; the oracle is the equivalent
+    * batch join. Raw value pass-through (no accumulation) — float-exact. */
+  val eventsCorrelateStream: Q = (s, dir) => {
+    val clickDir = stagedEventsDir(s, dir, onlyType = Some("click"), sentinelUser = None)
+    val viewDir = stagedEventsDir(s, dir, onlyType = Some("view"), sentinelUser = None)
+    new StreamRun(s).toParquet(Seq(clickDir, viewDir), needsWatermarkFlush = false) {
+      EventStream.correlate(EventStream.readEvents(s, clickDir), EventStream.readEvents(s, viewDir))
+        .select(col("click_id"), col("view_id"), col("user_id"),
+          unix_micros(col("click_ts")).as("click_us"),
+          unix_micros(col("view_ts")).as("view_us"), col("click_value"))
+    }
+  }
+  val eventsCorrelateStreamSql =
+    """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id,
+      |  epoch_us(c.ts) AS click_us, epoch_us(v.ts) AS view_us,
+      |  c.value AS click_value
+      |FROM events c JOIN events v
+      |  ON c.event_type = 'click' AND v.event_type = 'view'
+      | AND v.user_id = c.user_id
+      | AND epoch_us(v.ts) <= epoch_us(c.ts)
+      | AND epoch_us(v.ts) >= epoch_us(c.ts) - 1800000000""".stripMargin
+
+  /** Watermarked LEFT-OUTER stream-stream join: the semantics inner joins
+    * cannot show. Matches emit eagerly like [[eventsCorrelateStream]];
+    * clicks that never find a view emit with NULL view columns only when
+    * the watermark EXPIRES their state — so both sides get a sentinel (see
+    * [[stagedEventsDir]]) and the final no-data micro-batch is kept (the
+    * watermark crossing is evaluated there). The click-side sentinel
+    * surfaces as an unmatched row and is filtered by id; the view-side one
+    * can match nothing. Oracle: the equivalent batch LEFT JOIN. */
+  val eventsLeftJoinStream: Q = (s, dir) => {
+    val clickDir = stagedEventsDir(s, dir, onlyType = Some("click"), sentinelUser = Some(-1L))
+    val viewDir = stagedEventsDir(s, dir, onlyType = Some("view"), sentinelUser = Some(-2L))
+    new StreamRun(s).toParquet(Seq(clickDir, viewDir), needsWatermarkFlush = true) {
+      EventStream.correlate(EventStream.readEvents(s, clickDir),
+        EventStream.readEvents(s, viewDir), joinType = "left_outer")
+        .select(col("click_id"), col("view_id"), col("user_id"),
+          unix_micros(col("click_ts")).as("click_us"),
+          unix_micros(col("view_ts")).as("view_us"), col("click_value"))
+    }.filter(col("click_id") >= 0)
+  }
+  val eventsLeftJoinStreamSql =
+    """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id,
+      |  epoch_us(c.ts) AS click_us, epoch_us(v.ts) AS view_us,
+      |  c.value AS click_value
+      |FROM (SELECT * FROM events WHERE event_type = 'click') c
+      |LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
+      |  ON v.user_id = c.user_id
+      | AND epoch_us(v.ts) <= epoch_us(c.ts)
+      | AND epoch_us(v.ts) >= epoch_us(c.ts) - 1800000000""".stripMargin
+
+  /** NATIVE session windows in streaming: the built-in SessionWindow
+    * operator (gap merging inside the stateful aggregate) under a
+    * watermark, versus the oracle's lag/cumsum SQL reconstruction. NOTE the
+    * boundary difference from events_stateful_stream: the native operator
+    * starts a NEW session at a gap of exactly 30 minutes (oracle rule
+    * `>=`), while the hand-rolled flatMapGroupsWithState machine —
+    * mirroring the batch twin events_sessionize — keeps an exact-30-minute
+    * gap in the SAME session (oracle rule `>`). Each entry is gated against
+    * its own rule; they are NOT interchangeable on knife-edge data. */
+  val eventsSessionWindowStream: Q = (s, dir) => {
+    val evDir = stagedEventsDir(s, dir)
+    new StreamRun(s).toParquet(Seq(evDir), needsWatermarkFlush = true) {
+      EventStream.readEvents(s, evDir)
+        .withWatermark("ts", "1 hour")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
+        .agg(count(lit(1)).as("n_events"),
+          sum(floor(col("value") * 100).cast("long")).as("cents"))
+        .select(col("user_id"), unix_micros(col("sw.start")).as("start_us"),
+          col("n_events"), col("cents"))
+    }
+      .filter(col("user_id") =!= -1L)
+      .select(col("user_id"), col("start_us"), col("n_events"),
+        (col("cents") / 100.0).as("session_value"))
+  }
+  val eventsSessionWindowStreamSql =
+    """SELECT user_id, min(ts_us) AS start_us, count(*) AS n_events,
+      |  sum(CAST(floor(value * 100) AS BIGINT)) / 100.0 AS session_value
+      |FROM (
+      |  SELECT user_id, value, ts_us,
+      |    sum(new_session) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+      |  FROM (
+      |    SELECT user_id, value, event_id, ts_us,
+      |      CASE WHEN lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) IS NULL
+      |        OR ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) >= 1800000000
+      |        THEN 1 ELSE 0 END AS new_session
+      |    FROM (SELECT user_id, value, event_id, epoch_us(ts) AS ts_us FROM events)))
+      |GROUP BY user_id, session_id""".stripMargin
+
+  /** Source/sink format breadth: the same projection round-trips through
+    * ORC, CSV, and JSON files, and each read-back must reproduce the exact
+    * row count and integer checksum the oracle computes straight from the
+    * parquet table — proving the writes AND reads are lossless. Values are
+    * projected to integers BEFORE writing so text formats carry no float
+    * representation risk. */
   val formatRoundtrip: Q = (s, dir) => {
     val tmp = java.nio.file.Files.createTempDirectory("graft-format-rt")
     cleanupAtExit(tmp)
@@ -859,8 +690,8 @@ object SinkOps {
     // write re-scans lineitem (pushdown or not, 3 scans of the fact table
     // for one selective projection; guide §2.4). The slice is
     // filter-bounded (l_orderkey < 1000), so materializing it is O(1) at
-    // any corpus scale. persist, NOT localCheckpoint (round 19, r18
-    // verdict task 6): same single scan, but lineage survives — a lost
+    // any corpus scale. persist, NOT localCheckpoint: same single scan,
+    // but lineage survives — a lost
     // executor recomputes the slice instead of killing the job — and the
     // cache is released below once the last write has consumed it.
     val li = table(s, dir, "lineitem").filter(col("l_orderkey") < 1000)
@@ -888,7 +719,7 @@ object SinkOps {
     }
     // the three writes above ran eagerly; the returned aggregates read the
     // written files, never `li` — release its cache here so a library
-    // caller does not leak it (the harness's clearCache masked this)
+    // caller does not leak it
     li.unpersist(blocking = false)
     frames.reduce(_ unionAll _)
   }
@@ -908,39 +739,25 @@ object SinkOps {
     * batch), so rows emit within their data micro-batch and the entry
     * shares the batch query's oracle verbatim — the equivalence claim IS
     * the gate. At scale the stream partitions by arrival file; the kernel
-    * cost is per-row and embarrassingly parallel. */
+    * cost is per-row and embarrassingly parallel. The source is staged into
+    * the run dir first, so its size sets the stream conf. */
   val pipelineCurateStream: Q = (s, dir) => {
-    // Stage the source FIRST so the stream-partition derivation can key on
-    // its size (round 19 — the one streaming entry the r18 derivation
-    // skipped; r18 verdict task 5). The staging write itself runs outside
-    // the wrapper at session parallelism (coalesce(4) bounds it anyway).
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-curate")
-    cleanupAtExit(tmp)
-    val src = new java.io.File(tmp.toFile, "src").getAbsolutePath
+    val run = new StreamRun(s)
+    val src = run.path("src")
     table(s, dir, "documents").filter(col("doc_id") < 300)
       .select(col("doc_id"),
         (lit(8000) + (col("doc_id") % 4) * 4000).cast("int").as("sr"),
         (lit(64) + (col("doc_id") * 5) % 320).cast("int").as("len"))
       .coalesce(4).write.mode("overwrite").parquet(src)
-    withStreamParallelism(s, needsWatermarkFlush = false, srcBytes = dirBytes(src)) {
-    val outDir = new java.io.File(tmp.toFile, "out").getAbsolutePath
-    val ckDir = new java.io.File(tmp.toFile, "ck").getAbsolutePath
-    val q = s.readStream.schema("doc_id LONG, sr INT, len INT").parquet(src)
-      .select(col("doc_id"),
-        graft.functions.Wav.curateUdf(
-          graft.functions.Wav.synthPcmUdf(col("sr"), col("len")), lit(4000)).as("cu"))
-      .select(col("doc_id"),
-        col("cu._1").as("n_frames"), col("cu._2").as("n_voiced"),
-        col("cu._3").as("kept_samples"), col("cu._4").as("n_out"),
-        round(col("cu._5"), 4).as("rms"))
-      .writeStream.format("parquet")
-      .option("path", outDir).option("checkpointLocation", ckDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    drain(q)
-    s.read.schema(
-      "doc_id LONG, n_frames INT, n_voiced INT, kept_samples INT, n_out INT, rms DOUBLE")
-      .parquet(outDir)
+    run.toParquet(Seq(src), needsWatermarkFlush = false) {
+      s.readStream.schema("doc_id LONG, sr INT, len INT").parquet(src)
+        .select(col("doc_id"),
+          graft.functions.Wav.curateUdf(
+            graft.functions.Wav.synthPcmUdf(col("sr"), col("len")), lit(4000)).as("cu"))
+        .select(col("doc_id"),
+          col("cu._1").as("n_frames"), col("cu._2").as("n_voiced"),
+          col("cu._3").as("kept_samples"), col("cu._4").as("n_out"),
+          round(col("cu._5"), 4).as("rms"))
     }
   }
   val pipelineCurateStreamSql: String = MultimodalOps.pipelineAudioCurateSql

@@ -2,8 +2,8 @@ package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.core._
-import org.apache.spark.sql.{DataFrame, GraftBridge, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
@@ -28,16 +28,15 @@ import scala.jdk.CollectionConverters._
   * Shape, as in the reference (src/main.rs:144-209): [[load]] reads the
   * sidecar once into the driver — a JSONL sidecar line by line through
   * [[graft.core.LocalFiles]] (`java.nio` on the local disk, the session's
-  * Hadoop FileSystem on another scheme), a CSV or Parquet one through one
-  * Spark read
+  * Hadoop FileSystem on another scheme), a CSV one through one Spark read
   * — and in that one pass votes the types, coerces the values and builds
-  * the two first-wins maps: an in-memory [[Sidecar]]. A JSONL sidecar's
-  * Catalyst values are built directly from its JSON, so its load builds no
-  * SQL `SessionState`; a CSV or Parquet one goes through Spark SQL and
-  * `CatalystTypeConverters` (ROADMAP direction 12). The pipeline's
-  * content pass calls [[Sidecar.resolve]] on a broadcast of it for each file
-  * ([[AudioScan.read]]); [[joinFiles]] makes the same call for each row of
-  * a frame of files, for the query surface.
+  * the two first-wins maps: an in-memory [[Sidecar]]. Its Catalyst values
+  * are built directly, from the JSON or the CSV strings; a JSONL load
+  * builds no SQL `SessionState`, a CSV one goes through Spark SQL (ROADMAP
+  * direction 12). The pipeline's content pass calls [[Sidecar.resolve]] on
+  * a broadcast of it for each file ([[AudioScan.read]]); [[joinFiles]]
+  * makes the same call for each row of a frame of files, for the query
+  * surface.
   *
   * Driver memory: the de-duplicated sidecar rows are held on the driver, and
   * the same rows are broadcast to every executor.
@@ -47,16 +46,12 @@ object Metadata {
   sealed trait Format
   case object Csv extends Format
   case object Jsonl extends Format
-  case object ParquetMeta extends Format
 
   /** reference: metadata_format_from_path, src/main.rs:266-277 —
-    * `.jsonl`/`.json` → JSONL, anything else (incl. no extension) → CSV.
-    * Engine extension: `.parquet` sidecars (large manifests) load natively. */
+    * `.jsonl`/`.json` → JSONL, anything else (incl. no extension) → CSV. */
   def formatFromPath(path: String): Format = {
     val ext = path.split('.').lastOption.map(_.toLowerCase).getOrElse("")
-    if (ext == "jsonl" || ext == "json") Jsonl
-    else if (ext == "parquet") ParquetMeta
-    else Csv
+    if (ext == "jsonl" || ext == "json") Jsonl else Csv
   }
 
   final case class MetaSchema(types: SortedMap[String, MetadataType]) {
@@ -121,9 +116,8 @@ object Metadata {
     */
   def load(spark: SparkSession, path: String): Sidecar = {
     val (schema, lines) = formatFromPath(path) match {
-      case Jsonl       => readJsonl(spark, path)
-      case Csv         => readFrame(spark.read.option("header", true).csv(path))
-      case ParquetMeta => readFrame(spark.read.parquet(path))
+      case Jsonl => readJsonl(spark, path)
+      case Csv   => readCsv(spark.read.option("header", true).csv(path))
     }
     val rows = mutable.ArrayBuffer.empty[InternalRow]
     val (byRel, byName) = (mutable.HashMap.empty[UTF8String, Int], mutable.HashMap.empty[UTF8String, Int])
@@ -136,28 +130,18 @@ object Metadata {
     Sidecar(schema, rows.toIndexedSeq, byRel.toMap, byName.toMap)
   }
 
-  /** CSV (every column String, src/main.rs:309-314) and the Parquet engine
-    * extension (numerics → Float64, booleans → Bool, arrays → List, anything
-    * else → String): the schema comes from the frame's own, and its rows are
-    * cast to it, collected in file order and converted to Catalyst rows. */
-  private def readFrame(raw: DataFrame): (MetaSchema, Seq[Line]) = {
-    def toMeta(dt: DataType): MetadataType = dt match {
-      case BooleanType          => MBool
-      case _: NumericType       => MFloat64
-      case ArrayType(inner, _)  => MList(toMeta(inner))
-      case _                    => MString
-    }
-    val schema = withTranscription(raw.schema.map(f => f.name -> toMeta(f.dataType)).toMap)
+  /** CSV: every column is String (src/main.rs:309-314). The rows are
+    * collected in file order, their values made `UTF8String`s. */
+  private def readCsv(raw: DataFrame): (MetaSchema, Seq[Line]) = {
+    val schema = withTranscription(raw.columns.map(_ -> (MString: MetadataType)).toMap)
     val have = raw.columns.toSet
-    def str(k: String) = if (have(k)) col(k).cast(StringType) else lit(null).cast(StringType)
-    val values = schema.keys.map { k =>
-      if (k == "transcription") coalesce(str(k), lit("-")) // src/main.rs:317-319
-      else col(k).cast(schema.types(k).toSpark)
-    }
-    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(StructType(schema.sparkFields))
+    def str(k: String) = if (have(k)) col(k) else lit(null).cast(StringType)
+    val values = schema.keys.map(k =>
+      if (k == "transcription") coalesce(str(k), lit("-")) else col(k)) // src/main.rs:317-319
     val lines = raw.select(str("relative_path") +: str("file_name") +: values: _*).collect()
       .map(r => (Option(r.getString(0)).map(PathNorm.normalize).orNull, r.getString(1),
-        toCatalyst(Row.fromSeq(r.toSeq.drop(2))).asInstanceOf[InternalRow]))
+        new GenericInternalRow(Array.tabulate[Any](values.length)(i =>
+          UTF8String.fromString(r.getString(i + 2)))): InternalRow))
     (schema, lines.toSeq)
   }
 

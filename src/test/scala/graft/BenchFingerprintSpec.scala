@@ -17,12 +17,12 @@ class BenchFingerprintSpec extends AnyFunSuite {
       "target/scala-2.13/graft-src.fp must exist after a compile under the r17 build definition")
     // this test RUNS from the classes that compile produced, so the
     // recorded hash must equal the recomputed one — this is the equality
-    // the whole mechanism rests on (it fails loudly if the two
-    // implementations of the hash ever drift)
-    assert(recorded.contains(Bench.codeFingerprint()),
-      s"recorded=$recorded recomputed=${Bench.codeFingerprint()} — " +
-        "build.sbt's graftSrcFingerprint drifted from Bench.codeFingerprint " +
-        "(or the source tree changed since the compile)")
+    // the whole mechanism rests on (build.sbt and Bench both call
+    // SrcFingerprint.of, the meta-build compiling the same file)
+    assert(recorded.contains(SrcFingerprint.of()),
+      s"recorded=$recorded recomputed=${SrcFingerprint.of()} — " +
+        "the source tree changed since the compile, or build.sbt no longer " +
+        "records SrcFingerprint.of")
   }
 
   test("touch-without-change stays clean: staleness ignores mtimes when a record exists") {
@@ -31,13 +31,13 @@ class BenchFingerprintSpec extends AnyFunSuite {
     val src = new java.io.File("src/main/scala/graft/Bench.scala")
     assert(src.isFile)
     assert(src.setLastModified(System.currentTimeMillis()))
-    val fp = Bench.codeFingerprint()
+    val fp = SrcFingerprint.of()
     assert(!Bench.staleAgainst(Bench.recordedSrcFp(), fp),
       "mtime churn must not evict a content-identical run from its median series")
   }
 
   test("a real source difference marks stale; an identical tree does not") {
-    val fp = Bench.codeFingerprint()
+    val fp = SrcFingerprint.of()
     assert(!Bench.staleAgainst(Some(fp), fp))
     // the recorded hash describing ANY other tree content => stale
     assert(Bench.staleAgainst(Some("0123456789abcdef"), fp),

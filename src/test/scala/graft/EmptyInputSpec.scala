@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.queries.{Analytics, LakeOps, TextOps, VectorOps}
+import graft.queries.{Analytics, LakeOps, SinkOps, TextOps, VectorOps}
 
 /** Degenerate-input battery: every pipeline operator must survive EMPTY
   * source tables (0-row parquet with the production schema) — at 100 TB a
@@ -129,6 +129,21 @@ class EmptyInputSpec extends SparkSpec {
     val h = Analytics.hllDistinct(spark, emptyDir).collect()
     assert(h.length == 1 && h.head.getString(0) == "__all__" && h.head.getLong(1) == 0)
     assert(Analytics.topkEventsAgg(spark, emptyDir).count() == 0)
+    // the streaming oracle entries (pipeline_curate_stream is in the corpus test)
+    Seq(
+      "events_tumbling_stream" -> SinkOps.eventsTumblingStream,
+      "events_hopping_stream" -> SinkOps.eventsHoppingStream,
+      "events_ohlc_stream" -> SinkOps.eventsOhlcStream,
+      "events_dedup_stream" -> SinkOps.eventsDedupStream,
+      "events_enrich_stream" -> SinkOps.eventsEnrichStream,
+      "events_stateful_stream" -> SinkOps.eventsStatefulStream,
+      "stream_upsert_mv" -> SinkOps.streamUpsertMv,
+      "events_correlate_stream" -> SinkOps.eventsCorrelateStream,
+      "events_left_join_stream" -> SinkOps.eventsLeftJoinStream,
+      "events_session_window_stream" -> SinkOps.eventsSessionWindowStream
+    ).foreach { case (name, q) =>
+      assert(q(spark, emptyDir).count() == 0, s"$name not empty-safe")
+    }
   }
 
   test("lakehouse operators return cleanly on empty tables") {

@@ -332,23 +332,6 @@ class PipelineSpec extends SparkSpec {
     assert(df.head().getAs[Row]("audio").getAs[String]("path") == "top.wav")
   }
 
-  test("e2e: parquet metadata sidecar (engine extension) joins with typed columns") {
-    val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
-    writeFile(in, "p.wav", Wav.synthWav(16000, 16000))
-    val s = spark
-    import s.implicits._
-    val metaPath = new java.io.File(tmpDir("graft-meta"), "meta.parquet")
-    Seq(("p.wav", "from parquet", 3.5, true))
-      .toDF("relative_path", "transcription", "snr", "verified")
-      .coalesce(1).write.mode("overwrite").parquet(metaPath.getAbsolutePath)
-    AudioToDataset.run(spark, AudioToDataset.Config(
-      in.getAbsolutePath, out.getAbsolutePath, Some(metaPath.getAbsolutePath)))
-    val df = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
-    val row = df.head()
-    assert(row.getAs[String]("transcription") == "from parquet")
-    assert(row.getAs[Double]("snr") == 3.5 && row.getAs[Boolean]("verified"))
-  }
-
   test("audio exploder: dataset → files round trip preserves bytes and tree") {
     val in = tmpDir("graft-in"); val out = tmpDir("graft-out"); val back = tmpDir("graft-back")
     val wavA = Wav.synthWav(16000, 8000)

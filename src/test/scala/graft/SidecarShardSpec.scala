@@ -97,6 +97,11 @@ class SidecarShardSpec extends SparkSpec {
     assert(resolved(run(in, sidecar)) == expected)
   }
 
+  test("a sidecar named meta.parquet is read as CSV, as every name but .jsonl/.json is (S4)") {
+    val (in, sidecar) = tree("meta.parquet", csv)
+    assert(resolved(run(in, sidecar)) == expected)
+  }
+
   test("joinFiles resolves each relative path as the pipeline does; a null path gets the default") {
     val s = spark
     import s.implicits._
