@@ -13,7 +13,7 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 TAG="$1"; QUERIES="$2"; RUNS="${3:-3}"; SF="${4:-/root/testdata/sf0.1}"
 for i in $(seq 1 "$RUNS"); do
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
   SPARK_GRAFT_ONLY="$QUERIES" \
   SPARK_GRAFT_BENCH_OUT="/tmp/ab_${TAG}_run${i}.out" \
   SPARK_GRAFT_BENCH_HIST="/tmp/ab_${TAG}_hist.jsonl" \

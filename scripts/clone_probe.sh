@@ -33,7 +33,8 @@ ensure "$SCALE/sf10"       /root/testdata/sf0.1 100
 
 probe() { # <sfDir> <outJson>
   echo "[clone_probe] probing $1 -> $2"
-  SPARK_GRAFT_SF_DIR=$1 SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
+  SPARK_GRAFT_SF_DIR=$1 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
+  SPARK_GRAFT_SHUFFLE_PARTITIONS=256 \
   SPARK_GRAFT_ONLY=$QUERIES SPARK_GRAFT_BENCH_OUT=$2 \
     scripts/run_main.sh graft.Bench >/dev/null
   cat "$2"

@@ -12,7 +12,7 @@ cd "$(dirname "$0")/.."
 
 SF="${1:-/root/testdata/sf0.01}"
 OUT="${2:-/tmp/graft_judge}"
-CPUS="${SPARK_GRAFT_CPUS:-8}"
+CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 
 echo "== 1/3 graft.Verify $SF -> $OUT (local[$CPUS])"
 rm -rf "$OUT"

@@ -83,7 +83,7 @@ print(json.dumps({"file": p, "bytes": n, "read_s": round(dt, 4),
                   "meminfo_cached_kb": cached_kb}, separators=(",", ":")))
 PY
 )
-    SPARK_GRAFT_SF_DIR="$SCALE/sf100" SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_SF_DIR="$SCALE/sf100" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
     SPARK_GRAFT_SHUFFLE_PARTITIONS=256 SPARK_GRAFT_ONLY=q21_waiting_suppliers \
     SPARK_GRAFT_BENCH_OUT="$OUT" \
       scripts/run_main.sh graft.Bench >/dev/null

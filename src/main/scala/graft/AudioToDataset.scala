@@ -4,9 +4,9 @@ import graft.core.GraftSession
 import graft.operators.Sharding
 import graft.sinks.{DuckDbShardSink, ParquetShardSink, ShardCommit, TarShardSink}
 import graft.sources.{AudioScan, Metadata}
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
@@ -28,9 +28,8 @@ import org.apache.spark.util.SerializableConfiguration
   *     → audio struct assembly (P6)
   *     → exact-name Parquet (K1), DuckDB (K2) or tar shards
   *
-  * No Catalyst plan is analyzed, optimized or code-generated on the way
-  * (a CSV sidecar is still loaded by a Spark read), and a run on
-  * `file:` paths with a JSONL sidecar or none builds no SQL `SessionState`.
+  * The run needs only a `SparkContext`: no Catalyst plan is analyzed,
+  * optimized or code-generated on the way, and no `SparkSession` is built.
   *
   * All defaults mirror the reference's clap args (src/main.rs:55-95).
   */
@@ -61,7 +60,7 @@ object AudioToDataset {
     * metadata schema; the number of shards, for the write job's label
     * (`rows` has one partition even when a run has no shard, so it cannot
     * be read from there); and, when the input or the output is on another
-    * scheme than `file:`, a broadcast of the session's Hadoop conf, which a
+    * scheme than `file:`, a broadcast of the context's Hadoop conf, which a
     * sniff job, the read and the write share. A `file:` run ships no conf:
     * its tasks read and write through [[graft.core.LocalFiles]]. */
   final case class Plan(
@@ -71,21 +70,24 @@ object AudioToDataset {
       shards: Int,
       conf: Option[Broadcast[SerializableConfiguration]])
 
-  def plan(spark: SparkSession, cfg: Config): Plan = {
-    val sidecar = cfg.metadataFile.fold(Metadata.NoSidecar)(Metadata.load(spark, _))
-    val conf = GraftSession.hadoopConf(spark, cfg.input, cfg.output)
+  def plan(sc: SparkContext, cfg: Config): Plan = {
+    val sidecar = cfg.metadataFile.fold(Metadata.NoSidecar)(Metadata.load(sc, _))
+    val conf = GraftSession.hadoopConf(sc, cfg.input, cfg.output)
     // X1: shard order is relative-path order (documented divergence from the
     // platform-dependent directory iterator, SURVEY.md §7.4); no audio byte
     // is read before the task that writes its shard
-    val kept = AudioScan.scan(spark, cfg.input, cfg.maxDepth, cfg.metadataFile,
+    val kept = AudioScan.scan(sc, cfg.input, cfg.maxDepth, cfg.metadataFile,
         cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives, conf)
     kept.foreach(AudioScan.requireFits) // before any shard is written
     val shards = Sharding.consecutiveShards(kept, cfg.filesPerShard)(_.relativePath)
-    Plan(AudioScan.read(spark, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema,
+    Plan(AudioScan.read(sc, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema,
       shards.length, conf)
   }
 
-  def run(spark: SparkSession, cfg: Config): Unit = {
+  /** [[run]] on the session's context, for callers that hold a session. */
+  def run(spark: org.apache.spark.sql.SparkSession, cfg: Config): Unit = run(spark.sparkContext, cfg)
+
+  def run(sc: SparkContext, cfg: Config): Unit = {
     // the sink is chosen, and its options checked, before the planning pass
     require(cfg.filesPerShard >= 1, s"--files-per-db must be at least 1, got ${cfg.filesPerShard}")
     val ext = ShardCommit.extension(cfg.format)
@@ -98,9 +100,9 @@ object AudioToDataset {
       case "tar" => // engine extension: WebDataset tar shards for training loaders
         p => TarShardSink.writeShards(p.rows, cfg.output, p.conf, p.meta.types.toSeq)
     }
-    val p = plan(spark, cfg)
-    ShardCommit.sweep(cfg.output, cfg.format, spark.sessionState.newHadoopConf()) // a killed run's temporaries
-    GraftSession.labelled(spark.sparkContext, s"graft: write ${p.shards} $ext shards")(write(p))
+    val p = plan(sc, cfg)
+    ShardCommit.sweep(cfg.output, cfg.format, sc.hadoopConfiguration) // a killed run's temporaries
+    GraftSession.labelled(sc, s"graft: write ${p.shards} $ext shards")(write(p))
   }
 
   /** CLI mirroring the reference's flags. */
@@ -122,12 +124,12 @@ object AudioToDataset {
     // --num-threads mirrors the reference's rayon pool size (src/main.rs:79-81);
     // it sizes the `local[n]` master only (the run has no SQL shuffle).
     val numThreads = arg("num-threads").map(_.toInt)
-    val builder = SparkSession.builder().appName("audios-to-dataset-spark")
+    val conf = new SparkConf().setAppName("audios-to-dataset-spark")
     // Under spark-submit the master comes from the launcher; standalone runs
     // (sbt runMain, plain java -jar) default to all local cores.
     if (sys.props.get("spark.master").isEmpty && sys.env.get("MASTER").isEmpty)
-      builder.master(numThreads.fold("local[*]")(n => s"local[$n]"))
-    val spark = builder.getOrCreate()
-    try run(spark, cfg) finally spark.stop()
+      conf.setMaster(numThreads.fold("local[*]")(n => s"local[$n]"))
+    val sc = new SparkContext(conf)
+    try run(sc, cfg) finally sc.stop()
   }
 }

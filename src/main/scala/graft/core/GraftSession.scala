@@ -9,11 +9,9 @@ import org.apache.spark.util.SerializableConfiguration
 /** THE engine configuration, shared by every driver-facing entrypoint.
   *
   * Verify (the correctness gate) and Bench (the performance record) must
-  * run the SAME planner/runtime configuration — the round-11 RocksDB
-  * adoption stated the principle ("the correctness gate must run what the
-  * bench runs") and round 12's calibrated broadcast bounds briefly violated
-  * it (Bench set them, Verify defaulted to 10 MB: semantics-preserving but
-  * a join-strategy divergence the gate never exercised). This object is the
+  * run the SAME planner/runtime configuration: the gate must run what the
+  * bench runs, or a join strategy the bench takes (say, under a broadcast
+  * bound the gate leaves at 10 MB) goes unchecked. This object is the
   * single source of truth; entrypoints add only their genuinely-local knobs
   * (Bench's EXTRA_CONF passthrough, Verify's assertPlans).
   */
@@ -31,22 +29,22 @@ object GraftSession {
       // dimension; these thresholds let a ≤512 MB filtered build side
       // prune a ≥1 GB probe scan BEFORE the shuffle. Inert at the driver's
       // sf0.1 (all scans < 1 GB); measured at sf100: q5 268 s → 139 s
-      // (SCALING.md round-11). Semantics-preserving.
+      // (SCALING.md). Semantics-preserving.
       .config("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "512MB")
       .config("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "1GB")
       // RocksDB state store: incremental per-batch state updates instead
       // of the HDFS store's full in-memory map copy per version. Parity at
       // sf0.1 (25.6 s vs 26.1 s streaming subtotal); 5× on the stateful
       // entries at sf100 (events_stateful_stream 161 → 30 s,
-      // events_ohlc_stream 87 → 16 s — SCALING.md round-11).
+      // events_ohlc_stream 87 → 16 s — SCALING.md).
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Broadcast decisions bounded by SIZE instead of forced hints:
-      // round 12 removed the explicit broadcast() hints from every
-      // sf-proportional dimension build (a hint pins the build in executor
-      // memory at ANY scale and disables the demote-to-SMJ escape — the
-      // fourth-decade OOM). The default 10 MB caps would instead demote
-      // the measured-24-200 MB sf100 builds that were benched green. The
+      // Broadcast decisions bounded by SIZE instead of forced hints: no
+      // sf-proportional dimension build carries a broadcast() hint (a hint
+      // pins the build in executor memory at ANY scale and disables the
+      // demote-to-SMJ escape, so a growing build runs out of memory). The
+      // default 10 MB caps would instead demote the measured 24-200 MB
+      // sf100 builds that were benched green. The
       // STATIC threshold must rise TOO, not just AQE's: a leaf-level
       // static SMJ schedules BOTH children's shuffle map phases together,
       // so the fact side has already written its exchange by the time AQE
@@ -72,13 +70,13 @@ object GraftSession {
       // never share (or sweep) each other's tables — see EphemeralWarehouse
       .config("spark.sql.warehouse.dir", EphemeralWarehouse.dir)
 
-  /** The session's Hadoop conf, its `spark.hadoop.*` settings included,
+  /** The context's Hadoop conf, its `spark.hadoop.*` settings included,
     * broadcast for the tasks that read or write one of `paths` through a
     * Hadoop FileSystem; None when every path is on the local disk, which
     * tasks reach through [[LocalFiles]] with no conf. */
-  def hadoopConf(spark: SparkSession, paths: String*): Option[Broadcast[SerializableConfiguration]] =
+  def hadoopConf(sc: SparkContext, paths: String*): Option[Broadcast[SerializableConfiguration]] =
     if (paths.forall(LocalFiles.of(_).isDefined)) None
-    else Some(spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf())))
+    else Some(sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
 
   /** In a task, the conf [[hadoopConf]] shipped; fails naming `path`, the
     * file that needed one, when none was. */

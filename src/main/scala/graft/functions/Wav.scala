@@ -17,56 +17,27 @@ import org.apache.spark.sql.functions.udf
 object Wav {
   final case class WavInfo(duration: Double, sampling_rate: Int)
 
-  def parse(bytes: Array[Byte]): WavInfo = {
-    try {
-      if (bytes == null || bytes.length < 44) return WavInfo(0.0, 0)
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      if (bb.getInt(0) != 0x46464952 /* "RIFF" LE */ ||
-          bb.getInt(8) != 0x45564157 /* "WAVE" LE */ ) return WavInfo(0.0, 0)
-      var pos = 12
-      var sampleRate = 0
-      var blockAlign = 0
-      var dataSize = -1L
-      var haveFmt = false
-      while (pos + 8 <= bytes.length && (dataSize < 0 || !haveFmt)) {
-        val chunkId = bb.getInt(pos)
-        val chunkSize = bb.getInt(pos + 4).toLong & 0xffffffffL
-        if (chunkId == 0x20746d66 /* "fmt " */ && pos + 24 <= bytes.length) {
-          sampleRate = bb.getInt(pos + 12)
-          blockAlign = bb.getShort(pos + 20) & 0xffff
-          haveFmt = true
-        } else if (chunkId == 0x61746164 /* "data" */) {
-          // Actual payload may be truncated; hound reports frames present.
-          val avail = math.max(0L, bytes.length.toLong - (pos + 8))
-          dataSize = math.min(chunkSize, avail)
-        }
-        pos += 8 + chunkSize.toInt + (chunkSize.toInt & 1) // chunks are 2-aligned
-        if (chunkSize > Int.MaxValue) return WavInfo(0.0, 0)
-      }
-      if (!haveFmt || dataSize < 0 || sampleRate <= 0 || blockAlign <= 0)
-        return WavInfo(0.0, 0)
-      val frames = dataSize / blockAlign
-      WavInfo(frames.toDouble / sampleRate, sampleRate)
-    } catch { case _: Throwable => WavInfo(0.0, 0) }
-  }
+  def parse(bytes: Array[Byte]): WavInfo =
+    layout(bytes).fold(WavInfo(0.0, 0))(l => WavInfo((l.dataLen / l.blockAlign).toDouble / l.sampleRate, l.sampleRate))
 
   /** `wav_parse(bytes) -> struct<duration double, sampling_rate int>`. */
   val parseUdf = udf((b: Array[Byte]) => parse(b))
 
-  /** REAL sample decode for 16-bit PCM WAV: RMS over the int16 samples, plus
-    * header info — `(rms, sampling_rate, duration)`. `None` for non-WAV,
-    * non-PCM16, or corrupt bytes (callers fall back to a byte-level stat).
-    * Unlike [[parse]] this reads the payload, so it costs O(data bytes) —
-    * exactly what a feature-extraction kernel is expected to do.
-    */
-  /** PCM16 WAV payload layout: (dataOff, nSamples, sampleRate, blockAlign),
-    * or None for non-WAV / non-PCM16 / corrupt bytes. */
-  private def pcm16Layout(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] = {
+  /** What one walk of a RIFF/WAVE file's chunks finds: the fmt fields and
+    * the data chunk's offset and length, which a truncated chunk cuts to
+    * the bytes present (hound reports the frames present). */
+  private final case class Layout(
+      audioFormat: Int, sampleRate: Int, blockAlign: Int, bits: Int, dataOff: Int, dataLen: Long)
+
+  /** The [[Layout]] of a WAV file, or None for non-WAV or corrupt bytes, a
+    * missing fmt or data chunk, a chunk over 2 GiB, or a zero rate or
+    * block align. Chunks may come in any order, and are 2-aligned. */
+  private def layout(bytes: Array[Byte]): Option[Layout] = {
     try {
       if (bytes == null || bytes.length < 44) return None
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      if (bb.getInt(0) != 0x46464952 /* "RIFF" */ ||
-          bb.getInt(8) != 0x45564157 /* "WAVE" */ ) return None
+      if (bb.getInt(0) != 0x46464952 /* "RIFF" LE */ ||
+          bb.getInt(8) != 0x45564157 /* "WAVE" LE */ ) return None
       var pos = 12
       var audioFormat = 0
       var sampleRate = 0
@@ -91,12 +62,35 @@ object Wav {
         if (chunkSize > Int.MaxValue) return None
         pos += 8 + chunkSize.toInt + (chunkSize.toInt & 1)
       }
-      if (!haveFmt || dataOff < 0 || audioFormat != 1 || bits != 16 ||
-          sampleRate <= 0 || blockAlign <= 0) return None
-      Some((dataOff, (dataLen / 2).toInt, sampleRate, blockAlign))
+      if (!haveFmt || dataOff < 0 || sampleRate <= 0 || blockAlign <= 0) None
+      else Some(Layout(audioFormat, sampleRate, blockAlign, bits, dataOff, dataLen))
     } catch { case _: Throwable => None }
   }
 
+  /** PCM16 WAV payload layout: (dataOff, nSamples, sampleRate, blockAlign),
+    * or None for non-WAV / non-PCM16 / corrupt bytes. */
+  private def pcm16Layout(bytes: Array[Byte]): Option[(Int, Int, Int, Int)] =
+    layout(bytes).collect { case l if l.audioFormat == 1 && l.bits == 16 =>
+      (l.dataOff, (l.dataLen / 2).toInt, l.sampleRate, l.blockAlign)
+    }
+
+  /** Summed |sample| of frame `f`, `frameSize` PCM16 samples, of the data at `dataOff`. */
+  private def frameSum(bb: ByteBuffer, dataOff: Int, f: Int, frameSize: Int): Long = {
+    var sum = 0L
+    var i = 0
+    while (i < frameSize) {
+      sum += math.abs(bb.getShort(dataOff + 2 * (f * frameSize + i)).toInt)
+      i += 1
+    }
+    sum
+  }
+
+  /** REAL sample decode for 16-bit PCM WAV: RMS over the int16 samples, plus
+    * header info — `(rms, sampling_rate, duration)`. `None` for non-WAV,
+    * non-PCM16, or corrupt bytes (callers fall back to a byte-level stat).
+    * Unlike [[parse]] this reads the payload, so it costs O(data bytes) —
+    * exactly what a feature-extraction kernel is expected to do.
+    */
   def pcm16Rms(bytes: Array[Byte]): Option[(Double, Int, Double)] =
     pcm16Layout(bytes).map { case (dataOff, nSamples, sampleRate, blockAlign) =>
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
@@ -130,12 +124,7 @@ object Wav {
         var total = 0L
         var f = 0
         while (f < nFrames) {
-          var sum = 0L
-          var i = 0
-          while (i < frameSize) {
-            sum += math.abs(bb.getShort(dataOff + 2 * (f * frameSize + i)).toInt)
-            i += 1
-          }
+          val sum = frameSum(bb, dataOff, f, frameSize)
           if (sum < thresh) silent += 1
           total += sum
           f += 1
@@ -194,12 +183,7 @@ object Wav {
         var last = -1
         var f = 0
         while (f < nFrames) {
-          var sum = 0L
-          var i = 0
-          while (i < frameSize) {
-            sum += math.abs(bb.getShort(dataOff + 2 * (f * frameSize + i)).toInt)
-            i += 1
-          }
+          val sum = frameSum(bb, dataOff, f, frameSize)
           if (sum >= thresh) {
             voiced += 1
             if (first < 0) first = f
@@ -267,12 +251,7 @@ object Wav {
         val e = new Array[Long](nFrames)
         var f = 0
         while (f < nFrames) {
-          var sum = 0L
-          var i = 0
-          while (i < frameSize) {
-            sum += math.abs(bb.getShort(dataOff + 2 * (f * frameSize + i)).toInt)
-            i += 1
-          }
+          val sum = frameSum(bb, dataOff, f, frameSize)
           e(f) = sum
           f += 1
         }
@@ -291,22 +270,9 @@ object Wav {
     * `lengthSamples` frames of a 440 Hz sine at `sampleRate`, i16 max amplitude.
     * Used by specs and the verification surface; NOT part of the pipeline.
     */
-  def synthWav(sampleRate: Int, lengthSamples: Int): Array[Byte] = {
-    val dataSize = lengthSamples * 2
-    val bb = ByteBuffer.allocate(44 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(0x46464952); bb.putInt(36 + dataSize); bb.putInt(0x45564157)
-    bb.putInt(0x20746d66); bb.putInt(16)
-    bb.putShort(1); bb.putShort(1)            // PCM, mono
-    bb.putInt(sampleRate); bb.putInt(sampleRate * 2)
-    bb.putShort(2); bb.putShort(16)           // block align, bits
-    bb.putInt(0x61746164); bb.putInt(dataSize)
-    var i = 0
-    while (i < lengthSamples) {
-      val v = (math.sin(2.0 * math.Pi * 440.0 * i / sampleRate) * Short.MaxValue).toShort
-      bb.putShort(v); i += 1
-    }
-    bb.array()
-  }
+  def synthWav(sampleRate: Int, lengthSamples: Int): Array[Byte] =
+    pcm16Wav(sampleRate, lengthSamples)(i =>
+      (math.sin(2.0 * math.Pi * 440.0 * i / sampleRate) * Short.MaxValue).toShort)
 
   val synthUdf = udf((sr: Int, len: Int) => synthWav(sr, len))
 
@@ -315,21 +281,8 @@ object Wav {
     * oracle can recompute the exact samples (the sine fixture's `sin` is not
     * bit-portable across math libraries). Spec/verification use only.
     */
-  def synthPcmWav(sampleRate: Int, lengthSamples: Int): Array[Byte] = {
-    val dataSize = lengthSamples * 2
-    val bb = ByteBuffer.allocate(44 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
-    bb.putInt(0x46464952); bb.putInt(36 + dataSize); bb.putInt(0x45564157)
-    bb.putInt(0x20746d66); bb.putInt(16)
-    bb.putShort(1); bb.putShort(1)            // PCM, mono
-    bb.putInt(sampleRate); bb.putInt(sampleRate * 2)
-    bb.putShort(2); bb.putShort(16)           // block align, bits
-    bb.putInt(0x61746164); bb.putInt(dataSize)
-    var i = 0
-    while (i < lengthSamples) {
-      bb.putShort(((i * 2654435761L) % 65536L - 32768L).toShort); i += 1
-    }
-    bb.array()
-  }
+  def synthPcmWav(sampleRate: Int, lengthSamples: Int): Array[Byte] =
+    synthPcmWavSeeded(sampleRate, lengthSamples, 0L)
 
   val synthPcmUdf = udf((sr: Int, len: Int) => synthPcmWav(sr, len))
 
@@ -337,7 +290,12 @@ object Wav {
     * CONTENT a function of the seed, so fixtures can model distinct
     * recordings (same formula shifted) rather than truncations of one
     * signal — what the fingerprint-dedup surface needs. */
-  def synthPcmWavSeeded(sampleRate: Int, lengthSamples: Int, seed: Long): Array[Byte] = {
+  def synthPcmWavSeeded(sampleRate: Int, lengthSamples: Int, seed: Long): Array[Byte] =
+    pcm16Wav(sampleRate, lengthSamples)(i => (((i + seed) * 2654435761L) % 65536L - 32768L).toShort)
+
+  /** A 44-byte-header mono 16-bit PCM WAV of `lengthSamples` samples at
+    * `sampleRate`, sample `i` being `sample(i)`. */
+  private def pcm16Wav(sampleRate: Int, lengthSamples: Int)(sample: Int => Int): Array[Byte] = {
     val dataSize = lengthSamples * 2
     val bb = ByteBuffer.allocate(44 + dataSize).order(ByteOrder.LITTLE_ENDIAN)
     bb.putInt(0x46464952); bb.putInt(36 + dataSize); bb.putInt(0x45564157)
@@ -346,10 +304,7 @@ object Wav {
     bb.putInt(sampleRate); bb.putInt(sampleRate * 2)
     bb.putShort(2); bb.putShort(16)           // block align, bits
     bb.putInt(0x61746164); bb.putInt(dataSize)
-    var i = 0
-    while (i < lengthSamples) {
-      bb.putShort((((i + seed) * 2654435761L) % 65536L - 32768L).toShort); i += 1
-    }
+    (0 until lengthSamples).foreach(i => bb.putShort(sample(i).toShort))
     bb.array()
   }
 

@@ -55,7 +55,7 @@ object MetadataOps {
   /** S2+S4+F6+J1+J2+P8 through the real loader and join. */
   val s2CsvMetadataJoin: Q = (s, dir) => {
     val path = writeCsv(s, dir)
-    val sidecar = Metadata.load(s, path) // dispatch: .csv → CSV (S4)
+    val sidecar = Metadata.load(s.sparkContext, path) // dispatch: .csv → CSV (S4)
     val files = table(s, dir, "documents")
       .select(col("doc_id"), concat(lit("docs/doc"), col("doc_id"), lit(".wav")).as("relative_path"))
     Metadata.joinFiles(files, sidecar)
@@ -97,7 +97,7 @@ object MetadataOps {
     * stays Bool, `tags` stays List(String). */
   val s3JsonlMetadataJoin: Q = (s, dir) => {
     val path = writeJsonl(s, dir)
-    val sidecar = Metadata.load(s, path)
+    val sidecar = Metadata.load(s.sparkContext, path)
     val files = table(s, dir, "documents")
       .select(col("doc_id"), concat(lit("docs/doc"), col("doc_id"), lit(".wav")).as("relative_path"))
     Metadata.joinFiles(files, sidecar)

@@ -90,7 +90,7 @@ object ReferenceOps {
     Files.createSymbolicLink(root.resolve("linkdir"), real)
     Files.createSymbolicLink(root.resolve("ext.wav"), extTarget)
     import s.implicits._
-    graft.sources.AudioScan.scan(s, root.toString, excludeSymlinks = true)
+    graft.sources.AudioScan.scan(s.sparkContext, root.toString, excludeSymlinks = true)
       .map(_.relativePath).toDF("relative_path")
   }
   val f2SymlinkSql =

@@ -7,9 +7,9 @@ import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult,
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{GlobFilter, Path => HPath}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{BinaryType, DoubleType, IntegerType, StringType, StructField, StructType}
@@ -72,13 +72,13 @@ object AudioScan {
     *   symlinks to filter.
     * @param pathGlobFilter Hadoop glob on the file name (e.g. `*.wav`),
     *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened.
-    * @param conf the broadcast session Hadoop conf the sniff job reads a
+    * @param conf the broadcast Hadoop conf the sniff job reads a
     *   tree of another scheme than `file:` with; when none is given, one is
     *   broadcast for such a tree. A `file:` tree's sniff job reads through
     *   `java.nio` with no conf, and without `expandArchives` it has no
     *   sniff job: F5 reads its heads on the driver, in walk order. */
   def scan(
-      spark: SparkSession,
+      sc: SparkContext,
       input: String,
       maxDepth: Int = DefaultMaxDepth,
       metadataFile: Option[String] = None,
@@ -87,21 +87,21 @@ object AudioScan {
       pathGlobFilter: Option[String] = None,
       expandArchives: Boolean = false,
       conf: Option[Broadcast[SerializableConfiguration]] = None): IndexedSeq[File] = {
-    val root = qualified(spark, input)
+    val root = qualified(sc, input)
     val glob = pathGlobFilter.map(new GlobFilter(_))
     // F4: the sidecar by its qualified path, or by its path relative to the input
-    val sidecar = metadataFile.map(qualified(spark, _).toString)
+    val sidecar = metadataFile.map(qualified(sc, _).toString)
     val sidecarRel = sidecar.filter(_.startsWith(root.toString.stripSuffix("/") + "/"))
       .map(relativeTo(root.toString, _))
     val local = LocalFiles.of(input).isDefined
     val listed = (if (local) walk(root, maxDepth, !excludeSymlinks)
-      else list(spark, root, maxDepth)).filter { f =>
+      else list(sc, root, maxDepth)).filter { f =>
       glob.forall(_.accept(new HPath(f.path))) && !sidecar.contains(f.path) && !sidecarRel.contains(f.relativePath)
     }
     if (listed.isEmpty || !(checkMimeType || expandArchives)) listed
     else if (local && !expandArchives)
       // a local head read costs less than a task launch: F5 on the driver
-      listed.filter(f => Magic.isAllowedAudio(readHead(spark.sparkContext.hadoopConfiguration, f.path)))
+      listed.filter(f => Magic.isAllowedAudio(readHead(sc.hadoopConfiguration, f.path)))
     else {
       // reads worth a job, one over the kept list: a remote tree's heads,
       // or whole archives streamed for their entry lists. An archive stands
@@ -109,8 +109,7 @@ object AudioScan {
       // what sniffs as audio. Archives are transport, so the expansion
       // happens before the MIME gate; entry paths use jar-URL bang notation
       // `bundle.zip!inner/name.wav`, and a corrupt archive yields zero rows.
-      val hadoopConf = if (local) None else conf.orElse(GraftSession.hadoopConf(spark, input))
-      val sc = spark.sparkContext
+      val hadoopConf = if (local) None else conf.orElse(GraftSession.hadoopConf(sc, input))
       val slices = math.min(listed.length, sc.defaultParallelism)
       val job = if (expandArchives) "expand archives and sniff" else "sniff"
       GraftSession.labelled(sc, s"graft: $job ${listed.length} files") {
@@ -129,10 +128,10 @@ object AudioScan {
   }
 
   /** `p` as a qualified Hadoop path; a path with no scheme is a local file. */
-  private def qualified(spark: SparkSession, p: String): HPath =
+  private def qualified(sc: SparkContext, p: String): HPath =
     LocalFiles.of(p).fold {
       val hp = new HPath(p)
-      hp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(hp)
+      hp.getFileSystem(sc.hadoopConfiguration).makeQualified(hp)
     }(l => new HPath("file", null, l.toAbsolutePath.toString))
 
   /** The relative path of `p` below `root`; the bare file name when `p` is
@@ -167,8 +166,8 @@ object AudioScan {
 
   /** The files below a root of any other scheme, through its Hadoop
     * FileSystem, at most `maxDepth` levels down. */
-  private def list(spark: SparkSession, root: HPath, maxDepth: Int): IndexedSeq[File] = {
-    val files = root.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(root, true)
+  private def list(sc: SparkContext, root: HPath, maxDepth: Int): IndexedSeq[File] = {
+    val files = root.getFileSystem(sc.hadoopConfiguration).listFiles(root, true)
     val out = IndexedSeq.newBuilder[File]
     while (files.hasNext) {
       val s = files.next()
@@ -199,13 +198,13 @@ object AudioScan {
     * `conf` is read only for a tree of another scheme than `file:`. A plain
     * file over Spark's largest binary value fails the run, naming it. */
   def read(
-      spark: SparkSession,
+      sc: SparkContext,
       shards: IndexedSeq[IndexedSeq[File]],
       sidecar: Metadata.Sidecar,
       conf: Option[Broadcast[SerializableConfiguration]]): RDD[InternalRow] = {
-    val table = if (sidecar eq Metadata.NoSidecar) None else Some(spark.sparkContext.broadcast(sidecar))
+    val table = if (sidecar eq Metadata.NoSidecar) None else Some(sc.broadcast(sidecar))
     val metaTypes = sidecar.schema.sparkFields.map(_.dataType).toArray
-    spark.sparkContext.parallelize(shards.zipWithIndex, math.max(1, shards.length))
+    sc.parallelize(shards.zipWithIndex, math.max(1, shards.length))
       .mapPartitions(_.flatMap { case (files, shard) =>
         val contents = new Contents(GraftSession.shipped(conf, files.head.path), files)
         val lookup = table.fold(Metadata.NoSidecar)(_.value)

@@ -1,12 +1,13 @@
 package graft.sources
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.univocity.parsers.csv.{CsvParser, CsvParserSettings, UnescapedQuoteHandling}
 import graft.core._
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.immutable.{SortedMap, TreeMap}
@@ -26,14 +27,13 @@ import scala.jdk.CollectionConverters._
   *   - duplicate keys: FIRST occurrence in file order wins (src/main.rs:178-193).
   *
   * Shape, as in the reference (src/main.rs:144-209): [[load]] reads the
-  * sidecar once into the driver — a JSONL sidecar line by line through
-  * [[graft.core.LocalFiles]] (`java.nio` on the local disk, the session's
-  * Hadoop FileSystem on another scheme), a CSV one through one Spark read
-  * — and in that one pass votes the types, coerces the values and builds
-  * the two first-wins maps: an in-memory [[Sidecar]]. Its Catalyst values
-  * are built directly, from the JSON or the CSV strings; a JSONL load
-  * builds no SQL `SessionState`, a CSV one goes through Spark SQL (ROADMAP
-  * direction 12). The pipeline's content pass calls [[Sidecar.resolve]] on
+  * sidecar's lines once into the driver through [[graft.core.LocalFiles]]
+  * (`java.nio` on the local disk, the context's Hadoop FileSystem on
+  * another scheme), whatever its format, and in that one pass votes the
+  * types, coerces the values and builds the two first-wins maps: an
+  * in-memory [[Sidecar]]. Its Catalyst values are built directly, from the
+  * JSON or the CSV strings, so a load runs no Spark job and builds no SQL
+  * `SessionState`. The pipeline's content pass calls [[Sidecar.resolve]] on
   * a broadcast of it for each file ([[AudioScan.read]]); [[joinFiles]]
   * makes the same call for each row of a frame of files, for the query
   * surface.
@@ -111,13 +111,17 @@ object Metadata {
 
   /** Load the sidecar as its first-wins [[Sidecar]] table. Lines with
     * neither key are dropped (F6, src/main.rs:323-325 / :378-380) after
-    * their types were voted. A JSONL sidecar builds its Catalyst values
-    * itself, so loading one on the local disk builds no `SessionState`.
+    * their types were voted. Either format is read on the driver, with the
+    * context's Hadoop conf on a scheme other than `file:`.
     */
-  def load(spark: SparkSession, path: String): Sidecar = {
+  def load(sc: SparkContext, path: String): Sidecar = {
+    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+      LocalFiles.open(path, sc.hadoopConfiguration), java.nio.charset.StandardCharsets.UTF_8))
+    // split at \n, \r and \r\n, as Hadoop's LineRecordReader splits Spark's text input
+    val text = try in.lines().iterator().asScala.toVector finally in.close()
     val (schema, lines) = formatFromPath(path) match {
-      case Jsonl => readJsonl(spark, path)
-      case Csv   => readCsv(spark.read.option("header", true).csv(path))
+      case Jsonl => readJsonl(text)
+      case Csv   => readCsv(text)
     }
     val rows = mutable.ArrayBuffer.empty[InternalRow]
     val (byRel, byName) = (mutable.HashMap.empty[UTF8String, Int], mutable.HashMap.empty[UTF8String, Int])
@@ -130,19 +134,63 @@ object Metadata {
     Sidecar(schema, rows.toIndexedSeq, byRel.toMap, byName.toMap)
   }
 
-  /** CSV: every column is String (src/main.rs:309-314). The rows are
-    * collected in file order, their values made `UTF8String`s. */
-  private def readCsv(raw: DataFrame): (MetaSchema, Seq[Line]) = {
-    val schema = withTranscription(raw.columns.map(_ -> (MString: MetadataType)).toMap)
-    val have = raw.columns.toSet
-    def str(k: String) = if (have(k)) col(k) else lit(null).cast(StringType)
-    val values = schema.keys.map(k =>
-      if (k == "transcription") coalesce(str(k), lit("-")) else col(k)) // src/main.rs:317-319
-    val lines = raw.select(str("relative_path") +: str("file_name") +: values: _*).collect()
-      .map(r => (Option(r.getString(0)).map(PathNorm.normalize).orNull, r.getString(1),
-        new GenericInternalRow(Array.tabulate[Any](values.length)(i =>
-          UTF8String.fromString(r.getString(i + 2)))): InternalRow))
-    (schema, lines.toSeq)
+  /** CSV: every column is String (src/main.rs:309-314), read as
+    * `spark.read.option("header", true).csv` reads a file: a leading BOM is
+    * dropped, then blank and whitespace-only lines; the first line left is
+    * the header, its names made safe as Spark makes them ([[safeHeader]]);
+    * each line is parsed on its own with Spark's univocity settings
+    * ([[csvSettings]]). A short row is padded with null and a long one cut;
+    * an empty or quoted-empty cell is null. */
+  private def readCsv(text: Seq[String]): (MetaSchema, Seq[Line]) = {
+    val parser = new CsvParser(csvSettings)
+    def cells(line: String): Array[String] = Option(parser.parseLine(line)).getOrElse(Array.empty)
+    val nonBlank = (text.take(1).map(_.stripPrefix("\uFEFF")) ++ text.drop(1)).filter(_.trim.nonEmpty)
+    val header = nonBlank.headOption.fold(Array.empty[String])(h => safeHeader(cells(h)))
+    val schema = withTranscription(header.map(_ -> (MString: MetadataType)).toMap)
+    val at = header.zipWithIndex.toMap.withDefaultValue(-1)
+    val columns = schema.keys.map(k => (at(k), k == "transcription")).toArray
+    val lines = nonBlank.drop(1).map { line =>
+      val c = cells(line)
+      def cell(i: Int) = if (i < 0 || i >= c.length || c(i) == null || c(i).isEmpty) null else c(i)
+      val values = columns.map[Any] { case (i, transcription) =>
+        UTF8String.fromString(if (transcription && cell(i) == null) "-" else cell(i)) // src/main.rs:317-319
+      }
+      (Option(cell(at("relative_path"))).map(PathNorm.normalize).orNull, cell(at("file_name")),
+        new GenericInternalRow(values): InternalRow)
+    }
+    (schema, lines)
+  }
+
+  /** The univocity settings Spark's CSV reader parses with when only
+    * `header` is set (`CSVOptions.asParserSettings`): `,` `"` `\`, no
+    * comments, no trimming, a bad quote ends its cell at the next
+    * delimiter, and an empty cell reads as "". */
+  private[graft] def csvSettings: CsvParserSettings = {
+    val s = new CsvParserSettings() // `,` and `"` are its defaults
+    s.getFormat.setQuoteEscape('\\')
+    s.setCommentProcessingEnabled(false)
+    s.setIgnoreLeadingWhitespaces(false)
+    s.setIgnoreTrailingWhitespaces(false)
+    s.setReadInputOnSeparateThread(false)
+    s.setMaxColumns(20480)
+    s.setNullValue("")
+    s.setEmptyValue("")
+    s.setMaxCharsPerColumn(-1)
+    s.setUnescapedQuoteHandling(UnescapedQuoteHandling.STOP_AT_DELIMITER)
+    s.setErrorContentLength(1000)
+    s
+  }
+
+  /** Spark's header names (`CSVUtils.makeSafeHeader`, with
+    * `spark.sql.caseSensitive` at its default, false): an empty name
+    * becomes `_c{i}`, and a name another one repeats, case aside, gets its
+    * index appended. */
+  private def safeHeader(names: Array[String]): Array[String] = {
+    val lower = names.filter(_ != null).map(_.toLowerCase)
+    val repeated = lower.diff(lower.distinct).toSet
+    names.zipWithIndex.map { case (n, i) =>
+      if (n == null || n.isEmpty) s"_c$i" else if (repeated(n.toLowerCase)) s"$n$i" else n
+    }
   }
 
   /** JSONL: each line is parsed once; blank and non-object lines are skipped
@@ -150,11 +198,8 @@ object Metadata {
     * included; the values are then coerced to the merged schema (P7), as
     * Catalyst values: `UTF8String`, boxed `Double` and `Boolean`,
     * `GenericArrayData` for a list, and null. */
-  private def readJsonl(spark: SparkSession, path: String): (MetaSchema, Seq[Line]) = {
+  private def readJsonl(text: Seq[String]): (MetaSchema, Seq[Line]) = {
     val mapper = new ObjectMapper()
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      LocalFiles.open(path, spark.sessionState.newHadoopConf()), java.nio.charset.StandardCharsets.UTF_8))
-    val text = try in.lines().iterator().asScala.toVector finally in.close()
     val nodes = text.map(_.trim).filter(_.nonEmpty)
       .flatMap(t => scala.util.Try(mapper.readTree(t)).toOption.filter(n => n != null && n.isObject))
     val votes = nodes.foldLeft(Map.empty[String, MetadataType]) { (acc, node) =>

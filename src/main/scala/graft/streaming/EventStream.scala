@@ -138,7 +138,7 @@ object EventStream {
             it.map { case (_, r) => new JoinedRow(r, id): InternalRow }
           }
         ParquetShardSink.writeShards(rows, batch.schema.add("shard_id", IntegerType, nullable = false),
-          s"$outDir/batch=$batchId", GraftSession.hadoopConf(batch.sparkSession, outDir))
+          s"$outDir/batch=$batchId", GraftSession.hadoopConf(batch.sparkSession.sparkContext, outDir))
       }
     }
 

@@ -72,7 +72,7 @@ class ContentPassSpec extends SparkSpec {
 
   test("sink input: one partition per shard in path order, no shuffle and no sort") {
     val (in, meta) = tree()
-    val plan = AudioToDataset.plan(spark, cfg(in, "/unused", Some(meta)))
+    val plan = AudioToDataset.plan(spark.sparkContext, cfg(in, "/unused", Some(meta)))
     assert(!lineage(plan.rows).exists(_.isInstanceOf[ShuffleDependency[_, _, _]]), plan.rows.toDebugString)
     val (shard, transcription) = (plan.schema.fieldIndex("shard_id"), plan.schema.fieldIndex("transcription"))
     val parts = plan.rows.mapPartitionsWithIndex((i, rows) => Iterator(i -> rows.map(r =>
@@ -107,8 +107,8 @@ class ContentPassSpec extends SparkSpec {
   // java.nio for a local tree, in the sniff job on another scheme
   test("without F5, the planning pass opens no file") {
     val (in, meta) = tree()
-    def scan(scheme: String, mime: Boolean) = AudioScan.scan(spark, scheme + in.getAbsolutePath, maxDepth = 2,
-      metadataFile = Some(scheme + meta.getAbsolutePath), checkMimeType = mime).map(_.relativePath).sorted
+    def scan(scheme: String, mime: Boolean) = AudioScan.scan(spark.sparkContext, scheme + in.getAbsolutePath,
+      maxDepth = 2, metadataFile = Some(scheme + meta.getAbsolutePath), checkMimeType = mime).map(_.relativePath).sorted
     val survivors = Seq("a.wav", "b/c.wav", "b/d.wav", "b/decoy.wav", "e.wav")
     def oncePerSurvivor(survivors: Seq[String]) =
       survivors.map(p => new java.io.File(in, p).getAbsolutePath -> Integer.valueOf(1)).toMap
@@ -175,7 +175,8 @@ class ContentPassSpec extends SparkSpec {
       val in = tmpDir("graft-gone")
       Seq("a.wav", "b.wav", "c.wav", "d.wav").foreach(writeFile(in, _, wav))
       val out = tmpDir("graft-gone-out")
-      val plan = AudioToDataset.plan(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
+      val plan = AudioToDataset.plan(spark.sparkContext,
+        AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
       val gone = new java.io.File(in, "c.wav")
       assert(gone.delete())
       val dir = out.getAbsolutePath

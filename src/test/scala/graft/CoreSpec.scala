@@ -31,7 +31,28 @@ class CoreSpec extends AnyFunSuite {
     }
     val half = Wav.parse(Wav.synthWav(16000, 8000))
     assert(half.duration == 0.5)
+    // chunk layouts: data before fmt, an odd-sized chunk with its pad byte,
+    // a data chunk cut short (its frames present count)
+    val (fmt, data) = { val w = Wav.synthWav(16000, 1600); (w.slice(20, 36), w.drop(44)) }
+    val dataFirst = riff(chunk("data", data), chunk("fmt ", fmt))
+    assert(Wav.parse(dataFirst) == Wav.WavInfo(0.1, 16000))
+    assert(Wav.pcm16Rms(dataFirst).map(_._2).contains(16000))
+    assert(Wav.parse(riff(chunk("LIST", Array[Byte](1, 2, 3)), chunk("fmt ", fmt), chunk("data", data))) ==
+      Wav.WavInfo(0.1, 16000))
+    assert(Wav.parse(riff(chunk("fmt ", fmt), chunk("data", data.take(1600), data.length))) ==
+      Wav.WavInfo(0.05, 16000))
   }
+
+  /** A RIFF chunk: its id, its declared size (`size`, else the body's) and
+    * its body, padded to an even length. */
+  private def chunk(id: String, body: Array[Byte], size: Long = -1): Array[Byte] = {
+    val head = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    head.put(id.getBytes("US-ASCII")).putInt((if (size < 0) body.length.toLong else size).toInt)
+    head.array ++ body ++ Array.fill[Byte](body.length % 2)(0)
+  }
+
+  /** A RIFF/WAVE file of `chunks`, in order. */
+  private def riff(chunks: Array[Byte]*): Array[Byte] = chunk("RIFF", "WAVE".getBytes("US-ASCII") ++ chunks.flatten)
 
   test("wav parse: non-WAV and corrupt bytes → (0.0, 0)") {
     assert(Wav.parse(Array[Byte]()) == Wav.WavInfo(0.0, 0))
@@ -39,6 +60,9 @@ class CoreSpec extends AnyFunSuite {
     assert(Wav.parse(null) == Wav.WavInfo(0.0, 0))
     val truncated = Wav.synthWav(16000, 16000).take(40)
     assert(Wav.parse(truncated) == Wav.WavInfo(0.0, 0))
+    val w = Wav.synthWav(16000, 1600)
+    assert(Wav.parse(riff(chunk("fmt ", w.slice(20, 36)), chunk("data", w.drop(44), 0xFFFFFFFFL))) ==
+      Wav.WavInfo(0.0, 0))
   }
 
   test("flac streaminfo: synth round-trip, incl. 36-bit totals and edge rates") {

@@ -434,7 +434,7 @@ class PipelineSpec extends SparkSpec {
     java.nio.file.Files.createSymbolicLink(
       java.nio.file.Paths.get(in.getAbsolutePath, "link dir"),
       java.nio.file.Paths.get(in.getAbsolutePath, "sub dir"))
-    val rel = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
+    val rel = graft.sources.AudioScan.scan(spark.sparkContext, in.getAbsolutePath,
         metadataFile = Some(meta.getAbsolutePath)).map(_.relativePath)
     assert(rel == Seq("sub dir/my file.wav"))
   }
@@ -451,13 +451,13 @@ class PipelineSpec extends SparkSpec {
       Paths.get(in.getAbsolutePath, "alias"), Paths.get(in.getAbsolutePath, "real"))
     Files.createSymbolicLink(
       Paths.get(in.getAbsolutePath, "c.wav"), Paths.get(in.getAbsolutePath, "real/a.wav"))
-    val withFilter = graft.sources.AudioScan.scan(spark, in.getAbsolutePath).map(_.relativePath).sorted
+    val withFilter = graft.sources.AudioScan.scan(spark.sparkContext, in.getAbsolutePath).map(_.relativePath).sorted
     assert(withFilter.toSeq == Seq("real/a.wav", "real/b.wav"))
     // a link above the tree is fine: the input root itself may be one
-    assert(graft.sources.AudioScan.scan(spark, new java.io.File(in, "alias").getAbsolutePath)
+    assert(graft.sources.AudioScan.scan(spark.sparkContext, new java.io.File(in, "alias").getAbsolutePath)
       .map(_.relativePath).sorted == Seq("a.wav", "b.wav"))
     // the divergent follow-links behavior stays available explicitly
-    val noFilter = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
+    val noFilter = graft.sources.AudioScan.scan(spark.sparkContext, in.getAbsolutePath,
       excludeSymlinks = false).map(_.relativePath).sorted
     assert(noFilter.length > withFilter.length, s"the walk followed no links: ${noFilter.toSeq}")
   }
@@ -473,18 +473,18 @@ class PipelineSpec extends SparkSpec {
     Files.createSymbolicLink(
       Paths.get(in.getAbsolutePath, "alias"), Paths.get(in.getAbsolutePath, "real"))
     // glob prunes by name on ANY scheme, at listing time
-    val globOnly = graft.sources.AudioScan.scan(spark, in.getAbsolutePath,
+    val globOnly = graft.sources.AudioScan.scan(spark.sparkContext, in.getAbsolutePath,
       pathGlobFilter = Some("*.wav")).map(_.relativePath).sorted
     assert(globOnly.toSeq == Seq("real/a.wav"))
     def paths(plan: AudioToDataset.Plan): Seq[String] =
       plan.rows.map(_.getStruct(0, 3).getUTF8String(2).toString).collect().toSeq
     // Config-level opt-out: the pipeline plan ingests through the symlink
-    val planned = AudioToDataset.plan(spark, AudioToDataset.Config(
+    val planned = AudioToDataset.plan(spark.sparkContext, AudioToDataset.Config(
       in.getAbsolutePath, "/unused", excludeSymlinks = false,
       pathGlobFilter = Some("*.wav")))
     assert(paths(planned).sorted == Seq("alias/a.wav", "real/a.wav"))
     // default Config keeps the exclusion
-    val strict = AudioToDataset.plan(spark, AudioToDataset.Config(
+    val strict = AudioToDataset.plan(spark.sparkContext, AudioToDataset.Config(
       in.getAbsolutePath, "/unused", pathGlobFilter = Some("*.wav")))
     assert(paths(strict) == Seq("real/a.wav"))
   }
@@ -562,7 +562,7 @@ class PipelineSpec extends SparkSpec {
     val meta = writeText(in, "m.jsonl",
       """{"x": 1.5, "duration": 9.9, "id": 3}""" + "\n" +          // keyless: votes only
       """{"relative_path":"a.wav","x": 2.5}""" + "\n")
-    val sidecar = graft.sources.Metadata.load(spark, meta.getAbsolutePath)
+    val sidecar = graft.sources.Metadata.load(spark.sparkContext, meta.getAbsolutePath)
     val schema = sidecar.schema
     assert(schema.types.get("x").contains(MFloat64)) // voted from the keyless row too
     assert(!schema.types.contains("duration") && !schema.types.contains("id"))

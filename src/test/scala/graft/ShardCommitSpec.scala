@@ -226,14 +226,20 @@ class ShardCommitSpec extends SparkSpec {
       .startsWith("unsupported compression: brotli"))
   }
 
-  test("a file: run with a JSONL sidecar or none builds no SessionState") {
+  /** A tree of three WAVs, with a JSONL and a CSV sidecar beside them. */
+  private def sidecarTree(): (java.io.File, Seq[java.io.File]) = {
     val in = tmpDir("graft-state-in")
     Seq("a.wav", "b.wav", "c.wav").foreach(writeFile(in, _, wav))
-    val meta = writeText(in, "meta.jsonl", """{"file_name":"b.wav","transcription":"bee","tags":["x",1]}""" + "\n")
+    (in, Seq(writeText(in, "meta.jsonl", """{"file_name":"b.wav","transcription":"bee","tags":["x",1]}""" + "\n"),
+      writeText(in, "meta.csv", "file_name,transcription,note\nb.wav,bee,\"x, 1\"\n")))
+  }
+
+  test("a file: run with any sidecar or none builds no SessionState") {
+    val (in, sidecars) = sidecarTree()
     val sessionState = spark.getClass.getDeclaredField("sessionState") // a lazy val's field: null until built
     sessionState.setAccessible(true)
     val active = SparkSession.getActiveSession
-    for ((format, ext) <- writable; sidecar <- Seq(None, Some(meta))) {
+    for ((format, ext) <- writable; sidecar <- None +: sidecars.map(Some(_))) {
       val fresh = spark.newSession()
       SparkSession.setActiveSession(fresh)
       try {
@@ -243,6 +249,26 @@ class ShardCommitSpec extends SparkSpec {
         assert(listing(out) == Seq(s"0.$ext", s"1.$ext"), format)
         assert(sessionState.get(fresh) == null, s"$format, sidecar $sidecar built the session's state")
       } finally active.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
+  }
+
+  test("a run through the context alone creates no SparkSession") {
+    val (in, sidecars) = sidecarTree()
+    val sc = spark.sparkContext
+    val (active, default) = (SparkSession.getActiveSession, SparkSession.getDefaultSession)
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      for ((format, ext) <- writable; sidecar <- None +: sidecars.map(Some(_))) {
+        val out = tmpDir("graft-nosession-out")
+        AudioToDataset.run(sc, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath,
+          sidecar.map(_.getAbsolutePath), format, filesPerShard = 2, checkMimeType = true))
+        assert(listing(out) == Seq(s"0.$ext", s"1.$ext"), format)
+      }
+      assert(SparkSession.getActiveSession.isEmpty && SparkSession.getDefaultSession.isEmpty)
+    } finally {
+      default.foreach(SparkSession.setDefaultSession)
+      active.foreach(SparkSession.setActiveSession)
     }
   }
 }

@@ -107,7 +107,7 @@ class SidecarShardSpec extends SparkSpec {
     import s.implicits._
     val (_, sidecar) = tree("meta.jsonl", jsonl)
     val files = (expected.keys.toSeq :+ null).map(p => (p, 7)).toDF("relative_path", "n").repartition(3)
-    val joined = Metadata.joinFiles(files, Metadata.load(spark, sidecar.getAbsolutePath))
+    val joined = Metadata.joinFiles(files, Metadata.load(spark.sparkContext, sidecar.getAbsolutePath))
     assert(joined.columns.toSeq == Seq("relative_path", "n", "score", "transcription"))
     val got = joined.filter($"n" === 7).collect().map(r => r.getString(0) -> (r.getString(3), r.getString(2))).toMap
     assert(got == expected + ((null: String) -> ("-", null)))
@@ -123,7 +123,7 @@ class SidecarShardSpec extends SparkSpec {
       """{}""",
       """{"file_name":null,"relative_path":null,"num":1}""").mkString("", "\n", "\n")
     val path = writeText(tmpDir("graft-values"), "meta.jsonl", hostile).getAbsolutePath
-    val sidecar = Metadata.load(spark, path)
+    val sidecar = Metadata.load(spark.sparkContext, path)
     assert(sidecar.schema.types.toSeq == Seq("deep" -> MList(MList(MString)), "flag" -> MBool,
       "grid" -> MList(MList(MFloat64)), "list" -> MList(MString), "mixed" -> MString, "num" -> MFloat64,
       "obj" -> MString, "transcription" -> MString))
