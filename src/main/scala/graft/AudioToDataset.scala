@@ -17,7 +17,7 @@ import org.apache.spark.util.SerializableConfiguration
   *   planning, on the driver as in the reference:
   *     sidecar read once: type vote, coercion, first-wins maps (S2/S3, J2, P7)
   *     → a walk of the tree, F1–F4 (S1), then F5 head sniffs in walk order
-  *       (a remote tree's heads, or an archive's entries, in one Spark job)
+  *       (a remote tree's heads in one Spark job)
   *     → the kept files' lengths checked, and the files cut into shards (X1)
   *   content pass, a Spark job of its own: a plain RDD job with one task
   *   per shard, no shuffle and no sort, which builds each row where it is
@@ -43,16 +43,7 @@ object AudioToDataset {
       filesPerShard: Int = Sharding.DefaultFilesPerShard, // --files-per-db, 500
       maxDepth: Int = AudioScan.DefaultMaxDepth,    // --max-depth-size, 50
       checkMimeType: Boolean = false,               // --check-mime-type
-      parquetCompression: String = "snappy",        // --parquet-compression
-      // Engine extensions beyond the reference CLI:
-      // F2 opt-out (--follow-symlinks) — the local walk follows links and
-      // skips a directory link back to its own ancestor; object stores have
-      // no links. --path-glob prunes by file name on ANY scheme, at listing
-      // time (a Hadoop glob, as binaryFile's pathGlobFilter).
-      excludeSymlinks: Boolean = true,              // --follow-symlinks clears
-      pathGlobFilter: Option[String] = None,        // --path-glob
-      // zip bundles explode into entries in-executor (bang-notation paths)
-      expandArchives: Boolean = false)              // --expand-archives
+      parquetCompression: String = "snappy")        // --parquet-compression
 
   /** The sink input: `rows`, one partition per shard with its rows in
     * `audio.path` order, laid out as `schema` ([[AudioScan.schema]]:
@@ -76,8 +67,7 @@ object AudioToDataset {
     // X1: shard order is relative-path order (documented divergence from the
     // platform-dependent directory iterator, SURVEY.md §7.4); no audio byte
     // is read before the task that writes its shard
-    val kept = AudioScan.scan(sc, cfg.input, cfg.maxDepth, cfg.metadataFile,
-        cfg.checkMimeType, cfg.excludeSymlinks, cfg.pathGlobFilter, cfg.expandArchives, conf)
+    val kept = AudioScan.scan(sc, cfg.input, cfg.maxDepth, cfg.metadataFile, cfg.checkMimeType, conf)
     kept.foreach(AudioScan.requireFits) // before any shard is written
     val shards = Sharding.consecutiveShards(kept, cfg.filesPerShard)(_.relativePath)
     Plan(AudioScan.read(sc, shards, sidecar, conf), AudioScan.schema(sidecar.schema), sidecar.schema,
@@ -105,8 +95,15 @@ object AudioToDataset {
     GraftSession.labelled(sc, s"graft: write ${p.shards} $ext shards")(write(p))
   }
 
-  /** CLI mirroring the reference's flags. */
+  /** The CLI's flags: the reference's clap args (src/main.rs:55-95). */
+  private val Flags = Set("input", "output", "metadata-file", "format", "files-per-db", "max-depth-size",
+    "check-mime-type", "parquet-compression", "num-threads")
+
+  /** CLI mirroring the reference's flags; any other `--flag` fails, as clap
+    * fails, before a `SparkContext` is built. */
   def main(args: Array[String]): Unit = {
+    val unknown = args.filter(a => a.startsWith("--") && !Flags(a.drop(2))).distinct
+    if (unknown.nonEmpty) throw new IllegalArgumentException(s"unknown flags: ${unknown.mkString(", ")}")
     def arg(name: String): Option[String] =
       args.sliding(2).collectFirst { case Array(k, v) if k == s"--$name" => v }
     val cfg = Config(
@@ -117,10 +114,7 @@ object AudioToDataset {
       filesPerShard = arg("files-per-db").map(_.toInt).getOrElse(Sharding.DefaultFilesPerShard),
       maxDepth = arg("max-depth-size").map(_.toInt).getOrElse(AudioScan.DefaultMaxDepth),
       checkMimeType = args.contains("--check-mime-type"),
-      parquetCompression = arg("parquet-compression").getOrElse("snappy"),
-      excludeSymlinks = !args.contains("--follow-symlinks"),
-      pathGlobFilter = arg("path-glob"),
-      expandArchives = args.contains("--expand-archives"))
+      parquetCompression = arg("parquet-compression").getOrElse("snappy"))
     // --num-threads mirrors the reference's rayon pool size (src/main.rs:79-81);
     // it sizes the `local[n]` master only (the run has no SQL shuffle).
     val numThreads = arg("num-threads").map(_.toInt)

@@ -1,27 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: prints the formatted physical plan of selected queries so
   * scan pruning (ReadSchema/PushedFilters), broadcast joins, and
-  * whole-stage-codegen spans can be reviewed. Usage:
+  * whole-stage-codegen spans can be reviewed. The session is Bench's and
+  * Verify's ([[graft.core.GraftSession.builder]], `SPARK_GRAFT_CPUS` cores,
+  * 4 by default), so the audited plans are the plans they run. Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // mirror Bench's size-bounded broadcast thresholds so audited plans
-      // are the plans the bench actually runs (see Bench.scala rationale)
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "256MB")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = graft.core.GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -22,28 +22,22 @@ object Verify {
     val spark = graft.core.GraftSession.builder(cpus, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Recursive delete — each query's prior dump is removed BEFORE the
-    // attempt, so a failed write can never leave a stale (plausible-looking,
-    // wrong-hash) result from an earlier attempt or round for the driver's
-    // comparator to silently pick up. A failure instead yields a loud
-    // missing-result (NO_SPARK_RESULT) plus an `<name>_ERROR` marker file.
-    def rmTree(p: java.nio.file.Path): Unit =
-      if (Files.exists(p)) {
-        import scala.jdk.CollectionConverters._
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.delete)
-      }
+    // Each query's prior dump is removed BEFORE the attempt, so a failed
+    // write can never leave a stale (plausible-looking, wrong-hash) result
+    // from an earlier attempt or round for the driver's comparator to
+    // silently pick up. A failure instead yields a loud missing-result
+    // (NO_SPARK_RESULT) plus an `<name>_ERROR` marker file.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
     selected.foreach { case (name, fn) =>
-      rmTree(Paths.get(s"$outDir/$name"))
+      graft.core.LocalFiles.deleteTree(Paths.get(s"$outDir/$name"))
       Files.deleteIfExists(Paths.get(s"$outDir/${name}_ERROR"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        rmTree(Paths.get(s"$outDir/$name"))
+        graft.core.LocalFiles.deleteTree(Paths.get(s"$outDir/$name"))
         Files.writeString(Paths.get(s"$outDir/${name}_ERROR"),
           s"${e.getClass.getName}: ${e.getMessage}\n")
         failed += name

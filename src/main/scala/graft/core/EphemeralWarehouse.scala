@@ -14,14 +14,8 @@ package graft.core
   */
 object EphemeralWarehouse {
   lazy val dir: String = {
-    val root = java.nio.file.Files.createTempDirectory("graft-wh-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(root)
-    }))
-    root.getAbsolutePath
+    val root = java.nio.file.Files.createTempDirectory("graft-wh-")
+    Runtime.getRuntime.addShutdownHook(new Thread(() => LocalFiles.deleteTree(root)))
+    root.toAbsolutePath.toString
   }
 }

@@ -1,7 +1,8 @@
 package graft.core
 
-import java.io.InputStream
-import java.nio.file.{Files, Paths, Path => JPath}
+import java.io.{IOException, InputStream}
+import java.nio.file.{FileVisitResult, Files, Paths, SimpleFileVisitor, Path => JPath}
+import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 
@@ -35,4 +36,18 @@ object LocalFiles {
         p.getFileSystem(conf).open(p)
     }
   }
+
+  /** Deletes `p` and everything below it, as far as it can: what cannot be
+    * deleted is left. A link is deleted itself and never followed, so no
+    * file outside `p` is touched; a missing `p` is no error. */
+  def deleteTree(p: JPath): Unit =
+    Files.walkFileTree(p, new SimpleFileVisitor[JPath] {
+      private def delete(f: JPath): FileVisitResult = {
+        try Files.deleteIfExists(f) catch { case _: IOException => }
+        FileVisitResult.CONTINUE
+      }
+      override def visitFile(f: JPath, attrs: BasicFileAttributes): FileVisitResult = delete(f)
+      override def visitFileFailed(f: JPath, e: IOException): FileVisitResult = delete(f) // a missing p too
+      override def postVisitDirectory(d: JPath, e: IOException): FileVisitResult = delete(d)
+    })
 }

@@ -31,13 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object Bfs {
 
-  /** rows/task target for per-round shuffles (CC's bound): tiny frontiers
-    * collapse to 1 task, 100 TB-scale graphs keep session parallelism. */
-  private val RowsPerTask = 500000L
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    GraftBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
-
   /** @param edges   columns `src`, `dst` — DIRECTED; callers wanting an
     *                undirected walk union the reversed edges first
     * @param seeds   single column `id`, distance 0 (deduplicated here)
@@ -51,7 +44,7 @@ object Bfs {
     val sessionParts = math.max(1, spark.sessionState.conf.numShufflePartitions)
     val eRaw = edges.select(col("src"), col("dst")).distinct().persist()
     val nEdges = eRaw.count()
-    val p = math.max(1, math.min(sessionParts, (nEdges / RowsPerTask + 1).toInt))
+    val p = ConnectedComponents.boundedParts(sessionParts, nEdges)
     // round-invariant join side, pre-partitioned once on the per-round key
     val e = {
       val s = eRaw.repartition(p, col("src")).persist()
@@ -90,8 +83,8 @@ object Bfs {
         // the old settled table is fully superseded; the old frontier is a
         // subset of it (same blocks in round 1, standalone later) — both are
         // now unreachable by any live plan
-        freeCheckpoint(oldSettled)
-        if (oldFrontier ne oldSettled) freeCheckpoint(oldFrontier)
+        GraftBridge.freeCheckpoint(oldSettled)
+        if (oldFrontier ne oldSettled) GraftBridge.freeCheckpoint(oldFrontier)
       }
     }
     e.unpersist(blocking = false)

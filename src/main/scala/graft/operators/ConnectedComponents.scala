@@ -25,17 +25,16 @@ import org.apache.spark.sql.functions._
   */
 object ConnectedComponents {
 
-  /** rows/task target for the per-round shuffles; tiny graphs collapse to 1
-    * task while 100 TB-scale graphs still use the full session parallelism. */
+  /** rows/task target for the per-round shuffles of the graph operators;
+    * tiny graphs collapse to 1 task while 100 TB-scale graphs still use the
+    * full session parallelism. */
   private val RowsPerTask = 500000L
 
-  private def boundedParts(sessionParts: Int, rows: Long): Int =
+  /** Tasks for a per-round shuffle over `rows` rows: one per [[RowsPerTask]],
+    * at least 1, at most `sessionParts`. [[LabelPropagation]] and [[Bfs]]
+    * bound theirs with it too. */
+  private[operators] def boundedParts(sessionParts: Int, rows: Long): Int =
     math.max(1, math.min(sessionParts, (rows / RowsPerTask + 1).toInt))
-
-  /** Free a materialized localCheckpoint's cached blocks (Dataset.unpersist
-    * is a no-op for checkpointed plans — see GraftBridge.checkpointedRdd). */
-  private def freeCheckpoint(df: DataFrame): Unit =
-    GraftBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
 
   /** @param nodes single column `id`
     * @param edges columns `src`, `dst` (undirected; direction ignored)
@@ -110,7 +109,7 @@ object ConnectedComponents {
       val changed = next
         .agg(coalesce(max(when(col("comp") =!= col("prev"), 1).otherwise(0)), lit(0)))
         .head().getInt(0) > 0
-      freeCheckpoint(prevCkpt) // next is materialized; last round's blocks can go
+      GraftBridge.freeCheckpoint(prevCkpt) // next is materialized; last round's blocks can go
       prevCkpt = next
       labels = next.select(col("id"), col("comp"))
       converged = !changed
@@ -123,7 +122,7 @@ object ConnectedComponents {
     val result = labels.unionAll(isolated).localCheckpoint()
     sym.unpersist()
     touched.unpersist()
-    freeCheckpoint(prevCkpt)
+    GraftBridge.freeCheckpoint(prevCkpt)
     result
   }
 
@@ -181,7 +180,7 @@ object ConnectedComponents {
       val sameCount = next.count() == e.count()
       stable = sameCount &&
         next.join(e, Seq("u", "v"), "left_anti").limit(1).count() == 0
-      freeCheckpoint(e) // the probe above was this round's last read of e
+      GraftBridge.freeCheckpoint(e) // the probe above was this round's last read of e
       e = next
       i += 1
     }

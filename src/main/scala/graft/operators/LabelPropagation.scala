@@ -37,14 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object LabelPropagation {
 
-  private val RowsPerTask = 500000L
-
-  private def boundedParts(sessionParts: Int, rows: Long): Int =
-    math.max(1, math.min(sessionParts, (rows / RowsPerTask + 1).toInt))
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    GraftBridge.checkpointedRdd(df).foreach(_.unpersist(blocking = false))
-
   /** @param nodes one column `id`
     * @param edges columns `src`, `dst` — each undirected edge listed ONCE;
     *              both directions are derived here so multiplicities stay
@@ -67,7 +59,7 @@ object LabelPropagation {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist()
     val nEdges = symFull.count() // materialize once; reused every round
-    val p = boundedParts(sessionParts, nEdges)
+    val p = ConnectedComponents.boundedParts(sessionParts, nEdges)
     val sym = {
       val s = symFull.repartition(p, col("src")).persist()
       s.count()
@@ -114,7 +106,7 @@ object LabelPropagation {
         .agg(coalesce(max(when(col("chg"), 1).otherwise(0)), lit(0)))
         .head().getInt(0) > 0
       labels = upd.select(col("id"), col("label"))
-      freeCheckpoint(prev)
+      GraftBridge.freeCheckpoint(prev)
       prev = upd
       converged = !changed
       i += 1
@@ -125,7 +117,7 @@ object LabelPropagation {
     val result = labels.unionAll(isolated).localCheckpoint()
     sym.unpersist()
     touched.unpersist()
-    freeCheckpoint(prev)
+    GraftBridge.freeCheckpoint(prev)
     result
   }
 }

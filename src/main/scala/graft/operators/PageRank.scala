@@ -84,12 +84,12 @@ object PageRank {
         .select(col("node"),
           (lit(base) + expr("(85 * coalesce(c, 0L)) div 100")).as("r"))
         .localCheckpoint()
-      GraftBridge.checkpointedRdd(prev).foreach(_.unpersist(blocking = false))
+      GraftBridge.freeCheckpoint(prev)
       prev = r
     }
     e.unpersist()
     nodesP.unpersist()
-    GraftBridge.checkpointedRdd(nodes).foreach(_.unpersist(blocking = false))
+    GraftBridge.freeCheckpoint(nodes)
     eIn.unpersist(blocking = false)
     r.select(col("node"), col("r").as("rank_fp"))
   }

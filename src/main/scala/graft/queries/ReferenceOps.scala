@@ -68,9 +68,9 @@ object ReferenceOps {
     * symlink routes that must all be dropped — a symlinked sibling file
     * (`link_f{id}.wav`), a second route through a symlinked DIRECTORY
     * (`linkdir/f{id}.wav`), and a link escaping the root (`ext.wav`). The
-    * scan with `excludeSymlinks = true` must keep exactly the real paths,
-    * which the oracle recomputes from `documents`. Fixture staging is
-    * driver-side by construction (32 tiny files per process). */
+    * scan must keep exactly the real paths, which the oracle recomputes from
+    * `documents`. Fixture staging is driver-side by construction (32 tiny
+    * files per process). */
   val f2Symlink: Q = (s, dir) => {
     import java.nio.file.{Files, Paths}
     val ids = table(s, dir, "documents").filter(col("doc_id") < 32)
@@ -90,7 +90,7 @@ object ReferenceOps {
     Files.createSymbolicLink(root.resolve("linkdir"), real)
     Files.createSymbolicLink(root.resolve("ext.wav"), extTarget)
     import s.implicits._
-    graft.sources.AudioScan.scan(s.sparkContext, root.toString, excludeSymlinks = true)
+    graft.sources.AudioScan.scan(s.sparkContext, root.toString)
       .map(_.relativePath).toDF("relative_path")
   }
   val f2SymlinkSql =

@@ -223,13 +223,7 @@ object SinkOps {
     * would otherwise accumulate one streaming-checkpoint/output (or three
     * format copies) per invocation. */
   private def cleanupAtExit(p: java.nio.file.Path): Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(p.toFile)
-    }))
+    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.core.LocalFiles.deleteTree(p)))
 
   /** Staged streaming source: the events, plus a far-future sentinel row
     * whose arrival advances the watermark past every real window, so the

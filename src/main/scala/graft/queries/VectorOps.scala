@@ -114,13 +114,7 @@ object VectorOps {
     * decade the ~10 GB materialized base must leave the disk before the
     * output phase needs the room). Only ever called on paths under
     * [[bandScratch]]'s nonce dir. */
-  private def rmTree(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(path))
-  }
+  private def rmTree(path: String): Unit = graft.core.LocalFiles.deleteTree(java.nio.file.Paths.get(path))
 
   /** Scratch dir for band-local pair dumps: process-private (rides the
     * [[graft.core.EphemeralWarehouse]] shutdown cleanup) + per-call nonce,

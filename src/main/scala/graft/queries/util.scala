@@ -54,11 +54,7 @@ object Util {
     require(id.matches("[a-z0-9_]+"), s"unsafe managed-table name: $name")
     s.sql(s"DROP TABLE IF EXISTS $id")
     val wh = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(wh, id))
+    graft.core.LocalFiles.deleteTree(java.nio.file.Paths.get(wh, id))
   }
 
   /** Under `-Dgraft.assertPlans=true` (set by Verify), `require` that `df`'s

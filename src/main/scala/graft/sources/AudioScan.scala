@@ -3,10 +3,10 @@ package graft.sources
 import graft.core.{GraftSession, LocalFiles, PathNorm}
 import graft.functions.{Magic, Wav}
 import java.io.EOFException
-import java.nio.file.{FileSystemLoopException, FileVisitOption, FileVisitResult, Files, SimpleFileVisitor, Path => JPath}
+import java.nio.file.{FileVisitResult, Files, SimpleFileVisitor, Path => JPath}
 import java.nio.file.attribute.BasicFileAttributes
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{GlobFilter, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -22,12 +22,11 @@ import org.apache.spark.util.SerializableConfiguration
   * in two passes.
   *
   * [[scan]] is the planning pass. As in the reference it is one walk on the
-  * driver that yields the kept file list; it opens no file. Only F5 and
-  * `--expand-archives` read anything: a [[SniffBytes]]-byte head per file,
-  * an archive's entry list. On a `file:` tree F5 runs on the driver, right
-  * after the walk, as the reference sniffs (src/main.rs:695-707). Remote
-  * heads and archive listings are read in one Spark job over the files the
-  * walk kept.
+  * driver that yields the kept file list; it opens no file. Only F5 reads
+  * anything: a [[SniffBytes]]-byte head per file. On a `file:` tree F5 runs
+  * on the driver, right after the walk, as the reference sniffs
+  * (src/main.rs:695-707). A tree of another scheme has its heads read in
+  * one Spark job over the files the listing kept.
   *
   * [[read]] is the content pass: the kept files, already cut into shards on
   * the driver, are read once each, by the task that writes their shard,
@@ -41,8 +40,9 @@ import org.apache.spark.util.SerializableConfiguration
   *   F2 symlinks   — a `file:` walk does not follow links (reference walks
   *                   with NoSymlink, src/main.rs:664): a symlinked file is not
   *                   a regular file and a symlinked directory is never
-  *                   entered. Object stores have no symlinks; other schemes
-  *                   are listed through Hadoop and the filter is skipped;
+  *                   entered; a root that is itself a link is resolved.
+  *                   Object stores have no symlinks; other schemes are
+  *                   listed through Hadoop and the filter is skipped;
   *   F3 depth      — relative-path component count <= maxDepth: the walk
   *                   goes no deeper (src/main.rs:664-666);
   *   F4 sidecar exclusion — drop the metadata file itself, by absolute path
@@ -58,71 +58,42 @@ object AudioScan {
   val SniffBytes = 12
   private val MaxBinaryLength = ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH
 
-  /** One kept file (or archive entry) as the planning pass hands it to the
-    * content pass: `path` is its qualified Hadoop path, `entry` the zip entry
-    * name inside the archive at `path` (null for a plain file); `length` is
-    * null for an entry. */
-  final case class File(path: String, length: java.lang.Long, relativePath: String, entry: String)
+  /** One kept file as the planning pass hands it to the content pass:
+    * `path` is its qualified Hadoop path. */
+  final case class File(path: String, length: Long, relativePath: String)
 
   /** The kept files of the tree at `input`, in no particular order.
     *
-    * @param excludeSymlinks F2 — a `file:` walk that follows no link
-    *   (`--follow-symlinks` clears it: links are followed, and a directory
-    *   link back to its own ancestor is skipped). Other schemes have no
-    *   symlinks to filter.
-    * @param pathGlobFilter Hadoop glob on the file name (e.g. `*.wav`),
-    *   as binaryFile's `pathGlobFilter`; a file it rejects is never opened.
-    * @param conf the broadcast Hadoop conf the sniff job reads a
-    *   tree of another scheme than `file:` with; when none is given, one is
-    *   broadcast for such a tree. A `file:` tree's sniff job reads through
-    *   `java.nio` with no conf, and without `expandArchives` it has no
-    *   sniff job: F5 reads its heads on the driver, in walk order. */
+    * @param conf the broadcast Hadoop conf the sniff job reads a tree of
+    *   another scheme than `file:` with; when none is given, one is
+    *   broadcast for such a tree. A `file:` tree has no sniff job: F5 reads
+    *   its heads on the driver, in walk order. */
   def scan(
       sc: SparkContext,
       input: String,
       maxDepth: Int = DefaultMaxDepth,
       metadataFile: Option[String] = None,
       checkMimeType: Boolean = false,
-      excludeSymlinks: Boolean = true,
-      pathGlobFilter: Option[String] = None,
-      expandArchives: Boolean = false,
       conf: Option[Broadcast[SerializableConfiguration]] = None): IndexedSeq[File] = {
     val root = qualified(sc, input)
-    val glob = pathGlobFilter.map(new GlobFilter(_))
     // F4: the sidecar by its qualified path, or by its path relative to the input
     val sidecar = metadataFile.map(qualified(sc, _).toString)
     val sidecarRel = sidecar.filter(_.startsWith(root.toString.stripSuffix("/") + "/"))
       .map(relativeTo(root.toString, _))
     val local = LocalFiles.of(input).isDefined
-    val listed = (if (local) walk(root, maxDepth, !excludeSymlinks)
-      else list(sc, root, maxDepth)).filter { f =>
-      glob.forall(_.accept(new HPath(f.path))) && !sidecar.contains(f.path) && !sidecarRel.contains(f.relativePath)
-    }
-    if (listed.isEmpty || !(checkMimeType || expandArchives)) listed
-    else if (local && !expandArchives)
+    val listed = (if (local) walk(root, maxDepth) else list(sc, root, maxDepth))
+      .filter(f => !sidecar.contains(f.path) && !sidecarRel.contains(f.relativePath))
+    if (listed.isEmpty || !checkMimeType) listed
+    else if (local)
       // a local head read costs less than a task launch: F5 on the driver
       listed.filter(f => Magic.isAllowedAudio(readHead(sc.hadoopConfiguration, f.path)))
     else {
-      // reads worth a job, one over the kept list: a remote tree's heads,
-      // or whole archives streamed for their entry lists. An archive stands
-      // for its entries (listed by name, with their heads), then F5 keeps
-      // what sniffs as audio. Archives are transport, so the expansion
-      // happens before the MIME gate; entry paths use jar-URL bang notation
-      // `bundle.zip!inner/name.wav`, and a corrupt archive yields zero rows.
-      val hadoopConf = if (local) None else conf.orElse(GraftSession.hadoopConf(sc, input))
-      val slices = math.min(listed.length, sc.defaultParallelism)
-      val job = if (expandArchives) "expand archives and sniff" else "sniff"
-      GraftSession.labelled(sc, s"graft: $job ${listed.length} files") {
-        sc.parallelize(listed, slices).mapPartitions(_.flatMap { f =>
-          def c = GraftSession.shipped(hadoopConf, f.path)
-          def keep(head: => Array[Byte]) = !checkMimeType || Magic.isAllowedAudio(head)
-          if (expandArchives && f.relativePath.toLowerCase(java.util.Locale.ROOT).endsWith(".zip"))
-            listEntries(c, f.path).collect { case (name, head) if keep(head) =>
-              File(f.path, null, f.relativePath + "!" + PathNorm.normalize(name), name)
-            }
-          else if (keep(readHead(c, f.path))) Seq(f)
-          else Nil
-        }).collect().toIndexedSeq
+      // a remote head read is a store request: one job over the kept list
+      val hadoopConf = conf.orElse(GraftSession.hadoopConf(sc, input))
+      GraftSession.labelled(sc, s"graft: sniff ${listed.length} files") {
+        sc.parallelize(listed, math.min(listed.length, sc.defaultParallelism))
+          .filter(f => Magic.isAllowedAudio(readHead(GraftSession.shipped(hadoopConf, f.path), f.path)))
+          .collect().toIndexedSeq
       }
     }
   }
@@ -142,23 +113,16 @@ object AudioScan {
 
   /** The regular files below a `file:` root, at most `maxDepth` levels down.
     * A root that is itself a link is resolved: links above the tree are fine. */
-  private def walk(root: HPath, maxDepth: Int, followLinks: Boolean): IndexedSeq[File] = {
+  private def walk(root: HPath, maxDepth: Int): IndexedSeq[File] = {
     val out = IndexedSeq.newBuilder[File]
     val start = java.nio.file.Paths.get(root.toUri.getPath)
     val dir = if (Files.isSymbolicLink(start)) start.toRealPath() else start
-    val options =
-      if (followLinks) java.util.Set.of(FileVisitOption.FOLLOW_LINKS) else java.util.Set.of[FileVisitOption]()
-    Files.walkFileTree(dir, options, math.max(0, maxDepth),
+    Files.walkFileTree(dir, java.util.Set.of(), math.max(0, maxDepth),
       new SimpleFileVisitor[JPath] {
         override def visitFile(p: JPath, attrs: BasicFileAttributes): FileVisitResult = {
-          if (attrs.isRegularFile) // not a directory (F1); without FOLLOW_LINKS, not a link (F2)
-            out += File(new HPath("file", null, p.toString).toString, attrs.size,
-              relativeTo(dir.toString, p.toString), null)
+          if (attrs.isRegularFile) // not a directory (F1), not a link (F2)
+            out += File(new HPath("file", null, p.toString).toString, attrs.size, relativeTo(dir.toString, p.toString))
           FileVisitResult.CONTINUE
-        }
-        override def visitFileFailed(p: JPath, e: java.io.IOException): FileVisitResult = e match {
-          case _: FileSystemLoopException => FileVisitResult.CONTINUE
-          case _ => throw e
         }
       })
     out.result()
@@ -172,7 +136,7 @@ object AudioScan {
     while (files.hasNext) {
       val s = files.next()
       val rel = relativeTo(root.toString, s.getPath.toString)
-      if (rel.count(_ == '/') < maxDepth) out += File(s.getPath.toString, s.getLen, rel, null)
+      if (rel.count(_ == '/') < maxDepth) out += File(s.getPath.toString, s.getLen, rel)
     }
     out.result()
   }
@@ -195,8 +159,8 @@ object AudioScan {
     * out: its WAV header parse (P5), its winning `sidecar` row or the no-match
     * default (J1, P8, looked up in a broadcast of the table; with no sidecar,
     * the default of [[Metadata.NoSidecar]], and no broadcast) and its shard.
-    * `conf` is read only for a tree of another scheme than `file:`. A plain
-    * file over Spark's largest binary value fails the run, naming it. */
+    * `conf` is read only for a tree of another scheme than `file:`. A file
+    * over Spark's largest binary value fails the run, naming it. */
   def read(
       sc: SparkContext,
       shards: IndexedSeq[IndexedSeq[File]],
@@ -206,10 +170,9 @@ object AudioScan {
     val metaTypes = sidecar.schema.sparkFields.map(_.dataType).toArray
     sc.parallelize(shards.zipWithIndex, math.max(1, shards.length))
       .mapPartitions(_.flatMap { case (files, shard) =>
-        val contents = new Contents(GraftSession.shipped(conf, files.head.path), files)
         val lookup = table.fold(Metadata.NoSidecar)(_.value)
         files.iterator.map { f =>
-          val bytes = contents.bytes(f)
+          val bytes = contents(GraftSession.shipped(conf, f.path), f)
           val wav = Wav.parse(bytes)
           val path = UTF8String.fromString(f.relativePath)
           val meta = lookup.resolve(path)
@@ -223,10 +186,10 @@ object AudioScan {
       })
   }
 
-  /** A kept plain file's length, checked on the driver before any job: a
-    * file over Spark's largest binary value fails the run, naming it. */
+  /** A kept file's length, checked on the driver before any job: a file
+    * over Spark's largest binary value fails the run, naming it. */
   def requireFits(f: File): Unit =
-    if (f.entry == null && f.length > MaxBinaryLength)
+    if (f.length > MaxBinaryLength)
       throw new IllegalStateException(
         s"${f.path}: ${f.length} bytes is more than one binary value holds ($MaxBinaryLength)")
 
@@ -242,55 +205,19 @@ object AudioScan {
     try in.readNBytes(SniffBytes) finally in.close()
   }
 
-  /** Entry names of a zip archive with each entry's head for F5; empty when
-    * the archive cannot be read to its end. */
-  private def listEntries(conf: => Configuration, path: String): Seq[(String, Array[Byte])] =
-    try entriesOf(conf, path, _ => true)(_.readNBytes(SniffBytes))
-    catch { case _: Exception => Nil }
-
-  /** Streams the archive at `path`, applying `f` to each wanted file entry. */
-  private def entriesOf[A](conf: => Configuration, path: String, wanted: String => Boolean)(
-      f: java.util.zip.ZipInputStream => A): Seq[(String, A)] = {
-    val zin = new java.util.zip.ZipInputStream(LocalFiles.open(path, conf))
+  /** The whole of one kept file, read inside its content-pass task. */
+  private def contents(conf: => Configuration, f: File): Array[Byte] = {
+    requireFits(f)
+    val buf = new Array[Byte](f.length.toInt)
+    val in = LocalFiles.open(f.path, conf)
     try {
-      val out = Seq.newBuilder[(String, A)]
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory && wanted(e.getName)) out += e.getName -> f(zin)
-        e = zin.getNextEntry
+      var n = 0
+      while (n < buf.length) {
+        val r = in.read(buf, n, math.min(buf.length - n, ReadChunk))
+        if (r < 0) throw new EOFException(s"${f.path}: ended after $n of ${buf.length} bytes")
+        n += r
       }
-      out.result()
-    } finally zin.close()
-  }
-
-  /** Reads the bytes of one shard's `files` inside its content-pass task; the
-    * shard's entries of the archive last read are held until a row of
-    * another archive. */
-  private final class Contents(conf: => Configuration, files: Seq[File]) {
-    private var archive: String = null
-    private var entries = Map.empty[String, Array[Byte]]
-
-    def bytes(f: File): Array[Byte] =
-      if (f.entry == null) {
-        requireFits(f)
-        val buf = new Array[Byte](f.length.toInt)
-        val in = LocalFiles.open(f.path, conf)
-        try {
-          var n = 0
-          while (n < buf.length) {
-            val r = in.read(buf, n, math.min(buf.length - n, ReadChunk))
-            if (r < 0) throw new EOFException(s"${f.path}: ended after $n of ${buf.length} bytes")
-            n += r
-          }
-        } finally in.close()
-        buf
-      } else {
-        if (f.path != archive) {
-          val wanted = files.collect { case g if g.path == f.path && g.entry != null => g.entry }.toSet
-          entries = entriesOf(conf, f.path, wanted)(_.readAllBytes()).toMap
-          archive = f.path
-        }
-        entries.getOrElse(f.entry, throw new IllegalStateException(s"${f.path}: entry ${f.entry} not found"))
-      }
+    } finally in.close()
+    buf
   }
 }

@@ -12,7 +12,7 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** The cached RDD behind a `localCheckpoint()`ed Dataset, if any.
+  /** Frees the cached blocks of a `localCheckpoint()`ed Dataset.
     * `Dataset.unpersist()` is a no-op for checkpointed plans (the CacheManager
     * never tracked them) — iterative operators must free each round's blocks
     * through the underlying RDD instead, or they accumulate one copy per
@@ -20,10 +20,10 @@ object GraftBridge {
     * MATERIALIZED checkpoint whose data is no longer needed: a localCheckpoint
     * cannot recompute lost blocks.
     */
-  def checkpointedRdd(ds: Dataset[_]): Option[RDD[_]] =
+  def freeCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }
+    }.foreach(_.unpersist(blocking = false))
 
   /** Block (bounded) until the shared listener bus has delivered every
     * posted event. QueryExecutionListener callbacks — BenchStats' observed

@@ -23,6 +23,27 @@ class CoreSpec extends AnyFunSuite {
     assert(PathNorm.normalize("plain.wav") == "plain.wav")
   }
 
+  test("deleteTree removes a tree and its links, never what a link points to") {
+    import java.nio.file.Files
+    val outside = Files.createTempDirectory("graft-rm-outside")
+    val kept = Files.write(outside.resolve("kept.wav"), Array[Byte](1, 2))
+    val tree = Files.createTempDirectory("graft-rm")
+    Files.write(Files.createDirectories(tree.resolve("a/b")).resolve("x.wav"), Array[Byte](3))
+    Files.createSymbolicLink(tree.resolve("a/dirlink"), outside)
+    Files.createSymbolicLink(tree.resolve("filelink.wav"), kept)
+    LocalFiles.deleteTree(tree)
+    assert(!Files.exists(tree))
+    assert(Files.readAllBytes(kept).sameElements(Array[Byte](1, 2)))
+    // a root that is itself a link: the link goes, its target stays
+    val rootLink = Files.createSymbolicLink(Files.createTempDirectory("graft-rm-root").resolve("l"), outside)
+    LocalFiles.deleteTree(rootLink)
+    assert(!Files.exists(rootLink, java.nio.file.LinkOption.NOFOLLOW_LINKS) && Files.exists(kept))
+    LocalFiles.deleteTree(outside)
+    LocalFiles.deleteTree(rootLink.getParent)
+    LocalFiles.deleteTree(tree) // a missing path is no error
+    assert(!Files.exists(outside))
+  }
+
   test("wav parse: synthetic fixtures at every reference sample rate") {
     for (sr <- Seq(8000, 16000, 22050, 44100)) {
       val info = Wav.parse(Wav.synthWav(sr, sr)) // 1 second exactly

@@ -57,38 +57,33 @@ class PipelineSpec extends SparkSpec {
     assert(audio.getAs[Array[Byte]]("bytes").sameElements(wav))
   }
 
-  test("e2e: --expand-archives explodes zip entries through the full pipeline") {
+  test("e2e: --check-mime-type drops an unexpanded zip, keeps plain.wav") {
+    // the reference reads no archive: a zip is sniffed as a zip, not as audio
     val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
-    val wavA = Wav.synthPcmWav(16000, 1600)
-    val wavB = Wav.synthPcmWav(8000, 800)
-    val plain = Wav.synthPcmWav(22050, 441)
-    // bundle.zip: two wavs (one nested) + a non-audio member
     val bos = new java.io.ByteArrayOutputStream()
     val z = new java.util.zip.ZipOutputStream(bos)
-    for ((name, bytes) <- Seq("a.wav" -> wavA, "inner/b.wav" -> wavB,
-        "notes.txt" -> "not audio".getBytes("UTF-8"))) {
+    for ((name, bytes) <- Seq("a.wav" -> Wav.synthPcmWav(16000, 1600), "inner/b.wav" -> Wav.synthPcmWav(8000, 800))) {
       z.putNextEntry(new java.util.zip.ZipEntry(name)); z.write(bytes); z.closeEntry()
     }
     z.close()
     writeFile(in, "sub/bundle.zip", bos.toByteArray)
-    writeFile(in, "plain.wav", plain)
-    writeFile(in, "broken.zip", bos.toByteArray.take(40)) // corrupt: yields no rows
+    writeFile(in, "plain.wav", Wav.synthPcmWav(22050, 441))
+    writeFile(in, "broken.zip", bos.toByteArray.take(40))
     AudioToDataset.run(spark, AudioToDataset.Config(
-      input = in.getAbsolutePath, output = out.getAbsolutePath,
-      expandArchives = true, checkMimeType = true))
+      input = in.getAbsolutePath, output = out.getAbsolutePath, checkMimeType = true))
     val df = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
-    val byPath = df.collect().map(r => r.getAs[Row]("audio"))
-      .map(a => a.getAs[String]("path") -> a).toMap
-    // bang-notation entry paths; the non-audio member was MIME-dropped
-    assert(byPath.keySet == Set("plain.wav", "sub/bundle.zip!a.wav", "sub/bundle.zip!inner/b.wav"))
-    assert(byPath("sub/bundle.zip!a.wav").getAs[Array[Byte]]("bytes").sameElements(wavA))
-    assert(byPath("sub/bundle.zip!inner/b.wav").getAs[Int]("sampling_rate") == 8000)
-    // without the flag, the zip is one (non-audio) blob and mime drops it
-    val out2 = tmpDir("graft-out2")
-    AudioToDataset.run(spark, AudioToDataset.Config(
-      input = in.getAbsolutePath, output = out2.getAbsolutePath, checkMimeType = true))
-    val df2 = spark.read.parquet(new java.io.File(out2, "0.parquet").getAbsolutePath)
-    assert(df2.collect().map(_.getAs[Row]("audio").getAs[String]("path")).toSeq == Seq("plain.wav"))
+    assert(df.collect().map(_.getAs[Row]("audio").getAs[String]("path")).toSeq == Seq("plain.wav"))
+  }
+
+  test("main rejects a flag the reference does not take, before any Spark work") {
+    val in = tmpDir("graft-in"); val out = tmpDir("graft-out")
+    writeFile(in, "a.wav", Wav.synthWav(16000, 8000))
+    val e = intercept[IllegalArgumentException](AudioToDataset.main(Array(
+      "--input", in.getAbsolutePath, "--output", out.getAbsolutePath, "--expand-archives")))
+    assert(e.getMessage.contains("--expand-archives"), e.getMessage)
+    assert(outputFiles(out).isEmpty)
+    // the active context is still the spec's: main neither built nor stopped one
+    assert((org.apache.spark.SparkContext.getOrCreate() eq spark.sparkContext) && !spark.sparkContext.isStopped)
   }
 
   test("e2e: --format webdataset writes tar shards training loaders can read") {
@@ -456,37 +451,6 @@ class PipelineSpec extends SparkSpec {
     // a link above the tree is fine: the input root itself may be one
     assert(graft.sources.AudioScan.scan(spark.sparkContext, new java.io.File(in, "alias").getAbsolutePath)
       .map(_.relativePath).sorted == Seq("a.wav", "b.wav"))
-    // the divergent follow-links behavior stays available explicitly
-    val noFilter = graft.sources.AudioScan.scan(spark.sparkContext, in.getAbsolutePath,
-      excludeSymlinks = false).map(_.relativePath).sorted
-    assert(noFilter.length > withFilter.length, s"the walk followed no links: ${noFilter.toSeq}")
-  }
-
-  test("symlink opt-out and pathGlobFilter flow through Config to the scan") {
-    // Config exposes the F2 opt-out (--follow-symlinks) and the
-    // scheme-independent name pruning (--path-glob, a Hadoop glob on the name)
-    import java.nio.file.{Files, Paths}
-    val in = tmpDir("graft-optout-in")
-    val wav = Wav.synthWav(16000, 8000)
-    writeFile(in, "real/a.wav", wav)
-    writeFile(in, "real/skip.txt", Array[Byte](1, 2, 3))
-    Files.createSymbolicLink(
-      Paths.get(in.getAbsolutePath, "alias"), Paths.get(in.getAbsolutePath, "real"))
-    // glob prunes by name on ANY scheme, at listing time
-    val globOnly = graft.sources.AudioScan.scan(spark.sparkContext, in.getAbsolutePath,
-      pathGlobFilter = Some("*.wav")).map(_.relativePath).sorted
-    assert(globOnly.toSeq == Seq("real/a.wav"))
-    def paths(plan: AudioToDataset.Plan): Seq[String] =
-      plan.rows.map(_.getStruct(0, 3).getUTF8String(2).toString).collect().toSeq
-    // Config-level opt-out: the pipeline plan ingests through the symlink
-    val planned = AudioToDataset.plan(spark.sparkContext, AudioToDataset.Config(
-      in.getAbsolutePath, "/unused", excludeSymlinks = false,
-      pathGlobFilter = Some("*.wav")))
-    assert(paths(planned).sorted == Seq("alias/a.wav", "real/a.wav"))
-    // default Config keeps the exclusion
-    val strict = AudioToDataset.plan(spark.sparkContext, AudioToDataset.Config(
-      in.getAbsolutePath, "/unused", pathGlobFilter = Some("*.wav")))
-    assert(paths(strict) == Seq("real/a.wav"))
   }
 
   test("every name gets its reference row: _x, .x, x._COPYING_ and a 0-byte file") {
@@ -507,40 +471,33 @@ class PipelineSpec extends SparkSpec {
     assert(rows == named.map(_ -> (0.5, 16000, wav.length)).toMap + ("plain/zero.wav" -> (0.0, 0, 0)))
   }
 
-  test("symlink loop: --follow-symlinks skips the looped copy; the default never enters it") {
+  test("symlink loop: the walk never enters a link to an ancestor") {
     import java.nio.file.{Files, Paths}
-    val in = tmpDir("graft-loop")
+    val in = tmpDir("graft-loop"); val out = tmpDir("graft-loop-out")
     writeFile(in, "a/x.wav", Wav.synthWav(16000, 8000))
     Files.createSymbolicLink(Paths.get(in.getAbsolutePath, "a/up"), Paths.get(in.getAbsolutePath))
-    for (follow <- Seq(true, false)) {
-      val out = tmpDir("graft-loop-out")
-      AudioToDataset.run(spark, AudioToDataset.Config(
-        in.getAbsolutePath, out.getAbsolutePath, excludeSymlinks = !follow))
-      val paths = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
-        .collect().map(_.getAs[Row]("audio").getAs[String]("path")).toSeq
-      assert(paths == Seq("a/x.wav"), s"follow=$follow")
-    }
+    AudioToDataset.run(spark, AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath))
+    val paths = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath)
+      .collect().map(_.getAs[Row]("audio").getAs[String]("path")).toSeq
+    assert(paths == Seq("a/x.wav"))
   }
 
   test("a tree on another scheme is listed through its Hadoop FileSystem") {
     // `cfs:` is the local disk under another scheme name: no walk, Hadoop's
-    // listFiles; depth, glob and sidecar exclusion still hold
+    // listFiles; depth and sidecar exclusion still hold
     val in = tmpDir("graft-scheme")
     val wav = Wav.synthWav(16000, 8000)
     Seq("a.wav", "d/b.wav", "d/e/deep.wav", "d/notes.txt").foreach(writeFile(in, _, wav))
     val meta = writeText(in, "meta.csv", "relative_path,transcription\nd/b.wav,bee\n")
     val hc = spark.sparkContext.hadoopConfiguration
     hc.set("fs.cfs.impl", classOf[OtherSchemeFs].getName)
-    def rows(glob: Option[String]): Map[String, String] = {
-      val out = tmpDir("graft-scheme-out")
-      AudioToDataset.run(spark, AudioToDataset.Config("cfs:" + in.getAbsolutePath, out.getAbsolutePath,
-        Some("cfs:" + meta.getAbsolutePath), maxDepth = 2, pathGlobFilter = glob))
-      spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath).collect()
-        .map(r => r.getAs[Row]("audio").getAs[String]("path") -> r.getAs[String]("transcription")).toMap
-    }
+    val out = tmpDir("graft-scheme-out")
     try {
-      assert(rows(None) == Map("a.wav" -> "-", "d/b.wav" -> "bee", "d/notes.txt" -> "-"))
-      assert(rows(Some("*.wav")) == Map("a.wav" -> "-", "d/b.wav" -> "bee"))
+      AudioToDataset.run(spark, AudioToDataset.Config("cfs:" + in.getAbsolutePath, out.getAbsolutePath,
+        Some("cfs:" + meta.getAbsolutePath), maxDepth = 2))
+      val rows = spark.read.parquet(new java.io.File(out, "0.parquet").getAbsolutePath).collect()
+        .map(r => r.getAs[Row]("audio").getAs[String]("path") -> r.getAs[String]("transcription")).toMap
+      assert(rows == Map("a.wav" -> "-", "d/b.wav" -> "bee", "d/notes.txt" -> "-"))
     } finally hc.unset("fs.cfs.impl")
   }
 

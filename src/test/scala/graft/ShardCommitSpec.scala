@@ -176,9 +176,9 @@ class ShardCommitSpec extends SparkSpec {
         val out = tmpDir("graft-local-out")
         Seq(s"0.$ext", s".0.$ext.7").foreach(writeFile(out, _, Array[Byte](1))) // an old shard, a stale temporary
         CountingFs.calls.clear()
-        // the archive sniff is a job of its own, which reads the local heads through java.nio
+        // F5 reads the local heads on the driver, through java.nio
         val broadcasts = broadcastsOf(AudioToDataset.Config(in.getAbsolutePath, out.getAbsolutePath,
-          sidecar.map(_.getAbsolutePath), format, filesPerShard = 2, checkMimeType = true, expandArchives = true))
+          sidecar.map(_.getAbsolutePath), format, filesPerShard = 2, checkMimeType = true))
         assert(listing(out) == Seq(s"0.$ext", s"1.$ext"), format)
         assert(CountingFs.calls.isEmpty, s"$format, sidecar $sidecar: ${CountingFs.calls}")
         assert(broadcasts == sidecar.size, s"$format, sidecar $sidecar: $broadcasts broadcasts")
